@@ -85,6 +85,7 @@ from pyspark.sql import functions as F
 
 from semcode_spark.config import DEFAULT, EngineConfig
 from semcode_spark.functions.analyzers import analyzer
+from semcode_spark.sources.tables import local_frame
 
 POSTINGS_SCHEMA = (
     "term string, salt int, block_id int, n int, "
@@ -419,46 +420,22 @@ def _block_cumsum_ids(deltas: np.ndarray, n: np.ndarray) -> np.ndarray:
     return (c - np.repeat(base, n)).astype(np.int64)
 
 
-def decode_postings(blocks_df: DataFrame) -> DataFrame:
-    """Block rows → flat (term, group, doc_id, tf) posting rows.
+def decode_postings(blocks_df: DataFrame, extra: tuple[str, ...] = ()) -> DataFrame:
+    """Block rows → flat (term, group, *extra, doc_id, tf) posting rows.
 
     The single decode kernel shared by query scoring, segment
     compaction, and replace-time stats deltas. r6: mapInArrow with
     whole-BATCH vectorization — ONE varint_decode over every block's
     concatenated byte stream (self-delimiting varints), one global
     cumsum re-based per block for the doc_id deltas, and Arrow-native
-    ``take`` to replicate term/group per posting. The r5 kernel looped
-    per block building object-dtype term arrays through pandas; this
-    touches no per-block Python at all (measured: the 454k-block
+    ``take`` to replicate the block columns per posting. The r5 kernel
+    looped per block building object-dtype term arrays through pandas;
+    this touches no per-block Python at all (measured: the 454k-block
     crossover flat batch 39 s → see OPTIMIZATION_r06.md). ``group``
     rides along so tombstone filtering stays a relational anti-join
-    downstream."""
-    from semcode_spark.operators import blocks as B
-
-    def kernel(batches):
-        import pyarrow as pa
-        import pyarrow.compute as pc
-
-        for rb in batches:
-            if rb.num_rows == 0:
-                continue
-            tbl = pa.Table.from_batches([rb])
-            n = tbl["n"].to_numpy(zero_copy_only=False).astype(np.int64)
-            id_bytes, _ = _binary_concat(tbl["doc_ids"])
-            tf_bytes, _ = _binary_concat(tbl["tfs"])
-            doc_id = _block_cumsum_ids(B.varint_decode(id_bytes), n)
-            tf = B.varint_decode(tf_bytes).astype(np.int64)
-            idx = pa.array(np.repeat(np.arange(len(n), dtype=np.int64), n))
-            yield from pa.table({
-                "term": pc.take(tbl["term"], idx),
-                "group": pc.take(tbl["group"], idx),
-                "doc_id": pa.array(doc_id),
-                "tf": pa.array(tf),
-            }).to_batches()
-
-    return blocks_df.select("term", "group", "n", "doc_ids", "tfs").mapInArrow(
-        kernel, schema="term string, group int, doc_id long, tf long"
-    )
+    downstream; ``extra`` block columns ride along the same way (the
+    serving cache keeps the block-level predicate columns, read_index)."""
+    return _decode_blocks(blocks_df, ("term", "group", *extra), with_tf=True)
 
 
 def decode_doc_ids_only(blocks_df: DataFrame) -> DataFrame:
@@ -468,6 +445,13 @@ def decode_doc_ids_only(blocks_df: DataFrame) -> DataFrame:
     ids come from the essential terms' blocks and exact scores come
     from the forward table, and by AND-prefilters. Same whole-batch
     vectorization as decode_postings (r6)."""
+    return _decode_blocks(blocks_df, ("term", "group"), with_tf=False)
+
+
+def _decode_blocks(blocks_df: DataFrame, carry: tuple[str, ...],
+                   with_tf: bool) -> DataFrame:
+    from pyspark.sql.types import LongType, StructType
+
     from semcode_spark.operators import blocks as B
 
     def kernel(batches):
@@ -480,17 +464,22 @@ def decode_doc_ids_only(blocks_df: DataFrame) -> DataFrame:
             tbl = pa.Table.from_batches([rb])
             n = tbl["n"].to_numpy(zero_copy_only=False).astype(np.int64)
             id_bytes, _ = _binary_concat(tbl["doc_ids"])
-            doc_id = _block_cumsum_ids(B.varint_decode(id_bytes), n)
             idx = pa.array(np.repeat(np.arange(len(n), dtype=np.int64), n))
-            yield from pa.table({
-                "term": pc.take(tbl["term"], idx),
-                "group": pc.take(tbl["group"], idx),
-                "doc_id": pa.array(doc_id),
-            }).to_batches()
+            cols = {c: pc.take(tbl[c], idx) for c in carry}
+            cols["doc_id"] = pa.array(
+                _block_cumsum_ids(B.varint_decode(id_bytes), n))
+            if with_tf:
+                tf_bytes, _ = _binary_concat(tbl["tfs"])
+                cols["tf"] = pa.array(B.varint_decode(tf_bytes).astype(np.int64))
+            yield from pa.table(cols).to_batches()
 
-    return blocks_df.select("term", "group", "n", "doc_ids").mapInArrow(
-        kernel, schema="term string, group int, doc_id long"
-    )
+    schema = StructType([blocks_df.schema[c] for c in carry])
+    schema = schema.add("doc_id", LongType())
+    inputs = [*carry, "n", "doc_ids"]
+    if with_tf:
+        schema = schema.add("tf", LongType())
+        inputs.append("tfs")
+    return blocks_df.select(*inputs).mapInArrow(kernel, schema=schema)
 
 
 def decode_positions_flat(blocks_df: DataFrame) -> DataFrame:
@@ -558,11 +547,41 @@ def filter_dead_postings(flat: DataFrame, tombstones: DataFrame | None,
     )
 
 
-def live_postings_flat(idx: dict) -> DataFrame:
-    """Decode the whole visible index to live (term, group, doc_id, tf)."""
-    return filter_dead_postings(
-        decode_postings(idx["postings"]), idx.get("tombstones"),
-        idx.get("_n_tombstones", 0))
+# block columns the serving cache keeps per posting, so every
+# block-level predicate (term, max_w·corr ≥ cut, block_id < depth, the
+# best-block pointer) selects the same postings row by row
+SERVING_BLOCK_COLS = ("salt", "block_id", "max_w", "avgdl_enc")
+
+
+def posting_blocks(idx: dict) -> DataFrame:
+    """The encoded block rows of an open index. A serving handle
+    (read_index(cache=True)) keeps its decoded rows under 'postings'
+    and the blocks under '_blocks'."""
+    return idx.get("_blocks", idx["postings"])
+
+
+def posting_rows(idx: dict, pred=None) -> DataFrame:
+    """Live (term, group, doc_id, tf) postings of the blocks matching the
+    block-level predicate ``pred`` (None: every block) — the one decode
+    seam of the query side. A serving handle filters its cached decoded
+    rows (tombstones already applied, no Python); a cold handle decodes
+    the matching blocks and drops tombstoned postings."""
+    src = idx["postings"] if pred is None else idx["postings"].filter(pred)
+    if "_blocks" in idx:
+        return src.select("term", "group", "doc_id", "tf")
+    return filter_dead_postings(decode_postings(src), idx.get("tombstones"),
+                                idx.get("_n_tombstones", 0))
+
+
+def posting_ids(idx: dict, pred=None) -> DataFrame:
+    """(term, group, doc_id) of the blocks matching ``pred``: the
+    candidate-generation twin of posting_rows. On a cold handle the tf
+    stream is never decoded and tombstoned postings are kept, so callers
+    must treat the ids as a superset of the live ones."""
+    src = idx["postings"] if pred is None else idx["postings"].filter(pred)
+    if "_blocks" in idx:
+        return src.select("term", "group", "doc_id")
+    return decode_doc_ids_only(src)
 
 
 def write_forward(tf: DataFrame, vdir: str, seg: int) -> None:
@@ -607,7 +626,7 @@ def live_forward(idx: dict, with_positions: bool = False) -> DataFrame:
             if not idx.get("positions_stored"):
                 raise ValueError("index stores no positions")
             rows = filter_dead_postings(
-                decode_positions_flat(idx["postings"]),
+                decode_positions_flat(posting_blocks(idx)),
                 idx.get("tombstones"), idx.get("_n_tombstones", 0))
             return rows.groupBy("doc_id", "term").agg(
                 # dtypes mirror term_doc_tf (tf long, positions
@@ -615,7 +634,7 @@ def live_forward(idx: dict, with_positions: bool = False) -> DataFrame:
                 F.count(F.lit(1)).alias("tf"),
                 F.sort_array(F.collect_list(F.col("pos").cast("int")))
                 .alias("positions"))
-        return live_postings_flat(idx).select("doc_id", "term", "tf")
+        return posting_rows(idx).select("doc_id", "term", "tf")
     t = idx.get("tombstones")
     if idx.get("_n_tombstones", 0) and t is not None:
         tt = t.select(F.col("doc_id").alias("t_id"),
@@ -896,8 +915,8 @@ def _build_index_locked(
             if not n_docs:
                 raise ValueError("cannot build an index over an empty corpus")
             avgdl = cs["sum_dl"] / n_docs
-            spark.createDataFrame(
-                [(int(n_docs), float(cs["sum_dl"]))], "n_docs long, sum_dl double"
+            local_frame(
+                spark, [(int(n_docs), float(cs["sum_dl"]))], "n_docs long, sum_dl double"
             ).write.mode("overwrite").parquet(os.path.join(vdir, "corpus", "seg=0"))
             ts = term_stats(tf, cfg)
             thr = max(2.0, cfg.index.hot_term_df_ratio * n_docs)
@@ -939,8 +958,8 @@ def _build_index_locked(
         tf.unpersist()
         docs.unpersist()
         if metrics:
-            spark.createDataFrame(
-                metrics, "stage string, rows long, wall_ms long"
+            local_frame(
+                spark, metrics, "stage string, rows long, wall_ms long"
             ).write.mode("append").parquet(os.path.join(out_dir, "metrics"))
 
     if rebuild_commit:
@@ -994,7 +1013,8 @@ def _manifest_append(
     spark: SparkSession, man_dir: str, stage: str, group: int,
     status: str, rows: int, wall_s: float, version: int,
 ) -> None:
-    spark.createDataFrame(
+    local_frame(
+        spark,
         [(stage, group, status, int(rows), int(wall_s * 1000), int(version))],
         "stage string, group int, status string, rows long, wall_ms long, version int",
     ).write.mode("append").parquet(man_dir)
@@ -1168,7 +1188,7 @@ def _visible(spark: SparkSession, out_dir: str, version: int) -> tuple[set[int],
 
 
 def _empty_tombstones(spark: SparkSession) -> DataFrame:
-    return spark.createDataFrame([], "doc_id long, before_group int")
+    return local_frame(spark, [], "doc_id long, before_group int")
 
 
 def collect_term_dict(index: dict, max_rows: int = 2_000_000,
@@ -1252,9 +1272,17 @@ def read_index(spark: SparkSession, out_dir: str, cache: bool = False,
 
     cache=True is serving mode (the analog of the reference's long-lived
     service process with Milvus's collection loaded to memory,
-    storage/milvus_store.py:83-85): postings/docs/term_stats/term_bounds
-    are persisted and materialized so repeated queries skip the parquet
-    scan. On a cluster this is executor block-manager memory."""
+    storage/milvus_store.py:83-85): docs/term_stats/term_bounds are
+    persisted and materialized, and the posting blocks are decoded ONCE,
+    here: 'postings' then holds the live decoded rows (term, group,
+    salt, block_id, max_w, avgdl_enc, doc_id, tf) — tombstoned postings
+    dropped — so warm queries filter cached rows with the same
+    block-level predicates and run no Python worker (posting_rows). The
+    encoded blocks stay reachable as '_blocks' (posting_blocks), cached
+    only for positional indexes, whose phrase decode needs their `pos`
+    stream. Release the cache with unpersist() on docs, term_stats,
+    term_bounds and postings (and '_blocks' on a positional index). On
+    a cluster this is executor block-manager memory."""
     version = read_current_version(out_dir)
     if version is None:
         raise FileNotFoundError(f"no CURRENT pointer under {out_dir}")
@@ -1317,6 +1345,11 @@ def read_index(spark: SparkSession, out_dir: str, cache: bool = False,
         "_version": version,
     }
     if cache:
+        blocks = idx["_blocks"] = idx["postings"]
+        if idx["positions_stored"]:  # filled by the decode below
+            blocks.persist()
+        idx["postings"] = filter_dead_postings(
+            decode_postings(blocks, SERVING_BLOCK_COLS), tombstones, n_tomb)
         for name in ("docs", "term_stats", "term_bounds", "postings"):
             idx[name] = idx[name].persist()
             idx[name].count()  # materialize now, not on first query

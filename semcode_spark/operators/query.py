@@ -43,10 +43,14 @@ from pyspark.sql.window import Window
 
 from semcode_spark.config import DEFAULT, EngineConfig
 from semcode_spark.functions.analyzers import analyze_query, analyzer
-from semcode_spark.operators.index_build import (
-    decode_doc_ids_only, decode_positions_flat, decode_postings,
-    filter_dead_postings, term_doc_tf,
+from semcode_spark.operators.index_build import (  # noqa: F401 (decode_postings re-exported)
+    decode_positions_flat, decode_postings, filter_dead_postings,
+    posting_blocks, posting_ids, posting_rows,
 )
+from semcode_spark.sources.tables import local_frame
+
+TOPK_SCHEMA = "doc_id long, score double"
+BATCH_SCHEMA = "query_id long, rank int, doc_id long, score double"
 
 
 def idf_col(df_col, n_docs: float):
@@ -63,6 +67,14 @@ def score_col(tf_col, dl_col, idf, avgdl: float, cfg: EngineConfig = DEFAULT):
     return idf * (tf_col * (k1 + 1.0)) / (
         tf_col + k1 * (1.0 - b + b * dl_col / avgdl)
     )
+
+
+def _lit_map(pairs):
+    """A literal map column from driver-side (key, value) pairs (values
+    may be Columns): a handful of per-query entries enter the plan as
+    constants — no driver-built relation, no broadcast exchange."""
+    return F.create_map(*chain.from_iterable(
+        (F.lit(k), F.lit(v)) for k, v in pairs))
 
 
 def bm25_scores(
@@ -94,6 +106,9 @@ def bm25_scores(
     toks = analyzer(cfg.index.analyzer)
     k1, b = cfg.bm25.k1, cfg.bm25.b
     terms = sorted(set(query_terms))
+    if not terms:  # no term can match a doc
+        return docs.select(F.col(id_col).alias("doc_id"),
+                           F.lit(0.0).alias("score")).limit(0)
 
     def _eq(term: str):
         # closure factory, NOT a defaulted 2-arg lambda: F.filter gives
@@ -314,7 +329,7 @@ def wand_topk(
     # broadcast-joined DataFrame: at a handful of terms per query the
     # broadcast exchange is pure per-query latency (~0.3-0.5 s/job on
     # the warm path for zero benefit)
-    cand = index["postings"].filter(F.col("term").isin(terms))
+    cand = F.col("term").isin(terms)
 
     if prune == "auto":
         # auto = flat at sandbox scales (r4, measured — see BENCH/
@@ -355,23 +370,20 @@ def wand_topk(
             t: (theta_eff - (total_ub - term_ubs[t])) / idfs[t]
             for t in term_ubs
         }
-        cut_map = F.create_map(*chain.from_iterable(
-            (F.lit(t), F.lit(c)) for t, c in cutoffs.items()))
+        cut_map = _lit_map(cutoffs.items())
         adl_corr = F.greatest(F.lit(1.0), F.lit(avgdl) / F.col("avgdl_enc"))
-        survivors = cand.filter(
-            F.col("max_w") * adl_corr >= cut_map[F.col("term")])
+        survivors = cand & (F.col("max_w") * adl_corr >= cut_map[F.col("term")])
         rows = (
-            _score_blocks(survivors, idfs, avgdl, index, cfg)
+            _score_blocks(index, survivors, idfs, avgdl, cfg)
             .orderBy(F.round("score", cfg.bm25.rank_decimals).desc(),
                      F.col("doc_id").asc())
             .limit(k)
             .collect()
         )
-        return spark.createDataFrame(rows, "doc_id long, score double") if rows else \
-            spark.createDataFrame([], "doc_id long, score double")
+        return local_frame(spark, rows, TOPK_SCHEMA)
 
     return (
-        _score_blocks(cand, idfs, avgdl, index, cfg)
+        _score_blocks(index, cand, idfs, avgdl, cfg)
         .orderBy(F.round("score", cfg.bm25.rank_decimals).desc(),
                  F.col("doc_id").asc())
         .limit(k)
@@ -421,8 +433,7 @@ def _bootstrap_theta_eff(
     best_pred = _best_block_pred(best)
     avgdl = float(index["_corpus_row"]["avgdl"])
     theta_rows = (
-        _score_blocks(index["postings"].filter(best_pred), idfs, avgdl,
-                      index, cfg)
+        _score_blocks(index, best_pred, idfs, avgdl, cfg)
         .orderBy(F.round("score", cfg.bm25.rank_decimals).desc(),
                  F.col("doc_id").asc())
         .limit(k)
@@ -450,8 +461,7 @@ def _forward_exact_scores(
     fwd = live_forward(index).filter(F.col("term").isin(sorted(idfs)))
     if cand_ids is not None:
         fwd = fwd.join(cand_ids, "doc_id")
-    idf_map = F.create_map(*chain.from_iterable(
-        (F.lit(t), F.lit(v)) for t, v in idfs.items()))
+    idf_map = _lit_map(idfs.items())
     w_expr = (F.col("tf") * (k1 + 1.0)) / (
         F.col("tf") + k1 * (1.0 - b + b * F.col("doc_len") / avgdl))
     return (
@@ -500,14 +510,12 @@ def _bootstrap_theta_eff_prefix(
     pred = (F.col("term").isin(list(idfs))
             & (F.col("block_id") < cfg.bm25.impact_bootstrap_depth))
     avgdl = float(index["_corpus_row"]["avgdl"])
-    boot_blocks = index["postings"].filter(pred)
     if exact and index.get("forward") is not None:
-        ids = (decode_doc_ids_only(boot_blocks)
-               .select("doc_id").distinct())
+        ids = posting_ids(index, pred).select("doc_id").distinct()
         scored = _forward_exact_scores(
             index, idfs, avgdl, F.broadcast(ids), cfg)
     else:
-        scored = _score_blocks(boot_blocks, idfs, avgdl, index, cfg)
+        scored = _score_blocks(index, pred, idfs, avgdl, cfg)
     rows = (
         scored
         .orderBy(F.round("score", cfg.bm25.rank_decimals).desc(),
@@ -660,9 +668,8 @@ def wand_topk_impact(
     live = sorted(meta.idfs)
 
     def _flat() -> DataFrame:
-        cand = index["postings"].filter(F.col("term").isin(terms))
         return (
-            _score_blocks(cand, meta.idfs, avgdl, index, cfg)
+            _score_blocks(index, F.col("term").isin(terms), meta.idfs, avgdl, cfg)
             .orderBy(F.round("score", cfg.bm25.rank_decimals).desc(),
                      F.col("doc_id").asc())
             .limit(k)
@@ -697,9 +704,8 @@ def wand_topk_impact(
         # impossible in practice (θ_eff < Σ ubs by construction), but a
         # degenerate plan must not decode the world
         return _flat()
-    cand_blocks = index["postings"].filter(pred)
     if stats is not None and stats.get("exact"):
-        stats["blocks_decoded"] = cand_blocks.count()
+        stats["blocks_decoded"] = posting_blocks(index).filter(pred).count()
     # dead candidates are harmless (their forward rows are already
     # tombstone-filtered), so the candidate side skips the anti-join;
     # the size gates therefore count raw ids: live dfs + tombstones
@@ -721,7 +727,7 @@ def wand_topk_impact(
         stats["cand_join"] = bool(cand_worthwhile)
     cand_ids = None
     if cand_worthwhile:
-        ci = decode_doc_ids_only(cand_blocks).select("doc_id").distinct()
+        ci = posting_ids(index, pred).select("doc_id").distinct()
         cand_ids = F.broadcast(ci) \
             if ids_ub <= cfg.index.broadcast_ids_max else ci
     rows = (
@@ -731,8 +737,7 @@ def wand_topk_impact(
         .limit(k)
         .collect()
     )
-    return spark.createDataFrame(rows, "doc_id long, score double") if rows \
-        else spark.createDataFrame([], "doc_id long, score double")
+    return local_frame(spark, rows, TOPK_SCHEMA)
 
 
 def bm25_topk_conj(
@@ -755,12 +760,8 @@ def bm25_topk_conj(
     corpus = index["_corpus_row"]
     n_docs, avgdl = float(corpus["n_docs"]), float(corpus["avgdl"])
     k1, b = cfg.bm25.k1, cfg.bm25.b
-    blocks = index["postings"].filter(F.col("term").isin(terms))
-    postings = filter_dead_postings(
-        decode_postings(blocks), index.get("tombstones"),
-        index.get("_n_tombstones", 0))
-    idf_map = F.create_map(*chain.from_iterable(
-        (F.lit(t), F.lit(v)) for t, v in idfs.items()))
+    postings = posting_rows(index, F.col("term").isin(terms))
+    idf_map = _lit_map(idfs.items())
     w = (F.col("tf") * (k1 + 1.0)) / (
         F.col("tf") + k1 * (1.0 - b + b * F.col("doc_len") / avgdl))
     return (
@@ -817,8 +818,7 @@ def _rare_term_candidates(
     rare = min(dfr, key=lambda t: (dfr[t], t))
     if dfr[rare] >= n_docs_idx / 2:
         return None, False
-    cand = (decode_doc_ids_only(index["postings"].filter(F.col("term") == rare))
-            .select("doc_id").distinct())
+    cand = posting_ids(index, F.col("term") == rare).select("doc_id").distinct()
     # the candidate decode skips tombstone filtering (a superset is
     # correct — see above), so the broadcast bound must be the RAW id
     # count: live df (net of replace deltas) plus every tombstone, the
@@ -869,17 +869,14 @@ def phrase_match(
     slots: dict[str, list[int]] = {}
     for i, t in enumerate(terms):
         slots.setdefault(t, []).append(i)
-    blocks = index["postings"].filter(F.col("term").isin(uniq))
+    blocks = posting_blocks(index).filter(F.col("term").isin(uniq))
     rows = filter_dead_postings(
         decode_positions_flat(blocks), index.get("tombstones"),
         index.get("_n_tombstones", 0))
-    cand, bc = _rare_term_candidates(
-        blocks.sparkSession, index, uniq, cfg)
+    cand, bc = _rare_term_candidates(spark, index, uniq, cfg)
     if cand is not None:
         rows = rows.join(F.broadcast(cand) if bc else cand, "doc_id")
-    slot_map = F.create_map(*chain.from_iterable(
-        (F.lit(t), F.array(*[F.lit(i) for i in ss]))
-        for t, ss in slots.items()))
+    slot_map = _lit_map((t, F.array(*map(F.lit, ss))) for t, ss in slots.items())
     aligned = rows.withColumn("slot", F.explode(slot_map[F.col("term")]))
     hits = (
         aligned.groupBy("doc_id", (F.col("pos") - F.col("slot")).alias("base"))
@@ -917,9 +914,9 @@ def phrase_topk(
     n_docs, avgdl = float(corpus["n_docs"]), float(corpus["avgdl"])
     if not idfs:  # no phrase term exists in the vocabulary: no hits
         # (an empty idf literal map would not even analyze)
-        return spark.createDataFrame([], "doc_id long, score double")
+        return local_frame(spark, [], TOPK_SCHEMA)
 
-    blocks = index["postings"].filter(F.col("term").isin(terms))
+    blocks = posting_blocks(index).filter(F.col("term").isin(terms))
     rows = filter_dead_postings(
         decode_positions_flat(blocks), index.get("tombstones"),
         index.get("_n_tombstones", 0))
@@ -936,9 +933,7 @@ def phrase_topk(
         slots: dict[str, list[int]] = {}
         for i, t in enumerate(ordered):
             slots.setdefault(t, []).append(i)
-        slot_map = F.create_map(*chain.from_iterable(
-            (F.lit(t), F.array(*[F.lit(i) for i in ss]))
-            for t, ss in slots.items()))
+        slot_map = _lit_map((t, F.array(*map(F.lit, ss))) for t, ss in slots.items())
         hits = (
             rows.withColumn("slot", F.explode(slot_map[F.col("term")]))
             .groupBy("doc_id", (F.col("pos") - F.col("slot")).alias("base"))
@@ -947,8 +942,7 @@ def phrase_topk(
             .select("doc_id").distinct()
         )
         k1, b = cfg.bm25.k1, cfg.bm25.b
-        idf_map = F.create_map(*chain.from_iterable(
-            (F.lit(t), F.lit(v)) for t, v in idfs.items()))
+        idf_map = _lit_map(idfs.items())
         tf_rel = rows.groupBy("term", "doc_id").agg(
             F.count(F.lit(1)).alias("tf"))
         w = (F.col("tf") * (k1 + 1.0)) / (
@@ -968,8 +962,7 @@ def phrase_topk(
         )
     finally:
         rows.unpersist()
-    return spark.createDataFrame(out, "doc_id long, score double") if out \
-        else spark.createDataFrame([], "doc_id long, score double")
+    return local_frame(spark, out, TOPK_SCHEMA)
 
 
 def phrase_topk_batch(
@@ -1019,20 +1012,17 @@ def phrase_topk_batch(
             slot_rows.append((qid, t, i))
             all_terms.add(t)
     if not slot_rows:
-        return spark.createDataFrame(
-            [], "query_id long, rank int, doc_id long, score double")
-    slots_df = spark.createDataFrame(
-        slot_rows, "query_id long, term string, slot int")
-    qmeta = spark.createDataFrame(meta_rows, "query_id long, n_slots int, k int")
+        return local_frame(spark, [], BATCH_SCHEMA)
+    slots_df = local_frame(spark, slot_rows, "query_id long, term string, slot int")
+    qmeta = local_frame(spark, meta_rows, "query_id long, n_slots int, k int")
     terms = sorted(all_terms)
     idfs = _term_meta(spark, index, terms).idfs  # corpus row rides (r6)
     corpus = index["_corpus_row"]
     n_docs, avgdl = float(corpus["n_docs"]), float(corpus["avgdl"])
     if not idfs:  # no phrase term exists in the vocabulary: no hits
-        return spark.createDataFrame(
-            [], "query_id long, rank int, doc_id long, score double")
+        return local_frame(spark, [], BATCH_SCHEMA)
 
-    blocks = index["postings"].filter(F.col("term").isin(terms))
+    blocks = posting_blocks(index).filter(F.col("term").isin(terms))
     rows = filter_dead_postings(
         decode_positions_flat(blocks), index.get("tombstones"),
         index.get("_n_tombstones", 0)).persist()
@@ -1050,8 +1040,7 @@ def phrase_topk_batch(
         # scoring: tf = per-(term, doc) occurrence count from the SAME
         # decoded rows; per-query sum over that query's distinct terms
         k1, b = cfg.bm25.k1, cfg.bm25.b
-        idf_map = F.create_map(*chain.from_iterable(
-            (F.lit(t), F.lit(v)) for t, v in idfs.items()))
+        idf_map = _lit_map(idfs.items())
         tf_rel = rows.groupBy("term", "doc_id").agg(
             F.count(F.lit(1)).alias("tf"))
         w = (F.col("tf") * (k1 + 1.0)) / (
@@ -1077,10 +1066,7 @@ def phrase_topk_batch(
         )
     finally:
         rows.unpersist()
-    return spark.createDataFrame(
-        out, "query_id long, rank int, doc_id long, score double") if out \
-        else spark.createDataFrame(
-            [], "query_id long, rank int, doc_id long, score double")
+    return local_frame(spark, out, BATCH_SCHEMA)
 
 
 def highlight_topk(
@@ -1125,11 +1111,10 @@ def highlight_topk(
     out_schema = ("doc_id long, score double, first_pos long, "
                   "snippet string")
     if not top:
-        return spark.createDataFrame([], out_schema)
+        return local_frame(spark, [], out_schema)
     ids = [r["doc_id"] for r in top]
-    scores = spark.createDataFrame(
-        [(r["doc_id"], r["score"]) for r in top], "doc_id long, score double")
-    blocks = index["postings"].filter(F.col("term").isin(terms))
+    scores = local_frame(spark, top, TOPK_SCHEMA)
+    blocks = posting_blocks(index).filter(F.col("term").isin(terms))
     first = (
         filter_dead_postings(
             decode_positions_flat(blocks), index.get("tombstones"),
@@ -1228,13 +1213,8 @@ def facet_counts(
     terms = _query_terms(index, query)
     if not terms:
         raise ValueError("empty query")
-    matches = (
-        filter_dead_postings(
-            decode_postings(
-                index["postings"].filter(F.col("term").isin(terms))),
-            index.get("tombstones"), index.get("_n_tombstones", 0))
-        .select("doc_id").distinct()
-    )
+    matches = (posting_rows(index, F.col("term").isin(terms))
+               .select("doc_id").distinct())
     return (
         docs.select(F.col(id_col).alias("doc_id"),
                     F.col(facet_col).alias("facet"))
@@ -1301,6 +1281,8 @@ def bm25_topk_batch(
     best] → one decode pass over the surviving blocks of the union of
     query terms → per-(query, doc) score agg → per-query window top-k.
     Scales with the size of the touched postings, never the corpus.
+    Query terms, ids and k enter the plan as literals (_batch_topk), so
+    on a serving handle the whole batch runs without a Python worker.
 
     Pruning is the batch generalization of wand_topk's block-max filter:
     a block of term t is kept iff ANY query containing t could still
@@ -1312,29 +1294,20 @@ def bm25_topk_batch(
     cannot displace the k fully-scored bootstrap docs (same argument as
     wand_topk, per query). Lossless: tests assert pruned == unpruned.
     """
-    k1, b = cfg.bm25.k1, cfg.bm25.b
-
-    qt_rows, k_rows, q_terms = [], [], {}
-    for qid, text, k in queries:
-        k_rows.append((qid, k))
-        q_terms[qid] = _query_terms(index, text)
-        for t in q_terms[qid]:
-            qt_rows.append((qid, t))
-    if not qt_rows:
-        return spark.createDataFrame([], "query_id long, rank int, doc_id long, score double")
-    qterms = spark.createDataFrame(qt_rows, "query_id long, term string")
-    ks = spark.createDataFrame(k_rows, "query_id long, k int")
-    all_terms = sorted({t for _, t in qt_rows})
-    terms = qterms.select("term").distinct()
+    if len({qid for qid, _, _ in queries}) != len(queries):
+        raise ValueError("duplicate query_id in batch")
+    q_terms = {qid: _query_terms(index, text) for qid, text, _ in queries}
+    k_of = {qid: k for qid, _, k in queries}
+    all_terms = sorted({t for ts in q_terms.values() for t in ts})
+    if not all_terms:
+        return local_frame(spark, [], BATCH_SCHEMA)
 
     meta = _term_meta(spark, index, all_terms)  # corpus row rides (r6)
     corpus = index["_corpus_row"]
     n_docs, avgdl = float(corpus["n_docs"]), float(corpus["avgdl"])
     idfs, term_ubs, best = meta.idfs, meta.ubs, meta.best
-    if prune == "impact":
-        return _bm25_topk_batch_impact(
-            spark, index, q_terms, qterms, ks, meta,
-            n_docs, avgdl, cfg)
+    if not idfs:  # no query term is in the vocabulary: no hits
+        return local_frame(spark, [], BATCH_SCHEMA)
     if prune == "auto":
         # auto = flat at sandbox scales (r4, measured — see wand_topk
         # and BENCH/BASELINE.md): batched STATIC pruning is weaker
@@ -1344,45 +1317,20 @@ def bm25_topk_batch(
         # (r5) — three jobs for the whole set, decode bounded by the
         # merged per-query plans — when the forward table exists and
         # the layout is impact-ordered (r6, advice: see wand_topk).
-        if (meta.n_blocks > cfg.bm25.impact_auto_min_blocks
-                and index.get("forward") is not None
-                and index.get("impact_layout")):
-            return _bm25_topk_batch_impact(
-                spark, index, q_terms, qterms, ks, meta,
-                n_docs, avgdl, cfg)
-        prune = False
+        prune = ("impact" if meta.n_blocks > cfg.bm25.impact_auto_min_blocks
+                 and index.get("forward") is not None
+                 and index.get("impact_layout") else False)
+    if prune == "impact":
+        return _bm25_topk_batch_impact(
+            spark, index, q_terms, k_of, meta, n_docs, avgdl, cfg)
 
-    w = (F.col("tf") * (k1 + 1.0)) / (
-        F.col("tf") + k1 * (1.0 - b + b * F.col("doc_len") / avgdl)
-    )
-    idf_map = F.create_map(*chain.from_iterable(
-        (F.lit(t), F.lit(v)) for t, v in idfs.items()))
-
-    def scored_from(blocks_df: DataFrame) -> DataFrame:
-        postings = filter_dead_postings(
-            decode_postings(blocks_df), index.get("tombstones"),
-            index.get("_n_tombstones", 0))
-        return (
-            postings.withColumn("idf", idf_map[F.col("term")])
-            .join(index["docs"], "doc_id")
-            .join(F.broadcast(qterms), "term")
-            .groupBy("query_id", "doc_id")
-            .agg(F.sum(F.col("idf") * w).alias("score"))
-        )
-
-    blocks_df = index["postings"].join(F.broadcast(terms), "term")
+    pred = F.col("term").isin(all_terms)
     if prune and term_ubs:
         # θ bootstrap for ALL queries in one job: each term's single
         # best block (build-time pointer), scored per query
-        best_pred = _best_block_pred(best)
-        win_b = Window.partitionBy("query_id").orderBy(
-            F.round("score", cfg.bm25.rank_decimals).desc(),
-            F.col("doc_id").asc())
         theta_rows = (
-            scored_from(index["postings"].filter(best_pred))
-            .withColumn("rank", F.row_number().over(win_b))
-            .join(F.broadcast(ks), "query_id")
-            .filter(F.col("rank") <= F.col("k"))
+            _batch_topk(posting_rows(index, _best_block_pred(best)),
+                        index, idfs, q_terms, k_of, avgdl, cfg)
             .groupBy("query_id").agg(
                 F.count(F.lit(1)).alias("n"),
                 F.min("score").alias("kth"),
@@ -1403,21 +1351,54 @@ def bm25_topk_batch(
                 c = (theta_eff[qid] - (total_ub - term_ubs[t])) / idfs[t]
                 if t not in cutoffs or c < cutoffs[t]:
                     cutoffs[t] = c
-        cut_map = F.create_map(*chain.from_iterable(
-            (F.lit(t), F.lit(c)) for t, c in cutoffs.items()))
+        cut_map = _lit_map(cutoffs.items())
         adl_corr = F.greatest(F.lit(1.0), F.lit(avgdl) / F.col("avgdl_enc"))
-        blocks_df = blocks_df.filter(
-            F.col("max_w") * adl_corr >= cut_map[F.col("term")])
+        pred = pred & (F.col("max_w") * adl_corr >= cut_map[F.col("term")])
 
-    win = Window.partitionBy("query_id").orderBy(
-        F.round("score", cfg.bm25.rank_decimals).desc(), F.col("doc_id").asc()
-    )
     return (
-        scored_from(blocks_df)
-        .withColumn("rank", F.row_number().over(win))
-        .join(F.broadcast(ks), "query_id")
-        .filter(F.col("rank") <= F.col("k"))
+        _batch_topk(posting_rows(index, pred), index, idfs, q_terms, k_of,
+                    avgdl, cfg)
         .select("query_id", "rank", "doc_id", "score")
+    )
+
+
+def _batch_topk(
+    rows: DataFrame,
+    index: dict,
+    idfs: dict[str, float],
+    q_terms: dict[int, list[str]],
+    k_of: dict[int, int],
+    avgdl: float,
+    cfg: EngineConfig,
+) -> DataFrame:
+    """Each query's top-k of the (term, doc_id, tf) ``rows``: a row
+    scores for every query holding its term. (query_id, rank, doc_id,
+    score, k), rank ≤ k. The term → query-ids fan-out, the idfs and the
+    per-query k are literal maps, so the plan reads no driver-built
+    relation (one would cost a Python-worker stage per job)."""
+    k1, b = cfg.bm25.k1, cfg.bm25.b
+    qids_of: dict[str, list[int]] = {}
+    for qid, ts in q_terms.items():
+        for t in ts:
+            if t in idfs:
+                qids_of.setdefault(t, []).append(qid)
+    by_term = _lit_map(
+        (t, F.array(*[F.lit(q).cast("long") for q in qs]))
+        for t, qs in qids_of.items())
+    k_map = _lit_map((F.lit(q).cast("long"), k) for q, k in k_of.items())
+    w = (F.col("tf") * (k1 + 1.0)) / (
+        F.col("tf") + k1 * (1.0 - b + b * F.col("doc_len") / avgdl))
+    win = Window.partitionBy("query_id").orderBy(
+        F.round("score", cfg.bm25.rank_decimals).desc(), F.col("doc_id").asc())
+    return (
+        rows.withColumn("idf", _lit_map(idfs.items())[F.col("term")])
+        .join(index["docs"], "doc_id")
+        .withColumn("query_id", F.explode(by_term[F.col("term")]))
+        .groupBy("query_id", "doc_id")
+        .agg(F.sum(F.col("idf") * w).alias("score"))
+        .withColumn("rank", F.row_number().over(win))
+        .withColumn("k", k_map[F.col("query_id")])
+        .filter(F.col("rank") <= F.col("k"))
     )
 
 
@@ -1437,13 +1418,11 @@ def _bm25_topk_batch_impact(
     spark: SparkSession,
     index: dict[str, DataFrame],
     q_terms: dict[int, list[str]],
-    qterms: DataFrame,
-    ks: DataFrame,
+    k_of: dict[int, int],
     meta: TermMeta,
     n_docs: float,
     avgdl: float,
     cfg: EngineConfig,
-    stats: dict | None = None,
 ) -> DataFrame:
     """Batched impact retrieval: wand_topk_impact's bounded-decode plan
     amortized across the whole query set — THREE jobs total (θ
@@ -1465,15 +1444,9 @@ def _bm25_topk_batch_impact(
         raise ValueError(
             "impact retrieval needs the forward table "
             "(IndexConfig(store_forward=True))")
+    from semcode_spark.operators.index_build import live_forward
+
     live = sorted(meta.idfs)
-    if not live:
-        return spark.createDataFrame(
-            [], "query_id long, rank int, doc_id long, score double")
-    k1, b = cfg.bm25.k1, cfg.bm25.b
-    w = (F.col("tf") * (k1 + 1.0)) / (
-        F.col("tf") + k1 * (1.0 - b + b * F.col("doc_len") / avgdl))
-    idf_map = F.create_map(*chain.from_iterable(
-        (F.lit(t), F.lit(v)) for t, v in meta.idfs.items()))
 
     # --- job 1: θ bootstrap for every query at once — the union of
     # every term's top-`impact_bootstrap_depth` impact blocks gives the
@@ -1483,8 +1456,6 @@ def _bm25_topk_batch_impact(
     # and exact completion is far tighter than the r5 partial sums for
     # all-common-term queries — their θ sat so low the planner decoded
     # half the candidate blocks)
-    from semcode_spark.operators.index_build import live_forward
-
     best_pred = (F.col("term").isin(live)
                  & (F.col("block_id") < cfg.bm25.impact_bootstrap_depth))
     # exact completion only when some query is stopword-heavy — the
@@ -1495,26 +1466,13 @@ def _bm25_topk_batch_impact(
                             n_docs)
         for ts in q_terms.values())
     if any_common:
-        boot_ids = (decode_doc_ids_only(index["postings"].filter(best_pred))
-                    .select("doc_id").distinct())
+        boot_ids = posting_ids(index, best_pred).select("doc_id").distinct()
         boot = (live_forward(index).filter(F.col("term").isin(live))
                 .join(F.broadcast(boot_ids), "doc_id"))
     else:
-        boot = filter_dead_postings(
-            decode_postings(index["postings"].filter(best_pred)),
-            index.get("tombstones"), index.get("_n_tombstones", 0))
-    win_b = Window.partitionBy("query_id").orderBy(
-        F.round("score", cfg.bm25.rank_decimals).desc(),
-        F.col("doc_id").asc())
+        boot = posting_rows(index, best_pred)
     theta_rows = (
-        boot.withColumn("idf", idf_map[F.col("term")])
-        .join(index["docs"], "doc_id")
-        .join(F.broadcast(qterms), "term")
-        .groupBy("query_id", "doc_id")
-        .agg(F.sum(F.col("idf") * w).alias("score"))
-        .withColumn("rank", F.row_number().over(win_b))
-        .join(F.broadcast(ks), "query_id")
-        .filter(F.col("rank") <= F.col("k"))
+        _batch_topk(boot, index, meta.idfs, q_terms, k_of, avgdl, cfg)
         .groupBy("query_id").agg(
             F.count(F.lit(1)).alias("n"),
             F.min("score").alias("kth"),
@@ -1563,8 +1521,6 @@ def _bm25_topk_batch_impact(
         c = (F.col("term") == t) if kind == "full" else \
             ((F.col("term") == t) & (F.col("max_w") * adl_corr >= F.lit(cut)))
         pred = c if pred is None else (pred | c)
-    if stats is not None:
-        stats["decision"] = dict(decision)
     if pred is None:
         # every term skippable for every query: the bootstrap docs
         # already dominate every other doc; still score them exactly
@@ -1573,11 +1529,6 @@ def _bm25_topk_batch_impact(
     # --- job 2+3 (one action): ids-only decode of the merged planned
     # blocks → union candidate ids → forward completion, scored per
     # (query, doc) over each query's terms, per-query window top-k
-    cand_blocks = index["postings"].filter(pred)
-    if stats is not None and stats.get("exact"):
-        stats["blocks_decoded"] = cand_blocks.count()
-        stats["blocks_candidate"] = (
-            index["postings"].filter(F.col("term").isin(live)).count())
     ids_ub = sum(meta.dfs[t] for t, d in decision.items()
                  if d[0] != "skip") + index.get("_n_tombstones", 0)
     fwd = live_forward(index).filter(F.col("term").isin(live))
@@ -1585,53 +1536,33 @@ def _bm25_topk_batch_impact(
     # see wand_topk_impact: scoring every live-term forward row is
     # equally lossless, and a candidate set near the corpus makes the
     # ids-decode + join a pure extra shuffle
-    cand_worthwhile = ids_ub <= max(cfg.index.broadcast_ids_max,
-                                    int(n_docs) // 4)
-    if stats is not None:
-        stats["cand_join"] = bool(cand_worthwhile)
-    if cand_worthwhile:
-        cand_ids = decode_doc_ids_only(cand_blocks) \
-            .select("doc_id").distinct()
+    if ids_ub <= max(cfg.index.broadcast_ids_max, int(n_docs) // 4):
+        cand_ids = posting_ids(index, pred).select("doc_id").distinct()
         bcast = ids_ub <= cfg.index.broadcast_ids_max
-        matched = fwd.join(
-            F.broadcast(cand_ids) if bcast else cand_ids, "doc_id")
-    else:
-        matched = fwd
-    win = Window.partitionBy("query_id").orderBy(
-        F.round("score", cfg.bm25.rank_decimals).desc(),
-        F.col("doc_id").asc())
+        fwd = fwd.join(F.broadcast(cand_ids) if bcast else cand_ids, "doc_id")
     return (
-        matched.withColumn("idf", idf_map[F.col("term")])
-        .join(index["docs"], "doc_id")
-        .join(F.broadcast(qterms), "term")
-        .groupBy("query_id", "doc_id")
-        .agg(F.sum(F.col("idf") * w).alias("score"))
-        .withColumn("rank", F.row_number().over(win))
-        .join(F.broadcast(ks), "query_id")
-        .filter(F.col("rank") <= F.col("k"))
+        _batch_topk(fwd, index, meta.idfs, q_terms, k_of, avgdl, cfg)
         .select("query_id", "rank", "doc_id", "score")
     )
 
 
 def _score_blocks(
-    blocks_df: DataFrame,
+    index: dict,
+    pred,
     idfs: dict[str, float],
     avgdl: float,
-    index: dict,
     cfg: EngineConfig,
 ) -> DataFrame:
-    """Decode block rows, drop tombstoned postings, join doc lengths,
-    exact BM25 per doc. ``idfs`` (term → idf, a handful of query terms)
-    enters the plan as a literal map — no broadcast exchange."""
+    """Live postings of the blocks matching ``pred`` (posting_rows),
+    doc lengths joined, exact BM25 per doc. ``idfs`` (term → idf, a
+    handful of query terms) enters the plan as a literal map — no
+    broadcast exchange."""
     k1, b = cfg.bm25.k1, cfg.bm25.b
-    postings = filter_dead_postings(
-        decode_postings(blocks_df), index.get("tombstones"),
-        index.get("_n_tombstones", 0))
+    postings = posting_rows(index, pred)
     if not idfs:
         return postings.join(index["docs"], "doc_id").groupBy("doc_id").agg(
             F.lit(0.0).alias("score")).limit(0)
-    idf_map = F.create_map(*chain.from_iterable(
-        (F.lit(t), F.lit(v)) for t, v in idfs.items()))
+    idf_map = _lit_map(idfs.items())
     joined = postings.withColumn("idf", idf_map[F.col("term")]).join(
         index["docs"], "doc_id")
     w = (F.col("tf") * (k1 + 1.0)) / (

@@ -62,6 +62,7 @@ from semcode_spark.operators.index_build import (
     write_forward, write_term_bounds, _write_meta,
 )
 from semcode_spark.sources import tableio as _tio
+from semcode_spark.sources.tables import local_frame
 
 
 def _next_group(spark: SparkSession, index_dir: str, version: int) -> int:
@@ -279,8 +280,8 @@ def _add_segment_locked(
 
         # ---- idempotent per-segment writes (invisible until manifest) ----
         ds.write.mode("overwrite").parquet(os.path.join(vdir, "docs", f"seg={g}"))
-        spark.createDataFrame(
-            corpus_rows, "n_docs long, sum_dl double"
+        local_frame(
+            spark, corpus_rows, "n_docs long, sum_dl double"
         ).write.mode("overwrite").parquet(os.path.join(vdir, "corpus", f"seg={g}"))
 
         thr = max(2.0, cfg.index.hot_term_df_ratio * n_new)
@@ -461,8 +462,8 @@ def _compact_segments_locked(
             _tio.write_meta(vnew, meta)
             docs_live.write.mode("overwrite").parquet(
                 os.path.join(vnew, "docs", "seg=0"))
-            spark.createDataFrame(
-                [(n_docs, sum_dl)], "n_docs long, sum_dl double"
+            local_frame(
+                spark, [(n_docs, sum_dl)], "n_docs long, sum_dl double"
             ).write.mode("overwrite").parquet(os.path.join(vnew, "corpus", "seg=0"))
             idx["term_stats"].withColumn(
                 "is_hot", F.col("df") > thr

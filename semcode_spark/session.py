@@ -66,13 +66,15 @@ def get_spark(
         .config("spark.ui.enabled", "false")
         .config("spark.sql.session.timeZone", "UTC")
     )
-    # shuffle spill to tmpfs when available (sandbox has 126G of it);
-    # on a real cluster this is the NVMe local dir per executor
-    if os.path.isdir("/dev/shm"):
-        shm = "/dev/shm/spark-local"
-        os.makedirs(shm, exist_ok=True)
-        builder = builder.config("spark.local.dir",
-                                 os.environ.get("SPARK_LOCAL_DIRS", shm))
+    # shuffle spill goes to SPARK_LOCAL_DIRS when set, else to tmpfs
+    # when available; on a real cluster this is the NVMe local dir per
+    # executor. Only the directory actually used is created.
+    local_dirs = os.environ.get("SPARK_LOCAL_DIRS")
+    if not local_dirs and os.path.isdir("/dev/shm"):
+        local_dirs = "/dev/shm/spark-local"
+        os.makedirs(local_dirs, exist_ok=True)
+    if local_dirs:
+        builder = builder.config("spark.local.dir", local_dirs)
     for k, v in (extra_conf or {}).items():
         builder = builder.config(k, v)
     spark = builder.getOrCreate()

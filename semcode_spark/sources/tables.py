@@ -42,6 +42,24 @@ def spread(df: DataFrame, factor: int = 1) -> DataFrame:
     return df
 
 
+def local_frame(spark: SparkSession, rows, schema: str) -> DataFrame:
+    """A DataFrame of driver-side rows (tuples or Rows, in ``schema``'s
+    DDL column order) that plans as a LocalTableScan. Built through
+    Arrow: ``spark.createDataFrame(list)`` parallelizes a Python RDD, and
+    every job reading it pays a Python-worker stage (~0.3 s on a 4-core
+    local session, however few the rows)."""
+    import pyarrow as pa
+    from pyspark.sql.pandas.types import to_arrow_schema
+    from pyspark.sql.types import _parse_datatype_string
+
+    struct = _parse_datatype_string(schema)
+    arrow = to_arrow_schema(struct)
+    cols = list(zip(*rows)) if rows else [()] * len(arrow)
+    table = pa.Table.from_arrays(
+        [pa.array(c, type=f.type) for c, f in zip(cols, arrow)], schema=arrow)
+    return spark.createDataFrame(table, schema=struct)
+
+
 def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     if name not in TABLES:
         raise ValueError(f"unknown table {name!r}; one of {TABLES}")

@@ -122,25 +122,103 @@ def test_query_with_fallback_ladder(spark, index, monkeypatch):
         query_with_fallback(spark, index, "???", k=10, cfg=CFG)
 
 
-def test_serving_mode_matches_cold(spark, documents, index, tmp_path_factory):
-    """cache=True serving mode (persisted tables + driver term dict)
-    returns results identical to the cold path for every query mode."""
-    from semcode_spark.operators.index_build import build_index, read_index
+@pytest.fixture(scope="module")
+def served(spark, documents, tmp_path_factory):
+    """(cold, serving) handles on one index that had one add_segment
+    replace, so the serving cache holds tombstone-filtered rows."""
+    from pyspark.sql import functions as F
+    from semcode_spark.operators.segments import add_segment
 
     out = str(tmp_path_factory.mktemp("serving_idx"))
     build_index(spark, documents, out, cfg=CFG, groups=2, count_rows=False)
+    add_segment(spark, out, documents.filter("doc_id < 30").withColumn(
+        "text", F.concat(F.lit("fresh spark query data "), F.col("text"))),
+        cfg=CFG)
+    cold = read_index(spark, out)
     hot = read_index(spark, out, cache=True)
+    yield cold, hot
+    for name in ("docs", "term_stats", "term_bounds", "postings"):
+        hot[name].unpersist()
+
+
+BATCH = [(0, "spark query data", 10), (1, "dup merge", 10), (2, "the", 5),
+         (3, "table scan", 7), (4, "zzz_nohit", 3), (5, "sort batch window", 10)]
+
+
+def _batch_rows(spark, idx, prune):
+    from semcode_spark.operators.query import bm25_topk_batch
+
+    out = bm25_topk_batch(spark, idx, BATCH, cfg=CFG, prune=prune).collect()
+    return sorted((r["query_id"], r["rank"], r["doc_id"], round(r["score"], 9))
+                  for r in out)
+
+
+def test_serving_mode_matches_cold(spark, served):
+    """cache=True serving mode (decoded posting cache + driver term
+    dict) returns results identical to the cold path for every query
+    mode, single and batched, on an index with tombstones."""
+    from semcode_spark.operators.query import wand_topk_impact
+
+    cold, hot = served
     assert "_term_dict" in hot  # tiny vocab → driver dict engaged
-    try:
-        for q in QUERIES:
-            want = wand_topk(spark, index, q, k=10, cfg=CFG, prune=True).collect()
-            for prune in (True, False, "auto"):
-                got = wand_topk(spark, hot, q, k=10, cfg=CFG, prune=prune).collect()
-                assert [(r["doc_id"], round(r["score"], 9)) for r in got] == \
-                    [(r["doc_id"], round(r["score"], 9)) for r in want], (q, prune)
-    finally:
-        for name in ("docs", "term_stats", "term_bounds", "postings"):
-            hot[name].unpersist()
+    assert cold["_n_tombstones"] > 0
+    for q in QUERIES:
+        want = wand_topk(spark, cold, q, k=10, cfg=CFG, prune=True).collect()
+        want = [(r["doc_id"], round(r["score"], 9)) for r in want]
+        for prune in (True, False, "auto", "impact"):
+            got = wand_topk(spark, hot, q, k=10, cfg=CFG, prune=prune).collect()
+            assert [(r["doc_id"], round(r["score"], 9)) for r in got] == want, \
+                (q, prune)
+        got = wand_topk_impact(spark, hot, q, k=10, cfg=CFG).collect()
+        assert [(r["doc_id"], round(r["score"], 9)) for r in got] == want, q
+    want = _batch_rows(spark, cold, False)
+    for prune in (False, "auto", "impact", True):
+        assert _batch_rows(spark, hot, prune) == want, prune
+
+
+PYTHON_NODES = ("MapInArrow", "ArrowEvalPython", "BatchEvalPython", "ExistingRDD")
+
+
+def _executed_nodes(df) -> list[str]:
+    """Executed plan lines, minus the plans that built cached relations
+    (an InMemoryRelation prints the plan that filled it at open)."""
+    lines, skip_below = [], None
+    for line in df._jdf.queryExecution().executedPlan().toString().splitlines():
+        depth = len(line) - len(line.lstrip(" :+-"))
+        if skip_below is not None and depth > skip_below:
+            continue
+        skip_below = depth if "InMemoryRelation" in line else None
+        lines.append(line)
+    return lines
+
+
+def test_warm_serving_runs_no_python(spark, served, monkeypatch):
+    """Every job of a warm wand_topk and of a warm bm25_topk_batch
+    (auto and impact) runs in the JVM: no Arrow/Python UDF node and no
+    scan of a Python-built RDD in any executed plan."""
+    from semcode_spark.operators.query import bm25_topk_batch
+
+    _, hot = served
+    df_cls = type(hot["docs"])
+    real = df_cls.collect
+    plans: list[list[str]] = []
+
+    def recording(self):
+        rows = real(self)
+        plans.append(_executed_nodes(self))
+        return rows
+
+    monkeypatch.setattr(df_cls, "collect", recording)
+    calls = [lambda: wand_topk(spark, hot, "spark query data", k=10, cfg=CFG),
+             lambda: bm25_topk_batch(spark, hot, BATCH, cfg=CFG, prune="auto"),
+             lambda: bm25_topk_batch(spark, hot, BATCH, cfg=CFG, prune="impact")]
+    for call in calls:
+        del plans[:]
+        call().collect()
+        assert plans
+        bad = [ln for p in plans for ln in p
+               if any(n in ln for n in PYTHON_NODES)]
+        assert not bad, bad
 
 
 def test_batch_pruning_lossless(spark, documents, tmp_path):
@@ -192,3 +270,18 @@ def test_conjunctive_topk_requires_all_terms(spark, documents, index):
     for r, (_, s) in zip(got, want):
         assert r["score"] == pytest.approx(s, abs=1e-9)
     assert all(r["doc_id"] in must for r in got)
+
+
+def test_bm25_scores_without_terms_is_empty(documents):
+    from semcode_spark.operators.query import bm25_scores
+
+    out = bm25_scores(documents, [])
+    assert out.columns == ["doc_id", "score"]
+    assert out.collect() == []
+
+
+def test_batch_rejects_duplicate_query_ids(spark, index):
+    from semcode_spark.operators.query import bm25_topk_batch
+
+    with pytest.raises(ValueError, match="duplicate query_id"):
+        bm25_topk_batch(spark, index, [(0, "spark", 5), (0, "data", 5)], cfg=CFG)
