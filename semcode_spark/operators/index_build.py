@@ -553,10 +553,15 @@ def filter_dead_postings(flat: DataFrame, tombstones: DataFrame | None,
 SERVING_BLOCK_COLS = ("salt", "block_id", "max_w", "avgdl_enc")
 
 
+def is_serving(idx: dict) -> bool:
+    """True for a serving handle (read_index(cache=True)): its 'postings'
+    are the cached live decoded rows, hash-partitioned by doc_id, and
+    the encoded blocks sit under '_blocks'."""
+    return "_blocks" in idx
+
+
 def posting_blocks(idx: dict) -> DataFrame:
-    """The encoded block rows of an open index. A serving handle
-    (read_index(cache=True)) keeps its decoded rows under 'postings'
-    and the blocks under '_blocks'."""
+    """The encoded block rows of an open index."""
     return idx.get("_blocks", idx["postings"])
 
 
@@ -564,11 +569,12 @@ def posting_rows(idx: dict, pred=None) -> DataFrame:
     """Live (term, group, doc_id, tf) postings of the blocks matching the
     block-level predicate ``pred`` (None: every block) — the one decode
     seam of the query side. A serving handle filters its cached decoded
-    rows (tombstones already applied, no Python); a cold handle decodes
-    the matching blocks and drops tombstoned postings."""
+    rows (tombstones already applied, no Python) and also returns their
+    ``doc_len``; a cold handle decodes the matching blocks and drops
+    tombstoned postings."""
     src = idx["postings"] if pred is None else idx["postings"].filter(pred)
-    if "_blocks" in idx:
-        return src.select("term", "group", "doc_id", "tf")
+    if is_serving(idx):
+        return src.select("term", "group", "doc_id", "tf", "doc_len")
     return filter_dead_postings(decode_postings(src), idx.get("tombstones"),
                                 idx.get("_n_tombstones", 0))
 
@@ -579,7 +585,7 @@ def posting_ids(idx: dict, pred=None) -> DataFrame:
     stream is never decoded and tombstoned postings are kept, so callers
     must treat the ids as a superset of the live ones."""
     src = idx["postings"] if pred is None else idx["postings"].filter(pred)
-    if "_blocks" in idx:
+    if is_serving(idx):
         return src.select("term", "group", "doc_id")
     return decode_doc_ids_only(src)
 
@@ -610,7 +616,14 @@ def live_forward(idx: dict, with_positions: bool = False) -> DataFrame:
     postings rule: a forward row of doc d from segment s is dead iff a
     tombstone (d, before) with s < before exists. ``with_positions``
     keeps the positions column (compaction of positional indexes);
-    default drops it so replace-delta scans never read those bytes."""
+    default drops it so replace-delta scans never read those bytes.
+
+    A serving handle answers from its cache instead: the live posting
+    rows are the live forward rows, so it returns them as (doc_id,
+    term, tf, doc_len), still partitioned by doc_id, with no parquet
+    read and no tombstone join."""
+    if is_serving(idx) and not with_positions:
+        return idx["postings"].select("doc_id", "term", "tf", "doc_len")
     cols = ["doc_id", "term", "tf"]
     fwd = idx.get("forward")
     if with_positions:
@@ -1258,6 +1271,27 @@ def _open_table(spark: SparkSession, path: str) -> DataFrame:
         return spark.read.parquet(path)
 
 
+def _footer_rows(path: str, part: str, values: list[int]) -> int | None:
+    """Row count of the parquet files under ``path/<part>=<v>/`` for v
+    in ``values``, summed from the file footers on the driver (pyarrow,
+    like _read_manifest) instead of a Spark count job. Reads the same
+    files Spark would: every file not starting with '.' or '_'. None
+    when a footer cannot be read, so the caller can fall back to
+    counting with Spark."""
+    try:
+        import pyarrow.parquet as _pq
+
+        n = 0
+        for v in values:
+            for dp, dns, fns in os.walk(os.path.join(path, f"{part}={v}")):
+                dns[:] = [d for d in dns if not d.startswith((".", "_"))]
+                n += sum(_pq.read_metadata(os.path.join(dp, fn)).num_rows
+                         for fn in fns if not fn.startswith((".", "_")))
+        return n
+    except (ImportError, OSError, ValueError):  # pyarrow's errors subclass these
+        return None
+
+
 def read_index(spark: SparkSession, out_dir: str, cache: bool = False,
                term_dict_max: int = 2_000_000) -> dict[str, DataFrame]:
     """Open the CURRENT snapshot of an index.
@@ -1275,9 +1309,11 @@ def read_index(spark: SparkSession, out_dir: str, cache: bool = False,
     storage/milvus_store.py:83-85): docs/term_stats/term_bounds are
     persisted and materialized, and the posting blocks are decoded ONCE,
     here: 'postings' then holds the live decoded rows (term, group,
-    salt, block_id, max_w, avgdl_enc, doc_id, tf) — tombstoned postings
-    dropped — so warm queries filter cached rows with the same
-    block-level predicates and run no Python worker (posting_rows). The
+    salt, block_id, max_w, avgdl_enc, doc_id, tf, doc_len) — tombstoned
+    postings dropped, each doc's length joined on — hash-partitioned by
+    doc_id into the session's shuffle partitions. Warm queries filter
+    cached rows with the same block-level predicates, run no Python
+    worker (posting_rows), and aggregate per doc with no exchange. The
     encoded blocks stay reachable as '_blocks' (posting_blocks), cached
     only for positional indexes, whose phrase decode needs their `pos`
     stream. Release the cache with unpersist() on docs, term_stats,
@@ -1307,7 +1343,9 @@ def read_index(spark: SparkSession, out_dir: str, cache: bool = False,
     if os.path.isdir(tomb_dir):
         tombstones = _open_table(spark, tomb_dir).filter(
             F.col("seg").isin(seg_list)).select("doc_id", "before_group")
-        n_tomb = tombstones.count()
+        n_tomb = _footer_rows(tomb_dir, "seg", seg_list)
+        if n_tomb is None:
+            n_tomb = tombstones.count()
     else:
         tombstones, n_tomb = _empty_tombstones(spark), 0
 
@@ -1348,8 +1386,11 @@ def read_index(spark: SparkSession, out_dir: str, cache: bool = False,
         blocks = idx["_blocks"] = idx["postings"]
         if idx["positions_stored"]:  # filled by the decode below
             blocks.persist()
-        idx["postings"] = filter_dead_postings(
+        live = filter_dead_postings(
             decode_postings(blocks, SERVING_BLOCK_COLS), tombstones, n_tomb)
+        n_parts = int(spark.conf.get("spark.sql.shuffle.partitions"))
+        idx["postings"] = live.join(idx["docs"], "doc_id").repartition(
+            n_parts, "doc_id")
         for name in ("docs", "term_stats", "term_bounds", "postings"):
             idx[name] = idx[name].persist()
             idx[name].count()  # materialize now, not on first query

@@ -33,11 +33,11 @@ Rank identity: total order (round(score, d) desc, doc_id asc) — SURVEY
 
 from __future__ import annotations
 
+import json
 import math
-from itertools import chain
 from typing import NamedTuple
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
@@ -45,7 +45,7 @@ from semcode_spark.config import DEFAULT, EngineConfig
 from semcode_spark.functions.analyzers import analyze_query, analyzer
 from semcode_spark.operators.index_build import (  # noqa: F401 (decode_postings re-exported)
     decode_positions_flat, decode_postings, filter_dead_postings,
-    posting_blocks, posting_ids, posting_rows,
+    is_serving, live_forward, posting_blocks, posting_ids, posting_rows,
 )
 from semcode_spark.sources.tables import local_frame
 
@@ -62,19 +62,83 @@ def idf_py(df: float, n_docs: float) -> float:
     return math.log((n_docs - df + 0.5) / (df + 0.5) + 1.0)
 
 
-def score_col(tf_col, dl_col, idf, avgdl: float, cfg: EngineConfig = DEFAULT):
+def _bm25_w(avgdl: float, cfg: EngineConfig):
+    """BM25's per-posting weight (the idf factor aside) over the
+    ``tf`` and ``doc_len`` columns."""
     k1, b = cfg.bm25.k1, cfg.bm25.b
-    return idf * (tf_col * (k1 + 1.0)) / (
-        tf_col + k1 * (1.0 - b + b * dl_col / avgdl)
-    )
+    return (F.col("tf") * (k1 + 1.0)) / (
+        F.col("tf") + k1 * (1.0 - b + b * F.col("doc_len") / avgdl))
 
 
-def _lit_map(pairs):
-    """A literal map column from driver-side (key, value) pairs (values
-    may be Columns): a handful of per-query entries enter the plan as
-    constants — no driver-built relation, no broadcast exchange."""
-    return F.create_map(*chain.from_iterable(
-        (F.lit(k), F.lit(v)) for k, v in pairs))
+# Plan inputs built on the driver (query terms, idfs, cuts, query ids)
+# enter the plan as ONE SQL or JSON literal each. Every Column built in
+# Python is at least one py4j round trip, so a per-entry literal would
+# make plan building grow with the number of queries and terms.
+
+def _sql_str(s: str) -> str:
+    """``s`` as a Spark SQL string literal (the parser's default
+    backslash escapes)."""
+    return "'" + s.replace("\\", "\\\\").replace("'", "\\'") + "'"
+
+
+def _terms_in(terms) -> Column:
+    """``term IN (...)`` over driver-side terms: still an In predicate,
+    so a cold scan pushes it to parquet."""
+    if not terms:
+        return F.lit(False)
+    return F.expr(f"term IN ({', '.join(map(_sql_str, terms))})")
+
+
+def _lit_map(d: dict, value_type: str = "double") -> Column:
+    """A literal ``map<string, value_type>`` column from a driver-side
+    dict (keys become strings). The optimizer folds the JSON text into
+    a map literal, and json writes each double's shortest round-trip
+    repr, so the values arrive bit-exact."""
+    return F.from_json(F.lit(json.dumps(d)), f"map<string,{value_type}>")
+
+
+def _with_doc_len(index: dict, rows: DataFrame) -> DataFrame:
+    """``rows`` with each doc's length: serving rows carry it already
+    (and stay doc_id-partitioned, so the per-doc aggregate after them
+    needs no exchange); cold rows join the docs table."""
+    return rows if "doc_len" in rows.columns else rows.join(index["docs"], "doc_id")
+
+
+def _restrict_ids(index: dict, rows: DataFrame, ids: DataFrame,
+                  broadcast: bool) -> DataFrame:
+    """``rows`` of the docs in the distinct ``ids`` frame. On a serving
+    handle both sides are hash-partitioned by doc_id, so a shuffled hash
+    join runs partition by partition with no exchange and no broadcast
+    job; a cold handle broadcasts the ids while they are small."""
+    if is_serving(index):
+        return rows.join(ids.hint("shuffle_hash"), "doc_id")
+    return rows.join(F.broadcast(ids) if broadcast else ids, "doc_id")
+
+
+def _cut_pred(cuts: dict[str, float], avgdl: float) -> Column:
+    """Blocks of the terms in ``cuts`` whose avgdl-corrected max_w
+    reaches the term's cut (a -inf cut keeps every block of the term)."""
+    adl_corr = F.greatest(F.lit(1.0), F.lit(avgdl) / F.col("avgdl_enc"))
+    return _terms_in(sorted(cuts)) & (
+        F.col("max_w") * adl_corr >= _lit_map(cuts)[F.col("term")])
+
+
+def _resolve_k(k: int | None, cfg: EngineConfig) -> int:
+    """``k``, or the configured default for None; a k that is not a
+    positive int is a caller error."""
+    if k is None:
+        return cfg.bm25.default_k
+    if isinstance(k, bool) or not isinstance(k, int) or k < 1:
+        raise ValueError(f"k must be a positive int, got {k!r}")
+    return k
+
+
+def _check_prune(prune) -> None:
+    """The plan choices: False (flat), True (static block-max filter),
+    "auto" and "impact"."""
+    if not (isinstance(prune, bool) or prune in ("auto", "impact")):
+        raise ValueError(
+            f'prune must be False, True, "auto" or "impact", got {prune!r}')
 
 
 def bm25_scores(
@@ -156,7 +220,7 @@ def bm25_topk(
     text_col: str = "text",
 ) -> DataFrame:
     """Top-k (doc_id, score) for a free-text query — exhaustive path."""
-    k = k or cfg.bm25.default_k
+    k = _resolve_k(k, cfg)
     terms = analyze_query(cfg.index.analyzer, query)
     if not terms:
         raise ValueError("empty query")  # reference validates the same (api/main.py:203-206)
@@ -218,7 +282,7 @@ def _term_meta(
         missing = [t for t in terms if t not in memo]
         if missing:
             base = (
-                index["term_bounds"].filter(F.col("term").isin(missing))
+                index["term_bounds"].filter(_terms_in(missing))
                 .join(index["term_stats"].select("term", "df"), "term")
             )
             if need_corpus:
@@ -315,7 +379,8 @@ def wand_topk(
     (verified vs bm25_topk in tests/test_wand.py, incl. the θ-tie
     adversarial corpus and doc-replacement tombstones).
     """
-    k = k or cfg.bm25.default_k
+    k = _resolve_k(k, cfg)
+    _check_prune(prune)
     terms = _query_terms(index, query)
     if not terms:
         raise ValueError("empty query")
@@ -325,11 +390,11 @@ def wand_topk(
     corpus = index["_corpus_row"]
     n_docs, avgdl = float(corpus["n_docs"]), float(corpus["avgdl"])
     idfs, term_ubs, best, n_blocks = meta.idfs, meta.ubs, meta.best, meta.n_blocks
-    # query terms enter the plan as literals (isin + idf map), not as a
-    # broadcast-joined DataFrame: at a handful of terms per query the
+    # query terms enter the plan as literals (IN list + idf map), not as
+    # a broadcast-joined DataFrame: at a handful of terms per query the
     # broadcast exchange is pure per-query latency (~0.3-0.5 s/job on
     # the warm path for zero benefit)
-    cand = F.col("term").isin(terms)
+    cand = _terms_in(terms)
 
     if prune == "auto":
         # auto = flat at sandbox scales (r4, measured — see BENCH/
@@ -370,11 +435,8 @@ def wand_topk(
             t: (theta_eff - (total_ub - term_ubs[t])) / idfs[t]
             for t in term_ubs
         }
-        cut_map = _lit_map(cutoffs.items())
-        adl_corr = F.greatest(F.lit(1.0), F.lit(avgdl) / F.col("avgdl_enc"))
-        survivors = cand & (F.col("max_w") * adl_corr >= cut_map[F.col("term")])
         rows = (
-            _score_blocks(index, survivors, idfs, avgdl, cfg)
+            _score_blocks(index, _cut_pred(cutoffs, avgdl), idfs, avgdl, cfg)
             .orderBy(F.round("score", cfg.bm25.rank_decimals).desc(),
                      F.col("doc_id").asc())
             .limit(k)
@@ -390,14 +452,11 @@ def wand_topk(
     )
 
 
-def _best_block_pred(best: dict[str, tuple[int, int, int]]):
+def _best_block_pred(best: dict[str, tuple[int, int, int]]) -> Column:
     """Literal predicate selecting each term's build-time best block."""
-    pred = None
-    for t, (g, s, b) in best.items():
-        c = ((F.col("term") == t) & (F.col("group") == g)
-             & (F.col("salt") == s) & (F.col("block_id") == b))
-        pred = c if pred is None else (pred | c)
-    return pred
+    return F.expr(" OR ".join(
+        f"(term = {_sql_str(t)} AND `group` = {int(g)} AND salt = {int(s)}"
+        f" AND block_id = {int(b)})" for t, (g, s, b) in best.items()))
 
 
 def _theta_slack(cfg: EngineConfig) -> float:
@@ -449,26 +508,20 @@ def _forward_exact_scores(
     idfs: dict[str, float],
     avgdl: float,
     cand_ids: DataFrame | None,
+    broadcast: bool,
     cfg: EngineConfig,
 ) -> DataFrame:
     """(doc_id, score): EXACT BM25 over the live query terms from the
-    forward table, optionally restricted to ``cand_ids`` (pass a
-    broadcast-hinted ids frame). Shared by the θ bootstrap and the
-    completion stage of impact retrieval."""
-    from semcode_spark.operators.index_build import live_forward
-
-    k1, b = cfg.bm25.k1, cfg.bm25.b
-    fwd = live_forward(index).filter(F.col("term").isin(sorted(idfs)))
+    forward table, optionally restricted to the distinct ``cand_ids``
+    (see _restrict_ids for ``broadcast``). Shared by the θ bootstrap and
+    the completion stage of impact retrieval."""
+    fwd = live_forward(index).filter(_terms_in(sorted(idfs)))
     if cand_ids is not None:
-        fwd = fwd.join(cand_ids, "doc_id")
-    idf_map = _lit_map(idfs.items())
-    w_expr = (F.col("tf") * (k1 + 1.0)) / (
-        F.col("tf") + k1 * (1.0 - b + b * F.col("doc_len") / avgdl))
+        fwd = _restrict_ids(index, fwd, cand_ids, broadcast)
     return (
-        fwd.withColumn("idf", idf_map[F.col("term")])
-        .join(index["docs"], "doc_id")
+        _with_doc_len(index, fwd.withColumn("idf", _lit_map(idfs)[F.col("term")]))
         .groupBy("doc_id")
-        .agg(F.sum(F.col("idf") * w_expr).alias("score"))
+        .agg(F.sum(F.col("idf") * _bm25_w(avgdl, cfg)).alias("score"))
     )
 
 
@@ -507,13 +560,12 @@ def _bootstrap_theta_eff_prefix(
     callers may not)."""
     if not idfs:
         return None
-    pred = (F.col("term").isin(list(idfs))
+    pred = (_terms_in(list(idfs))
             & (F.col("block_id") < cfg.bm25.impact_bootstrap_depth))
     avgdl = float(index["_corpus_row"]["avgdl"])
     if exact and index.get("forward") is not None:
         ids = posting_ids(index, pred).select("doc_id").distinct()
-        scored = _forward_exact_scores(
-            index, idfs, avgdl, F.broadcast(ids), cfg)
+        scored = _forward_exact_scores(index, idfs, avgdl, ids, True, cfg)
     else:
         scored = _score_blocks(index, pred, idfs, avgdl, cfg)
     rows = (
@@ -652,7 +704,7 @@ def wand_topk_impact(
     = False``) those blocks are not physically decoded in THIS run (the
     forward scan serves instead), so read the pair together.
     """
-    k = k or cfg.bm25.default_k
+    k = _resolve_k(k, cfg)
     terms = _query_terms(index, query)
     if not terms:
         raise ValueError("empty query")
@@ -669,7 +721,7 @@ def wand_topk_impact(
 
     def _flat() -> DataFrame:
         return (
-            _score_blocks(index, F.col("term").isin(terms), meta.idfs, avgdl, cfg)
+            _score_blocks(index, _terms_in(terms), meta.idfs, avgdl, cfg)
             .orderBy(F.round("score", cfg.bm25.rank_decimals).desc(),
                      F.col("doc_id").asc())
             .limit(k)
@@ -692,18 +744,12 @@ def wand_topk_impact(
         return _flat()
 
     # --- candidate generation: decode ONLY the planned blocks, ids only
-    adl_corr = F.greatest(F.lit(1.0), F.lit(avgdl) / F.col("avgdl_enc"))
-    pred = None
-    for t in plan["full"]:
-        c = F.col("term") == t
-        pred = c if pred is None else (pred | c)
-    for t, w in plan["cut"].items():
-        c = (F.col("term") == t) & (F.col("max_w") * adl_corr >= F.lit(w))
-        pred = c if pred is None else (pred | c)
-    if pred is None:  # everything skipped: top-k comes from bootstrap
+    cuts = {**dict.fromkeys(plan["full"], -math.inf), **plan["cut"]}
+    if not cuts:  # everything skipped: top-k comes from bootstrap
         # impossible in practice (θ_eff < Σ ubs by construction), but a
         # degenerate plan must not decode the world
         return _flat()
+    pred = _cut_pred(cuts, avgdl)
     if stats is not None and stats.get("exact"):
         stats["blocks_decoded"] = posting_blocks(index).filter(pred).count()
     # dead candidates are harmless (their forward rows are already
@@ -725,13 +771,11 @@ def wand_topk_impact(
                                     int(n_docs) // 4)
     if stats is not None:
         stats["cand_join"] = bool(cand_worthwhile)
-    cand_ids = None
-    if cand_worthwhile:
-        ci = posting_ids(index, pred).select("doc_id").distinct()
-        cand_ids = F.broadcast(ci) \
-            if ids_ub <= cfg.index.broadcast_ids_max else ci
+    cand_ids = (posting_ids(index, pred).select("doc_id").distinct()
+                if cand_worthwhile else None)
     rows = (
-        _forward_exact_scores(index, meta.idfs, avgdl, cand_ids, cfg)
+        _forward_exact_scores(index, meta.idfs, avgdl, cand_ids,
+                              ids_ub <= cfg.index.broadcast_ids_max, cfg)
         .orderBy(F.round("score", cfg.bm25.rank_decimals).desc(),
                  F.col("doc_id").asc())
         .limit(k)
@@ -752,23 +796,17 @@ def bm25_topk_conj(
     query terms' blocks; the all-terms requirement is a count-distinct
     HAVING inside the same scoring aggregate, so conjunctive ranking
     costs exactly one extra agg column over disjunctive scoring."""
-    k = k or cfg.bm25.default_k
+    k = _resolve_k(k, cfg)
     terms = _query_terms(index, query)
     if not terms:
         raise ValueError("empty query")
     idfs = _term_meta(spark, index, terms).idfs  # corpus row rides (r6)
-    corpus = index["_corpus_row"]
-    n_docs, avgdl = float(corpus["n_docs"]), float(corpus["avgdl"])
-    k1, b = cfg.bm25.k1, cfg.bm25.b
-    postings = posting_rows(index, F.col("term").isin(terms))
-    idf_map = _lit_map(idfs.items())
-    w = (F.col("tf") * (k1 + 1.0)) / (
-        F.col("tf") + k1 * (1.0 - b + b * F.col("doc_len") / avgdl))
+    avgdl = float(index["_corpus_row"]["avgdl"])
+    postings = posting_rows(index, _terms_in(terms))
     return (
-        postings.withColumn("idf", idf_map[F.col("term")])
-        .join(index["docs"], "doc_id")
+        _with_doc_len(index, postings.withColumn("idf", _lit_map(idfs)[F.col("term")]))
         .groupBy("doc_id")
-        .agg(F.sum(F.col("idf") * w).alias("score"),
+        .agg(F.sum(F.col("idf") * _bm25_w(avgdl, cfg)).alias("score"),
              F.count_distinct(F.col("term")).alias("_nt"))
         .filter(F.col("_nt") == len(terms))
         .orderBy(F.round("score", cfg.bm25.rank_decimals).desc(),
@@ -869,14 +907,14 @@ def phrase_match(
     slots: dict[str, list[int]] = {}
     for i, t in enumerate(terms):
         slots.setdefault(t, []).append(i)
-    blocks = posting_blocks(index).filter(F.col("term").isin(uniq))
+    blocks = posting_blocks(index).filter(_terms_in(uniq))
     rows = filter_dead_postings(
         decode_positions_flat(blocks), index.get("tombstones"),
         index.get("_n_tombstones", 0))
     cand, bc = _rare_term_candidates(spark, index, uniq, cfg)
     if cand is not None:
         rows = rows.join(F.broadcast(cand) if bc else cand, "doc_id")
-    slot_map = _lit_map((t, F.array(*map(F.lit, ss))) for t, ss in slots.items())
+    slot_map = _lit_map(slots, "array<int>")
     aligned = rows.withColumn("slot", F.explode(slot_map[F.col("term")]))
     hits = (
         aligned.groupBy("doc_id", (F.col("pos") - F.col("slot")).alias("base"))
@@ -900,7 +938,7 @@ def phrase_topk(
     scoring both derive from the same decoded rows (persisted for the
     duration of the query, released before returning). Rank order is
     the engine-wide (round(score, d) desc, doc_id asc) total order."""
-    k = k or cfg.bm25.default_k
+    k = _resolve_k(k, cfg)
     ordered = analyze_query(index.get("analyzer", "standard"), phrase)
     terms = list(dict.fromkeys(ordered))
     if not terms:
@@ -910,13 +948,11 @@ def phrase_topk(
             "index stores no positions — build with "
             "IndexConfig(store_positions=True) to serve phrase queries")
     idfs = _term_meta(spark, index, terms).idfs  # corpus row rides (r6)
-    corpus = index["_corpus_row"]
-    n_docs, avgdl = float(corpus["n_docs"]), float(corpus["avgdl"])
+    avgdl = float(index["_corpus_row"]["avgdl"])
     if not idfs:  # no phrase term exists in the vocabulary: no hits
-        # (an empty idf literal map would not even analyze)
         return local_frame(spark, [], TOPK_SCHEMA)
 
-    blocks = posting_blocks(index).filter(F.col("term").isin(terms))
+    blocks = posting_blocks(index).filter(_terms_in(terms))
     rows = filter_dead_postings(
         decode_positions_flat(blocks), index.get("tombstones"),
         index.get("_n_tombstones", 0))
@@ -933,7 +969,7 @@ def phrase_topk(
         slots: dict[str, list[int]] = {}
         for i, t in enumerate(ordered):
             slots.setdefault(t, []).append(i)
-        slot_map = _lit_map((t, F.array(*map(F.lit, ss))) for t, ss in slots.items())
+        slot_map = _lit_map(slots, "array<int>")
         hits = (
             rows.withColumn("slot", F.explode(slot_map[F.col("term")]))
             .groupBy("doc_id", (F.col("pos") - F.col("slot")).alias("base"))
@@ -941,16 +977,13 @@ def phrase_topk(
             .filter(F.col("n_slots") == len(ordered))
             .select("doc_id").distinct()
         )
-        k1, b = cfg.bm25.k1, cfg.bm25.b
-        idf_map = _lit_map(idfs.items())
         tf_rel = rows.groupBy("term", "doc_id").agg(
             F.count(F.lit(1)).alias("tf"))
-        w = (F.col("tf") * (k1 + 1.0)) / (
-            F.col("tf") + k1 * (1.0 - b + b * F.col("doc_len") / avgdl))
         scored = (
-            tf_rel.withColumn("idf", idf_map[F.col("term")])
+            tf_rel.withColumn("idf", _lit_map(idfs)[F.col("term")])
             .join(index["docs"], "doc_id")
-            .groupBy("doc_id").agg(F.sum(F.col("idf") * w).alias("score"))
+            .groupBy("doc_id").agg(
+                F.sum(F.col("idf") * _bm25_w(avgdl, cfg)).alias("score"))
         )
         out = (
             scored.join(hits, "doc_id", "left_semi")
@@ -1006,8 +1039,7 @@ def phrase_topk_batch(
         ordered = analyze_query(index.get("analyzer", "standard"), phrase)
         if not ordered:
             raise ValueError(f"empty phrase for query_id={qid}")
-        k = k or cfg.bm25.default_k
-        meta_rows.append((qid, len(ordered), k))
+        meta_rows.append((qid, len(ordered), _resolve_k(k, cfg)))
         for i, t in enumerate(ordered):
             slot_rows.append((qid, t, i))
             all_terms.add(t)
@@ -1017,12 +1049,11 @@ def phrase_topk_batch(
     qmeta = local_frame(spark, meta_rows, "query_id long, n_slots int, k int")
     terms = sorted(all_terms)
     idfs = _term_meta(spark, index, terms).idfs  # corpus row rides (r6)
-    corpus = index["_corpus_row"]
-    n_docs, avgdl = float(corpus["n_docs"]), float(corpus["avgdl"])
+    avgdl = float(index["_corpus_row"]["avgdl"])
     if not idfs:  # no phrase term exists in the vocabulary: no hits
         return local_frame(spark, [], BATCH_SCHEMA)
 
-    blocks = posting_blocks(index).filter(F.col("term").isin(terms))
+    blocks = posting_blocks(index).filter(_terms_in(terms))
     rows = filter_dead_postings(
         decode_positions_flat(blocks), index.get("tombstones"),
         index.get("_n_tombstones", 0)).persist()
@@ -1039,19 +1070,15 @@ def phrase_topk_batch(
         )
         # scoring: tf = per-(term, doc) occurrence count from the SAME
         # decoded rows; per-query sum over that query's distinct terms
-        k1, b = cfg.bm25.k1, cfg.bm25.b
-        idf_map = _lit_map(idfs.items())
         tf_rel = rows.groupBy("term", "doc_id").agg(
             F.count(F.lit(1)).alias("tf"))
-        w = (F.col("tf") * (k1 + 1.0)) / (
-            F.col("tf") + k1 * (1.0 - b + b * F.col("doc_len") / avgdl))
         qterms = slots_df.select("query_id", "term").distinct()
         scored = (
             tf_rel.join(F.broadcast(qterms), "term")
-            .withColumn("idf", idf_map[F.col("term")])
+            .withColumn("idf", _lit_map(idfs)[F.col("term")])
             .join(index["docs"], "doc_id")
             .groupBy("query_id", "doc_id")
-            .agg(F.sum(F.col("idf") * w).alias("score"))
+            .agg(F.sum(F.col("idf") * _bm25_w(avgdl, cfg)).alias("score"))
         )
         win = Window.partitionBy("query_id").orderBy(
             F.round("score", cfg.bm25.rank_decimals).desc(),
@@ -1099,7 +1126,7 @@ def highlight_topk(
     positions + k docs, independent of corpus size."""
     from semcode_spark.functions.tokenize import tokens_col
 
-    k = k or cfg.bm25.default_k
+    k = _resolve_k(k, cfg)
     terms = _query_terms(index, query)
     if not terms:
         raise ValueError("empty query")
@@ -1114,7 +1141,7 @@ def highlight_topk(
         return local_frame(spark, [], out_schema)
     ids = [r["doc_id"] for r in top]
     scores = local_frame(spark, top, TOPK_SCHEMA)
-    blocks = posting_blocks(index).filter(F.col("term").isin(terms))
+    blocks = posting_blocks(index).filter(_terms_in(terms))
     first = (
         filter_dead_postings(
             decode_positions_flat(blocks), index.get("tombstones"),
@@ -1213,7 +1240,7 @@ def facet_counts(
     terms = _query_terms(index, query)
     if not terms:
         raise ValueError("empty query")
-    matches = (posting_rows(index, F.col("term").isin(terms))
+    matches = (posting_rows(index, _terms_in(terms))
                .select("doc_id").distinct())
     return (
         docs.select(F.col(id_col).alias("doc_id"),
@@ -1246,7 +1273,7 @@ def query_with_fallback(
     Invalid input (empty query) still raises — that is a caller error,
     not a retrieval failure (reference api/main.py:203-206 validates
     before querying)."""
-    k = k or cfg.bm25.default_k
+    k = _resolve_k(k, cfg)
     if not _query_terms(index, query):
         raise ValueError("empty query")
     fallbacks: list[str] = []
@@ -1294,10 +1321,11 @@ def bm25_topk_batch(
     cannot displace the k fully-scored bootstrap docs (same argument as
     wand_topk, per query). Lossless: tests assert pruned == unpruned.
     """
+    _check_prune(prune)
     if len({qid for qid, _, _ in queries}) != len(queries):
         raise ValueError("duplicate query_id in batch")
     q_terms = {qid: _query_terms(index, text) for qid, text, _ in queries}
-    k_of = {qid: k for qid, _, k in queries}
+    k_of = {qid: _resolve_k(k, cfg) for qid, _, k in queries}
     all_terms = sorted({t for ts in q_terms.values() for t in ts})
     if not all_terms:
         return local_frame(spark, [], BATCH_SCHEMA)
@@ -1324,7 +1352,7 @@ def bm25_topk_batch(
         return _bm25_topk_batch_impact(
             spark, index, q_terms, k_of, meta, n_docs, avgdl, cfg)
 
-    pred = F.col("term").isin(all_terms)
+    pred = _terms_in(all_terms)
     if prune and term_ubs:
         # θ bootstrap for ALL queries in one job: each term's single
         # best block (build-time pointer), scored per query
@@ -1351,9 +1379,7 @@ def bm25_topk_batch(
                 c = (theta_eff[qid] - (total_ub - term_ubs[t])) / idfs[t]
                 if t not in cutoffs or c < cutoffs[t]:
                     cutoffs[t] = c
-        cut_map = _lit_map(cutoffs.items())
-        adl_corr = F.greatest(F.lit(1.0), F.lit(avgdl) / F.col("avgdl_enc"))
-        pred = pred & (F.col("max_w") * adl_corr >= cut_map[F.col("term")])
+        pred = _cut_pred(cutoffs, avgdl)
 
     return (
         _batch_topk(posting_rows(index, pred), index, idfs, q_terms, k_of,
@@ -1371,33 +1397,29 @@ def _batch_topk(
     avgdl: float,
     cfg: EngineConfig,
 ) -> DataFrame:
-    """Each query's top-k of the (term, doc_id, tf) ``rows``: a row
-    scores for every query holding its term. (query_id, rank, doc_id,
-    score, k), rank ≤ k. The term → query-ids fan-out, the idfs and the
-    per-query k are literal maps, so the plan reads no driver-built
-    relation (one would cost a Python-worker stage per job)."""
-    k1, b = cfg.bm25.k1, cfg.bm25.b
+    """Each query's top-k of the (term, doc_id, tf[, doc_len]) ``rows``:
+    a row scores for every query holding its term. (query_id, rank,
+    doc_id, score, k), rank ≤ k. The term → query-ids fan-out, the idfs
+    and the per-query k are literal maps, so the plan reads no
+    driver-built relation (one would cost a Python-worker stage per
+    job). On serving rows the (query_id, doc_id) aggregate runs inside
+    the doc_id partitions; only the per-query window shuffles."""
     qids_of: dict[str, list[int]] = {}
     for qid, ts in q_terms.items():
         for t in ts:
             if t in idfs:
                 qids_of.setdefault(t, []).append(qid)
-    by_term = _lit_map(
-        (t, F.array(*[F.lit(q).cast("long") for q in qs]))
-        for t, qs in qids_of.items())
-    k_map = _lit_map((F.lit(q).cast("long"), k) for q, k in k_of.items())
-    w = (F.col("tf") * (k1 + 1.0)) / (
-        F.col("tf") + k1 * (1.0 - b + b * F.col("doc_len") / avgdl))
+    by_term = _lit_map(qids_of, "array<bigint>")
+    k_map = _lit_map(k_of, "int")
     win = Window.partitionBy("query_id").orderBy(
         F.round("score", cfg.bm25.rank_decimals).desc(), F.col("doc_id").asc())
     return (
-        rows.withColumn("idf", _lit_map(idfs.items())[F.col("term")])
-        .join(index["docs"], "doc_id")
+        _with_doc_len(index, rows.withColumn("idf", _lit_map(idfs)[F.col("term")]))
         .withColumn("query_id", F.explode(by_term[F.col("term")]))
         .groupBy("query_id", "doc_id")
-        .agg(F.sum(F.col("idf") * w).alias("score"))
+        .agg(F.sum(F.col("idf") * _bm25_w(avgdl, cfg)).alias("score"))
         .withColumn("rank", F.row_number().over(win))
-        .withColumn("k", k_map[F.col("query_id")])
+        .withColumn("k", k_map[F.col("query_id").cast("string")])
         .filter(F.col("rank") <= F.col("k"))
     )
 
@@ -1444,9 +1466,8 @@ def _bm25_topk_batch_impact(
         raise ValueError(
             "impact retrieval needs the forward table "
             "(IndexConfig(store_forward=True))")
-    from semcode_spark.operators.index_build import live_forward
-
     live = sorted(meta.idfs)
+    live_terms = _terms_in(live)
 
     # --- job 1: θ bootstrap for every query at once — the union of
     # every term's top-`impact_bootstrap_depth` impact blocks gives the
@@ -1456,7 +1477,7 @@ def _bm25_topk_batch_impact(
     # and exact completion is far tighter than the r5 partial sums for
     # all-common-term queries — their θ sat so low the planner decoded
     # half the candidate blocks)
-    best_pred = (F.col("term").isin(live)
+    best_pred = (live_terms
                  & (F.col("block_id") < cfg.bm25.impact_bootstrap_depth))
     # exact completion only when some query is stopword-heavy — the
     # extra forward pass buys nothing for rare-term-only batches, whose
@@ -1467,8 +1488,8 @@ def _bm25_topk_batch_impact(
         for ts in q_terms.values())
     if any_common:
         boot_ids = posting_ids(index, best_pred).select("doc_id").distinct()
-        boot = (live_forward(index).filter(F.col("term").isin(live))
-                .join(F.broadcast(boot_ids), "doc_id"))
+        boot = _restrict_ids(index, live_forward(index).filter(live_terms),
+                             boot_ids, True)
     else:
         boot = posting_rows(index, best_pred)
     theta_rows = (
@@ -1513,33 +1534,28 @@ def _bm25_topk_batch_impact(
         for t in plan["skip"]:
             _need(t, "skip")
 
-    adl_corr = F.greatest(F.lit(1.0), F.lit(avgdl) / F.col("avgdl_enc"))
-    pred = None
-    for t, (kind, cut) in sorted(decision.items()):
-        if kind == "skip":
-            continue
-        c = (F.col("term") == t) if kind == "full" else \
-            ((F.col("term") == t) & (F.col("max_w") * adl_corr >= F.lit(cut)))
-        pred = c if pred is None else (pred | c)
-    if pred is None:
-        # every term skippable for every query: the bootstrap docs
-        # already dominate every other doc; still score them exactly
-        pred = best_pred
+    # one term → cut map: a full term's -inf cut keeps every block, a
+    # skipped term is absent
+    cuts = {t: -math.inf if kind == "full" else cut
+            for t, (kind, cut) in decision.items() if kind != "skip"}
+    # every term skippable for every query: the bootstrap docs already
+    # dominate every other doc; still score them exactly
+    pred = _cut_pred(cuts, avgdl) if cuts else best_pred
 
     # --- job 2+3 (one action): ids-only decode of the merged planned
     # blocks → union candidate ids → forward completion, scored per
     # (query, doc) over each query's terms, per-query window top-k
     ids_ub = sum(meta.dfs[t] for t, d in decision.items()
                  if d[0] != "skip") + index.get("_n_tombstones", 0)
-    fwd = live_forward(index).filter(F.col("term").isin(live))
+    fwd = live_forward(index).filter(live_terms)
     # candidate restriction only while it can shrink the forward read —
     # see wand_topk_impact: scoring every live-term forward row is
     # equally lossless, and a candidate set near the corpus makes the
     # ids-decode + join a pure extra shuffle
     if ids_ub <= max(cfg.index.broadcast_ids_max, int(n_docs) // 4):
         cand_ids = posting_ids(index, pred).select("doc_id").distinct()
-        bcast = ids_ub <= cfg.index.broadcast_ids_max
-        fwd = fwd.join(F.broadcast(cand_ids) if bcast else cand_ids, "doc_id")
+        fwd = _restrict_ids(index, fwd, cand_ids,
+                            ids_ub <= cfg.index.broadcast_ids_max)
     return (
         _batch_topk(fwd, index, meta.idfs, q_terms, k_of, avgdl, cfg)
         .select("query_id", "rank", "doc_id", "score")
@@ -1557,17 +1573,11 @@ def _score_blocks(
     doc lengths joined, exact BM25 per doc. ``idfs`` (term → idf, a
     handful of query terms) enters the plan as a literal map — no
     broadcast exchange."""
-    k1, b = cfg.bm25.k1, cfg.bm25.b
     postings = posting_rows(index, pred)
     if not idfs:
-        return postings.join(index["docs"], "doc_id").groupBy("doc_id").agg(
+        return postings.groupBy("doc_id").agg(
             F.lit(0.0).alias("score")).limit(0)
-    idf_map = _lit_map(idfs.items())
-    joined = postings.withColumn("idf", idf_map[F.col("term")]).join(
-        index["docs"], "doc_id")
-    w = (F.col("tf") * (k1 + 1.0)) / (
-        F.col("tf") + k1 * (1.0 - b + b * F.col("doc_len") / avgdl)
-    )
+    joined = _with_doc_len(
+        index, postings.withColumn("idf", _lit_map(idfs)[F.col("term")]))
     return joined.groupBy("doc_id").agg(
-        F.sum(F.col("idf") * w).alias("score")
-    )
+        F.sum(F.col("idf") * _bm25_w(avgdl, cfg)).alias("score"))

@@ -65,6 +65,11 @@ def get_spark(
                 os.environ.get("SPARK_DRIVER_JAVA_OPTS", "-XX:+UseParallelGC"))
         .config("spark.ui.enabled", "false")
         .config("spark.sql.session.timeZone", "UTC")
+        # PySpark otherwise captures the Python call site on every
+        # F.*/Column call: about four extra py4j round trips each, which
+        # dominated building a warm query's plan. Spark errors then lack
+        # the Python line; extra_conf can turn it back on.
+        .config("spark.python.sql.dataFrameDebugging.enabled", "false")
     )
     # shuffle spill goes to SPARK_LOCAL_DIRS when set, else to tmpfs
     # when available; on a real cluster this is the NVMe local dir per

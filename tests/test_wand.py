@@ -1,5 +1,7 @@
 """WAND pruned == exhaustive (lossless block-max pruning), SURVEY §5."""
 
+import uuid
+
 import pytest
 
 from semcode_spark.config import BM25Config, EngineConfig, IndexConfig
@@ -180,15 +182,27 @@ PYTHON_NODES = ("MapInArrow", "ArrowEvalPython", "BatchEvalPython", "ExistingRDD
 
 
 def _executed_nodes(df) -> list[str]:
-    """Executed plan lines, minus the plans that built cached relations
-    (an InMemoryRelation prints the plan that filled it at open)."""
-    lines, skip_below = [], None
-    for line in df._jdf.queryExecution().executedPlan().toString().splitlines():
-        depth = len(line) - len(line.lstrip(" :+-"))
-        if skip_below is not None and depth > skip_below:
-            continue
-        skip_below = depth if "InMemoryRelation" in line else None
-        lines.append(line)
+    """One line per node of the executed plan, adaptive query stages
+    included. Cached relations are not descended into: the plan that
+    filled a cache ran at open, not in this query."""
+    lines: list[str] = []
+
+    def walk(node) -> None:
+        lines.append(node.simpleString(100))
+        cls = node.getClass().getSimpleName()
+        if cls == "AdaptiveSparkPlanExec":
+            kids = [node.executedPlan()]
+        elif cls.endswith("QueryStageExec"):
+            kids = [node.plan()]
+        elif cls == "ReusedExchangeExec":
+            kids = [node.child()]
+        else:  # an InMemoryTableScan is a leaf: its relation is no child
+            seq = node.children()
+            kids = [seq.apply(i) for i in range(seq.size())]
+        for kid in kids:
+            walk(kid)
+
+    walk(df._jdf.queryExecution().executedPlan())
     return lines
 
 
@@ -285,3 +299,142 @@ def test_batch_rejects_duplicate_query_ids(spark, index):
 
     with pytest.raises(ValueError, match="duplicate query_id"):
         bm25_topk_batch(spark, index, [(0, "spark", 5), (0, "data", 5)], cfg=CFG)
+
+
+def _job_count(spark, fn) -> int:
+    """Spark jobs that ``fn()`` runs, counted by job group."""
+    sc = spark.sparkContext
+    group = f"jobcount-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, group)
+    try:
+        fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    sc._jsc.sc().listenerBus().waitUntilEmpty(30_000)
+    return len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def test_warm_serving_job_budget(spark, served):
+    """The serving cache is hash-partitioned by doc_id and carries
+    doc_len, so a warm single query is one job with no exchange (filter,
+    per-doc aggregate and a local top-k per partition, merged on the
+    driver); a batch shuffles only for its per-query window."""
+    from semcode_spark.operators.index_build import live_forward
+    from semcode_spark.operators.query import bm25_topk_batch
+
+    _, hot = served
+    assert "doc_len" in hot["postings"].columns
+    assert set(live_forward(hot).columns) == {"doc_id", "term", "tf", "doc_len"}
+    q = wand_topk(spark, hot, "spark query data", k=10, cfg=CFG)
+    assert _job_count(spark, q.collect) == 1
+    assert not [ln for ln in _executed_nodes(q) if "Exchange" in ln]
+    for prune, budget in (("auto", 2), ("impact", 5)):
+        n = _job_count(spark, lambda: bm25_topk_batch(
+            spark, hot, BATCH, cfg=CFG, prune=prune).collect())
+        assert n <= budget, (prune, n)
+
+
+def _py4j_commands(fn) -> int:
+    """py4j commands the driver sends while ``fn()`` runs, minus the
+    memory-delete commands that release Java objects whose Python
+    proxies were garbage-collected (when depends on the collector)."""
+    import gc
+
+    from py4j.clientserver import ClientServerConnection
+
+    real = ClientServerConnection.send_command
+    n = 0
+
+    def counting(self, command):
+        nonlocal n
+        n += not command.startswith("m\nd\n")
+        return real(self, command)
+
+    gc.collect()
+    with pytest.MonkeyPatch.context() as mp:
+        mp.setattr(ClientServerConnection, "send_command", counting)
+        fn()
+    return n
+
+
+def test_batch_plan_py4j_calls_do_not_grow(spark, served):
+    """Building a batch plan sends a constant number of py4j commands:
+    terms, idfs, cuts, query ids and k enter the plan as one SQL or JSON
+    literal each, not one Column per entry. A 24-query batch may send at
+    most 1.2x the commands of a 6-query batch."""
+    from semcode_spark.operators.query import bm25_topk_batch
+
+    _, hot = served
+    vocab = sorted(hot["_term_dict"])[:72]
+    big = [(i, " ".join(vocab[3 * i: 3 * i + 3]), 10) for i in range(24)]
+    small = big[:6]
+    for prune in ("auto", "impact"):
+        def build(qs):
+            return lambda: bm25_topk_batch(spark, hot, qs, cfg=CFG, prune=prune)
+        build(big)()  # first call: one-time class lookups
+        n_small = _py4j_commands(build(small))
+        n_big = _py4j_commands(build(big))
+        assert n_big <= 1.2 * n_small, (prune, n_small, n_big)
+
+
+def test_literal_maps_round_trip(spark):
+    """Driver-side dicts enter the plan bit-exact: doubles at the edges
+    of the range, and keys with quotes, backslashes and non-ASCII text,
+    through both the JSON map literal and the SQL IN list."""
+    import math
+
+    from semcode_spark.operators.query import _lit_map, _terms_in
+
+    keys = ["o'neil", "back\\slash", "naïve 漢字 😀", "plain", "''\\'"]
+    vals = [0.1 + 0.2, 5e-324, 1.7976931348623157e308, -1e30, -math.inf]
+    d = dict(zip(keys, vals))
+    got = spark.range(1).select(_lit_map(d).alias("m")).collect()[0]["m"]
+    assert got == d  # float ==: bit-exact for these values
+    ints = {"7": [1, 2 ** 40], "x": []}
+    got = spark.range(1).select(
+        _lit_map(ints, "array<bigint>").alias("m")).collect()[0]["m"]
+    assert got == ints
+    rows = spark.createDataFrame([(k,) for k in keys + ["other", "o"]], "term string")
+    assert sorted(r["term"] for r in rows.filter(_terms_in(keys)).collect()) \
+        == sorted(keys)
+    assert rows.filter(_terms_in([])).count() == 0
+
+
+@pytest.mark.parametrize("kw", [{"prune": "flat"}, {"prune": "Impact"},
+                                {"prune": None}, {"prune": 0}, {"k": 0},
+                                {"k": -1}, {"k": 2.5}, {"k": True}])
+def test_bad_plan_and_k_rejected(spark, index, kw):
+    """An unknown plan choice or a k that is not a positive int is a
+    caller error, raised before any Spark work."""
+    from semcode_spark.operators.query import bm25_topk_batch, wand_topk_impact
+
+    k = kw.get("k", 10)
+    with pytest.raises(ValueError, match="prune|k must"):
+        wand_topk(spark, index, "spark query data", k=k, cfg=CFG,
+                  prune=kw.get("prune", "auto"))
+    with pytest.raises(ValueError, match="prune|k must"):
+        bm25_topk_batch(spark, index, [(0, "spark query data", k)], cfg=CFG,
+                        prune=kw.get("prune", "auto"))
+    if "k" in kw:
+        with pytest.raises(ValueError, match="k must"):
+            wand_topk_impact(spark, index, "spark query data", k=k, cfg=CFG)
+
+
+def test_cold_read_index_runs_one_job(spark, served, monkeypatch):
+    """A cold open reads the tombstone count from parquet footers on
+    the driver instead of running a Spark count, and falls back to the
+    Spark count when a footer cannot be read."""
+    import pyarrow.parquet as pq
+
+    cold, _ = served
+    assert cold["_n_tombstones"] == cold["tombstones"].count() > 0
+    n = _job_count(spark, lambda: read_index(spark, cold["_dir"]))
+    assert n <= 1, n
+
+    def unreadable(*a, **kw):
+        raise OSError("unreadable footer")
+
+    monkeypatch.setattr(pq, "read_metadata", unreadable)
+    assert read_index(spark, cold["_dir"])["_n_tombstones"] \
+        == cold["_n_tombstones"]
