@@ -14,8 +14,7 @@ local[$SPARK_GRAFT_CPUS] (default 32):
   with ~16% tombstones, compaction wall, query latency after.
 - query latencies for the headline operator set (BM25 exhaustive, WAND
   over the block index, TPC-H-ish joins/aggs, MinHash LSH dedup, cosine
-  ANN), warm serving-mode WAND, and the batched 24-query path (flat and
-  pruned).
+  ANN), warm serving-mode WAND, and the batched 24-query path (flat).
 - ANN recall@10 vs brute force for the corpus-tuned LSH defaults and
   IVF (recall recorded every round so regressions are visible).
 - a packaged spark-submit --py-files run in a FRESH JVM querying the
@@ -231,8 +230,7 @@ def main() -> None:
                                    "table scan", "sort batch"][i], k=10).collect()
     extras["wand_warm_sec_per_query"] = round((time.time() - t0) / n_warm, 4)
 
-    # batched retrieval: the whole 24-query reference set in one job —
-    # flat and block-max-pruned (both lossless; hits must agree)
+    # batched retrieval: the whole 24-query reference set in one job
     from semcode_spark.fixtures.queries import REFERENCE_QUERIES
     from semcode_spark.operators.query import bm25_topk_batch
 
@@ -243,20 +241,11 @@ def main() -> None:
     extras["batch_24q_sec"] = round(batch_s, 3)
     extras["batch_sec_per_query"] = round(batch_s / len(REFERENCE_QUERIES), 4)
     extras["batch_hits"] = n_hits
-    t0 = time.time()
-    n_hits_p = bm25_topk_batch(spark, hot_idx, REFERENCE_QUERIES,
-                               prune=True).count()
-    batch_p = time.time() - t0
-    extras["batch_pruned_sec_per_query"] = round(batch_p / len(REFERENCE_QUERIES), 4)
-    extras["batch_pruned_hits"] = n_hits_p
 
-    # ---- flat-vs-pruned at a candidate-block count FAR past the old
-    # auto threshold (r3 verdict #5: the "pruning wins at scale" claim
-    # had to be measured, not argued — it turned out FALSE; see
-    # BENCH/BASELINE.md "static block-max pruning"). 50× replicated
-    # documents corpus → ~45k candidate blocks for the reference set;
-    # both numbers + auto's pick recorded every round, interleaved
-    # best-of-2, hits must agree (pruning stays lossless) ----
+    # ---- the flat batch at a candidate-block count FAR past the old
+    # auto threshold (r3 verdict #5). 50× replicated documents corpus
+    # → ~45k candidate blocks for the reference set; best-of-2, auto's
+    # pick recorded every round ----
     from semcode_spark.operators.query import (
         _query_terms, _term_meta, wand_topk_impact)
     xdir = tempfile.mkdtemp(prefix="bench_crossover_")
@@ -265,9 +254,9 @@ def main() -> None:
            .select((F.col("doc_id") + F.col("rep") * 10_000_000)
                    .alias("doc_id"), "text"))
     # impact-ordered layout (r5): same block count/bytes as the doc_id
-    # layout (decode-identical, tests/test_impact.py), so the flat /
-    # static-pruned crossover numbers stay comparable to r3/r4 — and
-    # the same index carries the impact decode-volume measurement
+    # layout (decode-identical, tests/test_impact.py), so the flat
+    # crossover number stays comparable to r3/r4 — and the same index
+    # carries the impact decode-volume measurement
     xcfg = EngineConfig(bm25=BM25Config(),
                         index=IndexConfig(impact_ordered=True))
     build_index(spark, big, xdir, cfg=xcfg, groups=1, count_rows=False)
@@ -280,17 +269,13 @@ def main() -> None:
     extras["crossover_docs"] = int(xc["n_docs"])
     extras["crossover_union_blocks"] = int(xblocks)
     bm25_topk_batch(spark, xidx, REFERENCE_QUERIES, prune=False).count()  # warm
-    xs = {False: [], True: []}
-    xh = {}
+    xs = []
     for _ in range(2):
-        for mode in (False, True):
-            t0 = time.time()
-            xh[mode] = bm25_topk_batch(spark, xidx, REFERENCE_QUERIES,
-                                       prune=mode).count()
-            xs[mode].append(time.time() - t0)
-    assert xh[False] == xh[True], "pruning must stay lossless"
-    extras["crossover_flat_sec"] = round(min(xs[False]), 3)
-    extras["crossover_pruned_sec"] = round(min(xs[True]), 3)
+        t0 = time.time()
+        n_hits_flat = bm25_topk_batch(spark, xidx, REFERENCE_QUERIES,
+                                      prune=False).count()
+        xs.append(time.time() - t0)
+    extras["crossover_flat_sec"] = round(min(xs), 3)
     extras["crossover_auto_mode"] = "flat"  # r4: auto = flat, measured
 
     # ---- impact retrieval decode volume (r4 verdict item 1's "done"
@@ -327,7 +312,7 @@ def main() -> None:
     n_hits_imp = bm25_topk_batch(spark, xidx, REFERENCE_QUERIES,
                                  prune="impact").count()
     imp_batch_s = time.time() - t0
-    assert n_hits_imp == xh[False], "batched impact must stay lossless"
+    assert n_hits_imp == n_hits_flat, "batched impact must stay lossless"
     extras["impact_batch_24q_sec"] = round(imp_batch_s, 3)
     extras["impact_batch_sec_per_query"] = round(
         imp_batch_s / len(REFERENCE_QUERIES), 4)

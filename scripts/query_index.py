@@ -3,6 +3,9 @@
     spark-submit --py-files semcode_spark.zip scripts/query_index.py \
         --index /path/to/index --query "spark shuffle" [--k 10] [--no-prune]
 
+``--no-prune`` forces the flat plan; by default the planner picks flat
+or impact (``prune="auto"``).
+
 Prints one JSON line per query with ranked (doc_id, score) and wall ms —
 the analog of the reference's /query endpoint response + telemetry
 (api/main.py:199-223).
@@ -34,7 +37,7 @@ def main() -> None:
     for q in args.query:
         t0 = time.time()
         rows = wand_topk(spark, idx, q, k=args.k,
-                         prune=not args.no_prune).collect()
+                         prune=False if args.no_prune else "auto").collect()
         json.dump({
             "query": q,
             "wall_ms": int((time.time() - t0) * 1000),

@@ -43,9 +43,10 @@ def main(argv: list[str] | None = None) -> int:
     q.add_argument("--index", required=True)
     q.add_argument("--query", action="append", required=True)
     q.add_argument("--k", type=int, default=10)
-    q.add_argument("--mode", choices=["auto", "flat", "pruned", "impact"],
+    q.add_argument("--mode", choices=["auto", "flat", "impact"],
                    default="auto",
-                   help="auto=measured default (flat decode); impact="
+                   help="auto=flat below impact_auto_min_blocks candidate "
+                        "blocks, impact above; impact="
                         "MaxScore term skip + impact-prefix decode + "
                         "forward completion (bounded decode volume; "
                         "needs a forward table)")
@@ -152,7 +153,7 @@ def main(argv: list[str] | None = None) -> int:
             from semcode_spark.operators.index_build import read_index
             from semcode_spark.operators.query import wand_topk
 
-            prune = {"auto": "auto", "flat": False, "pruned": True,
+            prune = {"auto": "auto", "flat": False,
                      "impact": "impact"}[args.mode]
             idx = read_index(spark, args.index)
             for text in args.query:

@@ -28,11 +28,9 @@ class BM25Config:
     b: float = 0.75
     default_k: int = 10  # reference default top_k (storage/milvus_store.py:135)
     # below this many candidate blocks a pre-aggregate shrink pass
-    # (phrase_match's AND prefilter) costs more than the aggregate it
-    # would shrink. (r4: wand/batch prune="auto" no longer uses this —
-    # measured at 3.6k-91k blocks, the static block-max filter never
-    # repaid its θ-bootstrap jobs, so auto = flat; see query.py and
-    # BENCH/BASELINE.md "static block-max pruning".)
+    # (phrase_match's and phrase_topk's rarest-term AND prefilter) costs
+    # more than the aggregate it would shrink. Phrase queries only: the
+    # retrieval planner's prune="auto" switches on impact_auto_min_blocks.
     prune_min_blocks: int = 20000
     # ranking compares scores rounded to this many decimals (then doc_id):
     # float sums over query terms are order-dependent at the ulp level
@@ -53,10 +51,10 @@ class BM25Config:
     # the crossover on a real cluster before tuning it.
     impact_auto_min_blocks: int = 500_000
     # θ-bootstrap depth for impact retrieval: decode the top-`depth`
-    # impact blocks of EVERY query term (all salts/groups) instead of
-    # just each term's single best block. Deeper bootstraps see more
-    # docs with fuller cross-term sums, so θ_eff rises and the planner
-    # skips more: measured on the 45.5k-block crossover corpus,
+    # impact blocks of EVERY query term (all salts/groups). Deeper
+    # bootstraps see more docs with fuller cross-term sums, so θ_eff
+    # rises and the planner skips more: measured on the 45.5k-block
+    # crossover corpus,
     # 24-query decode fraction 0.55 (depth 1) → 0.48 (2) → 0.32 (4) →
     # 0.31 (8) — 4 is the knee. Bootstrap decode volume is
     # depth × salts × groups blocks per term: constant in corpus size.

@@ -53,10 +53,13 @@ Persistent layout (layout 2 — versioned, snapshot-committed):
                               deltas cancel EXACTLY on read; avgdl is
                               derived as sum(sum_dl)/sum(n_docs))
         term_stats/seg=S/     term, df, cf, is_hot  (delta rows too)
-        term_bounds/group=G/  per-term block-max metadata: max_w,
-                              n_blocks, best_salt, best_block, avgdl_enc
-                              — lets WAND bootstrap θ without scanning
-                              blocks metadata (operators/query.py)
+        term_bounds/group=G/  per-term block-max metadata, term-sorted:
+                              max_w, n_blocks, avgdl_enc and the w_hist
+                              impact ladder — the retrieval planner's
+                              bounds and plan costs without scanning
+                              blocks metadata (operators/query.py).
+                              Indexes written before carry best_salt
+                              and best_block too; no reader uses them
         postings/group=G/     compressed block rows
         forward/seg=S/        doc_id, term, tf — the forward (pre-explode
                               tf) relation, range-clustered on doc_id.
@@ -548,9 +551,9 @@ def filter_dead_postings(flat: DataFrame, tombstones: DataFrame | None,
 
 
 # block columns the serving cache keeps per posting, so every
-# block-level predicate (term, max_w·corr ≥ cut, block_id < depth, the
-# best-block pointer) selects the same postings row by row
-SERVING_BLOCK_COLS = ("salt", "block_id", "max_w", "avgdl_enc")
+# block-level predicate of the planner (term, max_w·corr ≥ cut,
+# block_id < depth) selects the same postings row by row
+SERVING_BLOCK_COLS = ("block_id", "max_w", "avgdl_enc")
 
 
 def is_serving(idx: dict) -> bool:
@@ -746,8 +749,10 @@ def encoded_postings(
 def write_term_bounds(spark: SparkSession, vdir: str, group: int) -> int:
     """Derive per-term block-max metadata for one written postings group
     (blocks metadata only — never decodes posting bytes; cost scales
-    with #blocks in the group). WAND's θ bootstrap reads this tiny table
-    instead of scanning blocks (operators/query.py). Returns the group's
+    with #blocks in the group). The retrieval planner reads this tiny
+    table instead of scanning blocks (operators/query.py). Rows are
+    written term-sorted: sorted term runs compress better (the parquet
+    dictionary and run-length encodings). Returns the group's
     block-row count from the same cached pass — the parquet is read
     once, never re-scanned for the count.
 
@@ -778,16 +783,10 @@ def write_term_bounds(spark: SparkSession, vdir: str, group: int) -> int:
     tb = blocks.groupBy("term").agg(
         F.max("max_w").alias("max_w"),
         F.count(F.lit(1)).alias("n_blocks"),
-        F.max_by(F.struct("salt", "block_id"), F.col("max_w")).alias("best"),
         F.max("avgdl_enc").alias("avgdl_enc"),
-    ).select(
-        "term", "max_w", "n_blocks",
-        F.col("best.salt").alias("best_salt"),
-        F.col("best.block_id").alias("best_block"),
-        "avgdl_enc",
     ).join(hist, "term", "left").persist()
     try:
-        tb.write.mode("overwrite").parquet(
+        tb.sortWithinPartitions("term").write.mode("overwrite").parquet(
             os.path.join(vdir, "term_bounds", f"group={group}"))
         row = tb.agg(F.sum("n_blocks").alias("n")).collect()[0]
     finally:
@@ -1309,7 +1308,7 @@ def read_index(spark: SparkSession, out_dir: str, cache: bool = False,
     storage/milvus_store.py:83-85): docs/term_stats/term_bounds are
     persisted and materialized, and the posting blocks are decoded ONCE,
     here: 'postings' then holds the live decoded rows (term, group,
-    salt, block_id, max_w, avgdl_enc, doc_id, tf, doc_len) — tombstoned
+    block_id, max_w, avgdl_enc, doc_id, tf, doc_len) — tombstoned
     postings dropped, each doc's length joined on — hash-partitioned by
     doc_id into the session's shuffle partitions. Warm queries filter
     cached rows with the same block-level predicates, run no Python

@@ -9,23 +9,29 @@ Two paths, both DataFrame-planned:
    the ANN probe (storage/milvus_store.py:135-148) replaced by a
    broadcast join.
 
-2. ``wand_topk`` — the persisted block index path with block-max
-   pruning: θ bootstrapped from each term's single best block, then only
-   blocks whose upper bound can still reach θ's rounding bucket are
-   decoded. The analog of IVF nprobe=16/128 cluster pruning
-   (milvus_store.py:144), but lossless: tests assert pruned ==
-   exhaustive.
+2. ``wand_topk``, ``wand_topk_impact`` and ``bm25_topk_batch`` — the
+   persisted block index, all three thin entry points over ONE planner
+   (``_retrieve``) with two plans:
 
-Physical shape of (1): BroadcastExchange(query terms) → hash agg on
-doc_id → TakeOrderedAndProject(k) — zero wide shuffles for small k
-(partial top-k per partition, merged on the driver, SURVEY §3.2).
+   - flat: decode every block of the query terms and score it;
+   - impact: bound the decode. A θ bootstrap scores the docs of each
+     term's top impact blocks, ``_impact_plan`` picks per term how much
+     of its impact-ordered block prefix to decode so that no doc outside
+     the decoded blocks can reach θ's rounding bucket, and the
+     candidates are scored exactly from the forward table. The analog
+     of IVF's nprobe (milvus_store.py:144), but lossless: tests assert
+     impact == flat == exhaustive.
 
-Job structure of (2) with pruning: job 1 collects the query terms' rows
-from the tiny term_stats ⋈ term_bounds metadata tables (persisted in
-serving mode — microseconds, never touches blocks); job 2 decodes one
-block per term for θ; job 3 decodes survivors and takes the global
-top-k. The per-term global bounds and best-block pointers are computed
-once at BUILD time (index_build.write_term_bounds), not per query.
+   ``prune="auto"`` picks flat below ``impact_auto_min_blocks``
+   candidate blocks and impact above it. A batch shares every decode
+   across its queries.
+
+Physical shape: one query scores per doc_id (hash agg) and takes its
+top-k with TakeOrderedAndProject — a local top-k per partition, merged
+on the driver (SURVEY §3.2; the shape of "Distributed Similarity Joins
+over Top-K Rankings", EDBT 2020). On a serving handle (postings cached
+hash-partitioned by doc_id) a flat query is one job with no exchange. A
+batch scores per (query_id, doc_id) and ranks with a per-query window.
 
 Rank identity: total order (round(score, d) desc, doc_id asc) — SURVEY
 §7.3(b); d = cfg.bm25.rank_decimals.
@@ -134,11 +140,25 @@ def _resolve_k(k: int | None, cfg: EngineConfig) -> int:
 
 
 def _check_prune(prune) -> None:
-    """The plan choices: False (flat), True (static block-max filter),
-    "auto" and "impact"."""
-    if not (isinstance(prune, bool) or prune in ("auto", "impact")):
+    """The plan choices: False (flat), "impact" and "auto" (flat or
+    impact by the candidate block count)."""
+    if not (prune is False or prune in ("auto", "impact")):
         raise ValueError(
-            f'prune must be False, True, "auto" or "impact", got {prune!r}')
+            f'prune must be False, "auto" or "impact", got {prune!r}')
+
+
+def _check_query_ids(queries) -> None:
+    """A batch's query ids are distinct ints. The plan carries them as
+    bigint literals, where any other id would turn null and silently
+    lose its rows."""
+    ids = [q[0] for q in queries]
+    for qid in ids:
+        if isinstance(qid, bool) or not isinstance(qid, int) \
+                or not -2 ** 63 <= qid < 2 ** 63:
+            raise ValueError(
+                f"query_id must be an int in the bigint range, got {qid!r}")
+    if len(set(ids)) != len(ids):
+        raise ValueError("duplicate query_id in batch")
 
 
 def bm25_scores(
@@ -247,7 +267,6 @@ class TermMeta(NamedTuple):
 
     idfs: dict        # term -> idf (live df, net of replace deltas)
     ubs: dict         # term -> global upper-bound contribution
-    best: dict        # term -> (group, salt, block_id) of the best block
     n_blocks: int     # total candidate blocks across the query terms
     blocks: dict      # term -> its candidate block count
     dfs: dict         # term -> live df
@@ -260,9 +279,9 @@ def _term_meta(
     spark: SparkSession, index: dict, terms: list[str],
     n_docs: float | None = None, avgdl: float | None = None,
 ) -> TermMeta:
-    """Per-term idf, global upper bound, best-block pointer, block/df
-    counts and the impact-prefix histogram, from term_stats ⋈
-    term_bounds (metadata only — never touches posting blocks).
+    """Per-term idf, global upper bound, block/df counts and the
+    impact-prefix ladder, from term_stats ⋈ term_bounds (metadata only
+    — never touches posting blocks).
 
     In serving mode read_index pre-collects the whole term dictionary to
     the driver (the classic frontend-resident term-dictionary design) so
@@ -308,7 +327,6 @@ def _term_meta(
 
     idfs: dict[str, float] = {}
     term_ubs: dict[str, float] = {}
-    best: dict[str, tuple[int, int, int]] = {}
     term_blocks: dict[str, int] = {}
     dfs: dict[str, float] = {}
     hists: dict[str, list] = {}
@@ -322,9 +340,7 @@ def _term_meta(
             ub = idfs[t] * r["max_w"] * corr
             n_blocks += r["n_blocks"]
             term_blocks[t] = term_blocks.get(t, 0) + r["n_blocks"]
-            if t not in term_ubs or ub > term_ubs[t]:
-                term_ubs[t] = ub
-                best[t] = (r["group"], r["best_salt"], r["best_block"])
+            term_ubs[t] = max(ub, term_ubs.get(t, ub))
             fields = r.asDict() if hasattr(r, "asDict") else r
             h = fields.get("w_hist")
             if h:
@@ -344,9 +360,7 @@ def _term_meta(
             if rank > 0:
                 ladder.append((rank, w))
         merged[t] = ladder
-    return TermMeta(idfs, term_ubs, best, n_blocks, term_blocks, dfs, merged)
-
-
+    return TermMeta(idfs, term_ubs, n_blocks, term_blocks, dfs, merged)
 
 
 def wand_topk(
@@ -357,172 +371,53 @@ def wand_topk(
     cfg: EngineConfig = DEFAULT,
     prune: bool | str = "auto",
 ) -> DataFrame:
-    """Top-k over the persisted block index with block-max pruning.
+    """Top-k (doc_id, score) over the persisted block index.
 
-    Stage A (θ bootstrap): decode only each term's best block (pointer
-    precomputed at build, term_bounds), score those docs exactly,
-    θ = k-th best score so far.
-    Stage B: keep a block of term t iff
-        idf_t · max_w(block) + Σ_{t'≠t} idf_t' · max_w_global(t') ≥ θ_eff
-    where θ_eff = (floor(θ·10^d + 0.5) − 0.5) / 10^d is the *lower edge
-    of θ's rounding bucket* (d = cfg.bm25.rank_decimals). Final ranking
-    is by round(score, d) then doc_id asc, so a doc whose raw score is
-    ≤ θ but rounds into θ's bucket can still out-rank the k-th result
-    via the doc_id tiebreak — pruning against raw θ would drop it
-    (reachable: docs with identical (tf, doc_len) tie bit-exactly).
-    Every posting block of any doc with round(score) ≥ round(θ) survives
-    this filter, so surviving docs are scored *completely*; decode
-    survivors, score exactly, global top-k.
-
-    All candidate selection is DataFrame joins/filters; only the byte
-    decode runs in Python (Arrow batches). Lossless by construction
-    (verified vs bm25_topk in tests/test_wand.py, incl. the θ-tie
-    adversarial corpus and doc-replacement tombstones).
-    """
-    k = _resolve_k(k, cfg)
+    ``prune`` picks the plan: False decodes every block of the query
+    terms (flat), "impact" bounds the decode (see wand_topk_impact),
+    "auto" takes impact past ``cfg.bm25.impact_auto_min_blocks``
+    candidate blocks on an impact-ordered index with a forward table,
+    flat below. Both plans are lossless: rank-identical to bm25_topk
+    (tests/test_wand.py, incl. the θ-tie adversarial corpus and
+    doc-replacement tombstones)."""
     _check_prune(prune)
-    terms = _query_terms(index, query)
-    if not terms:
-        raise ValueError("empty query")
-    # stage 0 (metadata-only; dict lookup in serving mode, tiny job
-    # otherwise — r6: the 1-row corpus stats ride the same job)
-    meta = _term_meta(spark, index, terms)
-    corpus = index["_corpus_row"]
-    n_docs, avgdl = float(corpus["n_docs"]), float(corpus["avgdl"])
-    idfs, term_ubs, best, n_blocks = meta.idfs, meta.ubs, meta.best, meta.n_blocks
-    # query terms enter the plan as literals (IN list + idf map), not as
-    # a broadcast-joined DataFrame: at a handful of terms per query the
-    # broadcast exchange is pure per-query latency (~0.3-0.5 s/job on
-    # the warm path for zero benefit)
-    cand = _terms_in(terms)
-
-    if prune == "auto":
-        # auto = flat at sandbox scales (r4, measured — see BENCH/
-        # BASELINE.md "static block-max pruning"): extra jobs cost
-        # ~0.5 s each and the static per-term filter prunes ~nothing
-        # (100% survivors at 91k candidate blocks; flat < pruned at
-        # every reachable scale). Past impact_auto_min_blocks (r5) the
-        # decode volume itself dominates the job floor and auto
-        # switches to impact retrieval — the bounded-decode path —
-        # provided the index carries the forward table it completes
-        # from AND the impact-ordered layout (r6, advice: on a
-        # doc_id-ordered index the block_id<depth bootstrap reads
-        # arbitrary low-doc_id blocks, so θ_eff is weak and the
-        # "bounded" path can degrade toward full decode + forward
-        # overhead at exactly the scale the switch targets).
-        # prune=True (static filter) stays available explicitly.
-        if (n_blocks > cfg.bm25.impact_auto_min_blocks
-                and index.get("forward") is not None
-                and index.get("impact_layout")):
-            prune = "impact"
-        else:
-            prune = False
-
-    if prune == "impact":
-        return wand_topk_impact(spark, index, query, k, cfg)
-
-    if prune and term_ubs:
-        total_ub = sum(term_ubs.values())
-        theta_eff = _bootstrap_theta_eff(spark, index, idfs, best, k, cfg)
-        if theta_eff is None:
-            theta_eff = -1.0
-        # job B: a block of term t survives iff its own bound plus the
-        # other terms' global bounds could still reach θ's bucket —
-        # rearranged to a per-term cutoff on the block's corrected
-        # max_w so the filter is a literal map lookup, no joins:
-        #   idf_t·max_w·corr ≥ θ_eff − (total_ub − term_ub_t)
-        cutoffs = {
-            t: (theta_eff - (total_ub - term_ubs[t])) / idfs[t]
-            for t in term_ubs
-        }
-        rows = (
-            _score_blocks(index, _cut_pred(cutoffs, avgdl), idfs, avgdl, cfg)
-            .orderBy(F.round("score", cfg.bm25.rank_decimals).desc(),
-                     F.col("doc_id").asc())
-            .limit(k)
-            .collect()
-        )
-        return local_frame(spark, rows, TOPK_SCHEMA)
-
-    return (
-        _score_blocks(index, cand, idfs, avgdl, cfg)
-        .orderBy(F.round("score", cfg.bm25.rank_decimals).desc(),
-                 F.col("doc_id").asc())
-        .limit(k)
-    )
+    return _retrieve(spark, index, [(0, query, k)], cfg, prune, batch=False)
 
 
-def _best_block_pred(best: dict[str, tuple[int, int, int]]) -> Column:
-    """Literal predicate selecting each term's build-time best block."""
-    return F.expr(" OR ".join(
-        f"(term = {_sql_str(t)} AND `group` = {int(g)} AND salt = {int(s)}"
-        f" AND block_id = {int(b)})" for t, (g, s, b) in best.items()))
-
-
-def _theta_slack(cfg: EngineConfig) -> float:
-    """One full rounding bucket — the prune-safe θ margin (see
-    _bootstrap_theta_eff for the proof sketch). Single definition so
-    the single, static-pruned and batch paths cannot drift."""
-    return 1.5 / (10 ** cfg.bm25.rank_decimals)
-
-
-def _bootstrap_theta_eff(
+def wand_topk_impact(
     spark: SparkSession,
-    index: dict,
-    idfs: dict[str, float],
-    best: dict[str, tuple[int, int, int]],
-    k: int,
-    cfg: EngineConfig,
-) -> float | None:
-    """θ bootstrap: decode each query term's single best block (pointer
-    precomputed at build, term_bounds), score those docs exactly on the
-    decoded rows, return the k-th best score MINUS one full rounding
-    bucket — the prune-safe effective threshold. None when fewer than k
-    docs were seen (no pruning possible).
-
-    The 1.5/10^d slack: rank order is (round(score, d), doc_id), so a
-    doc whose score rounds into θ's bucket with a smaller doc_id must
-    survive; 1.5/10^d is provably safe under ANY rounding family with
-    |round(x)−x| ≤ 0.5/10^d (JVM BigDecimal HALF_UP vs the
-    floor(x·10^d+0.5) formula can disagree by an ulp at bucket edges —
-    functions/rounding.py): if s ≤ θ − 1.5/10^d then round(s) ≤
-    θ − 1/10^d < round(θ). Cost: at most one extra bucket decoded."""
-    if not best:
-        return None
-    best_pred = _best_block_pred(best)
-    avgdl = float(index["_corpus_row"]["avgdl"])
-    theta_rows = (
-        _score_blocks(index, best_pred, idfs, avgdl, cfg)
-        .orderBy(F.round("score", cfg.bm25.rank_decimals).desc(),
-                 F.col("doc_id").asc())
-        .limit(k)
-        .collect()
-    )
-    if len(theta_rows) < k:
-        return None
-    return theta_rows[-1]["score"] - _theta_slack(cfg)
-
-
-def _forward_exact_scores(
-    index: dict,
-    idfs: dict[str, float],
-    avgdl: float,
-    cand_ids: DataFrame | None,
-    broadcast: bool,
-    cfg: EngineConfig,
+    index: dict[str, DataFrame],
+    query: str,
+    k: int | None = None,
+    cfg: EngineConfig = DEFAULT,
+    stats: dict | None = None,
 ) -> DataFrame:
-    """(doc_id, score): EXACT BM25 over the live query terms from the
-    forward table, optionally restricted to the distinct ``cand_ids``
-    (see _restrict_ids for ``broadcast``). Shared by the θ bootstrap and
-    the completion stage of impact retrieval."""
-    fwd = live_forward(index).filter(_terms_in(sorted(idfs)))
-    if cand_ids is not None:
-        fwd = _restrict_ids(index, fwd, cand_ids, broadcast)
-    return (
-        _with_doc_len(index, fwd.withColumn("idf", _lit_map(idfs)[F.col("term")]))
-        .groupBy("doc_id")
-        .agg(F.sum(F.col("idf") * _bm25_w(avgdl, cfg)).alias("score"))
-    )
+    """``wand_topk(prune="impact")``: lossless top-k with BOUNDED decode
+    volume — the serving path for corpora where a single term's posting
+    list dwarfs the top-k working set (a df≈N/2 term at 10^12 docs is
+    ~5·10^11 postings; the flat plan decodes all of them).
+
+    The plan (_impact_rows): a θ bootstrap from each term's top impact
+    blocks; _impact_plan's per-term skip / impact-prefix / full decode
+    with Σ tail bounds < θ_eff, so any doc in no decoded block provably
+    misses every top-k bucket; exact completion of the candidates from
+    the FORWARD table (doc_id → term, tf; tombstone-filtered), so a
+    skipped term's contribution is never lost. Requires the forward
+    table (store_forward=True) and raises otherwise — a silent fallback
+    that decodes every skipped list would hide the 100×-scale
+    regression this plan exists to prevent. Uses the flat rows when no
+    pruning is possible (θ unreachable or the plan degenerates), the
+    right choice at small scale.
+
+    ``stats``: pass a dict to receive the decode-volume diagnostics
+    (blocks_candidate, blocks_decoded, skipped/cut/full terms, theta_eff,
+    cand_join); with ``stats["exact"]`` set, blocks_decoded is a real
+    count of the planned blocks instead of the histogram estimate.
+    ``blocks_decoded`` is the PLAN's decode requirement; when the
+    candidate join is skipped (``cand_join`` False) the forward scan
+    serves instead, so read the pair together."""
+    return _retrieve(spark, index, [(0, query, k)], cfg, "impact",
+                     batch=False, stats=stats)
 
 
 def _common_term_regime(dfs: dict[str, float], n_docs: float) -> bool:
@@ -534,53 +429,7 @@ def _common_term_regime(dfs: dict[str, float], n_docs: float) -> bool:
     return sum(dfs.values()) >= 0.5 * n_docs
 
 
-def _bootstrap_theta_eff_prefix(
-    spark: SparkSession,
-    index: dict,
-    idfs: dict[str, float],
-    k: int,
-    cfg: EngineConfig,
-    exact: bool = True,
-) -> float | None:
-    """Impact-mode θ bootstrap: take the docs of every query term's
-    top-``impact_bootstrap_depth`` blocks (all salts/groups — in the
-    impact layout those hold the terms' highest-weight postings) and
-    score them EXACTLY from the forward table (r6). The k-th exact
-    score of ANY doc subset lower-bounds the global k-th, so θ stays
-    prune-safe — but exact completion is strictly tighter than the r5
-    partial sums over the bootstrap blocks alone, which badly
-    underestimated all-common-term (stopword) queries: every candidate
-    carried only the prefix-block fraction of its true score, so θ_eff
-    sat far below the real k-th cut and the planner decoded 0.45-0.63
-    of the candidate blocks (r5 verdict "what's wrong" #2). Bootstrap
-    ids are structurally bounded (depth × salts × groups × block_size
-    per term — constant in corpus size), so the ids join is a
-    broadcast. Falls back to partial-sum scoring when the index has no
-    forward table (the impact path proper requires one; static-pruned
-    callers may not)."""
-    if not idfs:
-        return None
-    pred = (_terms_in(list(idfs))
-            & (F.col("block_id") < cfg.bm25.impact_bootstrap_depth))
-    avgdl = float(index["_corpus_row"]["avgdl"])
-    if exact and index.get("forward") is not None:
-        ids = posting_ids(index, pred).select("doc_id").distinct()
-        scored = _forward_exact_scores(index, idfs, avgdl, ids, True, cfg)
-    else:
-        scored = _score_blocks(index, pred, idfs, avgdl, cfg)
-    rows = (
-        scored
-        .orderBy(F.round("score", cfg.bm25.rank_decimals).desc(),
-                 F.col("doc_id").asc())
-        .limit(k)
-        .collect()
-    )
-    if len(rows) < k:
-        return None
-    return rows[-1]["score"] - _theta_slack(cfg)
-
-
-def _impact_plan(meta: TermMeta, theta_eff: float) -> dict | None:
+def _impact_plan(meta: TermMeta, theta_eff: float | None):
     """Minimum-decode plan meeting the lossless unseen-doc bound.
 
     Any doc appearing in NO decoded block has score ≤ B = Σ_t idf_t ·
@@ -593,34 +442,29 @@ def _impact_plan(meta: TermMeta, theta_eff: float) -> dict | None:
     and a greedy steepest-bound-drop-per-block walk advances ladders
     until the bound clears. This is MaxScore's essential/non-essential
     term split (term-level ladder endpoints) generalized with
-    impact-ordered block prefixes in between (the r4-refuted *static*
-    filter compared each block against θ minus the OTHER terms' global
-    bounds — provably unable to prune once any other term alone reaches
-    θ; the joint bound here has no such term-by-term comparison).
+    impact-ordered block prefixes in between; the bound is joint over
+    the terms, never a per-term comparison against θ.
 
-    Returns {'skip': [...], 'cut': {term: w}, 'full': [...],
-    'bound': B, 'est_blocks': int} or None when no pruning is possible
-    (θ_eff ≤ 0, or the plan degenerates to decode-everything).
-
-    ``est_blocks`` (and the greedy's per-step costs) come from the
-    power-of-two-sampled histogram ranks, which LOWER-bound the true
-    block count at a cut (true count can be up to ~2× the sampled rank,
-    plus blocks the avgdl-corrected predicate admits beyond the
-    raw-ranked count) — fine for steering the greedy, but decode-volume
-    METRICS should use stats['exact'] (a real count of the planned
-    blocks), which the bench does."""
+    Returns ``(cuts, est)`` or None when no pruning is possible (θ_eff
+    unknown or ≤ 0, or the plan degenerates to decode-everything).
+    ``cuts[t]`` is the lowest corrected max_w of t's blocks to decode:
+    +inf skips the term, -inf decodes all of it (the _cut_pred map).
+    ``est[t]`` is the planned block count from the power-of-two-sampled
+    histogram ranks, which LOWER-bound the true count at a cut (up to
+    ~2× the sampled rank, plus blocks the avgdl-corrected predicate
+    admits) — fine for steering the greedy; decode-volume METRICS should
+    use stats['exact'] (a real count of the planned blocks)."""
     if theta_eff is None or theta_eff <= 0 or not meta.ubs:
         return None
-    ladders: dict[str, list[tuple[float, float, float | None]]] = {}
+    ladders: dict[str, list[tuple[float, float, float]]] = {}
     for t, ub in meta.ubs.items():
         idf = meta.idfs[t]
-        steps: list[tuple[float, float, float | None]] = [(0.0, ub, math.inf)]
+        steps: list[tuple[float, float, float]] = [(0.0, ub, math.inf)]
         for rank, w in meta.hists.get(t, []):
             tail = min(ub, idf * w)
             if tail < steps[-1][1]:
                 steps.append((float(rank), tail, w))
-        nb = float(meta.blocks.get(t, 0))
-        steps.append((nb, 0.0, 0.0))
+        steps.append((float(meta.blocks.get(t, 0)), 0.0, -math.inf))
         ladders[t] = steps
     state = {t: 0 for t in ladders}
     bound = sum(l[0][1] for l in ladders.values())
@@ -639,149 +483,10 @@ def _impact_plan(meta: TermMeta, theta_eff: float) -> dict | None:
         i = state[pick]
         bound -= ladders[pick][i][1] - ladders[pick][i + 1][1]
         state[pick] = i + 1
-    plan = {"skip": [], "cut": {}, "full": [], "bound": bound,
-            "est_blocks": 0}
-    for t, i in state.items():
-        cost, _tail, w = ladders[t][i]
-        plan["est_blocks"] += int(cost)
-        if i == 0:
-            plan["skip"].append(t)
-        elif i == len(ladders[t]) - 1:
-            plan["full"].append(t)
-        else:
-            plan["cut"][t] = w
-    if not plan["skip"] and not plan["cut"]:
-        return None  # degenerate: everything decoded — use the flat path
-    return plan
-
-
-def wand_topk_impact(
-    spark: SparkSession,
-    index: dict[str, DataFrame],
-    query: str,
-    k: int | None = None,
-    cfg: EngineConfig = DEFAULT,
-    stats: dict | None = None,
-) -> DataFrame:
-    """Lossless top-k with BOUNDED decode volume — the serving path for
-    corpora where a single term's posting list dwarfs the top-k working
-    set (a df≈N/2 term at 10^12 docs is ~5·10^11 postings; the flat
-    path decodes all of them, r4 verdict "What's wrong #3").
-
-    Three stages, all DataFrame-planned:
-      1. θ bootstrap (shared with prune=True): each term's best block →
-         k-th best score → θ_eff one rounding bucket below.
-      2. Candidate generation: _impact_plan picks, per term, skip /
-         impact-prefix / full decode with Σ tail bounds < θ_eff — any
-         doc in no decoded block provably misses every top-k bucket.
-         Only the surviving blocks are decoded, and only their doc_ids
-         (decode_doc_ids_only — the tf stream is never read).
-      3. Exact completion: candidates join the FORWARD table (doc_id →
-         term, tf; tombstone-filtered) restricted to the query terms,
-         and BM25 is computed from forward rows alone — a skipped
-         term's contribution to a candidate is never lost, and nothing
-         is double-counted. The forward table is doc_id-range-clustered
-         (index_build.write_forward), so at scale the broadcast
-         candidate join prunes it at parquet row-group granularity
-         (runtime bloom / min-max on doc_id) instead of scanning it.
-
-    The analog of the reference's IVF probe scanning ~12.5% of lists
-    (storage/milvus_store.py:144) — but lossless: rank-identical to
-    bm25_topk by the θ-bucket argument (tests/test_wand.py).
-
-    Requires the forward table (store_forward=True); raises otherwise —
-    a silent fallback that decodes every skipped list would hide the
-    100×-scale regression this path exists to prevent. Falls back to
-    the flat decode only when no pruning is possible (θ unreachable or
-    the plan degenerates), which is the correct choice at small scale.
-
-    ``stats``: pass a dict to receive the decode-volume diagnostics
-    (blocks_candidate, blocks_decoded, skipped/cut/full terms, θ_eff) —
-    the bench's blocks-decoded/blocks-candidate metric.
-    ``blocks_decoded`` is the PLAN's decode requirement — the volume an
-    at-scale run decodes for candidate generation; when the sandbox
-    cand_worthwhile gate skips the candidate join (``stats['cand_join']
-    = False``) those blocks are not physically decoded in THIS run (the
-    forward scan serves instead), so read the pair together.
-    """
-    k = _resolve_k(k, cfg)
-    terms = _query_terms(index, query)
-    if not terms:
-        raise ValueError("empty query")
-    if index.get("forward") is None:
-        raise ValueError(
-            "impact retrieval needs the forward table "
-            "(IndexConfig(store_forward=True)): exact candidate "
-            "completion reads (doc_id → term, tf) there instead of "
-            "re-decoding skipped posting lists")
-    meta = _term_meta(spark, index, terms)  # corpus row rides along (r6)
-    corpus = index["_corpus_row"]
-    n_docs, avgdl = float(corpus["n_docs"]), float(corpus["avgdl"])
-    live = sorted(meta.idfs)
-
-    def _flat() -> DataFrame:
-        return (
-            _score_blocks(index, _terms_in(terms), meta.idfs, avgdl, cfg)
-            .orderBy(F.round("score", cfg.bm25.rank_decimals).desc(),
-                     F.col("doc_id").asc())
-            .limit(k)
-        )
-
-    theta_eff = _bootstrap_theta_eff_prefix(
-        spark, index, meta.idfs, k, cfg,
-        exact=_common_term_regime(meta.dfs, n_docs))
-    plan = _impact_plan(meta, theta_eff) if theta_eff is not None else None
-    if stats is not None:
-        stats.update({
-            "terms": live, "theta_eff": theta_eff,
-            "blocks_candidate": meta.n_blocks,
-            "skipped": sorted(plan["skip"]) if plan else [],
-            "cut": dict(plan["cut"]) if plan else {},
-            "full": sorted(plan["full"]) if plan else live,
-            "blocks_decoded": plan["est_blocks"] if plan else meta.n_blocks,
-        })
-    if plan is None:
-        return _flat()
-
-    # --- candidate generation: decode ONLY the planned blocks, ids only
-    cuts = {**dict.fromkeys(plan["full"], -math.inf), **plan["cut"]}
-    if not cuts:  # everything skipped: top-k comes from bootstrap
-        # impossible in practice (θ_eff < Σ ubs by construction), but a
-        # degenerate plan must not decode the world
-        return _flat()
-    pred = _cut_pred(cuts, avgdl)
-    if stats is not None and stats.get("exact"):
-        stats["blocks_decoded"] = posting_blocks(index).filter(pred).count()
-    # dead candidates are harmless (their forward rows are already
-    # tombstone-filtered), so the candidate side skips the anti-join;
-    # the size gates therefore count raw ids: live dfs + tombstones
-    ids_ub = sum(meta.dfs[t] for t in live if t not in plan["skip"]) \
-        + index.get("_n_tombstones", 0)
-
-    # --- exact completion from the forward table. The candidate
-    # restriction is itself an OPTIMIZATION: scoring every forward row
-    # of the live terms is equally lossless (a doc outside the decoded
-    # blocks scores < θ_eff and only trails the true top-k), so the
-    # ids-decode + join is applied only while the candidate set can
-    # actually SHRINK the forward read — when its upper bound
-    # approaches the corpus (low-θ / stopword-heavy regimes at small
-    # scale), the join is a pure extra shuffle and is skipped
-    # (measured: 48→~5 s on the 24-query crossover batch).
-    cand_worthwhile = ids_ub <= max(cfg.index.broadcast_ids_max,
-                                    int(n_docs) // 4)
-    if stats is not None:
-        stats["cand_join"] = bool(cand_worthwhile)
-    cand_ids = (posting_ids(index, pred).select("doc_id").distinct()
-                if cand_worthwhile else None)
-    rows = (
-        _forward_exact_scores(index, meta.idfs, avgdl, cand_ids,
-                              ids_ub <= cfg.index.broadcast_ids_max, cfg)
-        .orderBy(F.round("score", cfg.bm25.rank_decimals).desc(),
-                 F.col("doc_id").asc())
-        .limit(k)
-        .collect()
-    )
-    return local_frame(spark, rows, TOPK_SCHEMA)
+    cuts = {t: ladders[t][i][2] for t, i in state.items()}
+    if all(c == -math.inf for c in cuts.values()):
+        return None  # degenerate: everything decoded — use the flat rows
+    return cuts, {t: int(ladders[t][i][0]) for t, i in state.items()}
 
 
 def bm25_topk_conj(
@@ -1022,15 +727,14 @@ def phrase_topk_batch(
 
     Per-phrase results are identical to phrase_topk (tests/test_phrase).
     """
+    # duplicate query_ids would merge both phrases' slot rows under one
+    # id and silently corrupt the ns == n_slots containment join (r6,
+    # advice) — reject up front, with any id that is not an int
+    _check_query_ids(queries)
     if not index.get("positions_stored"):
         raise ValueError(
             "index stores no positions — build with "
             "IndexConfig(store_positions=True) to serve phrase queries")
-    # duplicate query_ids would merge both phrases' slot rows under one
-    # id and silently corrupt the ns == n_slots containment join (r6,
-    # advice) — reject up front
-    if len({qid for qid, _, _ in queries}) != len(queries):
-        raise ValueError("duplicate query_id in phrase batch")
 
     slot_rows: list[tuple[int, str, int]] = []
     meta_rows: list[tuple[int, int, int]] = []  # (qid, n_slots, k)
@@ -1261,9 +965,9 @@ def query_with_fallback(
 ) -> tuple[list, str, list[str]]:
     """Degraded-result query path (reference rag/pipeline.py:54-79,
     219-249: retrieval errors are captured and the response degrades
-    instead of failing). Ladder: pruned WAND → flat index scan → empty
-    result with mode='degraded'. Returns (rows, mode, fallbacks);
-    rows are (doc_id, score) Rows, mode ∈ {'pruned', 'flat',
+    instead of failing). Ladder: the default plan (prune="auto") → flat
+    index scan → empty result with mode='degraded'. Returns (rows, mode,
+    fallbacks); rows are (doc_id, score) Rows, mode ∈ {'auto', 'flat',
     'degraded'}, and fallbacks records WHY each rung was abandoned
     ('<mode>: <error>' strings, empty on the happy path) — the analog
     of the reference's logged fallback reason + telemetry counter
@@ -1277,19 +981,15 @@ def query_with_fallback(
     if not _query_terms(index, query):
         raise ValueError("empty query")
     fallbacks: list[str] = []
-    try:
-        return (wand_topk(spark, index, query, k, cfg, prune=True).collect(),
-                "pruned", fallbacks)
-    except ValueError:
-        raise
-    except Exception as e:  # noqa: BLE001 — rung failure, recorded below
-        fallbacks.append(f"pruned: {type(e).__name__}: {e}")
-    try:
-        return (wand_topk(spark, index, query, k, cfg, prune=False).collect(),
-                "flat", fallbacks)
-    except Exception as e:  # noqa: BLE001
-        fallbacks.append(f"flat: {type(e).__name__}: {e}")
-        return [], "degraded", fallbacks
+    for mode, prune in (("auto", "auto"), ("flat", False)):
+        try:
+            return (wand_topk(spark, index, query, k, cfg, prune=prune).collect(),
+                    mode, fallbacks)
+        except ValueError:
+            raise
+        except Exception as e:  # noqa: BLE001 — rung failure, recorded
+            fallbacks.append(f"{mode}: {type(e).__name__}: {e}")
+    return [], "degraded", fallbacks
 
 
 def bm25_topk_batch(
@@ -1302,126 +1002,245 @@ def bm25_topk_batch(
     """Batched top-k over the block index: (query_id, rank, doc_id, score)
     for every (query_id, text, k) — the throughput-oriented retrieval
     path (amortizes Spark's per-job floor across the whole query set).
+    Query ids are distinct ints; an empty or out-of-vocabulary query
+    simply has no rows.
 
-    Plan: [optional θ-bootstrap job: decode only the UNION of the terms'
-    build-time best blocks, score per query, collect each query's kth
-    best] → one decode pass over the surviving blocks of the union of
-    query terms → per-(query, doc) score agg → per-query window top-k.
-    Scales with the size of the touched postings, never the corpus.
-    Query terms, ids and k enter the plan as literals (_batch_topk), so
-    on a serving handle the whole batch runs without a Python worker.
-
-    Pruning is the batch generalization of wand_topk's block-max filter:
-    a block of term t is kept iff ANY query containing t could still
-    reach its θ bucket, i.e. max_w·corr ≥ min over q∋t of
-    (θ_eff_q − (total_ub_q − ub_t)) / idf_t — a literal per-term map,
-    no join. Per query q the survivor set is a superset of q's own
-    single-query survivor set, so every doc in q's true rounded top-k is
-    scored COMPLETELY; docs with a pruned block score < θ_eff_q and
-    cannot displace the k fully-scored bootstrap docs (same argument as
-    wand_topk, per query). Lossless: tests assert pruned == unpruned.
-    """
+    Same planner and plans as wand_topk (``prune`` False, "auto" or
+    "impact"), shared across the set: the flat plan is ONE decode pass
+    over the union of the query terms' blocks; the impact plan runs one
+    θ bootstrap for every query at once and decodes the per-query plans
+    merged per term (full if any query needs the term fully, else the
+    lowest cut). Either way the rows score per (query, doc) over that
+    query's terms and a per-query window takes each query's top k.
+    Scales with the touched postings, never the corpus or the query
+    count. Query terms, ids and k enter the plan as literals, so on a
+    serving handle the whole batch runs without a Python worker. Per
+    query, the answer equals wand_topk's (tests/test_wand.py)."""
     _check_prune(prune)
-    if len({qid for qid, _, _ in queries}) != len(queries):
-        raise ValueError("duplicate query_id in batch")
+    _check_query_ids(queries)
+    return _retrieve(spark, index, queries, cfg, prune, batch=True)
+
+
+def _retrieve(
+    spark: SparkSession,
+    index: dict[str, DataFrame],
+    queries: list[tuple[int, str, int | None]],
+    cfg: EngineConfig,
+    prune: bool | str,
+    batch: bool,
+    stats: dict | None = None,
+) -> DataFrame:
+    """The retrieval planner behind wand_topk, wand_topk_impact and
+    bm25_topk_batch: resolves "auto", builds the flat or the impact rows
+    (term, doc_id, tf[, doc_len]), scores them and takes each query's
+    top k. ``batch`` False is one query, answered as (doc_id, score)
+    with no query-id fan-out and no window (an empty query raises);
+    ``batch`` True answers (query_id, rank, doc_id, score)."""
     q_terms = {qid: _query_terms(index, text) for qid, text, _ in queries}
     k_of = {qid: _resolve_k(k, cfg) for qid, _, k in queries}
     all_terms = sorted({t for ts in q_terms.values() for t in ts})
     if not all_terms:
+        if not batch:
+            raise ValueError("empty query")
         return local_frame(spark, [], BATCH_SCHEMA)
-
+    if prune == "impact" and index.get("forward") is None:
+        raise ValueError(
+            "impact retrieval needs the forward table "
+            "(IndexConfig(store_forward=True)): exact candidate completion "
+            "reads (doc_id → term, tf) there instead of re-decoding "
+            "skipped posting lists")
     meta = _term_meta(spark, index, all_terms)  # corpus row rides (r6)
-    corpus = index["_corpus_row"]
-    n_docs, avgdl = float(corpus["n_docs"]), float(corpus["avgdl"])
-    idfs, term_ubs, best = meta.idfs, meta.ubs, meta.best
-    if not idfs:  # no query term is in the vocabulary: no hits
-        return local_frame(spark, [], BATCH_SCHEMA)
+    if not meta.idfs:  # no query term is in the vocabulary: no hits
+        if stats is not None:  # and nothing to decode
+            stats.update(terms=[], theta_eff=None, blocks_candidate=0,
+                         blocks_decoded=0, skipped=[], cut={}, full=[],
+                         cand_join=False)
+        return local_frame(spark, [], BATCH_SCHEMA if batch else TOPK_SCHEMA)
     if prune == "auto":
-        # auto = flat at sandbox scales (r4, measured — see wand_topk
-        # and BENCH/BASELINE.md): batched STATIC pruning is weaker
-        # still (per-term cutoffs minimized over every query sharing
-        # the term; 100% survivors at 45k/91k blocks). Past
-        # impact_auto_min_blocks the batch switches to impact retrieval
-        # (r5) — three jobs for the whole set, decode bounded by the
-        # merged per-query plans — when the forward table exists and
-        # the layout is impact-ordered (r6, advice: see wand_topk).
+        # flat at sandbox scales (r4, measured: extra jobs cost ~0.5 s
+        # each). Past impact_auto_min_blocks (r5) the decode volume
+        # itself dominates the job floor and auto switches to impact —
+        # provided the index carries the forward table it completes
+        # from AND the impact-ordered layout (r6: on a doc_id-ordered
+        # index the block_id < depth bootstrap reads arbitrary
+        # low-doc_id blocks, so θ_eff is weak and the "bounded" plan
+        # can degrade toward a full decode plus the forward overhead)
         prune = ("impact" if meta.n_blocks > cfg.bm25.impact_auto_min_blocks
                  and index.get("forward") is not None
                  and index.get("impact_layout") else False)
-    if prune == "impact":
-        return _bm25_topk_batch_impact(
-            spark, index, q_terms, k_of, meta, n_docs, avgdl, cfg)
+    rows = (_impact_rows(index, q_terms, k_of, meta, cfg, batch, stats)
+            if prune == "impact" else None)
+    if rows is None:
+        rows = posting_rows(index, _terms_in(all_terms))
+    return _topk(_scores(index, rows, meta.idfs, q_terms, cfg, batch), k_of, cfg)
 
-    pred = _terms_in(all_terms)
-    if prune and term_ubs:
-        # θ bootstrap for ALL queries in one job: each term's single
-        # best block (build-time pointer), scored per query
-        theta_rows = (
-            _batch_topk(posting_rows(index, _best_block_pred(best)),
-                        index, idfs, q_terms, k_of, avgdl, cfg)
-            .groupBy("query_id").agg(
-                F.count(F.lit(1)).alias("n"),
-                F.min("score").alias("kth"),
-                F.max("k").alias("k"))
-            .collect()
-        )
-        eps = _theta_slack(cfg)
-        theta_eff = {r["query_id"]: (r["kth"] - eps if r["n"] >= r["k"]
-                                     else -1e30) for r in theta_rows}
-        for qid, _, _ in queries:
-            theta_eff.setdefault(qid, -1e30)
-        cutoffs: dict[str, float] = {}
+
+def _impact_rows(
+    index: dict,
+    q_terms: dict[int, list[str]],
+    k_of: dict[int, int],
+    meta: TermMeta,
+    cfg: EngineConfig,
+    batch: bool,
+    stats: dict | None,
+) -> DataFrame | None:
+    """The impact plan's rows: forward rows of the live query terms,
+    restricted to the candidates of the planned blocks; None when no
+    query can prune (the caller scores the flat rows instead).
+
+    One θ bootstrap job serves every query, then _impact_plan plans each
+    query and the plans merge per term conservatively: full if any query
+    needs the term fully, else the LOWEST cut, else skip. The decoded
+    set is therefore a superset of every query's own plan, so per query
+    q any doc absent from the decoded blocks scores < θ_eff_q. Scoring
+    from the forward table may also score docs that are candidates only
+    via ANOTHER query's blocks — harmless: such a doc's score for q is
+    below q's θ bucket, so it can only trail the true top k."""
+    corpus = index["_corpus_row"]
+    n_docs, avgdl = float(corpus["n_docs"]), float(corpus["avgdl"])
+    live = sorted(meta.idfs)
+    live_terms = _terms_in(live)
+    # θ bootstrap: the docs of every term's top-`impact_bootstrap_depth`
+    # blocks (in the impact layout those hold its highest weights).
+    # When some query is stopword-heavy they are scored EXACTLY from the
+    # forward table (r6: partial sums over the bootstrap blocks left θ
+    # so low the planner decoded half the candidate blocks); rare-term
+    # queries keep the cheaper partial sums, which already plan ≤4%.
+    boot_pred = live_terms & (F.col("block_id") < cfg.bm25.impact_bootstrap_depth)
+    if any(_common_term_regime({t: meta.dfs[t] for t in ts if t in meta.dfs},
+                               n_docs) for ts in q_terms.values()):
+        boot_ids = posting_ids(index, boot_pred).select("doc_id").distinct()
+        boot = _restrict_ids(index, live_forward(index).filter(live_terms),
+                             boot_ids, True)
+    else:
+        boot = posting_rows(index, boot_pred)
+    theta = _theta_effs(
+        _topk(_scores(index, boot, meta.idfs, q_terms, cfg, batch), k_of, cfg),
+        k_of, cfg)
+
+    # per-term cut, merged over the queries' plans by min: -inf (full)
+    # beats any cut, any cut beats +inf (skip)
+    cut_of: dict[str, float] = {}
+    est: dict[str, int] = {}
+    pruned = False
+    for qid, ts in q_terms.items():
+        sub = _meta_slice(meta, ts)
+        plan = _impact_plan(sub, theta.get(qid))
+        pruned |= plan is not None
+        cuts, q_est = plan or (dict.fromkeys(sub.idfs, -math.inf), sub.blocks)
+        for t, c in cuts.items():
+            cut_of[t] = min(cut_of.get(t, math.inf), c)
+            est[t] = max(est.get(t, 0), q_est[t])
+    cuts = {t: c for t, c in cut_of.items() if c < math.inf}
+    # every term skippable for every query: the bootstrap docs already
+    # dominate every other doc; still score them exactly
+    pred = _cut_pred(cuts, avgdl) if cuts else boot_pred
+    # dead candidates are harmless (their forward rows are already
+    # tombstone-filtered), so the candidate side skips the anti-join;
+    # the size gates therefore count raw ids: live dfs + tombstones
+    ids_ub = sum(meta.dfs[t] for t in cuts) + index.get("_n_tombstones", 0)
+    # the candidate restriction is itself an OPTIMIZATION: scoring every
+    # live-term forward row is equally lossless, so the ids decode and
+    # join run only while they can SHRINK the forward read (measured:
+    # 48→~5 s on the 24-query crossover batch without them near N)
+    cand_join = pruned and ids_ub <= max(cfg.index.broadcast_ids_max,
+                                         int(n_docs) // 4)
+    if stats is not None:
+        stats.update({
+            "terms": live, "theta_eff": min(theta.values(), default=None),
+            "blocks_candidate": meta.n_blocks,
+            "blocks_decoded": sum(est.values()),
+            "skipped": sorted(t for t, c in cut_of.items() if c == math.inf),
+            "cut": {t: c for t, c in cuts.items() if c > -math.inf},
+            "full": sorted(t for t, c in cuts.items() if c == -math.inf),
+            "cand_join": cand_join,
+        })
+        if stats.get("exact"):
+            stats["blocks_decoded"] = posting_blocks(index).filter(pred).count()
+    if not pruned:
+        return None
+    fwd = live_forward(index).filter(live_terms)
+    if cand_join:
+        cand_ids = posting_ids(index, pred).select("doc_id").distinct()
+        fwd = _restrict_ids(index, fwd, cand_ids,
+                            ids_ub <= cfg.index.broadcast_ids_max)
+    return fwd
+
+
+def _scores(
+    index: dict,
+    rows: DataFrame,
+    idfs: dict[str, float],
+    q_terms: dict[int, list[str]],
+    cfg: EngineConfig,
+    batch: bool,
+) -> DataFrame:
+    """Exact BM25 of the (term, doc_id, tf[, doc_len]) ``rows``: per
+    doc_id for one query, per (query_id, doc_id) for a batch, where a
+    row scores for every query holding its term. The idfs and the
+    term → query-ids fan-out are literal maps, so the plan reads no
+    driver-built relation (one would cost a Python-worker stage per
+    job). On serving rows the aggregate runs inside the doc_id
+    partitions, with no exchange."""
+    avgdl = float(index["_corpus_row"]["avgdl"])
+    rows = _with_doc_len(index, rows.withColumn("idf", _lit_map(idfs)[F.col("term")]))
+    keys = ["doc_id"]
+    if batch:
+        qids_of: dict[str, list[int]] = {}
         for qid, ts in q_terms.items():
-            total_ub = sum(term_ubs.get(t, 0.0) for t in ts)
             for t in ts:
-                if t not in term_ubs:
-                    continue
-                c = (theta_eff[qid] - (total_ub - term_ubs[t])) / idfs[t]
-                if t not in cutoffs or c < cutoffs[t]:
-                    cutoffs[t] = c
-        pred = _cut_pred(cutoffs, avgdl)
+                if t in idfs:
+                    qids_of.setdefault(t, []).append(qid)
+        by_term = _lit_map(qids_of, "array<bigint>")
+        rows = rows.withColumn("query_id", F.explode(by_term[F.col("term")]))
+        keys = ["query_id", "doc_id"]
+    return rows.groupBy(*keys).agg(
+        F.sum(F.col("idf") * _bm25_w(avgdl, cfg)).alias("score"))
 
+
+def _topk(scores: DataFrame, k_of: dict[int, int], cfg: EngineConfig) -> DataFrame:
+    """Each query's top k of ``scores`` in rank order: one query's
+    (doc_id, score) through orderBy + limit (TakeOrderedAndProject), a
+    batch's (query_id, rank, doc_id, score) through a per-query window,
+    the per-query k a literal map."""
+    order = (F.round("score", cfg.bm25.rank_decimals).desc(), F.col("doc_id").asc())
+    if "query_id" not in scores.columns:
+        (k,) = k_of.values()
+        return scores.orderBy(*order).limit(k)
     return (
-        _batch_topk(posting_rows(index, pred), index, idfs, q_terms, k_of,
-                    avgdl, cfg)
+        scores.withColumn("rank", F.row_number().over(
+            Window.partitionBy("query_id").orderBy(*order)))
+        .filter(F.col("rank") <= _lit_map(k_of, "int")[
+            F.col("query_id").cast("string")])
         .select("query_id", "rank", "doc_id", "score")
     )
 
 
-def _batch_topk(
-    rows: DataFrame,
-    index: dict,
-    idfs: dict[str, float],
-    q_terms: dict[int, list[str]],
-    k_of: dict[int, int],
-    avgdl: float,
-    cfg: EngineConfig,
-) -> DataFrame:
-    """Each query's top-k of the (term, doc_id, tf[, doc_len]) ``rows``:
-    a row scores for every query holding its term. (query_id, rank,
-    doc_id, score, k), rank ≤ k. The term → query-ids fan-out, the idfs
-    and the per-query k are literal maps, so the plan reads no
-    driver-built relation (one would cost a Python-worker stage per
-    job). On serving rows the (query_id, doc_id) aggregate runs inside
-    the doc_id partitions; only the per-query window shuffles."""
-    qids_of: dict[str, list[int]] = {}
-    for qid, ts in q_terms.items():
-        for t in ts:
-            if t in idfs:
-                qids_of.setdefault(t, []).append(qid)
-    by_term = _lit_map(qids_of, "array<bigint>")
-    k_map = _lit_map(k_of, "int")
-    win = Window.partitionBy("query_id").orderBy(
-        F.round("score", cfg.bm25.rank_decimals).desc(), F.col("doc_id").asc())
-    return (
-        _with_doc_len(index, rows.withColumn("idf", _lit_map(idfs)[F.col("term")]))
-        .withColumn("query_id", F.explode(by_term[F.col("term")]))
-        .groupBy("query_id", "doc_id")
-        .agg(F.sum(F.col("idf") * _bm25_w(avgdl, cfg)).alias("score"))
-        .withColumn("rank", F.row_number().over(win))
-        .withColumn("k", k_map[F.col("query_id").cast("string")])
-        .filter(F.col("rank") <= F.col("k"))
-    )
+def _theta_effs(top: DataFrame, k_of: dict[int, int],
+                cfg: EngineConfig) -> dict[int, float]:
+    """Each query's prune-safe threshold from its bootstrap top k
+    ``top`` (one collect): the lowest score of the k minus 1.5 rounding
+    buckets. A query with fewer than k bootstrap docs is absent (no
+    pruning possible). The k-th score of ANY doc subset lower-bounds the
+    global k-th, so the threshold is safe.
+
+    The 1.5/10^d slack: rank order is (round(score, d), doc_id), so a
+    doc whose score rounds into θ's bucket with a smaller doc_id must
+    survive; 1.5/10^d is provably safe under ANY rounding family with
+    |round(x)−x| ≤ 0.5/10^d (JVM BigDecimal HALF_UP vs the
+    floor(x·10^d+0.5) formula can disagree by an ulp at bucket edges —
+    functions/rounding.py): if s ≤ θ − 1.5/10^d then round(s) ≤
+    θ − 1/10^d < round(θ). Cost: at most one extra bucket decoded."""
+    if "query_id" in top.columns:
+        seen = {r["query_id"]: (r["n"], r["kth"]) for r in top.groupBy("query_id")
+                .agg(F.count(F.lit(1)).alias("n"), F.min("score").alias("kth"))
+                .collect()}
+    else:
+        rows = top.collect()
+        seen = {qid: (len(rows), min(r["score"] for r in rows))
+                for qid in k_of if rows}
+    slack = 1.5 / 10 ** cfg.bm25.rank_decimals
+    return {qid: kth - slack for qid, (n, kth) in seen.items() if n >= k_of[qid]}
 
 
 def _meta_slice(meta: TermMeta, terms: list[str]) -> TermMeta:
@@ -1429,155 +1248,7 @@ def _meta_slice(meta: TermMeta, terms: list[str]) -> TermMeta:
     ts = [t for t in terms if t in meta.idfs]
     return TermMeta(
         {t: meta.idfs[t] for t in ts}, {t: meta.ubs[t] for t in ts},
-        {t: meta.best[t] for t in ts},
         sum(meta.blocks.get(t, 0) for t in ts),
         {t: meta.blocks.get(t, 0) for t in ts},
         {t: meta.dfs[t] for t in ts},
         {t: meta.hists[t] for t in ts if t in meta.hists})
-
-
-def _bm25_topk_batch_impact(
-    spark: SparkSession,
-    index: dict[str, DataFrame],
-    q_terms: dict[int, list[str]],
-    k_of: dict[int, int],
-    meta: TermMeta,
-    n_docs: float,
-    avgdl: float,
-    cfg: EngineConfig,
-) -> DataFrame:
-    """Batched impact retrieval: wand_topk_impact's bounded-decode plan
-    amortized across the whole query set — THREE jobs total (θ
-    bootstrap for every query at once, ONE ids-only decode of the
-    merged planned blocks, one forward-completion scoring pass),
-    instead of per-query jobs.
-
-    Per-term decode decisions merge across queries conservatively: full
-    if any query needs the term fully, else the MINIMUM cut over
-    queries that cut it, else skip. The decoded set is therefore a
-    superset of every query's own plan, so per query q any doc absent
-    from q's decoded blocks scores < θ_eff_q (q's own joint tail
-    bound). Scoring from the forward table may also score docs that
-    are candidates only via ANOTHER query's blocks — harmless: such a
-    doc's score for q is provably below q's θ bucket, so it cannot
-    displace a true top-k member (it can only trail them). Lossless:
-    tests assert impact == flat batch."""
-    if index.get("forward") is None:
-        raise ValueError(
-            "impact retrieval needs the forward table "
-            "(IndexConfig(store_forward=True))")
-    live = sorted(meta.idfs)
-    live_terms = _terms_in(live)
-
-    # --- job 1: θ bootstrap for every query at once — the union of
-    # every term's top-`impact_bootstrap_depth` impact blocks gives the
-    # candidate ids, which are then scored EXACTLY from the forward
-    # table per query (r6; see _bootstrap_theta_eff_prefix: the k-th
-    # exact score of a doc subset still lower-bounds the global k-th,
-    # and exact completion is far tighter than the r5 partial sums for
-    # all-common-term queries — their θ sat so low the planner decoded
-    # half the candidate blocks)
-    best_pred = (live_terms
-                 & (F.col("block_id") < cfg.bm25.impact_bootstrap_depth))
-    # exact completion only when some query is stopword-heavy — the
-    # extra forward pass buys nothing for rare-term-only batches, whose
-    # partial-sum θ already plans ≤4% decode fractions
-    any_common = any(
-        _common_term_regime({t: meta.dfs[t] for t in ts if t in meta.dfs},
-                            n_docs)
-        for ts in q_terms.values())
-    if any_common:
-        boot_ids = posting_ids(index, best_pred).select("doc_id").distinct()
-        boot = _restrict_ids(index, live_forward(index).filter(live_terms),
-                             boot_ids, True)
-    else:
-        boot = posting_rows(index, best_pred)
-    theta_rows = (
-        _batch_topk(boot, index, meta.idfs, q_terms, k_of, avgdl, cfg)
-        .groupBy("query_id").agg(
-            F.count(F.lit(1)).alias("n"),
-            F.min("score").alias("kth"),
-            F.max("k").alias("k"))
-        .collect()
-    )
-    eps = _theta_slack(cfg)
-    theta_eff = {r["query_id"]: (r["kth"] - eps if r["n"] >= r["k"]
-                                 else None) for r in theta_rows}
-
-    # --- per-query plans, merged per term: full > min-cut > skip
-    decision: dict[str, tuple[str, float]] = {}  # term -> (kind, cut)
-
-    def _need(t: str, kind: str, cut: float = 0.0) -> None:
-        cur = decision.get(t)
-        if kind == "full" or (cur is not None and cur[0] == "full"):
-            decision[t] = ("full", 0.0)
-        elif kind == "cut":
-            if cur is None or cur[0] == "skip":
-                decision[t] = ("cut", cut)
-            else:
-                decision[t] = ("cut", min(cur[1], cut))
-        elif cur is None:
-            decision[t] = ("skip", 0.0)
-
-    for qid, ts in q_terms.items():
-        sub = _meta_slice(meta, ts)
-        plan = _impact_plan(sub, theta_eff.get(qid)) \
-            if theta_eff.get(qid) is not None else None
-        if plan is None:
-            for t in sub.idfs:
-                _need(t, "full")
-            continue
-        for t in plan["full"]:
-            _need(t, "full")
-        for t, cw in plan["cut"].items():
-            _need(t, "cut", cw)
-        for t in plan["skip"]:
-            _need(t, "skip")
-
-    # one term → cut map: a full term's -inf cut keeps every block, a
-    # skipped term is absent
-    cuts = {t: -math.inf if kind == "full" else cut
-            for t, (kind, cut) in decision.items() if kind != "skip"}
-    # every term skippable for every query: the bootstrap docs already
-    # dominate every other doc; still score them exactly
-    pred = _cut_pred(cuts, avgdl) if cuts else best_pred
-
-    # --- job 2+3 (one action): ids-only decode of the merged planned
-    # blocks → union candidate ids → forward completion, scored per
-    # (query, doc) over each query's terms, per-query window top-k
-    ids_ub = sum(meta.dfs[t] for t, d in decision.items()
-                 if d[0] != "skip") + index.get("_n_tombstones", 0)
-    fwd = live_forward(index).filter(live_terms)
-    # candidate restriction only while it can shrink the forward read —
-    # see wand_topk_impact: scoring every live-term forward row is
-    # equally lossless, and a candidate set near the corpus makes the
-    # ids-decode + join a pure extra shuffle
-    if ids_ub <= max(cfg.index.broadcast_ids_max, int(n_docs) // 4):
-        cand_ids = posting_ids(index, pred).select("doc_id").distinct()
-        fwd = _restrict_ids(index, fwd, cand_ids,
-                            ids_ub <= cfg.index.broadcast_ids_max)
-    return (
-        _batch_topk(fwd, index, meta.idfs, q_terms, k_of, avgdl, cfg)
-        .select("query_id", "rank", "doc_id", "score")
-    )
-
-
-def _score_blocks(
-    index: dict,
-    pred,
-    idfs: dict[str, float],
-    avgdl: float,
-    cfg: EngineConfig,
-) -> DataFrame:
-    """Live postings of the blocks matching ``pred`` (posting_rows),
-    doc lengths joined, exact BM25 per doc. ``idfs`` (term → idf, a
-    handful of query terms) enters the plan as a literal map — no
-    broadcast exchange."""
-    postings = posting_rows(index, pred)
-    if not idfs:
-        return postings.groupBy("doc_id").agg(
-            F.lit(0.0).alias("score")).limit(0)
-    joined = _with_doc_len(
-        index, postings.withColumn("idf", _lit_map(idfs)[F.col("term")]))
-    return joined.groupBy("doc_id").agg(
-        F.sum(F.col("idf") * _bm25_w(avgdl, cfg)).alias("score"))

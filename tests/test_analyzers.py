@@ -64,7 +64,7 @@ def test_stop_stem_index_roundtrip(spark, documents, tmp_path):
     for query in ["the spark queries merged", "running windows filter",
                   "a batch of values"]:
         want = oracle.topk(query, k=10)
-        got = wand_topk(spark, idx, query, k=10, cfg=cfg, prune=True).collect()
+        got = wand_topk(spark, idx, query, k=10, cfg=cfg, prune="impact").collect()
         assert [r["doc_id"] for r in got] == [d for d, _ in want], query
         for g, (_, s) in zip(got, want):
             assert g["score"] == pytest.approx(s, abs=1e-9)

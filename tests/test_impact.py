@@ -94,6 +94,11 @@ def test_impact_prunes_blocks(spark, impact_index):
                      cfg=CFG_IMPACT, stats=stats).collect()
     assert stats["blocks_candidate"] > 0
     assert stats["blocks_decoded"] < stats["blocks_candidate"]
+    # an out-of-vocabulary query still reports its (empty) decode volume
+    stats = {"exact": True}
+    assert wand_topk_impact(spark, impact_index, "zzznotaword", k=10,
+                            cfg=CFG_IMPACT, stats=stats).collect() == []
+    assert stats["blocks_candidate"] == stats["blocks_decoded"] == 0
 
 
 def test_impact_dispatch_via_wand(spark, impact_index):
@@ -257,13 +262,13 @@ def test_auto_switches_to_impact_past_block_threshold(
     low = EngineConfig(bm25=BM25Config(impact_auto_min_blocks=1),
                        index=CFG_IMPACT.index)
     calls = {"n": 0}
-    real = Q.wand_topk_impact
+    real = Q._impact_rows
 
     def spy(*a, **kw):
         calls["n"] += 1
         return real(*a, **kw)
 
-    monkeypatch.setattr(Q, "wand_topk_impact", spy)
+    monkeypatch.setattr(Q, "_impact_rows", spy)
     want = [(r["doc_id"], round(r["score"], 9)) for r in
             wand_topk(spark, impact_index, "spark query data", k=10,
                       cfg=CFG_IMPACT, prune=False).collect()]
@@ -282,6 +287,7 @@ def test_auto_switches_to_impact_past_block_threshold(
                for r in bm25_topk_batch(
                    spark, impact_index, queries, cfg=low,
                    prune="auto").collect())
+    assert calls["n"] == 2
     b = sorted((r["query_id"], r["rank"], r["doc_id"], round(r["score"], 9))
                for r in bm25_topk_batch(
                    spark, impact_index, queries, cfg=CFG_IMPACT,

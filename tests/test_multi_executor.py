@@ -47,15 +47,18 @@ out = build_index(spark, docs, d, cfg=cfg, groups=2)
 idx = read_index(spark, d)
 hits = [(r["doc_id"], round(r["score"], 4))
         for r in wand_topk(spark, idx, "spark query data", k=5,
-                           cfg=cfg, prune=True).collect()]
+                           cfg=cfg, prune="impact").collect()]
 phrase = sorted(r["doc_id"] for r in
                 phrase_match(spark, idx, "table scan").collect())
 imp = [(r["doc_id"], round(r["score"], 4))
        for r in wand_topk_impact(spark, idx, "spark query data", k=5,
                                  cfg=cfg).collect()]
+flat = [(r["doc_id"], round(r["score"], 4))
+        for r in wand_topk(spark, idx, "spark query data", k=5,
+                           cfg=cfg, prune=False).collect()]
 print(json.dumps({"n_docs": out["n_docs"], "hits": hits,
                   "n_phrase": len(phrase), "phrase_head": phrase[:3],
-                  "impact_hits": imp}))
+                  "impact_hits": imp, "flat_hits": flat}))
 spark.stop()
 """
 
@@ -75,5 +78,5 @@ def test_build_and_query_across_executors():
     assert len(out["hits"]) == 5
     assert out["n_phrase"] > 0 and out["phrase_head"][0] == 0
     # impact retrieval (ids-only decode + forward completion across
-    # executor JVMs) must match the pruned/flat answers exactly
-    assert out["impact_hits"] == out["hits"], out
+    # executor JVMs) must match the flat answer exactly
+    assert out["impact_hits"] == out["hits"] == out["flat_hits"], out

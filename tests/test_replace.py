@@ -62,7 +62,7 @@ def test_replace_equals_fresh_build(spark, recrawl, tmp_path):
     # batch + single-query + WAND answers identical to the fresh build
     assert _run(spark, inc) == _run(spark, full)
     for _, q, k in QUERIES:
-        got = wand_topk(spark, inc, q, k=k, cfg=CFG, prune=True).collect()
+        got = wand_topk(spark, inc, q, k=k, cfg=CFG, prune="impact").collect()
         want = bm25_topk(fresh, q, k=k, cfg=CFG).collect()
         assert [r["doc_id"] for r in got] == [r["doc_id"] for r in want], q
         for g, w in zip(got, want):

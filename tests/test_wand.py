@@ -1,4 +1,5 @@
-"""WAND pruned == exhaustive (lossless block-max pruning), SURVEY §5."""
+"""Block-index retrieval == exhaustive BM25: the flat and the impact plan
+(bounded decode) are lossless, for single queries and batches, SURVEY §5."""
 
 import uuid
 
@@ -26,8 +27,8 @@ def index(spark, documents, tmp_path_factory):
 @pytest.mark.parametrize("query", QUERIES)
 def test_wand_equals_exhaustive(spark, documents, index, query):
     want = bm25_topk(documents, query, k=10).collect()
-    # prune=True forces the θ-bootstrap + block-pruning path
-    got = wand_topk(spark, index, query, k=10, prune=True).collect()
+    # prune="impact" forces the θ-bootstrap + bounded-decode plan
+    got = wand_topk(spark, index, query, k=10, prune="impact").collect()
     assert [r["doc_id"] for r in got] == [r["doc_id"] for r in want]
     for g, w in zip(got, want):
         assert g["score"] == pytest.approx(w["score"], abs=1e-9)
@@ -36,7 +37,7 @@ def test_wand_equals_exhaustive(spark, documents, index, query):
 @pytest.mark.parametrize("query", ["spark query data"])
 def test_wand_auto_matches_forced(spark, index, query):
     a = wand_topk(spark, index, query, k=10, prune="auto").collect()
-    b = wand_topk(spark, index, query, k=10, prune=True).collect()
+    b = wand_topk(spark, index, query, k=10, prune="impact").collect()
     assert [(r["doc_id"], r["score"]) for r in a] == [(r["doc_id"], r["score"]) for r in b]
 
 
@@ -60,7 +61,7 @@ def test_wand_theta_tie_boundary(spark, tmp_path):
     build_index(spark, docs, out, cfg=CFG, groups=1, count_rows=False)
     idx = read_index(spark, out)
     want = bm25_topk(docs, "apple", k=10, cfg=CFG).collect()
-    got = wand_topk(spark, idx, "apple", k=10, cfg=CFG, prune=True).collect()
+    got = wand_topk(spark, idx, "apple", k=10, cfg=CFG, prune="impact").collect()
     assert [r["doc_id"] for r in got] == [r["doc_id"] for r in want] == list(range(10))
     for g, w in zip(got, want):
         assert g["score"] == pytest.approx(w["score"], abs=1e-12)
@@ -76,14 +77,16 @@ def test_wand_theta_tie_multiterm(spark, tmp_path):
     build_index(spark, docs, out, cfg=CFG, groups=1, count_rows=False)
     idx = read_index(spark, out)
     want = bm25_topk(docs, "apple banana", k=12, cfg=CFG).collect()
-    got = wand_topk(spark, idx, "apple banana", k=12, cfg=CFG, prune=True).collect()
+    got = wand_topk(spark, idx, "apple banana", k=12, cfg=CFG,
+                    prune="impact").collect()
     assert [r["doc_id"] for r in got] == [r["doc_id"] for r in want]
     for g, w in zip(got, want):
         assert g["score"] == pytest.approx(w["score"], abs=1e-12)
 
 
 def test_query_with_fallback_ladder(spark, index, monkeypatch):
-    """Degraded-result path: pruned failure falls back to the flat scan
+    """Degraded-result path: a failure of the default plan falls back to
+    the flat scan
     with identical results; total failure degrades to an empty result
     instead of raising (reference rag/pipeline.py:54-79)."""
     import semcode_spark.operators.query as Q
@@ -93,10 +96,10 @@ def test_query_with_fallback_ladder(spark, index, monkeypatch):
             wand_topk(spark, index, "spark query data", k=10, cfg=CFG, prune=False).collect()]
 
     rows, mode, why = query_with_fallback(spark, index, "spark query data", k=10, cfg=CFG)
-    assert mode == "pruned" and why == []
+    assert mode == "auto" and why == []
     assert [(r["doc_id"], round(r["score"], 9)) for r in rows] == want
 
-    real = Q._score_blocks
+    real = Q._scores
     calls = {"n": 0}
 
     def fail_first(*a, **kw):
@@ -105,21 +108,21 @@ def test_query_with_fallback_ladder(spark, index, monkeypatch):
             raise RuntimeError("injected decode failure")
         return real(*a, **kw)
 
-    monkeypatch.setattr(Q, "_score_blocks", fail_first)
+    monkeypatch.setattr(Q, "_scores", fail_first)
     rows, mode, why = query_with_fallback(spark, index, "spark query data", k=10, cfg=CFG)
     assert mode == "flat"
     # the swallowed rung failure is surfaced, mode-tagged (r3 advice #7)
-    assert why == ["pruned: RuntimeError: injected decode failure"]
+    assert why == ["auto: RuntimeError: injected decode failure"]
     assert [(r["doc_id"], round(r["score"], 9)) for r in rows] == want
 
-    monkeypatch.setattr(Q, "_score_blocks",
+    monkeypatch.setattr(Q, "_scores",
                         lambda *a, **kw: (_ for _ in ()).throw(RuntimeError("down")))
     rows, mode, why = query_with_fallback(spark, index, "spark query data", k=10, cfg=CFG)
     assert mode == "degraded" and rows == []
-    assert [w.split(":")[0] for w in why] == ["pruned", "flat"]
+    assert [w.split(":")[0] for w in why] == ["auto", "flat"]
     assert all("down" in w for w in why)
 
-    monkeypatch.setattr(Q, "_score_blocks", real)
+    monkeypatch.setattr(Q, "_scores", real)
     with pytest.raises(ValueError, match="empty query"):
         query_with_fallback(spark, index, "???", k=10, cfg=CFG)
 
@@ -165,16 +168,16 @@ def test_serving_mode_matches_cold(spark, served):
     assert "_term_dict" in hot  # tiny vocab → driver dict engaged
     assert cold["_n_tombstones"] > 0
     for q in QUERIES:
-        want = wand_topk(spark, cold, q, k=10, cfg=CFG, prune=True).collect()
+        want = wand_topk(spark, cold, q, k=10, cfg=CFG, prune="impact").collect()
         want = [(r["doc_id"], round(r["score"], 9)) for r in want]
-        for prune in (True, False, "auto", "impact"):
+        for prune in (False, "auto", "impact"):
             got = wand_topk(spark, hot, q, k=10, cfg=CFG, prune=prune).collect()
             assert [(r["doc_id"], round(r["score"], 9)) for r in got] == want, \
                 (q, prune)
         got = wand_topk_impact(spark, hot, q, k=10, cfg=CFG).collect()
         assert [(r["doc_id"], round(r["score"], 9)) for r in got] == want, q
     want = _batch_rows(spark, cold, False)
-    for prune in (False, "auto", "impact", True):
+    for prune in (False, "auto", "impact"):
         assert _batch_rows(spark, hot, prune) == want, prune
 
 
@@ -236,8 +239,8 @@ def test_warm_serving_runs_no_python(spark, served, monkeypatch):
 
 
 def test_batch_pruning_lossless(spark, documents, tmp_path):
-    """Batched WAND (VERDICT r2 #6): per-query θ bootstrap + min-cutoff
-    block filter returns EXACTLY the unpruned batch answer, including
+    """Batched impact plan (VERDICT r2 #6): per-query θ bootstrap +
+    merged per-term cuts return EXACTLY the flat batch answer, including
     θ-tie buckets and replaced docs."""
     from pyspark.sql import functions as F
     from semcode_spark.operators.query import bm25_topk_batch
@@ -258,7 +261,7 @@ def test_batch_pruning_lossless(spark, documents, tmp_path):
         return sorted((r["query_id"], r["rank"], r["doc_id"],
                        round(r["score"], 9)) for r in out)
 
-    assert rows(True) == rows(False)
+    assert rows("impact") == rows(False)
 
 
 def test_conjunctive_topk_requires_all_terms(spark, documents, index):
@@ -403,7 +406,8 @@ def test_literal_maps_round_trip(spark):
 
 @pytest.mark.parametrize("kw", [{"prune": "flat"}, {"prune": "Impact"},
                                 {"prune": None}, {"prune": 0}, {"k": 0},
-                                {"k": -1}, {"k": 2.5}, {"k": True}])
+                                {"k": -1}, {"k": 2.5}, {"k": True},
+                                {"prune": True}])
 def test_bad_plan_and_k_rejected(spark, index, kw):
     """An unknown plan choice or a k that is not a positive int is a
     caller error, raised before any Spark work."""
@@ -438,3 +442,40 @@ def test_cold_read_index_runs_one_job(spark, served, monkeypatch):
     monkeypatch.setattr(pq, "read_metadata", unreadable)
     assert read_index(spark, cold["_dir"])["_n_tombstones"] \
         == cold["_n_tombstones"]
+
+
+@pytest.mark.parametrize("handle", ["cold", "serving"])
+def test_single_query_equals_its_batch_slice(spark, served, handle):
+    """One planner: for the flat and the impact plan, a single query's
+    answer equals a batch of one and its slice of the 6-query batch
+    (doc_id, score and rank), on cold and serving handles."""
+    from semcode_spark.operators.query import bm25_topk_batch
+
+    idx = dict(zip(("cold", "serving"), served))[handle]
+
+    def ranked(rows):
+        return sorted((r["query_id"], r["rank"], r["doc_id"], round(r["score"], 9))
+                      for r in rows)
+
+    for prune in (False, "impact"):
+        full = ranked(bm25_topk_batch(spark, idx, BATCH, cfg=CFG,
+                                      prune=prune).collect())
+        for qid, q, k in BATCH:
+            single = [(qid, i + 1, r["doc_id"], round(r["score"], 9))
+                      for i, r in enumerate(wand_topk(
+                          spark, idx, q, k=k, cfg=CFG, prune=prune).collect())]
+            alone = ranked(bm25_topk_batch(spark, idx, [(qid, q, k)], cfg=CFG,
+                                           prune=prune).collect())
+            assert single == alone == [r for r in full if r[0] == qid], (q, prune)
+
+
+@pytest.mark.parametrize("qid", ["a", 2.5, True, None, 2 ** 63])
+def test_batch_rejects_non_int_query_ids(spark, index, qid):
+    """A query id the plan cannot carry as a bigint is a caller error,
+    not an empty answer; True is no int id (it would collide with 1)."""
+    from semcode_spark.operators.query import bm25_topk_batch, phrase_topk_batch
+
+    queries = [(1, "spark query data", 5), (qid, "spark", 5)]
+    for fn in (bm25_topk_batch, phrase_topk_batch):
+        with pytest.raises(ValueError, match="query_id must be"):
+            fn(spark, index, queries, cfg=CFG)
