@@ -99,7 +99,7 @@ def _bm25_spark(spark: SparkSession, sf_dir: str, query: str, k: int) -> DataFra
 
 
 _INDEX_CACHE: dict[str, str] = {}
-_INDEX_LAYOUT_VERSION = "v9"  # bump on postings/stats schema changes
+_INDEX_LAYOUT_VERSION = "v10"  # bump on postings/stats schema changes
 
 
 def _docs_fingerprint(sf_dir: str) -> str:
@@ -130,8 +130,8 @@ def _cached_index(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
             f"semcode_index_{_INDEX_LAYOUT_VERSION}_{_docs_fingerprint(key)}_"
             + key.replace("/", "_"),
         )
-        # impact-ordered layout: decode-identical to the doc_id layout
-        # for every query path (tests/test_impact.py), and it lets the
+        # impact-ordered layout: the same posting rows as the doc_id
+        # layout for every query path (tests/test_impact.py), and it lets the
         # wand_topk_impact row exercise real prefix pruning
         cfg = EngineConfig(bm25=BM25Config(), index=IndexConfig(
             term_buckets=16, store_positions=True, impact_ordered=True))
@@ -223,12 +223,11 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
     q["postings_flat"] = q_postings
 
     def q_positions(spark, sf):
-        # positional decode path verified bit-exact: every (term, doc,
+        # positional read path verified bit-exact: every (term, doc,
         # token-position) row of the phrase terms, FROM the index
-        from semcode_spark.operators.index_build import decode_positions_flat
+        from semcode_spark.operators.index_build import posting_positions
         idx = _cached_index(spark, sf)
-        blocks = idx["postings"].filter(F.col("term").isin(*AND_TERMS))
-        return decode_positions_flat(blocks).select(
+        return posting_positions(idx, F.col("term").isin(*AND_TERMS)).select(
             "term", "doc_id", F.col("pos").cast("long").alias("pos"))
     q["positions_flat"] = q_positions
 

@@ -254,7 +254,7 @@ def main() -> None:
            .select((F.col("doc_id") + F.col("rep") * 10_000_000)
                    .alias("doc_id"), "text"))
     # impact-ordered layout (r5): same block count/bytes as the doc_id
-    # layout (decode-identical, tests/test_impact.py), so the flat
+    # layout (the same posting rows, tests/test_impact.py), so the flat
     # crossover number stays comparable to r3/r4 — and the same index
     # carries the impact decode-volume measurement
     xcfg = EngineConfig(bm25=BM25Config(),
@@ -268,7 +268,9 @@ def main() -> None:
                          float(xc["n_docs"]), float(xc["avgdl"])).n_blocks
     extras["crossover_docs"] = int(xc["n_docs"])
     extras["crossover_union_blocks"] = int(xblocks)
-    bm25_topk_batch(spark, xidx, REFERENCE_QUERIES, prune=False).count()  # warm
+    # warm (auto is flat at this size), and record the plan auto picks
+    st: dict = {}
+    bm25_topk_batch(spark, xidx, REFERENCE_QUERIES, prune="auto", stats=st).count()
     xs = []
     for _ in range(2):
         t0 = time.time()
@@ -276,7 +278,7 @@ def main() -> None:
                                       prune=False).count()
         xs.append(time.time() - t0)
     extras["crossover_flat_sec"] = round(min(xs), 3)
-    extras["crossover_auto_mode"] = "flat"  # r4: auto = flat, measured
+    extras["crossover_auto_mode"] = st["plan"]
 
     # ---- impact retrieval decode volume (r4 verdict item 1's "done"
     # metric): blocks decoded / candidate for the full 24-query set on

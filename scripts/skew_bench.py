@@ -4,8 +4,9 @@ corpus (north_rule: explicit hot-term skew splitting).
 Synthesizes N docs that ALL contain one stopword-like term (df = 100%
 of docs; every real web corpus has several of these), so the postings
 shuffle has one key carrying N rows while the median key carries a
-handful. Runs the encode+write stage twice — salting disabled vs
-enabled — and reports stage wall plus the reducer-load distribution
+handful. Runs the block+write stage (index_build.block_postings) twice
+— salting disabled vs enabled — and reports stage wall plus the
+reducer-load distribution
 (max/median bucket rows), the direct evidence that the salted shuffle
 has no straggler reducer.
 
@@ -37,7 +38,7 @@ def main() -> None:
     from pyspark.sql import functions as F
 
     from semcode_spark.config import BM25Config, EngineConfig, IndexConfig
-    from semcode_spark.operators.index_build import encoded_postings, term_doc_tf
+    from semcode_spark.operators.index_build import block_postings, term_doc_tf
     from semcode_spark.session import get_spark
 
     spark = get_spark("skew-bench", master=f"local[{args.cpus}]",
@@ -67,14 +68,17 @@ def main() -> None:
     out: dict = {"n_docs": args.docs, "cpus": args.cpus,
                  "term_buckets": args.buckets, "salt_factor": 8}
     for label, hot in (("unsalted", []), ("salted", ["hotterm"])):
-        enc = encoded_postings(tf, 12.0, hot, cfg)
+        rows_df = block_postings(tf, 12.0, hot, cfg)
         d = tempfile.mkdtemp(prefix=f"skew_{label}_")
         t0 = time.time()
-        enc.write.mode("overwrite").parquet(d)
+        rows_df.write.mode("overwrite").parquet(d)
         out[f"{label}_encode_sec"] = round(time.time() - t0, 2)
-        # reducer load = postings rows per bucket (the shuffle key space)
+        # reducer load = postings rows per bucket (the shuffle key space,
+        # recomputed as block_postings keys its repartition)
+        bucket = F.pmod(F.xxhash64("term", "salt"), F.lit(args.buckets))
         rows = (spark.read.parquet(d)
-                .groupBy("bucket").agg(F.sum("n").alias("rows")).collect())
+                .groupBy(bucket.alias("bucket")).count()
+                .withColumnRenamed("count", "rows").collect())
         loads = sorted(r["rows"] for r in rows)
         out[f"{label}_max_bucket_rows"] = loads[-1]
         out[f"{label}_median_bucket_rows"] = loads[len(loads) // 2]

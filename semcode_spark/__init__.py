@@ -8,7 +8,7 @@ checkpoint/lineage and metrics — re-expressed Spark-first:
 - every stage is a DataFrame plan (Catalyst optimizes; no RDDs),
 - all Python kernels are Arrow-vectorized (pandas_udf / applyInPandas),
 - the index is a data *layout* (salted repartition-by-term, sorted,
-  delta+varint block-max segments) rather than an external service
+  block-max posting rows in parquet) rather than an external service
   (the reference outsources this exact part to Milvus,
   reference: storage/milvus_store.py:50-133).
 

@@ -31,8 +31,8 @@ def main(argv: list[str] | None = None) -> int:
                    help="store token positions (enables `phrase`)")
     b.add_argument("--no-forward", action="store_true",
                    help="skip the forward table: ~20%% faster build for "
-                        "append-only corpora; replace/compaction fall "
-                        "back to decoding the postings store")
+                        "append-only corpora; replace/compaction read "
+                        "the postings store instead")
     b.add_argument("--impact", action="store_true",
                    help="impact-ordered block layout: blocks hold "
                         "postings by descending BM25 weight so "
@@ -157,9 +157,12 @@ def main(argv: list[str] | None = None) -> int:
                      "impact": "impact"}[args.mode]
             idx = read_index(spark, args.index)
             for text in args.query:
-                rows = wand_topk(spark, idx, text, k=args.k,
-                                 prune=prune).collect()
-                json.dump({"query": text, "mode": args.mode, "hits": [
+                stats: dict = {}
+                rows = wand_topk(spark, idx, text, k=args.k, prune=prune,
+                                 stats=stats).collect()
+                # mode: what was asked; plan: what the planner ran
+                json.dump({"query": text, "mode": args.mode,
+                           "plan": stats["plan"], "hits": [
                     {"doc_id": r["doc_id"], "score": round(r["score"], 6)}
                     for r in rows]}, sys.stdout)
                 print()

@@ -74,7 +74,7 @@ class IndexConfig:
         stage runs one task wave and the largest bucket is a straggler
         that bounds the whole stage (measured: flat wall 8→32 cores
         until buckets went 32→128).
-    block_size: postings per compressed block (delta+varint). 128 mirrors
+    block_size: postings per block (one max_w bound each). 128 mirrors
         the reference's upsert batch (settings.py:76) and is the classic
         block-max WAND block size.
     hot_term_df_ratio: a term whose df exceeds ratio*N is "hot" and gets
@@ -101,9 +101,10 @@ class IndexConfig:
     # corpus (reference embeddings/providers.py:34-104). The name is
     # persisted in the index's meta.json and enforced on read/add.
     analyzer: str = "standard"  # standard | stop | stem | stop_stem
-    # store per-posting token positions (gap+varint, a `pos` binary per
-    # block) so phrase queries are answered from the index instead of
-    # re-scanning the corpus. An index property like the analyzer:
+    # store per-posting token positions (a `positions array<int>`
+    # column on each posting row) so phrase queries are answered from
+    # the index instead of re-scanning the corpus. An index property
+    # like the analyzer:
     # persisted in meta.json, enforced across add_segment, preserved by
     # compaction. Off by default — positions roughly double posting
     # bytes and add a collect_list to the build aggregate.
@@ -114,21 +115,21 @@ class IndexConfig:
     # re-crawl) at ~20% build throughput — the right default for a
     # crawl corpus that re-ingests URLs, but an append-only corpus
     # shouldn't pay it: with store_forward=False, replace/compaction
-    # fall back to decoding the postings store (correct, slower).
+    # read the postings store instead (correct, slower).
     # An index property persisted in meta.json, like the analyzer.
     store_forward: bool = True
     # impact-ordered block layout: within each (term, salt) run,
     # postings are assigned to blocks by DESCENDING idf-free BM25
-    # weight (block 0 holds the term's top-`block_size` postings), with
-    # doc_ids re-sorted ascending INSIDE each block so the delta+varint
-    # codec and every decode path are unchanged. Block max_w then
+    # weight (block 0 holds the term's top-`block_size` postings); the
+    # rows of a block are stored in doc_id order as in the doc_id
+    # layout, so every read path is unchanged. Block max_w then
     # decays monotonically with block rank — the property that lets
     # impact retrieval (query.wand_topk_impact) decode a bounded
     # prefix of each list instead of all of it. Purely a performance
     # property: queries on a mixed-layout index stay correct (every
     # bound is predicate-based on stored max_w, never on block order).
-    # Persisted in meta.json; resume of a build must match (byte-
-    # identity of the resumed groups).
+    # Persisted in meta.json; resume of a build must match (identity
+    # of the resumed groups).
     impact_ordered: bool = False
 
 

@@ -1,112 +1,18 @@
-"""Delta+varint posting-block codec — numpy-vectorized, no per-row Python.
+"""The numpy twin of the engine's BM25 weight.
 
-The persisted index stores each term's postings as blocks of ≤block_size
-entries: doc_ids are delta-encoded then LEB128-varint packed; tfs are
-varint packed; each block carries the idf-independent BM25 weight bound
-``max_w`` so queries can skip blocks (block-max WAND). This replaces the
-reference's outsourced index structure (Milvus IVF_FLAT nlist=128,
-reference: storage/milvus_store.py:59-85) with an explicit data layout.
-
-Varint encode/decode are round-vectorized (≤10 numpy passes over the
-whole array, never a Python loop per value) — SURVEY §7.3 hard part (e).
+The persisted index stores each term's postings as parquet rows grouped
+into blocks of ≤block_size postings; each row carries its block's
+idf-independent BM25 weight bound ``max_w`` so queries can skip blocks
+(block-max WAND). That bound is computed in the JVM
+(index_build.bm25_weight); ``bm25_w`` is the same formula over numpy
+arrays, for driver-side checks and tests. This replaces the reference's
+outsourced index structure (Milvus IVF_FLAT nlist=128, reference:
+storage/milvus_store.py:59-85) with an explicit data layout.
 """
 
 from __future__ import annotations
 
 import numpy as np
-
-_THRESHOLDS = [1 << (7 * i) for i in range(1, 10)]
-
-
-def varint_encode(values: np.ndarray) -> bytes:
-    """LEB128 encode an array of non-negative ints (vectorized)."""
-    v = np.asarray(values, dtype=np.uint64)
-    if v.size == 0:
-        return b""
-    nb = np.ones(v.shape, dtype=np.int64)
-    for t in _THRESHOLDS:
-        nb += (v >= np.uint64(t)).astype(np.int64)
-    offsets = np.zeros(v.shape, dtype=np.int64)
-    np.cumsum(nb[:-1], out=offsets[1:])
-    out = np.zeros(int(nb.sum()), dtype=np.uint8)
-    for i in range(10):
-        mask = nb > i
-        if not mask.any():
-            break
-        pos = offsets[mask] + i
-        byte = (v[mask] >> np.uint64(7 * i)) & np.uint64(0x7F)
-        cont = (nb[mask] > i + 1).astype(np.uint8) << 7
-        out[pos] = byte.astype(np.uint8) | cont
-    return out.tobytes()
-
-
-def varint_decode(buf) -> np.ndarray:
-    """Inverse of varint_encode → uint64 array (vectorized via
-    reduceat). Accepts bytes or a uint8 ndarray (r6: the batch decode
-    kernels pass the Arrow data buffer directly, zero-copy)."""
-    arr = (np.frombuffer(buf, dtype=np.uint8)
-           if isinstance(buf, (bytes, bytearray, memoryview))
-           else np.asarray(buf, dtype=np.uint8))
-    if arr.size == 0:
-        return np.zeros(0, dtype=np.uint64)
-    ends = np.nonzero((arr & 0x80) == 0)[0]
-    starts = np.empty(ends.shape, dtype=np.int64)
-    starts[0] = 0
-    starts[1:] = ends[:-1] + 1
-    # position of each byte within its value
-    k = np.arange(arr.size, dtype=np.int64) - np.repeat(starts, ends - starts + 1)
-    contrib = (arr & 0x7F).astype(np.uint64) << (7 * k).astype(np.uint64)
-    return np.add.reduceat(contrib, starts)
-
-
-def encode_doc_ids(doc_ids: np.ndarray) -> bytes:
-    """Sorted-ascending doc_ids → delta (first kept absolute) → varint."""
-    d = np.asarray(doc_ids, dtype=np.uint64)
-    deltas = np.empty_like(d)
-    deltas[0:1] = d[0:1]
-    np.subtract(d[1:], d[:-1], out=deltas[1:])
-    return varint_encode(deltas)
-
-
-def decode_doc_ids(buf: bytes) -> np.ndarray:
-    return np.cumsum(varint_decode(buf), dtype=np.uint64)
-
-
-def encode_positions(lengths: np.ndarray, flat_positions: np.ndarray) -> bytes:
-    """Per-block positional payload: one varint stream holding the
-    per-doc position COUNTS (block-n entries) followed by the positions
-    themselves, gap-encoded within each doc (first kept absolute).
-    Vectorized: the boundary reset is one fancy-index store."""
-    ln = np.asarray(lengths, dtype=np.uint64)
-    vals = np.asarray(flat_positions, dtype=np.int64)
-    if vals.size:
-        g = np.empty_like(vals)
-        g[0] = vals[0]
-        np.subtract(vals[1:], vals[:-1], out=g[1:])
-        starts = np.zeros(len(ln), dtype=np.int64)
-        np.cumsum(ln[:-1].astype(np.int64), out=starts[1:])
-        g[starts[ln > 0]] = vals[starts[ln > 0]]  # absolute at each doc start
-    else:
-        g = vals
-    return varint_encode(np.concatenate([ln, g.astype(np.uint64)]))
-
-
-def decode_positions(buf: bytes, n_docs: int) -> tuple[np.ndarray, np.ndarray]:
-    """Inverse of encode_positions → (counts[n_docs], flat positions).
-    Per-doc prefix sums are one global cumsum minus a repeated offset —
-    no Python loop."""
-    allv = varint_decode(buf).astype(np.int64)
-    counts = allv[:n_docs]
-    gaps = allv[n_docs:]
-    if not gaps.size:
-        return counts, gaps
-    c = np.cumsum(gaps)
-    ends = np.cumsum(counts)
-    # offset to subtract for doc i = running sum just before its start
-    offs = np.zeros(n_docs, dtype=np.int64)
-    prev_end = np.r_[0, ends[:-1]]
-    offs[prev_end > 0] = c[prev_end[prev_end > 0] - 1]
-    return counts, c - np.repeat(offs, counts)
 
 
 def bm25_w(tf: np.ndarray, dl: np.ndarray, avgdl: float, k1: float, b: float) -> np.ndarray:

@@ -8,9 +8,9 @@ ingest → chunk → embed → upsert flow, reference: services/indexer.py:65-13
       → explode → groupBy(term, doc_id) count                   [shuffle 1: partial agg]
       → term/corpus stats aggs                                  [shuffle 2: tiny]
       → hot-term salting + repartition(bucket(term, salt))      [shuffle 3]
-      → sortWithinPartitions(term, salt, doc_id)                [in-partition external sort]
-      → mapInArrow block encoder (delta+varint + block max)     [Arrow, no per-row Python]
-      → parquet write, partitioned by bucket group              [checkpoint grain]
+      → sortWithinPartitions(bucket, term, salt, w DESC|doc_id) [in-partition external sort]
+      → row_number window → block_id; max(w) window → max_w     [JVM, no Python]
+      → parquet write, one row per posting, per bucket group    [checkpoint grain]
 
 Scale notes (100 TB / 10^12 docs):
 - shuffle 1 benefits from map-side partial aggregation: rows shuffled ≈
@@ -19,16 +19,18 @@ Scale notes (100 TB / 10^12 docs):
   ``salt_factor`` sub-keys keyed by hash(doc_id) so no single reducer
   owns a full stopword posting list (north_rule: explicit skew split).
   AQE skew handling remains on as the safety net.
-- the block encoder runs on *sorted* partition streams via mapInArrow,
-  so Spark's spillable external sort does the heavy lifting and Python
-  only packs bytes; a carry buffer keeps (term, salt) groups intact
-  across Arrow batch boundaries so the block layout is deterministic
-  (byte-identical on rebuild — the resume contract).
+- block assignment runs on the *sorted* partition streams: the windows
+  partition by (bucket, term, salt), which the bucket repartition
+  already satisfies, so they add no exchange, and Spark's spillable
+  external sort does the heavy lifting. Block membership is a pure
+  function of the sort order, so a rebuild writes identical rows (the
+  resume contract).
 - per-bucket-group writes + a manifest row after each group give
   partition-grain idempotent resume, the Spark equivalent of the
   reference's staged JobInfo progress (api/jobs.py:17-30,73-91).
 
-Persistent layout (layout 2 — versioned, snapshot-committed):
+Persistent layout (layout 3 — versioned, snapshot-committed; layout 2
+stored delta+varint encoded blocks and must be rebuilt):
 
     index_dir/
       CURRENT                 tiny text file: the live version number.
@@ -44,7 +46,7 @@ Persistent layout (layout 2 — versioned, snapshot-committed):
                               half-written segment is invisible.
       metrics/                per-stage telemetry (append-only).
       v{N}/
-        meta.json             {"analyzer": ..., "layout": 2} — the build
+        meta.json             {"analyzer": ..., "layout": 3} — the build
                               and the query side MUST share one analyzer
                               (reference provider-selection contract,
                               embeddings/providers.py:34-104).
@@ -57,16 +59,23 @@ Persistent layout (layout 2 — versioned, snapshot-committed):
                               max_w, n_blocks, avgdl_enc and the w_hist
                               impact ladder — the retrieval planner's
                               bounds and plan costs without scanning
-                              blocks metadata (operators/query.py).
-                              Indexes written before carry best_salt
-                              and best_block too; no reader uses them
-        postings/group=G/     compressed block rows
+                              postings (operators/query.py)
+        postings/group=G/     one row per posting: term, salt, block_id,
+                              max_w, avgdl_enc, doc_id, tf (+ positions
+                              array<int> on a positional index), sorted
+                              (term, salt, block_id, doc_id) per file, so
+                              parquet row-group statistics on term skip
+                              what a term predicate cannot match. Every
+                              row carries its block's columns (block_id,
+                              the block's max_w, avgdl_enc), so each
+                              block-level predicate of the planner
+                              selects postings row by row
         forward/seg=S/        doc_id, term, tf — the forward (pre-explode
                               tf) relation, range-clustered on doc_id.
                               Doc replacement computes its exact negative
                               term-stats deltas from the collided docs'
                               forward rows alone (parquet row-group
-                              pruning on doc_id), never by decoding the
+                              pruning on doc_id), never by scanning the
                               whole postings store — the reference's
                               keyed-upsert cost model (cost ∝ upserted
                               rows, storage/milvus_store.py:87-133)
@@ -79,29 +88,17 @@ from __future__ import annotations
 
 import os
 import time
-from collections.abc import Callable, Iterator
 
-import numpy as np
-import pandas as pd
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.window import Window
 
 from semcode_spark.config import DEFAULT, EngineConfig
 from semcode_spark.functions.analyzers import analyzer
 from semcode_spark.sources.tables import local_frame
 
-POSTINGS_SCHEMA = (
-    "term string, salt int, block_id int, n int, "
-    "doc_ids binary, tfs binary, max_w double, sum_tf long, "
-    "first_doc long, last_doc long"
-)
-# blocks also carry avgdl_enc (the corpus avgdl at encode time, added as
-# a literal column after the kernel): when later segments shift the
-# corpus avgdl upward, per-posting weights grow by at most
-# avgdl_now/avgdl_enc, so the WAND block bound stays valid as
-# max_w · max(1, avgdl_now/avgdl_enc) — see operators/segments.py.
 
-LAYOUT = 2
+LAYOUT = 3
 
 
 # ------------------------------------------------------- version pointer ----
@@ -127,7 +124,32 @@ def read_meta(vdir: str) -> dict:
     return meta or {"analyzer": "standard", "layout": LAYOUT}
 
 
+def check_layout_version(vdir: str) -> None:
+    """Reject a version directory written under another postings layout
+    before anything reads or extends it. Layout 2 stored each block's
+    doc_ids and tfs as delta+varint bytes; layout 3 stores one parquet
+    row per posting. There is no reader for the old bytes and no
+    in-place migration: such an index must be rebuilt."""
+    layout = read_meta(vdir).get("layout", LAYOUT)
+    if layout != LAYOUT:
+        raise ValueError(
+            f"{vdir} holds a layout-{layout} index (encoded posting "
+            f"blocks); this engine reads layout {LAYOUT} only (one "
+            f"parquet row per posting) — rebuild the index with "
+            f"build_index")
+
+
 # ---------------------------------------------------------------- stats ----
+
+def bm25_weight(avgdl: float, cfg: EngineConfig = DEFAULT) -> Column:
+    """BM25's per-posting weight, the idf factor aside, over the ``tf``
+    and ``doc_len`` columns: the one expression the build's block
+    bounds and every query-side score share (operators/blocks.bm25_w is
+    its numpy twin)."""
+    k1, b = cfg.bm25.k1, cfg.bm25.b
+    return (F.col("tf") * (k1 + 1.0)) / (
+        F.col("tf") + k1 * (1.0 - b + b * F.col("doc_len") / avgdl))
+
 
 def doc_stats(docs: DataFrame, id_col: str = "doc_id", text_col: str = "text",
               cfg: EngineConfig = DEFAULT) -> DataFrame:
@@ -194,352 +216,12 @@ def term_stats(tf: DataFrame, cfg: EngineConfig = DEFAULT) -> DataFrame:
     )
 
 
-# ------------------------------------------------------------- encoding ----
-
-def _encode_groups(pdf: pd.DataFrame, block_size: int) -> pd.DataFrame:
-    """Encode one or more complete (term, salt) runs (already sorted by
-    term, salt, doc_id) into block rows. Per-group numpy; the Python loop
-    is per *term*, never per posting."""
-    from semcode_spark.operators import blocks as B
-
-    out: list[tuple] = []
-    for (term, salt), g in pdf.groupby(["term", "salt"], sort=False):
-        doc_ids = g["doc_id"].to_numpy(dtype=np.int64)
-        tfs = g["tf"].to_numpy(dtype=np.int64)
-        ws = g["w"].to_numpy(dtype=np.float64)
-        for b0 in range(0, len(doc_ids), block_size):
-            sl = slice(b0, b0 + block_size)
-            ids = doc_ids[sl]
-            out.append((
-                term, int(salt), b0 // block_size, len(ids),
-                B.encode_doc_ids(ids.astype(np.uint64)),
-                B.varint_encode(tfs[sl].astype(np.uint64)),
-                float(ws[sl].max()),
-                int(tfs[sl].sum()),
-                int(ids[0]), int(ids[-1]),
-            ))
-    return pd.DataFrame(
-        out,
-        columns=["term", "salt", "block_id", "n", "doc_ids", "tfs",
-                 "max_w", "sum_tf", "first_doc", "last_doc"],
-    )
-
-
-def _make_encoder(block_size: int) -> Callable[[Iterator[pd.DataFrame]], Iterator[pd.DataFrame]]:
-    def encode_partition(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        carry: pd.DataFrame | None = None
-        for pdf in batches:
-            if carry is not None and len(carry):
-                pdf = pd.concat([carry, pdf], ignore_index=True)
-                carry = None
-            if not len(pdf):
-                continue
-            # hold back the trailing (term, salt) run — it may continue
-            # in the next Arrow batch
-            last_term = pdf["term"].iat[-1]
-            last_salt = pdf["salt"].iat[-1]
-            tail_mask = (pdf["term"] == last_term) & (pdf["salt"] == last_salt)
-            # tail is a contiguous suffix because input is sorted
-            n_tail = int(tail_mask.to_numpy()[::-1].argmin() or len(pdf))
-            carry = pdf.iloc[len(pdf) - n_tail:]
-            head = pdf.iloc[: len(pdf) - n_tail]
-            if len(head):
-                yield _encode_groups(head, block_size)
-        if carry is not None and len(carry):
-            yield _encode_groups(carry, block_size)
-
-    return encode_partition
-
-
-def _make_arrow_encoder(block_size: int, with_positions: bool = False,
-                        impact: bool = False):
-    """mapInArrow twin of _make_encoder: operates on pyarrow
-    RecordBatches directly — the term column never materializes as
-    Python/pandas string objects (that conversion is pure allocation +
-    memory-bandwidth burn at 10^8+ postings). Strings are touched once
-    per (term, salt) *group*, numerics stay numpy views end to end.
-    ``with_positions`` additionally packs each block's per-doc token
-    positions (counts + in-doc gaps, one varint stream) into a `pos`
-    binary column for index-backed phrase search.
-
-    ``impact``: the input stream is sorted (term, salt, w DESC, doc_id)
-    — block MEMBERSHIP follows impact rank, but each block's rows are
-    re-sorted ascending by doc_id before packing, so the delta+varint
-    codec, every decode path, and the block row schema are unchanged;
-    only which postings share a block differs."""
-    import pyarrow as pa
-    import pyarrow.compute as pc
-
-    from semcode_spark.operators import blocks as B
-
-    def encode_partition(batches):
-        carry: pa.Table | None = None
-
-        def encode_table(tbl: pa.Table):
-            term = tbl["term"].combine_chunks()
-            salt = tbl["salt"].to_numpy(zero_copy_only=False)
-            doc_id = tbl["doc_id"].to_numpy(zero_copy_only=False)
-            tf = tbl["tf"].to_numpy(zero_copy_only=False)
-            w = tbl["w"].to_numpy(zero_copy_only=False)
-            if with_positions:
-                pos_col = tbl["positions"].combine_chunks()
-                pos_len = pc.list_value_length(pos_col).to_numpy(
-                    zero_copy_only=False).astype(np.int64)
-                pos_flat = pos_col.flatten().to_numpy(
-                    zero_copy_only=False).astype(np.int64)
-                pos_off = np.zeros(len(pos_len) + 1, dtype=np.int64)
-                np.cumsum(pos_len, out=pos_off[1:])
-            n = len(term)
-            # group boundaries: adjacent inequality on (term, salt) —
-            # vectorized in Arrow/numpy, input is sorted
-            if n > 1:
-                neq_term = pc.invert(
-                    pc.equal(term.slice(1), term.slice(0, n - 1))
-                ).to_numpy(zero_copy_only=False)
-                neq = neq_term | (salt[1:] != salt[:-1])
-                starts = np.r_[0, np.nonzero(neq)[0] + 1]
-            else:
-                starts = np.array([0], dtype=np.int64)
-            ends = np.r_[starts[1:], n]
-            cols: dict[str, list] = {k: [] for k in (
-                "term", "salt", "block_id", "n", "doc_ids", "tfs",
-                "max_w", "sum_tf", "first_doc", "last_doc", "pos")}
-            for s, e in zip(starts.tolist(), ends.tolist()):
-                t_str = term[s].as_py()  # one Python string per group
-                t_salt = int(salt[s])
-                for b0 in range(s, e, block_size):
-                    b1 = min(b0 + block_size, e)
-                    if impact:
-                        # impact membership, doc_id order inside the
-                        # block — the codec sees ascending ids as ever
-                        order = np.argsort(doc_id[b0:b1],
-                                           kind="stable") + b0
-                        ids = doc_id[order]
-                        tfv = tf[order]
-                        wv = w[order]
-                    else:
-                        order = None
-                        ids = doc_id[b0:b1]
-                        tfv = tf[b0:b1]
-                        wv = w[b0:b1]
-                    cols["term"].append(t_str)
-                    cols["salt"].append(t_salt)
-                    cols["block_id"].append((b0 - s) // block_size)
-                    cols["n"].append(b1 - b0)
-                    cols["doc_ids"].append(B.encode_doc_ids(ids.astype(np.uint64)))
-                    cols["tfs"].append(B.varint_encode(tfv.astype(np.uint64)))
-                    cols["max_w"].append(float(wv.max()))
-                    cols["sum_tf"].append(int(tfv.sum()))
-                    cols["first_doc"].append(int(ids[0]))
-                    cols["last_doc"].append(int(ids[-1]))
-                    if with_positions:
-                        if order is None:
-                            lens = pos_len[b0:b1]
-                            flat = pos_flat[pos_off[b0]:pos_off[b1]]
-                        else:
-                            lens = pos_len[order]
-                            flat = (np.concatenate(
-                                [pos_flat[pos_off[i]:pos_off[i + 1]]
-                                 for i in order.tolist()])
-                                if int(lens.sum()) else
-                                np.empty(0, dtype=np.int64))
-                        cols["pos"].append(B.encode_positions(lens, flat))
-            out = {
-                "term": pa.array(cols["term"], pa.string()),
-                "salt": pa.array(cols["salt"], pa.int32()),
-                "block_id": pa.array(cols["block_id"], pa.int32()),
-                "n": pa.array(cols["n"], pa.int32()),
-                "doc_ids": pa.array(cols["doc_ids"], pa.binary()),
-                "tfs": pa.array(cols["tfs"], pa.binary()),
-                "max_w": pa.array(cols["max_w"], pa.float64()),
-                "sum_tf": pa.array(cols["sum_tf"], pa.int64()),
-                "first_doc": pa.array(cols["first_doc"], pa.int64()),
-                "last_doc": pa.array(cols["last_doc"], pa.int64()),
-            }
-            if with_positions:
-                out["pos"] = pa.array(cols["pos"], pa.binary())
-            return pa.RecordBatch.from_pydict(out)
-
-        for rb in batches:
-            tbl = pa.Table.from_batches([rb])
-            if carry is not None:
-                tbl = pa.concat_tables([carry, tbl]).combine_chunks()
-            if tbl.num_rows == 0:
-                carry = None
-                continue
-            # hold back the trailing (term, salt) run for the next batch
-            term = tbl["term"].combine_chunks()
-            salt = tbl["salt"].to_numpy(zero_copy_only=False)
-            n = tbl.num_rows
-            last_term = term[n - 1]
-            last_salt = salt[n - 1]
-            same_tail = pc.equal(term, last_term).to_numpy(zero_copy_only=False) & (
-                salt == last_salt
-            )
-            n_tail = int(same_tail[::-1].argmin() or n)
-            carry = tbl.slice(n - n_tail)
-            head = tbl.slice(0, n - n_tail)
-            if head.num_rows:
-                yield encode_table(head)
-        if carry is not None and carry.num_rows:
-            yield encode_table(carry)
-
-    return encode_partition
-
-
-# ------------------------------------------------------------- decoding ----
-
-def _binary_concat(col) -> tuple[np.ndarray, np.ndarray]:
-    """An Arrow binary column's values as ONE contiguous uint8 array
-    plus the per-row byte counts — zero copies of the payload (the
-    column's data buffer IS the concatenation of the per-row buffers).
-    Varints are self-delimiting, so one varint_decode over the
-    concatenated stream decodes every row's stream back to back."""
-    import pyarrow as pa
-
-    arr = col
-    if isinstance(arr, pa.ChunkedArray):
-        arr = arr.combine_chunks()
-    if isinstance(arr, pa.ChunkedArray):  # combine_chunks may stay chunked
-        arr = arr.chunk(0) if arr.num_chunks else pa.array([], type=arr.type)
-    if len(arr) == 0:
-        return np.zeros(0, dtype=np.uint8), np.zeros(0, dtype=np.int64)
-    width = np.int64 if pa.types.is_large_binary(arr.type) else np.int32
-    offs = np.frombuffer(arr.buffers()[1], dtype=width)[
-        arr.offset: arr.offset + len(arr) + 1].astype(np.int64)
-    data = np.frombuffer(arr.buffers()[2], dtype=np.uint8)[offs[0]: offs[-1]]
-    return data, np.diff(offs)
-
-
-def _block_cumsum_ids(deltas: np.ndarray, n: np.ndarray) -> np.ndarray:
-    """Concatenated per-block delta streams → absolute doc_ids: one
-    global cumsum, re-based at each block start (the first delta of a
-    block is its absolute first doc_id) — no per-block Python."""
-    c = np.cumsum(deltas, dtype=np.uint64)
-    starts = np.zeros(len(n), dtype=np.int64)
-    np.cumsum(n[:-1], out=starts[1:])
-    base = np.zeros(len(n), dtype=np.uint64)
-    base[starts > 0] = c[starts[starts > 0] - 1]
-    return (c - np.repeat(base, n)).astype(np.int64)
-
-
-def decode_postings(blocks_df: DataFrame, extra: tuple[str, ...] = ()) -> DataFrame:
-    """Block rows → flat (term, group, *extra, doc_id, tf) posting rows.
-
-    The single decode kernel shared by query scoring, segment
-    compaction, and replace-time stats deltas. r6: mapInArrow with
-    whole-BATCH vectorization — ONE varint_decode over every block's
-    concatenated byte stream (self-delimiting varints), one global
-    cumsum re-based per block for the doc_id deltas, and Arrow-native
-    ``take`` to replicate the block columns per posting. The r5 kernel
-    looped per block building object-dtype term arrays through pandas;
-    this touches no per-block Python at all (measured: the 454k-block
-    crossover flat batch 39 s → see OPTIMIZATION_r06.md). ``group``
-    rides along so tombstone filtering stays a relational anti-join
-    downstream; ``extra`` block columns ride along the same way (the
-    serving cache keeps the block-level predicate columns, read_index)."""
-    return _decode_blocks(blocks_df, ("term", "group", *extra), with_tf=True)
-
-
-def decode_doc_ids_only(blocks_df: DataFrame) -> DataFrame:
-    """Block rows → (term, group, doc_id) — the candidate-generation
-    decode: skips the tf varint stream entirely (reads/decodes only the
-    doc_ids bytes). Used by MaxScore-style retrieval where candidate
-    ids come from the essential terms' blocks and exact scores come
-    from the forward table, and by AND-prefilters. Same whole-batch
-    vectorization as decode_postings (r6)."""
-    return _decode_blocks(blocks_df, ("term", "group"), with_tf=False)
-
-
-def _decode_blocks(blocks_df: DataFrame, carry: tuple[str, ...],
-                   with_tf: bool) -> DataFrame:
-    from pyspark.sql.types import LongType, StructType
-
-    from semcode_spark.operators import blocks as B
-
-    def kernel(batches):
-        import pyarrow as pa
-        import pyarrow.compute as pc
-
-        for rb in batches:
-            if rb.num_rows == 0:
-                continue
-            tbl = pa.Table.from_batches([rb])
-            n = tbl["n"].to_numpy(zero_copy_only=False).astype(np.int64)
-            id_bytes, _ = _binary_concat(tbl["doc_ids"])
-            idx = pa.array(np.repeat(np.arange(len(n), dtype=np.int64), n))
-            cols = {c: pc.take(tbl[c], idx) for c in carry}
-            cols["doc_id"] = pa.array(
-                _block_cumsum_ids(B.varint_decode(id_bytes), n))
-            if with_tf:
-                tf_bytes, _ = _binary_concat(tbl["tfs"])
-                cols["tf"] = pa.array(B.varint_decode(tf_bytes).astype(np.int64))
-            yield from pa.table(cols).to_batches()
-
-    schema = StructType([blocks_df.schema[c] for c in carry])
-    schema = schema.add("doc_id", LongType())
-    inputs = [*carry, "n", "doc_ids"]
-    if with_tf:
-        schema = schema.add("tf", LongType())
-        inputs.append("tfs")
-    return blocks_df.select(*inputs).mapInArrow(kernel, schema=schema)
-
-
-def decode_positions_flat(blocks_df: DataFrame) -> DataFrame:
-    """Positional block rows → (term, group, doc_id, pos), one row per
-    token occurrence of the term. The phrase-search twin of
-    decode_postings. r6: mapInArrow — doc_ids decode batch-vectorized
-    (one varint_decode for the whole batch), the position stream still
-    splits per block (its counts/gaps boundary is data-dependent) but
-    term/group replication is Arrow-native ``take`` instead of
-    object-dtype numpy through pandas. ``group`` rides along for the
-    same tombstone anti-join."""
-    from semcode_spark.operators import blocks as B
-
-    def kernel(batches):
-        import pyarrow as pa
-        import pyarrow.compute as pc
-
-        for rb in batches:
-            if rb.num_rows == 0:
-                continue
-            tbl = pa.Table.from_batches([rb])
-            n = tbl["n"].to_numpy(zero_copy_only=False).astype(np.int64)
-            id_bytes, _ = _binary_concat(tbl["doc_ids"])
-            doc_id = _block_cumsum_ids(B.varint_decode(id_bytes), n)
-            starts = np.zeros(len(n), dtype=np.int64)
-            np.cumsum(n[:-1], out=starts[1:])
-            pos_col = tbl["pos"]
-            ids_out, pos_out = [], []
-            totals = np.zeros(len(n), dtype=np.int64)
-            for i in range(len(n)):
-                counts, flat = B.decode_positions(
-                    pos_col[i].as_py(), int(n[i]))
-                d = doc_id[starts[i]: starts[i] + n[i]]
-                ids_out.append(np.repeat(d, counts))
-                pos_out.append(flat)
-                totals[i] = flat.size
-            idx = pa.array(np.repeat(np.arange(len(n), dtype=np.int64), totals))
-            yield from pa.table({
-                "term": pc.take(tbl["term"], idx),
-                "group": pc.take(tbl["group"], idx),
-                "doc_id": pa.array(np.concatenate(ids_out)
-                                   if ids_out else np.zeros(0, np.int64)),
-                "pos": pa.array(np.concatenate(pos_out).astype(np.int64)
-                                if pos_out else np.zeros(0, np.int64)),
-            }).to_batches()
-
-    return blocks_df.select("term", "group", "n", "doc_ids", "pos").mapInArrow(
-        kernel, schema="term string, group int, doc_id long, pos long"
-    )
-
-
 def filter_dead_postings(flat: DataFrame, tombstones: DataFrame | None,
                          n_tombstones: int) -> DataFrame:
-    """Drop decoded postings killed by a doc replacement: a posting of
-    doc d from group g is dead iff a tombstone (d, before) with
-    g < before exists. No-op (no join in the plan) when the index has
-    no tombstones."""
+    """Drop postings killed by a doc replacement: a posting of doc d
+    from group g is dead iff a tombstone (d, before) with g < before
+    exists. No-op (no join in the plan) when the index has no
+    tombstones."""
     if not n_tombstones or tombstones is None:
         return flat
     t = tombstones.select(F.col("doc_id").alias("t_id"),
@@ -550,47 +232,54 @@ def filter_dead_postings(flat: DataFrame, tombstones: DataFrame | None,
     )
 
 
-# block columns the serving cache keeps per posting, so every
-# block-level predicate of the planner (term, max_w·corr ≥ cut,
-# block_id < depth) selects the same postings row by row
-SERVING_BLOCK_COLS = ("block_id", "max_w", "avgdl_enc")
-
-
 def is_serving(idx: dict) -> bool:
     """True for a serving handle (read_index(cache=True)): its 'postings'
-    are the cached live decoded rows, hash-partitioned by doc_id, and
-    the encoded blocks sit under '_blocks'."""
-    return "_blocks" in idx
+    are the cached live rows, with each doc's length joined on,
+    hash-partitioned by doc_id."""
+    return bool(idx.get("_serving"))
 
 
-def posting_blocks(idx: dict) -> DataFrame:
-    """The encoded block rows of an open index."""
-    return idx.get("_blocks", idx["postings"])
+def _live_postings(idx: dict, pred, cols: tuple[str, ...]) -> DataFrame:
+    """``cols`` of the live postings matching the block-level predicate
+    ``pred`` (None: all of them). A serving handle filters its cached
+    rows (tombstones already dropped); a cold handle filters the parquet
+    rows (the predicate pushes down to the scan) and drops tombstoned
+    postings with an anti-join."""
+    src = idx["postings"] if pred is None else idx["postings"].filter(pred)
+    if is_serving(idx):
+        return src.select(*cols)
+    return filter_dead_postings(src.select("group", *cols), idx.get("tombstones"),
+                                idx.get("_n_tombstones", 0)).select(*cols)
 
 
 def posting_rows(idx: dict, pred=None) -> DataFrame:
     """Live (term, group, doc_id, tf) postings of the blocks matching the
-    block-level predicate ``pred`` (None: every block) — the one decode
-    seam of the query side. A serving handle filters its cached decoded
-    rows (tombstones already applied, no Python) and also returns their
-    ``doc_len``; a cold handle decodes the matching blocks and drops
-    tombstoned postings."""
-    src = idx["postings"] if pred is None else idx["postings"].filter(pred)
-    if is_serving(idx):
-        return src.select("term", "group", "doc_id", "tf", "doc_len")
-    return filter_dead_postings(decode_postings(src), idx.get("tombstones"),
-                                idx.get("_n_tombstones", 0))
+    block-level predicate ``pred`` (None: every block) — the one read
+    seam of the query side. A serving handle also returns each row's
+    ``doc_len``. No Python worker on either handle."""
+    cols = ("term", "group", "doc_id", "tf")
+    return _live_postings(idx, pred, cols + ("doc_len",) if is_serving(idx) else cols)
 
 
 def posting_ids(idx: dict, pred=None) -> DataFrame:
     """(term, group, doc_id) of the blocks matching ``pred``: the
-    candidate-generation twin of posting_rows. On a cold handle the tf
-    stream is never decoded and tombstoned postings are kept, so callers
-    must treat the ids as a superset of the live ones."""
+    candidate-generation twin of posting_rows. On a cold handle
+    tombstoned postings are kept (no anti-join), so callers must treat
+    the ids as a superset of the live ones."""
     src = idx["postings"] if pred is None else idx["postings"].filter(pred)
-    if is_serving(idx):
-        return src.select("term", "group", "doc_id")
-    return decode_doc_ids_only(src)
+    return src.select("term", "group", "doc_id")
+
+
+def posting_positions(idx: dict, pred=None) -> DataFrame:
+    """Live (term, group, doc_id, pos) rows of a positional index, one
+    per token occurrence of the term: the blocks matching ``pred`` with
+    their ``positions`` arrays exploded (tombstoned postings dropped
+    before the explode)."""
+    if not idx.get("positions_stored"):
+        raise ValueError("index stores no positions")
+    rows = _live_postings(idx, pred, ("term", "group", "doc_id", "positions"))
+    return rows.select("term", "group", "doc_id",
+                       F.explode(F.col("positions").cast("array<bigint>")).alias("pos"))
 
 
 def write_forward(tf: DataFrame, vdir: str, seg: int) -> None:
@@ -599,8 +288,8 @@ def write_forward(tf: DataFrame, vdir: str, seg: int) -> None:
     replace-time doc_id predicate prunes at parquet file/row-group
     granularity. One extra (narrow) shuffle per segment build — the
     price of O(changed-docs) replacement instead of a full-index
-    decode. Positions (when the index stores them) ride along so
-    compaction can re-encode positional blocks without decoding."""
+    scan. Positions (when the index stores them) ride along so
+    compaction can rebuild positional postings from this table."""
     cols = ["doc_id", "term", "tf"]
     if "positions" in tf.columns:
         cols.append("positions")
@@ -613,13 +302,14 @@ def write_forward(tf: DataFrame, vdir: str, seg: int) -> None:
 def live_forward(idx: dict, with_positions: bool = False) -> DataFrame:
     """Live (doc_id, term, tf[, positions]) rows of the visible index.
 
-    Served from the stored forward table (no posting-block decode, no
-    Python) when the index has one; legacy indexes without forward/ fall
-    back to decoding the postings store. Tombstone semantics match the
-    postings rule: a forward row of doc d from segment s is dead iff a
-    tombstone (d, before) with s < before exists. ``with_positions``
-    keeps the positions column (compaction of positional indexes);
-    default drops it so replace-delta scans never read those bytes.
+    Served from the stored forward table when the index has one;
+    indexes without forward/ read the same relation off the postings
+    rows (one row per (term, doc), positions included). Tombstone
+    semantics match the postings rule: a forward row of doc d from
+    segment s is dead iff a tombstone (d, before) with s < before
+    exists. ``with_positions`` keeps the positions column (compaction
+    of positional indexes); default drops it so replace-delta scans
+    never read those bytes.
 
     A serving handle answers from its cache instead: the live posting
     rows are the live forward rows, so it returns them as (doc_id,
@@ -627,30 +317,15 @@ def live_forward(idx: dict, with_positions: bool = False) -> DataFrame:
     read and no tombstone join."""
     if is_serving(idx) and not with_positions:
         return idx["postings"].select("doc_id", "term", "tf", "doc_len")
-    cols = ["doc_id", "term", "tf"]
+    cols = ("doc_id", "term", "tf")
     fwd = idx.get("forward")
     if with_positions:
-        if fwd is not None and "positions" not in fwd.columns:
+        if not idx.get("positions_stored") or (
+                fwd is not None and "positions" not in fwd.columns):
             raise ValueError("index stores no positions")
-        cols.append("positions")
+        cols += ("positions",)
     if fwd is None:
-        if with_positions:
-            # store_forward=False positional index: rebuild the forward
-            # relation from the positional postings decode (tf = the
-            # per-(term, doc) position count, positions re-collected in
-            # order) — slower than a forward scan, still index-only
-            if not idx.get("positions_stored"):
-                raise ValueError("index stores no positions")
-            rows = filter_dead_postings(
-                decode_positions_flat(posting_blocks(idx)),
-                idx.get("tombstones"), idx.get("_n_tombstones", 0))
-            return rows.groupBy("doc_id", "term").agg(
-                # dtypes mirror term_doc_tf (tf long, positions
-                # array<int>) so downstream re-encode sees one schema
-                F.count(F.lit(1)).alias("tf"),
-                F.sort_array(F.collect_list(F.col("pos").cast("int")))
-                .alias("positions"))
-        return posting_rows(idx).select("doc_id", "term", "tf")
+        return _live_postings(idx, None, cols)
     t = idx.get("tombstones")
     if idx.get("_n_tombstones", 0) and t is not None:
         tt = t.select(F.col("doc_id").alias("t_id"),
@@ -673,7 +348,7 @@ def hot_terms(tstats: DataFrame, n_docs: int, cfg: EngineConfig = DEFAULT) -> li
     ]
 
 
-def encoded_postings(
+def block_postings(
     tf: DataFrame,
     avgdl: float,
     hot: list[str],
@@ -683,39 +358,47 @@ def encoded_postings(
     term_buckets: int | None = None,
     impact: bool | None = None,
 ) -> DataFrame:
-    """tf (term, doc_id, doc_len, tf[, positions]) → block-compressed
-    postings (+ a `pos` varint column when the index stores positions).
-    ``impact=None`` follows cfg.index.impact_ordered: block membership
-    by descending weight (impact-ordered layout; see IndexConfig), at
-    the cost of one extra sort key in the same in-partition sort.
+    """tf (term, doc_id, doc_len, tf[, positions]) → the postings rows
+    of the persisted layout (term, salt, block_id, max_w, avgdl_enc,
+    doc_id, tf[, positions]), each carrying its block's id and max_w.
+    avgdl_enc is the corpus avgdl the weights were computed with: when
+    later segments shift the corpus avgdl upward, per-posting weights
+    grow by at most avgdl_now/avgdl_enc, so the WAND block bound stays
+    valid as max_w · max(1, avgdl_now/avgdl_enc) — see
+    operators/segments.py.
+
+    A (term, salt) run is cut into blocks of ``block_size`` postings in
+    its sort order: doc_id, or with ``impact`` (None follows
+    cfg.index.impact_ordered) descending weight then doc_id, so block 0
+    holds the run's top-weighted postings. block_id comes from a
+    row_number window, the block's max_w from a max window over the
+    block; both windows partition by (bucket, term, salt), which the
+    bucket repartition already satisfies, so they add no exchange. The
+    output is sorted (term, salt, block_id, doc_id) within each bucket.
 
     The single wide shuffle of the build: repartition by
     hash(term, salt) % term_buckets with hot-term salting.
 
     ``bucket_filter=(groups, g)`` restricts the output to buckets with
     pmod(bucket, groups) == g — applied BEFORE the repartition, so a
-    grouped (checkpointed) build shuffles/sorts/encodes each posting
-    exactly once across all group jobs instead of re-encoding the whole
-    relation per group and discarding (groups-1)/groups of it.
+    grouped (checkpointed) build shuffles and sorts each posting exactly
+    once across all group jobs instead of processing the whole relation
+    per group and discarding (groups-1)/groups of it.
 
     ``term_buckets`` overrides the config fan-out — bucket ids are
     group-local (queries never assume a global bucket count), so a
     small incremental segment can use a small fan-out instead of
     cfg-many near-empty shuffle partitions.
     """
-    k1, b = cfg.bm25.k1, cfg.bm25.b
     sf = cfg.index.salt_factor
     n_buckets = term_buckets if term_buckets is not None else cfg.index.term_buckets
-    w = (F.col("tf") * (k1 + 1.0)) / (
-        F.col("tf") + k1 * (1.0 - b + b * F.col("doc_len") / avgdl)
-    )
     salted = tf.withColumn(
         "salt",
         F.when(
             F.col("term").isin(hot) if hot else F.lit(False),
             F.pmod(F.xxhash64("doc_id"), F.lit(sf)).cast("int"),
         ).otherwise(F.lit(0)),
-    ).withColumn("w", w.cast("double"))
+    ).withColumn("w", bm25_weight(avgdl, cfg).cast("double"))
     bucketed = salted.withColumn(
         "bucket", F.pmod(F.xxhash64("term", "salt"), F.lit(n_buckets)).cast("int")
     )
@@ -725,66 +408,58 @@ def encoded_postings(
             F.pmod(F.col("bucket"), F.lit(n_groups)) == g)
     if impact is None:
         impact = cfg.index.impact_ordered
-    sort_keys = (["term", "salt", F.col("w").desc(), "doc_id"] if impact
-                 else ["term", "salt", "doc_id"])
-    sorted_parts = bucketed.repartition(n_buckets, "bucket").sortWithinPartitions(
-        *sort_keys
+    run = ("bucket", "term", "salt")
+    order = (F.col("w").desc(), "doc_id") if impact else ("doc_id",)
+    rank = F.row_number().over(Window.partitionBy(*run).orderBy(*order))
+    blocked = (
+        bucketed.repartition(n_buckets, "bucket")
+        .sortWithinPartitions(*run, *order)
+        .withColumn("block_id", F.floor((rank - 1) / cfg.index.block_size).cast("int"))
+        .sortWithinPartitions(*run, "block_id", "doc_id")
     )
-    enc_cols = ["term", "salt", "doc_id", "tf", "w"]
-    schema = POSTINGS_SCHEMA
-    if with_positions:
-        enc_cols.append("positions")
-        schema += ", pos binary"
-    enc = sorted_parts.select(*enc_cols).mapInArrow(
-        _make_arrow_encoder(cfg.index.block_size, with_positions, impact),
-        schema=schema
-    )
-    # re-attach bucket for partition pruning at query time; stamp the
-    # avgdl the weights were computed with (segment-merge bound support)
-    return enc.withColumn(
-        "bucket", F.pmod(F.xxhash64("term", "salt"), F.lit(n_buckets)).cast("int")
-    ).withColumn("avgdl_enc", F.lit(float(avgdl)))
+    max_w = F.max("w").over(Window.partitionBy(*run, "block_id"))
+    return blocked.select(
+        "term", "salt", "block_id", max_w.alias("max_w"),
+        F.lit(float(avgdl)).alias("avgdl_enc"), "doc_id", "tf",
+        *(["positions"] if with_positions else []))
 
 
 def write_term_bounds(spark: SparkSession, vdir: str, group: int) -> int:
-    """Derive per-term block-max metadata for one written postings group
-    (blocks metadata only — never decodes posting bytes; cost scales
-    with #blocks in the group). The retrieval planner reads this tiny
-    table instead of scanning blocks (operators/query.py). Rows are
-    written term-sorted: sorted term runs compress better (the parquet
-    dictionary and run-length encodings). Returns the group's
-    block-row count from the same cached pass — the parquet is read
-    once, never re-scanned for the count.
+    """Derive per-term block-max metadata for one written postings group.
+    The retrieval planner reads this tiny table instead of scanning
+    postings (operators/query.py). Counts are of BLOCKS, not rows: the
+    group's rows first collapse to one row per (term, salt, block_id) —
+    a map-side partial aggregate, since each file is sorted that way —
+    and only block rows are shuffled. Rows are written term-sorted:
+    sorted term runs compress better (the parquet dictionary and
+    run-length encodings). Returns the group's block count from the
+    same cached pass — the parquet is read once, never re-scanned for
+    the count.
 
     ``w_hist`` (r5): per term, the block max_w values at power-of-two
     ranks of the descending-max_w block order — the impact-prefix
     ladder impact retrieval plans against (decode the top r blocks ⇒
     every undecoded block has max_w < w_hist[r]). ~log2(n_blocks)
-    entries per term, so the term dictionary stays driver-collectable;
-    one extra window shuffle over block METADATA rows (never bytes).
+    entries per term, so the term dictionary stays driver-collectable.
+    The ladder's window and the per-term aggregate share one exchange.
     (A denser ladder — pow2 plus 1.5× midpoints — was measured on the
     45k-block crossover corpus: decode fraction 0.591 vs 0.586, i.e.
     no benefit; the fraction is bound by the plan's θ constraint, not
     ladder granularity, so the smaller metadata wins.)"""
-    from pyspark.sql.window import Window as _W
-
-    blocks = spark.read.parquet(os.path.join(vdir, "postings", f"group={group}"))
-    win = _W.partitionBy("term").orderBy(
-        F.col("max_w").desc(), "salt", "block_id")
-    hist = (
-        blocks.select("term", "salt", "block_id", "max_w")
-        .withColumn("r", F.row_number().over(win))
-        .filter(F.col("r").bitwiseAND(F.col("r") - 1) == 0)  # r = 2^j
-        .groupBy("term")
-        .agg(F.sort_array(F.collect_list(F.struct(
-            F.col("r").alias("rank"), F.col("max_w").alias("w")
-        ))).alias("w_hist"))
-    )
-    tb = blocks.groupBy("term").agg(
+    rows = spark.read.parquet(os.path.join(vdir, "postings", f"group={group}"))
+    blocks = rows.groupBy("term", "salt", "block_id").agg(
+        F.max("max_w").alias("max_w"), F.max("avgdl_enc").alias("avgdl_enc"))
+    r = F.row_number().over(Window.partitionBy("term").orderBy(
+        F.col("max_w").desc(), "salt", "block_id"))
+    tb = blocks.withColumn("r", r).groupBy("term").agg(
         F.max("max_w").alias("max_w"),
         F.count(F.lit(1)).alias("n_blocks"),
         F.max("avgdl_enc").alias("avgdl_enc"),
-    ).join(hist, "term", "left").persist()
+        F.sort_array(F.collect_list(F.when(  # r = 2^j
+            F.col("r").bitwiseAND(F.col("r") - 1) == 0,
+            F.struct(F.col("r").alias("rank"), F.col("max_w").alias("w")))))
+        .alias("w_hist"),
+    ).persist()
     try:
         tb.sortWithinPartitions("term").write.mode("overwrite").parquet(
             os.path.join(vdir, "term_bounds", f"group={group}"))
@@ -806,7 +481,9 @@ def build_index(
     text_col: str = "text",
     count_rows: bool = True,
 ) -> dict:
-    """Build (or resume) the full index under out_dir (layout 2 above).
+    """Build (or resume) the full index under out_dir (layout 3 above).
+    A full rebuild (resume=False) is also how a layout-2 index moves to
+    layout 3: it lands in a fresh version directory.
 
     ``groups`` is the checkpoint grain: each group is one idempotent
     Spark job + one manifest append; a rerun with resume=True skips
@@ -862,8 +539,11 @@ def _build_index_locked(
         rebuild_commit = True
     vdir = version_dir(out_dir, version)
     existing_meta = _tio.read_meta(vdir)
+    if resume:
+        check_layout_version(vdir)  # resumed groups must share the layout
     if existing_meta and (
-        existing_meta.get("analyzer", "standard") != cfg.index.analyzer
+        existing_meta.get("layout", LAYOUT) != LAYOUT
+        or existing_meta.get("analyzer", "standard") != cfg.index.analyzer
         or existing_meta.get("positions", False) != cfg.index.store_positions
         or existing_meta.get("forward", True) != cfg.index.store_forward
         or existing_meta.get("impact", False) != cfg.index.impact_ordered
@@ -950,16 +630,17 @@ def _build_index_locked(
                 continue
             t0 = time.time()
             # the bucket restriction is applied BEFORE the shuffle
-            # (encoded_postings), so each posting is shuffled/sorted/
-            # encoded once across the whole grouped build
-            part = encoded_postings(
+            # (block_postings), so each posting is shuffled and sorted
+            # once across the whole grouped build
+            part = block_postings(
                 tf, float(avgdl), hot, cfg,
                 with_positions=cfg.index.store_positions,
                 bucket_filter=(groups, g) if groups > 1 else None)
             part.write.mode("overwrite").parquet(
                 os.path.join(vdir, "postings", f"group={g}"))
             # bounds derivation runs before the manifest row and yields
-            # the block-row count for free (count_rows kept for API compat)
+            # the group's block count for free (count_rows kept for API
+            # compat)
             rows = write_term_bounds(spark, vdir, g)
             _manifest_append(spark, man_dir, "postings", g, "completed",
                              rows, time.time() - t0, version)
@@ -1088,7 +769,8 @@ def _verify_done(vdir: str, done: set[str]) -> set[str]:
 
 
 def check_layout(spark: SparkSession, index_dir: str) -> None:
-    """Reject pre-layout-2 index directories BEFORE any mutation.
+    """Reject pre-layout-2 (unversioned) index directories BEFORE any
+    mutation; versioned ones of another layout are check_layout_version's.
 
     A legacy dir (data but no CURRENT pointer, or a manifest without the
     'version' column) must not be half-converted: committing CURRENT=0
@@ -1110,7 +792,7 @@ def check_layout(spark: SparkSession, index_dir: str) -> None:
             man_cols = None
     if legacy_data or (man_cols is not None and "version" not in man_cols):
         raise ValueError(
-            f"{index_dir} holds a pre-versioned (layout < {LAYOUT}) index "
+            f"{index_dir} holds a pre-versioned (layout < 2) index "
             f"(data dirs {legacy_data or ['manifest']} with no CURRENT "
             f"pointer{' / no version column' if man_cols is not None and 'version' not in man_cols else ''}) "
             f"— no in-place migration path; rebuild the index")
@@ -1127,17 +809,20 @@ def _manifest_rows(spark: SparkSession, man_dir: str, version: int) -> list:
     collect runs inside the retry (a lazy handle could still fail at
     collect time); a retry re-lists and sees the consolidated file.
     Duplicated rows during the window are harmless — every consumer
-    reduces via set/max semantics. Only a still-failing read of an
-    existing non-empty directory escalates."""
+    reduces via set/max semantics. [] only when the read reports the
+    manifest path itself missing; any other failure is retried, then
+    raised."""
     import time as _t
+
+    from pyspark.errors import AnalysisException
 
     for attempt in range(3):
         try:
             return _read_manifest(spark, man_dir, version)
-        except Exception:
-            if not os.path.isdir(man_dir) or not any(
-                    not f.startswith((".", "_")) for f in os.listdir(man_dir)):
-                return []  # genuinely absent/empty
+        except Exception as e:
+            # the path itself is absent — not a file vanishing mid-scan
+            if isinstance(e, AnalysisException) and e.getCondition() == "PATH_NOT_FOUND":
+                return []
             if attempt == 2:
                 raise
             _t.sleep(0.1 * (attempt + 1))
@@ -1149,10 +834,12 @@ def _read_manifest(spark: SparkSession, man_dir: str, version: int) -> list:
     read it DRIVER-SIDE with pyarrow (the Iceberg manifest pattern)
     instead of paying a Spark job per index open (a cold index query
     was burning one of its ~3 driver jobs here). pyarrow's dataset
-    reader skips `_`/`.` files like Spark's committer artifacts; any
-    failure (e.g. a remote filesystem pyarrow can't reach) falls back
-    to the Spark read, preserving cluster behavior. Consumers access
-    rows by key only, so plain dicts substitute for Rows."""
+    reader skips `_`/`.` files like Spark's committer artifacts. Any
+    pyarrow failure — a missing directory, or a remote filesystem
+    (s3://, hdfs://) pyarrow cannot reach — falls back to the Spark
+    read, which reaches whatever Spark's Hadoop filesystems do. An
+    empty local directory reads as no rows. Consumers access rows by
+    key only, so plain dicts substitute for Rows."""
     try:
         import pyarrow.parquet as _pq
 
@@ -1161,8 +848,6 @@ def _read_manifest(spark: SparkSession, man_dir: str, version: int) -> list:
                 if r.get("status") == "completed"
                 and r.get("version") == version]
     except Exception:
-        if not os.path.isdir(man_dir):
-            raise
         return spark.read.parquet(man_dir).filter(
             (F.col("status") == "completed")
             & (F.col("version") == version)).collect()
@@ -1300,28 +985,28 @@ def read_index(spark: SparkSession, out_dir: str, cache: bool = False,
     replacement, so they aggregate on read: df/cf sum per term; corpus
     stats merge weighted by n_docs — both cancel deltas exactly. Docs
     rows killed by a tombstone (seg < before_group) are filtered here;
-    postings-level tombstone filtering happens in the decode path
-    (operators/query.py) because it needs the block's group.
+    postings-level tombstone filtering happens in the read seam
+    (posting_rows) because it needs the posting's group. An index of
+    another layout raises ValueError (check_layout_version).
 
     cache=True is serving mode (the analog of the reference's long-lived
     service process with Milvus's collection loaded to memory,
     storage/milvus_store.py:83-85): docs/term_stats/term_bounds are
-    persisted and materialized, and the posting blocks are decoded ONCE,
-    here: 'postings' then holds the live decoded rows (term, group,
-    block_id, max_w, avgdl_enc, doc_id, tf, doc_len) — tombstoned
-    postings dropped, each doc's length joined on — hash-partitioned by
-    doc_id into the session's shuffle partitions. Warm queries filter
-    cached rows with the same block-level predicates, run no Python
-    worker (posting_rows), and aggregate per doc with no exchange. The
-    encoded blocks stay reachable as '_blocks' (posting_blocks), cached
-    only for positional indexes, whose phrase decode needs their `pos`
-    stream. Release the cache with unpersist() on docs, term_stats,
-    term_bounds and postings (and '_blocks' on a positional index). On
-    a cluster this is executor block-manager memory."""
+    persisted and materialized, and so are the live postings rows:
+    'postings' then holds (term, group, salt, block_id, max_w,
+    avgdl_enc, doc_id, tf, doc_len[, positions]) — tombstoned postings
+    dropped, each doc's length joined on — hash-partitioned by doc_id
+    into the session's shuffle partitions. The open is one JVM pass
+    (scan, anti-join, join, exchange); warm queries filter the cached
+    rows with the same block-level predicates, run no Python worker
+    (posting_rows), and aggregate per doc with no exchange. Release the
+    cache with unpersist() on docs, term_stats, term_bounds and
+    postings. On a cluster this is executor block-manager memory."""
     version = read_current_version(out_dir)
     if version is None:
         raise FileNotFoundError(f"no CURRENT pointer under {out_dir}")
     vdir = version_dir(out_dir, version)
+    check_layout_version(vdir)
     segs, groups = _visible(spark, out_dir, version)
     seg_list, group_list = sorted(segs), sorted(groups)
 
@@ -1382,11 +1067,10 @@ def read_index(spark: SparkSession, out_dir: str, cache: bool = False,
         "_version": version,
     }
     if cache:
-        blocks = idx["_blocks"] = idx["postings"]
-        if idx["positions_stored"]:  # filled by the decode below
-            blocks.persist()
-        live = filter_dead_postings(
-            decode_postings(blocks, SERVING_BLOCK_COLS), tombstones, n_tomb)
+        idx["_serving"] = True
+        keep = ["term", "group", "salt", "block_id", "max_w", "avgdl_enc",
+                "doc_id", "tf"] + (["positions"] if idx["positions_stored"] else [])
+        live = filter_dead_postings(idx["postings"].select(*keep), tombstones, n_tomb)
         n_parts = int(spark.conf.get("spark.sql.shuffle.partitions"))
         idx["postings"] = live.join(idx["docs"], "doc_id").repartition(
             n_parts, "doc_id")

@@ -13,7 +13,7 @@ Two paths, both DataFrame-planned:
    persisted block index, all three thin entry points over ONE planner
    (``_retrieve``) with two plans:
 
-   - flat: decode every block of the query terms and score it;
+   - flat: read every posting of the query terms and score it;
    - impact: bound the decode. A θ bootstrap scores the docs of each
      term's top impact blocks, ``_impact_plan`` picks per term how much
      of its impact-ordered block prefix to decode so that no doc outside
@@ -41,7 +41,7 @@ from __future__ import annotations
 
 import json
 import math
-from typing import NamedTuple
+from typing import Literal, NamedTuple
 
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -49,14 +49,18 @@ from pyspark.sql.window import Window
 
 from semcode_spark.config import DEFAULT, EngineConfig
 from semcode_spark.functions.analyzers import analyze_query, analyzer
-from semcode_spark.operators.index_build import (  # noqa: F401 (decode_postings re-exported)
-    decode_positions_flat, decode_postings, filter_dead_postings,
-    is_serving, live_forward, posting_blocks, posting_ids, posting_rows,
+from semcode_spark.operators.index_build import (
+    bm25_weight, is_serving, live_forward, posting_ids, posting_positions,
+    posting_rows,
 )
 from semcode_spark.sources.tables import local_frame
 
 TOPK_SCHEMA = "doc_id long, score double"
 BATCH_SCHEMA = "query_id long, rank int, doc_id long, score double"
+
+# The plan choice of the retrieval planner: False (flat), "impact", or
+# "auto" (flat or impact by the candidate block count, _resolve_plan).
+Plan = Literal[False, "auto", "impact"]
 
 
 def idf_col(df_col, n_docs: float):
@@ -66,14 +70,6 @@ def idf_col(df_col, n_docs: float):
 
 def idf_py(df: float, n_docs: float) -> float:
     return math.log((n_docs - df + 0.5) / (df + 0.5) + 1.0)
-
-
-def _bm25_w(avgdl: float, cfg: EngineConfig):
-    """BM25's per-posting weight (the idf factor aside) over the
-    ``tf`` and ``doc_len`` columns."""
-    k1, b = cfg.bm25.k1, cfg.bm25.b
-    return (F.col("tf") * (k1 + 1.0)) / (
-        F.col("tf") + k1 * (1.0 - b + b * F.col("doc_len") / avgdl))
 
 
 # Plan inputs built on the driver (query terms, idfs, cuts, query ids)
@@ -139,7 +135,7 @@ def _resolve_k(k: int | None, cfg: EngineConfig) -> int:
     return k
 
 
-def _check_prune(prune) -> None:
+def _check_prune(prune: Plan) -> None:
     """The plan choices: False (flat), "impact" and "auto" (flat or
     impact by the candidate block count)."""
     if not (prune is False or prune in ("auto", "impact")):
@@ -369,19 +365,23 @@ def wand_topk(
     query: str,
     k: int | None = None,
     cfg: EngineConfig = DEFAULT,
-    prune: bool | str = "auto",
+    prune: Plan = "auto",
+    stats: dict | None = None,
 ) -> DataFrame:
     """Top-k (doc_id, score) over the persisted block index.
 
-    ``prune`` picks the plan: False decodes every block of the query
-    terms (flat), "impact" bounds the decode (see wand_topk_impact),
+    ``prune`` picks the plan: False reads every posting of the query
+    terms (flat), "impact" bounds the read (see wand_topk_impact),
     "auto" takes impact past ``cfg.bm25.impact_auto_min_blocks``
     candidate blocks on an impact-ordered index with a forward table,
     flat below. Both plans are lossless: rank-identical to bm25_topk
     (tests/test_wand.py, incl. the θ-tie adversarial corpus and
-    doc-replacement tombstones)."""
+    doc-replacement tombstones). Pass a ``stats`` dict to receive the
+    plan that ran under ``stats["plan"]`` ("flat" or "impact"), plus
+    the impact plan's diagnostics (wand_topk_impact)."""
     _check_prune(prune)
-    return _retrieve(spark, index, [(0, query, k)], cfg, prune, batch=False)
+    return _retrieve(spark, index, [(0, query, k)], cfg, prune, batch=False,
+                     stats=stats)
 
 
 def wand_topk_impact(
@@ -409,10 +409,12 @@ def wand_topk_impact(
     pruning is possible (θ unreachable or the plan degenerates), the
     right choice at small scale.
 
-    ``stats``: pass a dict to receive the decode-volume diagnostics
-    (blocks_candidate, blocks_decoded, skipped/cut/full terms, theta_eff,
-    cand_join); with ``stats["exact"]`` set, blocks_decoded is a real
-    count of the planned blocks instead of the histogram estimate.
+    ``stats``: pass a dict to receive the plan (``"plan"``) and the
+    decode-volume diagnostics (blocks_candidate, blocks_decoded,
+    skipped/cut/full terms, theta_eff, cand_join); with
+    ``stats["exact"]`` set, blocks_decoded is a real count of the
+    distinct (term, group, salt, block_id) blocks the plan reads
+    instead of the histogram estimate.
     ``blocks_decoded`` is the PLAN's decode requirement; when the
     candidate join is skipped (``cand_join`` False) the forward scan
     serves instead, so read the pair together."""
@@ -497,7 +499,7 @@ def bm25_topk_conj(
     cfg: EngineConfig = DEFAULT,
 ) -> DataFrame:
     """Conjunctive (every-term-required) BM25 top-k from the block
-    index — the classic AND/"must" query mode. One decode pass over the
+    index — the classic AND/"must" query mode. One read pass over the
     query terms' blocks; the all-terms requirement is a count-distinct
     HAVING inside the same scoring aggregate, so conjunctive ranking
     costs exactly one extra agg column over disjunctive scoring."""
@@ -511,7 +513,7 @@ def bm25_topk_conj(
     return (
         _with_doc_len(index, postings.withColumn("idf", _lit_map(idfs)[F.col("term")]))
         .groupBy("doc_id")
-        .agg(F.sum(F.col("idf") * _bm25_w(avgdl, cfg)).alias("score"),
+        .agg(F.sum(F.col("idf") * bm25_weight(avgdl, cfg)).alias("score"),
              F.count_distinct(F.col("term")).alias("_nt"))
         .filter(F.col("_nt") == len(terms))
         .orderBy(F.round("score", cfg.bm25.rank_decimals).desc(),
@@ -533,8 +535,8 @@ def _rare_term_candidates(
 
     Shrinks the slot-alignment (and, in phrase_topk, the scoring)
     shuffles to docs containing the rarest term. Candidates come from a
-    doc_ids-only decode of that ONE term's blocks — a strict subset of
-    the positional decode's blocks, never a second full pass over all
+    doc_ids-only read of that ONE term's rows — a strict subset of
+    the positional read's rows, never a second full pass over all
     of them (r3 decoded every phrase term's blocks twice here). Slot
     alignment itself enforces containment of the remaining terms, so a
     superset candidate set is correct — which also means the candidate
@@ -562,7 +564,7 @@ def _rare_term_candidates(
     if dfr[rare] >= n_docs_idx / 2:
         return None, False
     cand = posting_ids(index, F.col("term") == rare).select("doc_id").distinct()
-    # the candidate decode skips tombstone filtering (a superset is
+    # the candidate read skips tombstone filtering (a superset is
     # correct — see above), so the broadcast bound must be the RAW id
     # count: live df (net of replace deltas) plus every tombstone, the
     # exact worst case after heavy replacement (r4 ADVICE #2)
@@ -584,8 +586,8 @@ def phrase_match(
     L distinct slots. The per-slot offset is a literal map lookup
     (term → slot array; duplicate words in the phrase get multiple
     slots), so the plan is: prune postings to the phrase's terms
-    (partition/predicate pushdown on the blocks scan) → positional
-    decode of just those blocks → one hash aggregate. Cost scales with
+    (partition/predicate pushdown on the postings scan) → positional
+    explode of just those rows → one hash aggregate. Cost scales with
     the phrase terms' postings, not the corpus.
 
     Requires an index built with store_positions=True (meta-gated);
@@ -593,7 +595,7 @@ def phrase_match(
     would hide a 100×-scale regression.
 
     Multi-term phrases first compute the AND candidate set (docs
-    containing every phrase term) from the cheaper doc_ids-only decode
+    containing every phrase term) from the cheaper doc_ids-only read
     and hash-filter the positional rows against it before the
     slot-alignment aggregate — for a phrase with one selective term the
     aggregate shrinks from Σ cf(term) token rows to the candidate docs'
@@ -612,10 +614,7 @@ def phrase_match(
     slots: dict[str, list[int]] = {}
     for i, t in enumerate(terms):
         slots.setdefault(t, []).append(i)
-    blocks = posting_blocks(index).filter(_terms_in(uniq))
-    rows = filter_dead_postings(
-        decode_positions_flat(blocks), index.get("tombstones"),
-        index.get("_n_tombstones", 0))
+    rows = posting_positions(index, _terms_in(uniq))
     cand, bc = _rare_term_candidates(spark, index, uniq, cfg)
     if cand is not None:
         rows = rows.join(F.broadcast(cand) if bc else cand, "doc_id")
@@ -638,9 +637,9 @@ def phrase_topk(
 ) -> DataFrame:
     """BM25-ranked exact-phrase search: top-k docs CONTAINING the phrase
     scored by BM25 over the phrase's terms — the classic quoted-query
-    surface, entirely index-only with ONE positional decode: tf is the
+    surface, entirely index-only with ONE positional read: tf is the
     per-(term, doc) position count, so containment (slot alignment) and
-    scoring both derive from the same decoded rows (persisted for the
+    scoring both derive from the same exploded rows (persisted for the
     duration of the query, released before returning). Rank order is
     the engine-wide (round(score, d) desc, doc_id asc) total order."""
     k = _resolve_k(k, cfg)
@@ -657,10 +656,7 @@ def phrase_topk(
     if not idfs:  # no phrase term exists in the vocabulary: no hits
         return local_frame(spark, [], TOPK_SCHEMA)
 
-    blocks = posting_blocks(index).filter(_terms_in(terms))
-    rows = filter_dead_postings(
-        decode_positions_flat(blocks), index.get("tombstones"),
-        index.get("_n_tombstones", 0))
+    rows = posting_positions(index, _terms_in(terms))
     # same rarest-term AND-prefilter as phrase_match (r4): docs lacking
     # the rarest term can neither contain the phrase nor reach the
     # left_semi against hits, so pre-joining bounds BOTH the
@@ -688,7 +684,7 @@ def phrase_topk(
             tf_rel.withColumn("idf", _lit_map(idfs)[F.col("term")])
             .join(index["docs"], "doc_id")
             .groupBy("doc_id").agg(
-                F.sum(F.col("idf") * _bm25_w(avgdl, cfg)).alias("score"))
+                F.sum(F.col("idf") * bm25_weight(avgdl, cfg)).alias("score"))
         )
         out = (
             scored.join(hits, "doc_id", "left_semi")
@@ -715,14 +711,14 @@ def phrase_topk_batch(
     item 5: the single-phrase path pays the ~0.5 s Spark job floor per
     phrase; a 24-phrase workload deserves one job, not 24).
 
-    Plan: ONE positional decode over the union of every phrase's terms
+    Plan: ONE positional read over the union of every phrase's terms
     (tombstone-filtered) → per-occurrence rows join the tiny broadcast
     (query_id, term, slot) relation → slot alignment per (query, doc,
-    base) establishes containment → tf from the same decoded rows +
+    base) establishes containment → tf from the same exploded rows +
     literal idf map scores each (query, doc) over the query's terms →
     left-semi against that query's hits → per-query window top-k with
     per-query k. Like the single-phrase path, containment and scoring
-    both come from the single decode pass; cost scales with the union
+    both come from the single read pass; cost scales with the union
     of the phrases' postings, never the corpus or the phrase count.
 
     Per-phrase results are identical to phrase_topk (tests/test_phrase).
@@ -757,10 +753,7 @@ def phrase_topk_batch(
     if not idfs:  # no phrase term exists in the vocabulary: no hits
         return local_frame(spark, [], BATCH_SCHEMA)
 
-    blocks = posting_blocks(index).filter(_terms_in(terms))
-    rows = filter_dead_postings(
-        decode_positions_flat(blocks), index.get("tombstones"),
-        index.get("_n_tombstones", 0)).persist()
+    rows = posting_positions(index, _terms_in(terms)).persist()
     try:
         # containment: every slot of the phrase collects at one base
         aligned = rows.join(F.broadcast(slots_df), "term")
@@ -773,7 +766,7 @@ def phrase_topk_batch(
             .select("query_id", "doc_id").distinct()
         )
         # scoring: tf = per-(term, doc) occurrence count from the SAME
-        # decoded rows; per-query sum over that query's distinct terms
+        # exploded rows; per-query sum over that query's distinct terms
         tf_rel = rows.groupBy("term", "doc_id").agg(
             F.count(F.lit(1)).alias("tf"))
         qterms = slots_df.select("query_id", "term").distinct()
@@ -782,7 +775,7 @@ def phrase_topk_batch(
             .withColumn("idf", _lit_map(idfs)[F.col("term")])
             .join(index["docs"], "doc_id")
             .groupBy("query_id", "doc_id")
-            .agg(F.sum(F.col("idf") * _bm25_w(avgdl, cfg)).alias("score"))
+            .agg(F.sum(F.col("idf") * bm25_weight(avgdl, cfg)).alias("score"))
         )
         win = Window.partitionBy("query_id").orderBy(
             F.round("score", cfg.bm25.rank_decimals).desc(),
@@ -824,7 +817,7 @@ def highlight_topk(
     sliced relationally from the docs table (only the k hit docs are
     tokenized — the doc_id predicate prunes the corpus scan).
 
-    Plan: k-row top-k (flat WAND) → positional decode of the query
+    Plan: k-row top-k (flat WAND) → positional rows of the query
     terms' blocks filtered to the k ids (literal isin) → min(pos) per
     doc → join the k docs' token arrays → slice. Cost ∝ query terms'
     positions + k docs, independent of corpus size."""
@@ -845,11 +838,8 @@ def highlight_topk(
         return local_frame(spark, [], out_schema)
     ids = [r["doc_id"] for r in top]
     scores = local_frame(spark, top, TOPK_SCHEMA)
-    blocks = posting_blocks(index).filter(_terms_in(terms))
     first = (
-        filter_dead_postings(
-            decode_positions_flat(blocks), index.get("tombstones"),
-            index.get("_n_tombstones", 0))
+        posting_positions(index, _terms_in(terms))
         .filter(F.col("doc_id").isin(ids))
         .groupBy("doc_id").agg(F.min("pos").alias("first_pos"))
     )
@@ -934,7 +924,7 @@ def facet_counts(
     any term) fall in each bucket of ``facet_col`` (e.g. lang, source).
     The standard result-page sidebar aggregate.
 
-    Plan: doc_ids-only decode of the query terms' blocks (partition-
+    Plan: doc_ids of the query terms' posting rows (partition-
     pruned scan, tombstone-filtered) → distinct matching ids → semi-
     shaped join against the corpus attribute column → count per bucket.
     The corpus scan reads TWO columns (id + facet — column pruning) and
@@ -997,7 +987,8 @@ def bm25_topk_batch(
     index: dict[str, DataFrame],
     queries: list[tuple[int, str, int]],
     cfg: EngineConfig = DEFAULT,
-    prune: bool | str = "auto",
+    prune: Plan = "auto",
+    stats: dict | None = None,
 ) -> DataFrame:
     """Batched top-k over the block index: (query_id, rank, doc_id, score)
     for every (query_id, text, k) — the throughput-oriented retrieval
@@ -1006,7 +997,7 @@ def bm25_topk_batch(
     simply has no rows.
 
     Same planner and plans as wand_topk (``prune`` False, "auto" or
-    "impact"), shared across the set: the flat plan is ONE decode pass
+    "impact"), shared across the set: the flat plan is ONE read pass
     over the union of the query terms' blocks; the impact plan runs one
     θ bootstrap for every query at once and decodes the per-query plans
     merged per term (full if any query needs the term fully, else the
@@ -1015,10 +1006,12 @@ def bm25_topk_batch(
     Scales with the touched postings, never the corpus or the query
     count. Query terms, ids and k enter the plan as literals, so on a
     serving handle the whole batch runs without a Python worker. Per
-    query, the answer equals wand_topk's (tests/test_wand.py)."""
+    query, the answer equals wand_topk's (tests/test_wand.py). A
+    ``stats`` dict receives what wand_topk's does, for the batch."""
     _check_prune(prune)
     _check_query_ids(queries)
-    return _retrieve(spark, index, queries, cfg, prune, batch=True)
+    return _retrieve(spark, index, queries, cfg, prune, batch=True,
+                     stats=stats)
 
 
 def _retrieve(
@@ -1026,16 +1019,18 @@ def _retrieve(
     index: dict[str, DataFrame],
     queries: list[tuple[int, str, int | None]],
     cfg: EngineConfig,
-    prune: bool | str,
+    prune: Plan,
     batch: bool,
     stats: dict | None = None,
 ) -> DataFrame:
     """The retrieval planner behind wand_topk, wand_topk_impact and
-    bm25_topk_batch: resolves "auto", builds the flat or the impact rows
-    (term, doc_id, tf[, doc_len]), scores them and takes each query's
-    top k. ``batch`` False is one query, answered as (doc_id, score)
-    with no query-id fan-out and no window (an empty query raises);
-    ``batch`` True answers (query_id, rank, doc_id, score)."""
+    bm25_topk_batch: resolves the plan (_resolve_plan; recorded as
+    ``stats["plan"]`` when a stats dict is passed), builds the flat or
+    the impact rows (term, doc_id, tf[, doc_len]), scores them and
+    takes each query's top k. ``batch`` False is one query, answered as
+    (doc_id, score) with no query-id fan-out and no window (an empty
+    query raises); ``batch`` True answers (query_id, rank, doc_id,
+    score)."""
     q_terms = {qid: _query_terms(index, text) for qid, text, _ in queries}
     k_of = {qid: _resolve_k(k, cfg) for qid, _, k in queries}
     all_terms = sorted({t for ts in q_terms.values() for t in ts})
@@ -1047,32 +1042,42 @@ def _retrieve(
         raise ValueError(
             "impact retrieval needs the forward table "
             "(IndexConfig(store_forward=True)): exact candidate completion "
-            "reads (doc_id → term, tf) there instead of re-decoding "
+            "reads (doc_id → term, tf) there instead of re-reading "
             "skipped posting lists")
     meta = _term_meta(spark, index, all_terms)  # corpus row rides (r6)
+    plan = _resolve_plan(index, meta, prune, cfg)
+    if stats is not None:
+        stats["plan"] = plan
     if not meta.idfs:  # no query term is in the vocabulary: no hits
         if stats is not None:  # and nothing to decode
             stats.update(terms=[], theta_eff=None, blocks_candidate=0,
                          blocks_decoded=0, skipped=[], cut={}, full=[],
                          cand_join=False)
         return local_frame(spark, [], BATCH_SCHEMA if batch else TOPK_SCHEMA)
-    if prune == "auto":
-        # flat at sandbox scales (r4, measured: extra jobs cost ~0.5 s
-        # each). Past impact_auto_min_blocks (r5) the decode volume
-        # itself dominates the job floor and auto switches to impact —
-        # provided the index carries the forward table it completes
-        # from AND the impact-ordered layout (r6: on a doc_id-ordered
-        # index the block_id < depth bootstrap reads arbitrary
-        # low-doc_id blocks, so θ_eff is weak and the "bounded" plan
-        # can degrade toward a full decode plus the forward overhead)
-        prune = ("impact" if meta.n_blocks > cfg.bm25.impact_auto_min_blocks
-                 and index.get("forward") is not None
-                 and index.get("impact_layout") else False)
     rows = (_impact_rows(index, q_terms, k_of, meta, cfg, batch, stats)
-            if prune == "impact" else None)
+            if plan == "impact" else None)
     if rows is None:
         rows = posting_rows(index, _terms_in(all_terms))
     return _topk(_scores(index, rows, meta.idfs, q_terms, cfg, batch), k_of, cfg)
+
+
+def _resolve_plan(index: dict, meta: TermMeta, prune: Plan,
+                  cfg: EngineConfig) -> str:
+    """The plan ``prune`` picks for queries with candidate blocks
+    ``meta``: "flat" or "impact". "auto" is flat at sandbox scales (r4,
+    measured: extra jobs cost ~0.5 s each); past impact_auto_min_blocks
+    (r5) the read volume itself dominates the job floor and auto
+    switches to impact — provided the index carries the forward table
+    it completes from AND the impact-ordered layout (r6: on a
+    doc_id-ordered index the block_id < depth bootstrap reads arbitrary
+    low-doc_id blocks, so θ_eff is weak and the "bounded" plan can
+    degrade toward a full read plus the forward overhead). The impact
+    plan itself scores the flat rows when no query can prune."""
+    if prune == "auto":
+        return ("impact" if meta.n_blocks > cfg.bm25.impact_auto_min_blocks
+                and index.get("forward") is not None
+                and index.get("impact_layout") else "flat")
+    return "impact" if prune == "impact" else "flat"
 
 
 def _impact_rows(
@@ -1156,7 +1161,9 @@ def _impact_rows(
             "cand_join": cand_join,
         })
         if stats.get("exact"):
-            stats["blocks_decoded"] = posting_blocks(index).filter(pred).count()
+            stats["blocks_decoded"] = (
+                index["postings"].filter(pred)
+                .select("term", "group", "salt", "block_id").distinct().count())
     if not pruned:
         return None
     fwd = live_forward(index).filter(live_terms)
@@ -1195,7 +1202,7 @@ def _scores(
         rows = rows.withColumn("query_id", F.explode(by_term[F.col("term")]))
         keys = ["query_id", "doc_id"]
     return rows.groupBy(*keys).agg(
-        F.sum(F.col("idf") * _bm25_w(avgdl, cfg)).alias("score"))
+        F.sum(F.col("idf") * bm25_weight(avgdl, cfg)).alias("score"))
 
 
 def _topk(scores: DataFrame, k_of: dict[int, int], cfg: EngineConfig) -> DataFrame:

@@ -7,7 +7,7 @@ ingestion/manager.py:108-115 + keyed upsert storage/milvus_store.py:87-133).
 Our persisted index absorbs new documents the way Lucene does: each
 increment becomes a new *segment* (one more postings group + per-segment
 stats partitions); queries read the union; a compaction pass
-decode-merges segments into a fresh snapshot version.
+merges segments into a fresh snapshot version.
 
 Correctness across segments:
 - term_stats / corpus are per-segment partitions aggregated on read
@@ -26,9 +26,9 @@ Correctness across segments:
   deduplicated corpus (tests/test_segments.py). Delta cost is
   ∝ the replaced docs' forward rows (row-group-pruned scan + one tiny
   agg), the reference's keyed-upsert cost model
-  (storage/milvus_store.py:87-133); legacy indexes without forward/
-  fall back to a one-off postings decode. Compact periodically to drop
-  tombstones.
+  (storage/milvus_store.py:87-133); indexes without forward/ read the
+  same rows off the postings store instead. Compact periodically to
+  drop tombstones.
 
 Crash safety:
 - a segment becomes visible only when its manifest row commits
@@ -55,9 +55,9 @@ from pyspark.sql import functions as F
 from semcode_spark.config import DEFAULT, EngineConfig
 from semcode_spark.operators.index_build import (
     _completed as _completed_for,
-    _manifest_append, _manifest_rows, _verify_done, check_layout,
-    commit_current_version,
-    encoded_postings, live_forward, read_current_version,
+    _manifest_append, _manifest_rows, _verify_done, block_postings,
+    check_layout, check_layout_version, commit_current_version,
+    live_forward, read_current_version,
     read_index, read_meta, term_doc_tf, term_stats, version_dir,
     write_forward, write_term_bounds, _write_meta,
 )
@@ -156,6 +156,7 @@ def _add_segment_locked(
         _write_meta(version_dir(index_dir, version), cfg)
         commit_current_version(index_dir, version)
     vdir = version_dir(index_dir, version)
+    check_layout_version(vdir)
     if read_meta(vdir).get("analyzer", "standard") != cfg.index.analyzer:
         raise ValueError(
             f"analyzer mismatch: index built with "
@@ -251,12 +252,12 @@ def _add_segment_locked(
                                    .alias("sum_dl")).collect()[0]
                 corpus_rows.append((-n_coll, -float(old["sum_dl"])))
                 # term deltas from the collided docs' FORWARD rows —
-                # never a decode of the postings store. The forward
+                # never a scan of the postings store. The forward
                 # table is range-clustered on doc_id, so a literal
                 # doc_id predicate prunes parquet row groups and the
                 # job's cost is ∝ the replaced docs, not the index
-                # (live_forward falls back to a full decode only for
-                # legacy indexes that predate forward/)
+                # (live_forward scans the postings only for indexes
+                # built without forward/)
                 live = live_forward(idx)
                 # broadcast_ids_max caps BOTH id-shipping rungs: a
                 # literal isin set rides the serialized plan to every
@@ -323,9 +324,9 @@ def _add_segment_locked(
         # task overhead for a 10^2-doc re-crawl batch, while a 10^9-doc
         # batch still fans out fully
         seg_buckets = min(cfg.index.term_buckets, max(8, n_new // 64))
-        enc = encoded_postings(tf, avgdl_seg, hot, cfg,
-                               with_positions=store_pos,
-                               term_buckets=seg_buckets)
+        enc = block_postings(tf, avgdl_seg, hot, cfg,
+                             with_positions=store_pos,
+                             term_buckets=seg_buckets)
         enc.write.mode("overwrite").parquet(
             os.path.join(vdir, "postings", f"group={g}"))
         write_term_bounds(spark, vdir, g)
@@ -355,9 +356,10 @@ def compact_segments(
     fail_before_commit: bool = False,
     fail_after_group: int | None = None,
 ) -> dict:
-    """Decode-merge all live segments into a fresh snapshot version:
-    postings are decoded (never re-tokenized), tombstoned docs dropped
-    physically, re-bucketed and re-encoded with the full-corpus avgdl;
+    """Merge all live segments into a fresh snapshot version: the live
+    (term, doc) rows come from the forward table (never re-tokenized),
+    tombstoned docs are dropped physically, and the postings are
+    re-bucketed and re-blocked with the full-corpus avgdl;
     stats tables consolidate to one segment. Queries before and after
     return identical results (tests/test_segments.py).
 
@@ -474,9 +476,9 @@ def _compact_segments_locked(
         hot = [r["term"] for r in idx["term_stats"].filter(F.col("df") > thr)
                .select("term").collect()]
 
-        # the live tf relation comes from the stored forward table (no
-        # posting-block decode; legacy indexes fall back to decoding) —
-        # compaction re-encodes, it never re-tokenizes. positions, like
+        # the live tf relation comes from the stored forward table (the
+        # postings rows when the index has none) — compaction re-blocks,
+        # it never re-tokenizes. positions, like
         # the analyzer, are the INDEX's property: taken from the old
         # version's meta, never from cfg
         old_meta = read_meta(version_dir(index_dir, version))
@@ -495,12 +497,12 @@ def _compact_segments_locked(
             if f"group={g}" in done:
                 continue
             tg = time.time()
-            # bucket restriction pushed BEFORE the encode shuffle (see
-            # encoded_postings): each posting is re-encoded once across
+            # bucket restriction pushed BEFORE the shuffle (see
+            # block_postings): each posting is re-blocked once across
             # the whole grouped compaction
             # layout (impact ordering), like analyzer/positions, is the
             # INDEX's property: carried from the old version's meta
-            part = encoded_postings(
+            part = block_postings(
                 tf, avgdl, hot, cfg, with_positions=store_pos,
                 bucket_filter=(groups, g) if groups > 1 else None,
                 impact=bool(old_meta.get("impact", False)))

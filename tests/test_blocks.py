@@ -1,33 +1,8 @@
-"""Codec round-trip + property tests (no Spark needed)."""
+"""The numpy twin of the BM25 weight (no Spark needed)."""
 
 import numpy as np
-from hypothesis import given, settings
-from hypothesis import strategies as st
 
 from semcode_spark.operators import blocks as B
-
-
-@given(st.lists(st.integers(min_value=0, max_value=2**62), max_size=300))
-@settings(max_examples=60, deadline=None)
-def test_varint_roundtrip(vals):
-    arr = np.array(vals, dtype=np.uint64)
-    assert B.varint_decode(B.varint_encode(arr)).tolist() == vals
-
-
-@given(st.sets(st.integers(min_value=0, max_value=2**40), min_size=1, max_size=300))
-@settings(max_examples=60, deadline=None)
-def test_doc_id_roundtrip(ids):
-    arr = np.array(sorted(ids), dtype=np.uint64)
-    out = B.decode_doc_ids(B.encode_doc_ids(arr))
-    assert out.tolist() == sorted(ids)
-
-
-def test_varint_sizes():
-    assert B.varint_encode(np.array([0], dtype=np.uint64)) == b"\x00"
-    assert B.varint_encode(np.array([127], dtype=np.uint64)) == b"\x7f"
-    assert B.varint_encode(np.array([128], dtype=np.uint64)) == b"\x80\x01"
-    assert B.varint_encode(np.array([], dtype=np.uint64)) == b""
-    assert B.varint_decode(b"").tolist() == []
 
 
 def test_bm25_w_monotone_in_tf():
@@ -35,29 +10,3 @@ def test_bm25_w_monotone_in_tf():
     w = B.bm25_w(np.array([1, 2, 3, 5, 10]), dl, avgdl=100.0, k1=1.2, b=0.75)
     assert np.all(np.diff(w) > 0)
     assert np.all(w < 2.2)  # bounded by k1+1
-
-
-def test_positions_roundtrip_property():
-    """Property: encode_positions/decode_positions round-trip for any
-    per-doc sorted position lists (hypothesis-driven)."""
-    from hypothesis import given, settings
-    from hypothesis import strategies as st
-
-    from semcode_spark.operators.blocks import decode_positions, encode_positions
-
-    @settings(max_examples=200, deadline=None)
-    @given(st.lists(st.lists(st.integers(min_value=0, max_value=1 << 40),
-                             min_size=1, max_size=30),
-                    min_size=0, max_size=20))
-    def check(doc_positions):
-        import numpy as np
-
-        doc_positions = [sorted(set(p)) for p in doc_positions]
-        ln = np.array([len(p) for p in doc_positions], dtype=np.int64)
-        flat = np.array([x for p in doc_positions for x in p], dtype=np.int64)
-        buf = encode_positions(ln, flat)
-        c, f = decode_positions(buf, len(doc_positions))
-        assert list(c) == list(ln)
-        assert list(f) == list(flat)
-
-    check()

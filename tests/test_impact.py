@@ -1,7 +1,7 @@
 """Impact-ordered retrieval: MaxScore term skip + impact-prefix block
 skip + forward completion is LOSSLESS (rank-identical to exhaustive
-BM25), and the impact block layout is decode-identical to the doc_id
-layout. r4 verdict item 1.
+BM25), and the impact block layout holds the same posting rows as the
+doc_id layout. r4 verdict item 1.
 """
 
 import pytest
@@ -9,7 +9,7 @@ from pyspark.sql import functions as F
 
 from semcode_spark.config import BM25Config, EngineConfig, IndexConfig
 from semcode_spark.operators.index_build import (
-    build_index, decode_positions_flat, decode_postings, read_index,
+    build_index, posting_positions, read_index,
 )
 from semcode_spark.operators.query import (
     bm25_topk, phrase_match, wand_topk, wand_topk_impact,
@@ -46,11 +46,11 @@ def docid_index(spark, documents, tmp_path_factory):
 
 
 def test_impact_layout_decode_identical(spark, impact_index, docid_index):
-    """Same corpus, both layouts: the decoded posting multiset is
-    identical — impact ordering only regroups postings into blocks."""
-    a = sorted(map(tuple, decode_postings(impact_index["postings"])
+    """Same corpus, both layouts: the posting multiset is identical —
+    impact ordering only regroups postings into blocks."""
+    a = sorted(map(tuple, impact_index["postings"]
                    .select("term", "doc_id", "tf").collect()))
-    b = sorted(map(tuple, decode_postings(docid_index["postings"])
+    b = sorted(map(tuple, docid_index["postings"]
                    .select("term", "doc_id", "tf").collect()))
     assert a == b and len(a) > 0
 
@@ -61,7 +61,7 @@ def test_impact_layout_blockmax_decays(spark, impact_index):
     from pyspark.sql.window import Window
     w = Window.partitionBy("term", "salt").orderBy("block_id")
     bad = (impact_index["postings"]
-           .select("term", "salt", "block_id", "max_w")
+           .select("term", "salt", "block_id", "max_w").distinct()
            .withColumn("prev", F.lag("max_w").over(w))
            .filter(F.col("prev").isNotNull()
                    & (F.col("max_w") > F.col("prev") + 1e-12))
@@ -168,8 +168,8 @@ def test_impact_with_replacement(spark, documents, tmp_path):
 
 
 def test_impact_positions_phrase_identical(spark, documents, tmp_path):
-    """store_positions + impact layout: the positional payload is
-    re-ordered with its block rows — phrase answers match the doc_id
+    """store_positions + impact layout: each posting row keeps its own
+    positions whatever block it lands in — phrase answers match the doc_id
     layout bit-for-bit."""
     cfg_pos = EngineConfig(bm25=BM25Config(), index=IndexConfig(
         term_buckets=8, block_size=16, store_positions=True))
@@ -181,9 +181,9 @@ def test_impact_positions_phrase_identical(spark, documents, tmp_path):
     build_index(spark, sub, d1, cfg=cfg_pos, groups=1, count_rows=False)
     build_index(spark, sub, d2, cfg=cfg_pos_imp, groups=1, count_rows=False)
     i1, i2 = read_index(spark, d1), read_index(spark, d2)
-    a = sorted(map(tuple, decode_positions_flat(i1["postings"])
+    a = sorted(map(tuple, posting_positions(i1)
                    .select("term", "doc_id", "pos").collect()))
-    b = sorted(map(tuple, decode_positions_flat(i2["postings"])
+    b = sorted(map(tuple, posting_positions(i2)
                    .select("term", "doc_id", "pos").collect()))
     assert a == b and len(a) > 0
     p1 = {r["doc_id"] for r in phrase_match(spark, i1, "table scan").collect()}

@@ -243,26 +243,25 @@ def test_phrase_prefilter_single_positional_decode(spark, documents,
                                                    rare_pos_index):
     """r3 verdict #6: the AND-prefilter used to positional-decode AND
     doc-id-decode the SAME blocks (every phrase term's). The plan now
-    contains exactly ONE positional decode of the phrase terms' blocks;
-    the candidate side decodes doc_ids of the RAREST term only (its
-    scan pushes a term EQUALITY, not the full term set)."""
+    reads the phrase terms' positions exactly ONCE; the candidate side
+    reads doc_ids of the RAREST term only (its scan pushes a term
+    EQUALITY, not the full term set)."""
     idx = read_index(spark, rare_pos_index)
     forced = EngineConfig(bm25=BM25Config(prune_min_blocks=0),
                           index=CFG.index)
     df = phrase_match(spark, idx, "rareword scan", forced)
     plan = df._sc._jvm.PythonSQLUtils.explainString(
         df._jdf.queryExecution(), "formatted")
-    # the prefilter fired: a join against the candidate decode exists,
-    # its scan is pruned to the rare term ALONE (equality pushdown),
-    # and the positional decode node appears once (each physical node
-    # prints twice in "formatted": tree line + detail header)
+    # the prefilter fired: a join against the candidate rows exists,
+    # its scan is pruned to the rare term ALONE (equality pushdown)
     assert "EqualTo(term,rareword)" in plan
-    # r6: the decode kernels moved from mapInPandas to mapInArrow
-    n_nodes = plan.count("MapInArrow") // 2
-    assert n_nodes == 2, plan.count("MapInArrow")
-    # the positional payload (`pos` binary) is read by exactly one scan:
-    # the candidate decode reads doc_ids only
-    assert plan.count("pos:binary") == 1
+    # the postings are plain rows: no Python decode node at all, and
+    # the positions are exploded once
+    assert plan.count("MapInArrow") == 0
+    assert plan.count("explode(cast(positions") == 1
+    # the positions column is read by exactly one scan: the candidate
+    # side reads doc_ids only
+    assert plan.count("positions:array<int>") == 1
     # and the result is still served with zero corpus access
     assert "documents" not in plan
 

@@ -209,18 +209,18 @@ def test_compaction_crash_after_forward_stage_resumes(spark, documents,
                 cfg=CFG)
     before = _run(spark, read_index(spark, d))
 
-    real_enc = S2.encoded_postings
+    real_enc = S2.block_postings
 
     def boom(*a, **kw):
         raise RuntimeError("injected crash before postings rewrite")
 
-    monkeypatch.setattr(S2, "encoded_postings", boom)
+    monkeypatch.setattr(S2, "block_postings", boom)
     with pytest.raises(RuntimeError, match="injected crash"):
         compact_segments(spark, d, cfg=CFG, groups=2)
     assert read_current_version(d) == 0
     assert _run(spark, read_index(spark, d)) == before
 
-    monkeypatch.setattr(S2, "encoded_postings", real_enc)
+    monkeypatch.setattr(S2, "block_postings", real_enc)
     compact_segments(spark, d, cfg=CFG, groups=2, resume=True)
     assert read_current_version(d) == 1
     assert _run(spark, read_index(spark, d)) == before

@@ -479,3 +479,184 @@ def test_batch_rejects_non_int_query_ids(spark, index, qid):
     for fn in (bm25_topk_batch, phrase_topk_batch):
         with pytest.raises(ValueError, match="query_id must be"):
             fn(spark, index, queries, cfg=CFG)
+
+
+def _sql_plans(spark, fn) -> list[str]:
+    """The physical plan text of every SQL execution ``fn()`` runs
+    (queries, counts and writes alike), read from the session's SQL
+    status store. Cached relations print their fill plans nested, so a
+    Python node anywhere below an execution shows up."""
+    store = spark._jsparkSession.sharedState().statusStore()
+
+    def tail(n):
+        total = store.executionsCount()
+        seq = store.executionsList(max(0, total - n), n)
+        return [seq.apply(i) for i in range(seq.size())]
+
+    last = max((e.executionId() for e in tail(1)), default=-1)
+    fn()
+    spark.sparkContext._jsc.sc().listenerBus().waitUntilEmpty(30_000)
+    return [e.physicalPlanDescription() for e in tail(500)
+            if e.executionId() > last]
+
+
+def test_cold_paths_run_no_python(spark, documents, tmp_path):
+    """Plain posting rows need no decode: no executed plan of
+    build_index and add_segment (over docs with no Python UDF), of cold
+    wand_topk, auto and impact batches and phrase_topk, or of the cached
+    open holds a Python node."""
+    from pyspark.sql import functions as F
+    from semcode_spark.operators.query import bm25_topk_batch, phrase_topk
+    from semcode_spark.operators.segments import add_segment
+
+    cfg = EngineConfig(bm25=BM25Config(), index=IndexConfig(
+        term_buckets=8, block_size=16, hot_term_df_ratio=0.05, salt_factor=4,
+        store_positions=True, impact_ordered=True))
+    d = str(tmp_path / "plain_rows")
+
+    def cached_open():
+        idx = read_index(spark, d, cache=True)
+        for name in ("docs", "term_stats", "term_bounds", "postings"):
+            idx[name].unpersist()
+
+    steps = [
+        ("build_index", lambda: build_index(
+            spark, documents.limit(300), d, cfg=cfg, groups=2, count_rows=False)),
+        ("add_segment", lambda: add_segment(
+            spark, d, documents.filter("doc_id < 20").withColumn(
+                "text", F.concat(F.lit("fresh spark query data "), F.col("text"))))),
+        ("cold wand_topk", lambda: wand_topk(
+            spark, read_index(spark, d), "spark query data", k=10, cfg=cfg).collect()),
+        ("cold auto batch", lambda: bm25_topk_batch(
+            spark, read_index(spark, d), BATCH, cfg=cfg, prune="auto").collect()),
+        ("cold impact batch", lambda: bm25_topk_batch(
+            spark, read_index(spark, d), BATCH, cfg=cfg, prune="impact").collect()),
+        ("cold phrase_topk", lambda: phrase_topk(
+            spark, read_index(spark, d), "table scan", k=5, cfg=cfg).collect()),
+        ("cached open", cached_open),
+    ]
+    for name, step in steps:
+        plans = _sql_plans(spark, step)
+        assert plans, name
+        bad = [n for p in plans for n in PYTHON_NODES if n in p]
+        assert not bad, (name, bad)
+
+
+def test_plan_reported_in_stats(spark, served):
+    """A stats dict receives the plan the planner ran: auto resolves to
+    flat below impact_auto_min_blocks and to impact past it (the test
+    index is doc_id-ordered, so auto needs the impact layout flag too)."""
+    from semcode_spark.operators.query import bm25_topk_batch, wand_topk_impact
+
+    cold, _ = served
+    low = EngineConfig(bm25=BM25Config(impact_auto_min_blocks=1), index=CFG.index)
+    for prune, cfg, layout, want in ((False, CFG, False, "flat"),
+                                     ("auto", CFG, True, "flat"),
+                                     ("auto", low, False, "flat"),
+                                     ("auto", low, True, "impact"),
+                                     ("impact", CFG, False, "impact")):
+        idx = {**cold, "impact_layout": layout}
+        st: dict = {}
+        wand_topk(spark, idx, "spark query data", k=10, cfg=cfg, prune=prune,
+                  stats=st).collect()
+        assert st["plan"] == want, (prune, layout)
+        st = {}
+        bm25_topk_batch(spark, idx, BATCH, cfg=cfg, prune=prune, stats=st).collect()
+        assert st["plan"] == want, (prune, layout)
+    st = {}
+    wand_topk_impact(spark, cold, "spark", k=5, cfg=CFG, stats=st).collect()
+    assert st["plan"] == "impact"
+
+
+def test_cli_query_prints_the_plan(spark, documents, tmp_path, monkeypatch, capsys):
+    """`cli query` prints the plan that ran, not the requested mode: on a
+    tiny impact-ordered index, auto prints "flat" under the default
+    threshold and "impact" with impact_auto_min_blocks=1."""
+    import json
+
+    import semcode_spark.session as session
+    from semcode_spark import cli
+    from semcode_spark.operators import query as Q
+
+    d = str(tmp_path / "cli_idx")
+    build_index(spark, documents.limit(200), d, groups=1, count_rows=False,
+                cfg=EngineConfig(bm25=BM25Config(), index=IndexConfig(
+                    term_buckets=4, block_size=16, impact_ordered=True)))
+    monkeypatch.setattr(session, "get_spark", lambda *a, **kw: spark)
+    monkeypatch.setattr(spark, "stop", lambda: None)
+
+    def plan() -> str:
+        capsys.readouterr()
+        assert cli.main(["query", "--index", d, "--query", "spark query data"]) == 0
+        out = json.loads(capsys.readouterr().out.strip().splitlines()[-1])
+        assert out["mode"] == "auto" and out["hits"]
+        return out["plan"]
+
+    assert plan() == "flat"
+    low = EngineConfig(bm25=BM25Config(impact_auto_min_blocks=1))
+    defaults = list(Q.wand_topk.__defaults__)
+    defaults[defaults.index(Q.DEFAULT)] = low
+    monkeypatch.setattr(Q.wand_topk, "__defaults__", tuple(defaults))
+    assert plan() == "impact"
+
+
+def test_layout_2_index_rejected(spark, documents, tmp_path):
+    """An index whose meta.json says layout 2 (encoded posting blocks)
+    is refused by every reader and writer with an error naming both
+    layouts and the remedy; no fallback reader exists."""
+    import json
+    import os
+
+    from semcode_spark.operators.segments import add_segment, compact_segments
+
+    d = str(tmp_path / "old_layout")
+    build_index(spark, documents.limit(100), d, cfg=CFG, groups=1, count_rows=False)
+    meta_path = os.path.join(d, "v0", "meta.json")
+    with open(meta_path) as f:
+        meta = json.load(f)
+    assert meta["layout"] == 3
+    with open(meta_path, "w") as f:
+        json.dump({**meta, "layout": 2}, f)
+    msg = r"layout-2 index.*layout 3.*rebuild"
+    with pytest.raises(ValueError, match=msg):
+        read_index(spark, d)
+    with pytest.raises(ValueError, match=msg):
+        add_segment(spark, d, documents.filter("doc_id < 5"))
+    with pytest.raises(ValueError, match=msg):
+        compact_segments(spark, d, cfg=CFG)
+    with pytest.raises(ValueError, match=msg):
+        build_index(spark, documents.limit(100), d, cfg=CFG, groups=1, resume=True)
+    # a full rebuild is the way forward: it lands in a fresh version
+    out = build_index(spark, documents.limit(100), d, cfg=CFG, groups=1,
+                      count_rows=False)
+    assert out["version"] == 1
+    assert read_index(spark, d)["postings"].count() > 0
+
+
+def test_manifest_read_falls_back_to_spark(spark, served, monkeypatch):
+    """On a filesystem pyarrow cannot reach (s3://, hdfs://: no local
+    directory either) the manifest comes back through Spark's reader;
+    only a path Spark reports missing reads as no rows."""
+    import os
+
+    import pyarrow.parquet as pq
+
+    from semcode_spark.operators import index_build as IB
+
+    cold, _ = served
+    man_dir = os.path.join(cold["_dir"], "manifest")
+    want = IB._manifest_rows(spark, man_dir, cold["_version"])
+    assert want
+
+    def unreachable(*a, **kw):
+        raise OSError("no filesystem for scheme")
+
+    real_isdir = os.path.isdir
+    monkeypatch.setattr(pq, "read_table", unreachable)
+    monkeypatch.setattr(os.path, "isdir",
+                        lambda p: False if p.rstrip("/") == man_dir else real_isdir(p))
+    got = IB._manifest_rows(spark, man_dir, cold["_version"])
+    key = ("stage", "group", "status", "rows", "version")
+    assert sorted(tuple(r[c] for c in key) for r in got) \
+        == sorted(tuple(r[c] for c in key) for r in want)
+    assert IB._manifest_rows(spark, man_dir + "_missing", cold["_version"]) == []
