@@ -259,7 +259,7 @@ def main() -> None:
     # carries the impact decode-volume measurement
     xcfg = EngineConfig(bm25=BM25Config(),
                         index=IndexConfig(impact_ordered=True))
-    build_index(spark, big, xdir, cfg=xcfg, groups=1, count_rows=False)
+    build_index(spark, big, xdir, cfg=xcfg, groups=1)
     xidx = read_index(spark, xdir, cache=True)
     xc = xidx["corpus"].collect()[0]
     xterms = sorted({t for _, text, _ in REFERENCE_QUERIES

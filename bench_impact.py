@@ -49,7 +49,7 @@ def main() -> None:
         cfg = EngineConfig(bm25=BM25Config(),
                            index=IndexConfig(impact_ordered=impact))
         t0 = time.time()
-        build_index(spark, big, d, cfg=cfg, groups=1, count_rows=False)
+        build_index(spark, big, d, cfg=cfg, groups=1)
         out[f"build_{name}_sec"] = round(time.time() - t0, 3)
         dirs[name] = d
 

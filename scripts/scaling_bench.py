@@ -35,7 +35,7 @@ t0 = time.time()
 docs = raw.select(F.xxhash64("url").alias("doc_id"),
                   extract_text(F.col("html")).alias("text"))
 out = tempfile.mkdtemp(prefix=f"scale_idx_{cores}_")
-build_index(spark, docs, out, groups=1, count_rows=False)
+build_index(spark, docs, out, groups=1)
 wall = time.time() - t0
 print(json.dumps({"cores": cores, "docs": n_docs, "wall_s": round(wall, 2),
                   "docs_per_sec": round(n_docs / wall, 1)}))

@@ -29,6 +29,16 @@ Scale notes (100 TB / 10^12 docs):
   partition-grain idempotent resume, the Spark equivalent of the
   reference's staged JobInfo progress (api/jobs.py:17-30,73-91).
 
+One segment writer (write_segment) runs everything after the tf
+relation: docs, corpus, term_stats with is_hot, forward, and per bucket
+group the postings and term_bounds. Its three callers differ only in
+what they feed it: build_index writes seg 0 of a fresh version from
+tokenized docs (staged, resumable); add_segment writes one more segment
+of the live version, plus its tombstones and negative stats deltas, and
+commits it with a single 'segment' manifest row (operators/segments.py);
+compact_segments writes seg 0 of v{N+1} from the live forward rows
+(staged, resumable), never re-tokenizing.
+
 Persistent layout (layout 3 — versioned, snapshot-committed; layout 2
 stored delta+varint encoded blocks and must be rebuilt):
 
@@ -46,10 +56,17 @@ stored delta+varint encoded blocks and must be rebuilt):
                               half-written segment is invisible.
       metrics/                per-stage telemetry (append-only).
       v{N}/
-        meta.json             {"analyzer": ..., "layout": 3} — the build
-                              and the query side MUST share one analyzer
+        meta.json             {"layout": 3, "analyzer", "positions",
+                              "forward", "impact"}: the properties every
+                              segment of the index shares (index_meta
+                              writes it, meta_cfg reads it back into a
+                              cfg, check_meta refuses a cfg that
+                              contradicts it; compaction copies it and
+                              adds "compaction_groups"). The build and
+                              the query side MUST share one analyzer
                               (reference provider-selection contract,
-                              embeddings/providers.py:34-104).
+                              embeddings/providers.py:34-104). A version
+                              without meta.json is refused (read_meta).
         docs/seg=S/           doc_id, doc_len
         corpus/seg=S/         n_docs, sum_dl  (integer sums, so replace
                               deltas cancel EXACTLY on read; avgdl is
@@ -86,6 +103,7 @@ stored delta+varint encoded blocks and must be rebuilt):
 
 from __future__ import annotations
 
+import dataclasses
 import os
 import time
 
@@ -112,31 +130,59 @@ from semcode_spark.sources.tableio import (  # noqa: E402
 from semcode_spark.sources import tableio as _tio  # noqa: E402
 
 
-def _write_meta(vdir: str, cfg: EngineConfig) -> None:
-    _tio.write_meta(vdir, {"analyzer": cfg.index.analyzer, "layout": LAYOUT,
-                           "positions": cfg.index.store_positions,
-                           "forward": cfg.index.store_forward,
-                           "impact": cfg.index.impact_ordered})
+# meta.json key → IndexConfig field: the properties every segment of an
+# index shares (the query side reads the analyzer and positions from here)
+_PROPS = (("analyzer", "analyzer"), ("positions", "store_positions"),
+          ("forward", "store_forward"), ("impact", "impact_ordered"))
+
+
+def index_meta(cfg: EngineConfig) -> dict:
+    """meta.json's record for an index built under ``cfg``: the layout
+    and the four index properties."""
+    return {"layout": LAYOUT, **{k: getattr(cfg.index, f) for k, f in _PROPS}}
+
+
+def meta_cfg(meta: dict, base: EngineConfig = DEFAULT) -> EngineConfig:
+    """``base`` with its index properties taken from ``meta``: how a
+    mutation inherits the properties of an index it did not build."""
+    return dataclasses.replace(base, index=dataclasses.replace(
+        base.index, **{f: meta[k] for k, f in _PROPS}))
+
+
+def check_meta(meta: dict, cfg: EngineConfig) -> None:
+    """Refuse a cfg whose index properties contradict the index's: a
+    segment written under another analyzer, positions, forward or
+    impact setting would be misread by the query side, or silently lose
+    a property the index promises (phrase hits, exact replace deltas,
+    impact-ordered blocks)."""
+    for k, f in _PROPS:
+        if meta[k] != getattr(cfg.index, f):
+            raise ValueError(
+                f"index property mismatch: {k} mismatch: the index has "
+                f"{k}={meta[k]!r}, the cfg says {getattr(cfg.index, f)!r} "
+                f"— pass cfg=None to add_segment to inherit the index's "
+                f"properties, or rebuild the index (resume=False)")
 
 
 def read_meta(vdir: str) -> dict:
-    meta = _tio.read_meta(vdir)
-    return meta or {"analyzer": "standard", "layout": LAYOUT}
-
-
-def check_layout_version(vdir: str) -> None:
-    """Reject a version directory written under another postings layout
-    before anything reads or extends it. Layout 2 stored each block's
-    doc_ids and tfs as delta+varint bytes; layout 3 stores one parquet
-    row per posting. There is no reader for the old bytes and no
+    """The meta.json record of a version directory. A version without
+    one, or one written under another postings layout, raises
+    ValueError before anything reads or extends it. Layout 2 stored each
+    block's doc_ids and tfs as delta+varint bytes; layout 3 stores one
+    parquet row per posting. There is no reader for the old bytes and no
     in-place migration: such an index must be rebuilt."""
-    layout = read_meta(vdir).get("layout", LAYOUT)
-    if layout != LAYOUT:
+    meta = _tio.read_meta(vdir)
+    if not meta:
         raise ValueError(
-            f"{vdir} holds a layout-{layout} index (encoded posting "
-            f"blocks); this engine reads layout {LAYOUT} only (one "
+            f"{vdir} has no meta.json, so its analyzer and layout are "
+            f"unknown — rebuild the index with build_index")
+    if meta.get("layout") != LAYOUT:
+        raise ValueError(
+            f"{vdir} holds a layout-{meta.get('layout')} index (encoded "
+            f"posting blocks); this engine reads layout {LAYOUT} only (one "
             f"parquet row per posting) — rebuild the index with "
             f"build_index")
+    return meta
 
 
 # ---------------------------------------------------------------- stats ----
@@ -338,16 +384,6 @@ def live_forward(idx: dict, with_positions: bool = False) -> DataFrame:
 
 # ---------------------------------------------------------------- build ----
 
-def hot_terms(tstats: DataFrame, n_docs: int, cfg: EngineConfig = DEFAULT) -> list[str]:
-    """Terms with df above the skew threshold (driver-collected: the hot
-    set is tiny by definition — stopword-scale cardinality)."""
-    thr = max(2.0, cfg.index.hot_term_df_ratio * n_docs)
-    return [
-        r["term"]
-        for r in tstats.filter(F.col("df") > thr).select("term").collect()
-    ]
-
-
 def block_postings(
     tf: DataFrame,
     avgdl: float,
@@ -356,7 +392,6 @@ def block_postings(
     with_positions: bool = False,
     bucket_filter: tuple[int, int] | None = None,
     term_buckets: int | None = None,
-    impact: bool | None = None,
 ) -> DataFrame:
     """tf (term, doc_id, doc_len, tf[, positions]) → the postings rows
     of the persisted layout (term, salt, block_id, max_w, avgdl_enc,
@@ -368,8 +403,8 @@ def block_postings(
     operators/segments.py.
 
     A (term, salt) run is cut into blocks of ``block_size`` postings in
-    its sort order: doc_id, or with ``impact`` (None follows
-    cfg.index.impact_ordered) descending weight then doc_id, so block 0
+    its sort order: doc_id, or on an impact-ordered index
+    (cfg.index.impact_ordered) descending weight then doc_id, so block 0
     holds the run's top-weighted postings. block_id comes from a
     row_number window, the block's max_w from a max window over the
     block; both windows partition by (bucket, term, salt), which the
@@ -406,10 +441,8 @@ def block_postings(
         n_groups, g = bucket_filter
         bucketed = bucketed.filter(
             F.pmod(F.col("bucket"), F.lit(n_groups)) == g)
-    if impact is None:
-        impact = cfg.index.impact_ordered
     run = ("bucket", "term", "salt")
-    order = (F.col("w").desc(), "doc_id") if impact else ("doc_id",)
+    order = (F.col("w").desc(), "doc_id") if cfg.index.impact_ordered else ("doc_id",)
     rank = F.row_number().over(Window.partitionBy(*run).orderBy(*order))
     blocked = (
         bucketed.repartition(n_buckets, "bucket")
@@ -469,6 +502,142 @@ def write_term_bounds(spark: SparkSession, vdir: str, group: int) -> int:
     return int(row["n"] or 0)
 
 
+def doc_lengths(docs: DataFrame, tf: DataFrame, id_col: str = "doc_id") -> DataFrame:
+    """(doc_id, doc_len) of ``docs``, read off their tf relation (doc_len
+    is functionally dependent on doc_id there), so a write tokenizes its
+    input once: a second doc_stats pass over 100 TB of text is pure
+    waste. Docs with zero tokens fall out of tf; the left join against
+    the id spine restores them with doc_len 0."""
+    dl = tf.groupBy("doc_id").agg(F.first("doc_len").alias("doc_len"))
+    return (docs.select(F.col(id_col).alias("doc_id"))
+            .join(dl, "doc_id", "left")
+            .select("doc_id", F.coalesce("doc_len", F.lit(0)).alias("doc_len")))
+
+
+def corpus_sums(docs: DataFrame, *extra: Column):
+    """The driver row (n_docs, sum_dl, *extra) of a (persisted) docs
+    frame. The corpus table stores these integer sums, NOT an average:
+    sums merge and cancel exactly across segments and replace deltas,
+    while an n·avg reconstruction is off by ulps (doc replacement
+    demands exact stats)."""
+    return docs.agg(F.count(F.lit(1)).alias("n_docs"),
+                    F.sum("doc_len").cast("double").alias("sum_dl"),
+                    *extra).collect()[0]
+
+
+def write_segment(
+    spark: SparkSession,
+    out_dir: str,
+    version: int,
+    cfg: EngineConfig,
+    tf: DataFrame,
+    docs: DataFrame,
+    corpus: list[tuple[int, float]],
+    ts: DataFrame,
+    *,
+    seg: int = 0,
+    groups: int = 1,
+    term_buckets: int | None = None,
+    done: set[str] | None = None,
+    metrics: list | None = None,
+    fail_after_group: int | None = None,
+    op: str = "build",
+    block=block_postings,
+) -> list[str]:
+    """Write segment ``seg`` of version ``version``: the one write path
+    of build_index, add_segment and compact_segments.
+
+    - ``docs`` (doc_id, doc_len) → docs/seg=S;
+    - ``corpus`` [(n_docs, sum_dl), delta rows...] → corpus/seg=S; the
+      first row is the segment's own, and its avgdl weights the postings;
+    - ``ts`` (term, df, cf; delta rows too) flagged with is_hot (df
+      above max(2, hot_term_df_ratio · the segment's n_docs)) →
+      term_stats/seg=S;
+    - the tf relation's (doc_id, term, tf[, positions]) → forward/seg=S
+      while the index stores forward;
+    - per bucket group, block_postings' rows → postings/group=G and their
+      term_bounds. Bucket group i of ``groups`` gets group id seg + i;
+      ``term_buckets`` is block_postings' bucket fan-out.
+
+    ``done=None`` writes one unstaged segment: add_segment's, which
+    commits its single 'segment' visibility row itself. A set makes the
+    write staged and resumable (build_index, compact_segments): a 'stats'
+    manifest row after the stats tables, a 'postings' row per group, and
+    every stage already in ``done`` is skipped ('forward' in done: the
+    caller wrote the forward table). ``metrics`` collects (stage, rows,
+    wall_ms) per staged stage. ``fail_after_group`` injects a crash,
+    naming ``op``, after a group commits. ``block`` makes the postings
+    rows (compaction passes its own module's binding, which a crash
+    test replaces). Returns the hot terms."""
+    t0 = time.time()
+    vdir = version_dir(out_dir, version)
+    man_dir = os.path.join(out_dir, "manifest")
+    staged, done = done is not None, done or set()
+    n_docs, sum_dl = corpus[0]
+
+    def commit(stage: str, group: int, rows: int, since: float, name: str) -> None:
+        _manifest_append(spark, man_dir, stage, group, "completed", rows,
+                         time.time() - since, version)
+        if metrics is not None:
+            metrics.append((name, int(rows), int((time.time() - since) * 1000)))
+
+    def seg_dir(table: str) -> str:
+        return os.path.join(vdir, table, f"seg={seg}")
+
+    if "stats" in done:
+        hot = [r["term"] for r in spark.read.parquet(seg_dir("term_stats"))
+               .filter(F.col("is_hot")).select("term").collect()]
+    else:
+        docs.write.mode("overwrite").parquet(seg_dir("docs"))
+        local_frame(spark, corpus, "n_docs long, sum_dl double").write.mode(
+            "overwrite").parquet(seg_dir("corpus"))
+        # hot terms: df above the skew threshold, salted across
+        # salt_factor sub-keys in block_postings. The set is tiny by
+        # definition (stopword-scale), so it is driver-collected; delta
+        # rows (negative df) are never hot
+        thr = max(2.0, cfg.index.hot_term_df_ratio * n_docs)
+        flagged = ts.select("term", "df", "cf").withColumn(
+            "is_hot", F.col("df") > thr).persist()
+        try:
+            flagged.write.mode("overwrite").parquet(seg_dir("term_stats"))
+            hot = [r["term"] for r in flagged.filter(F.col("is_hot"))
+                   .select("term").collect()]
+        finally:
+            flagged.unpersist()
+        # forward is an all-or-nothing index property: when a later
+        # segment finds the table gone (a pruned snapshot), its rows
+        # alone would make the next replace's deltas silently partial,
+        # so it stays forward-less
+        if (cfg.index.store_forward and "forward" not in done
+                and (seg == 0 or os.path.isdir(os.path.join(vdir, "forward")))):
+            write_forward(tf, vdir, seg)
+        if staged:
+            commit("stats", -1, n_docs, t0, "stats")
+
+    for i in range(groups):
+        g = seg + i
+        if f"group={g}" in done:
+            continue
+        tg = time.time()
+        # the bucket restriction is applied BEFORE the shuffle
+        # (block_postings), so each posting is shuffled and sorted once
+        # across a grouped write
+        part = block(tf, sum_dl / n_docs, hot, cfg,
+                     with_positions=cfg.index.store_positions,
+                     bucket_filter=(groups, i) if groups > 1 else None,
+                     term_buckets=term_buckets)
+        part.write.mode("overwrite").parquet(
+            os.path.join(vdir, "postings", f"group={g}"))
+        # bounds derivation runs before the manifest row and yields the
+        # group's block count for free
+        rows = write_term_bounds(spark, vdir, g)
+        if staged:
+            commit("postings", g, rows, tg, f"postings/g{g}")
+        if fail_after_group is not None and g >= fail_after_group:
+            raise RuntimeError(f"injected failure after {op} group {g}")
+    return hot
+
+
 def build_index(
     spark: SparkSession,
     docs: DataFrame,
@@ -479,7 +648,6 @@ def build_index(
     fail_after_group: int | None = None,
     id_col: str = "doc_id",
     text_col: str = "text",
-    count_rows: bool = True,
 ) -> dict:
     """Build (or resume) the full index under out_dir (layout 3 above).
     A full rebuild (resume=False) is also how a layout-2 index moves to
@@ -519,135 +687,51 @@ def _build_index_locked(
     rebuild_commit = False
     if version is None:
         version = 0
-        _write_meta(version_dir(out_dir, version), cfg)
+        _tio.write_meta(version_dir(out_dir, version), index_meta(cfg))
         commit_current_version(out_dir, version)
-    elif not resume and _completed(spark, man_dir, version):
-        # full rebuild over a non-empty index: NEVER into the live
-        # version dir — its committed segment rows (prior add_segment
-        # calls) would stay visible and merge stale postings /
-        # double-counted stats into the rebuilt seg=0. Like compaction,
-        # build v{N+1} and flip CURRENT only on success; the old
-        # snapshot stays live (and readable) until then, and a crashed
-        # rebuild leaves an orphan dir for gc_versions, not a corrupt
-        # index. The target is the next FREE version — not CURRENT+1
-        # unconditionally: a prior crashed rebuild left completed
-        # manifest rows (and possibly dirs) for v{N+1}, and building
-        # into the same version would union its stale groups into the
-        # served index (r4 ADVICE #1).
-        version = _next_free_version(spark, out_dir, version)
-        _write_meta(version_dir(out_dir, version), cfg)
-        rebuild_commit = True
-    vdir = version_dir(out_dir, version)
-    existing_meta = _tio.read_meta(vdir)
-    if resume:
-        check_layout_version(vdir)  # resumed groups must share the layout
-    if existing_meta and (
-        existing_meta.get("layout", LAYOUT) != LAYOUT
-        or existing_meta.get("analyzer", "standard") != cfg.index.analyzer
-        or existing_meta.get("positions", False) != cfg.index.store_positions
-        or existing_meta.get("forward", True) != cfg.index.store_forward
-        or existing_meta.get("impact", False) != cfg.index.impact_ordered
-    ):
-        # the same mismatch guard add_segment has: resuming (or silently
-        # extending) an index under a different analyzer / positions
-        # setting produces postings the query side then misreads
-        if resume:
-            raise ValueError(
-                f"index property mismatch: built with analyzer="
-                f"{existing_meta.get('analyzer', 'standard')!r} positions="
-                f"{existing_meta.get('positions', False)} forward="
-                f"{existing_meta.get('forward', True)} impact="
-                f"{existing_meta.get('impact', False)}, build cfg says "
-                f"analyzer={cfg.index.analyzer!r} positions="
-                f"{cfg.index.store_positions} forward="
-                f"{cfg.index.store_forward} impact="
-                f"{cfg.index.impact_ordered} — resume must match the "
-                f"index (or rebuild with resume=False)")
-        _write_meta(vdir, cfg)  # rebuild of an empty version: re-label
-    done = _verify_done(vdir, _completed(spark, man_dir, version)) if resume else set()
+    elif resume:
+        # resumed groups must share the index's layout and properties
+        check_meta(read_meta(version_dir(out_dir, version)), cfg)
+    else:
+        if _completed(spark, man_dir, version):
+            # full rebuild over a non-empty index: NEVER into the live
+            # version dir — its committed segment rows (prior add_segment
+            # calls) would stay visible and merge stale postings /
+            # double-counted stats into the rebuilt seg=0. Like
+            # compaction, build v{N+1} and flip CURRENT only on success;
+            # the old snapshot stays live (and readable) until then, and
+            # a crashed rebuild leaves an orphan dir for gc_versions, not
+            # a corrupt index. The target is the next FREE version — not
+            # CURRENT+1 unconditionally: a prior crashed rebuild left
+            # completed manifest rows (and possibly dirs) for v{N+1}, and
+            # building into the same version would union its stale
+            # groups into the served index (r4 ADVICE #1).
+            version = _next_free_version(spark, out_dir, version)
+            rebuild_commit = True
+        # a fresh version, or a live one with nothing committed: (re-)label it
+        _tio.write_meta(version_dir(out_dir, version), index_meta(cfg))
+    done = (_verify_done(version_dir(out_dir, version),
+                         _completed(spark, man_dir, version))
+            if resume else set())
     metrics: list[tuple] = []
 
-    # docs is scanned twice (doc_stats + tf); if it is a derived plan
+    # docs is scanned twice (the id spine + tf); if it is a derived plan
     # (e.g. html extraction), persist it for the duration of the build
     docs = docs.persist()
     tf = term_doc_tf(docs, id_col, text_col, cfg,
                      with_positions=cfg.index.store_positions).persist()
+    ds = doc_lengths(docs, tf, id_col).persist()
     try:
-        if "stats" in done:
-            cs = spark.read.parquet(os.path.join(vdir, "corpus")).collect()[0]
-            n_docs, avgdl = cs["n_docs"], cs["sum_dl"] / cs["n_docs"]
-            hot = [
-                r["term"] for r in spark.read.parquet(os.path.join(vdir, "term_stats"))
-                .filter(F.col("is_hot")).select("term").collect()
-            ]
-        else:
-            t0 = time.time()
-            # doc lengths are derived FROM the tf relation — doc_len is
-            # functionally dependent on doc_id there — so the whole
-            # build tokenizes the corpus exactly once (a second
-            # doc_stats pass over 100 TB of text is pure waste). Docs
-            # with zero tokens fall out of tf; the left join against
-            # the id spine restores them with doc_len 0.
-            dl = tf.groupBy("doc_id").agg(F.first("doc_len").alias("doc_len"))
-            ds = (docs.select(F.col(id_col).alias("doc_id"))
-                  .join(dl, "doc_id", "left")
-                  .select("doc_id",
-                          F.coalesce("doc_len", F.lit(0)).alias("doc_len")))
-            ds.write.mode("overwrite").parquet(os.path.join(vdir, "docs", "seg=0"))
-            # aggregate over the *written* table — avoids re-tokenizing
-            # the whole corpus for one tiny agg. Stored as (n_docs,
-            # sum_dl), NOT an average: integer sums merge/cancel exactly
-            # across segments and replace deltas; an n·avg reconstruction
-            # is off by ulps (doc replacement demands exact stats)
-            cs = spark.read.parquet(os.path.join(vdir, "docs", "seg=0")).agg(
-                F.count(F.lit(1)).alias("n_docs"),
-                F.sum("doc_len").cast("double").alias("sum_dl"),
-            ).collect()[0]
-            n_docs = cs["n_docs"]
-            if not n_docs:
-                raise ValueError("cannot build an index over an empty corpus")
-            avgdl = cs["sum_dl"] / n_docs
-            local_frame(
-                spark, [(int(n_docs), float(cs["sum_dl"]))], "n_docs long, sum_dl double"
-            ).write.mode("overwrite").parquet(os.path.join(vdir, "corpus", "seg=0"))
-            ts = term_stats(tf, cfg)
-            thr = max(2.0, cfg.index.hot_term_df_ratio * n_docs)
-            ts_flagged = ts.withColumn("is_hot", F.col("df") > thr).persist()
-            ts_flagged.write.mode("overwrite").parquet(
-                os.path.join(vdir, "term_stats", "seg=0"))
-            hot = [r["term"] for r in ts_flagged.filter(F.col("is_hot"))
-                   .select("term").collect()]
-            ts_flagged.unpersist()
-            if cfg.index.store_forward:
-                write_forward(tf, vdir, 0)
-            _manifest_append(spark, man_dir, "stats", -1, "completed",
-                             n_docs, time.time() - t0, version)
-            metrics.append(("stats", int(n_docs), int((time.time() - t0) * 1000)))
-
-        for g in range(groups):
-            key = f"group={g}"
-            if key in done:
-                continue
-            t0 = time.time()
-            # the bucket restriction is applied BEFORE the shuffle
-            # (block_postings), so each posting is shuffled and sorted
-            # once across the whole grouped build
-            part = block_postings(
-                tf, float(avgdl), hot, cfg,
-                with_positions=cfg.index.store_positions,
-                bucket_filter=(groups, g) if groups > 1 else None)
-            part.write.mode("overwrite").parquet(
-                os.path.join(vdir, "postings", f"group={g}"))
-            # bounds derivation runs before the manifest row and yields
-            # the group's block count for free (count_rows kept for API
-            # compat)
-            rows = write_term_bounds(spark, vdir, g)
-            _manifest_append(spark, man_dir, "postings", g, "completed",
-                             rows, time.time() - t0, version)
-            metrics.append((f"postings/g{g}", rows, int((time.time() - t0) * 1000)))
-            if fail_after_group is not None and g >= fail_after_group:
-                raise RuntimeError(f"injected failure after group {g}")
+        cs = corpus_sums(ds)
+        n_docs = int(cs["n_docs"])
+        if not n_docs:
+            raise ValueError("cannot build an index over an empty corpus")
+        corpus = [(n_docs, float(cs["sum_dl"]))]
+        hot = write_segment(spark, out_dir, version, cfg, tf, ds, corpus,
+                            term_stats(tf, cfg), groups=groups, done=done,
+                            metrics=metrics, fail_after_group=fail_after_group)
     finally:
+        ds.unpersist()
         tf.unpersist()
         docs.unpersist()
         if metrics:
@@ -658,8 +742,8 @@ def _build_index_locked(
     if rebuild_commit:
         commit_current_version(out_dir, version)  # snapshot flip
     wall = time.time() - t_all
-    return {"n_docs": int(n_docs), "avgdl": float(avgdl), "hot_terms": len(hot),
-            "groups": groups, "wall_s": wall, "docs_per_sec": int(n_docs) / wall,
+    return {"n_docs": n_docs, "avgdl": corpus[0][1] / n_docs, "hot_terms": len(hot),
+            "groups": groups, "wall_s": wall, "docs_per_sec": n_docs / wall,
             "version": version}
 
 
@@ -770,7 +854,7 @@ def _verify_done(vdir: str, done: set[str]) -> set[str]:
 
 def check_layout(spark: SparkSession, index_dir: str) -> None:
     """Reject pre-layout-2 (unversioned) index directories BEFORE any
-    mutation; versioned ones of another layout are check_layout_version's.
+    mutation; versioned ones of another layout are read_meta's.
 
     A legacy dir (data but no CURRENT pointer, or a manifest without the
     'version' column) must not be half-converted: committing CURRENT=0
@@ -987,7 +1071,8 @@ def read_index(spark: SparkSession, out_dir: str, cache: bool = False,
     rows killed by a tombstone (seg < before_group) are filtered here;
     postings-level tombstone filtering happens in the read seam
     (posting_rows) because it needs the posting's group. An index of
-    another layout raises ValueError (check_layout_version).
+    another layout, or a version without meta.json, raises ValueError
+    (read_meta).
 
     cache=True is serving mode (the analog of the reference's long-lived
     service process with Milvus's collection loaded to memory,
@@ -1006,12 +1091,14 @@ def read_index(spark: SparkSession, out_dir: str, cache: bool = False,
     if version is None:
         raise FileNotFoundError(f"no CURRENT pointer under {out_dir}")
     vdir = version_dir(out_dir, version)
-    check_layout_version(vdir)
+    meta = read_meta(vdir)
     segs, groups = _visible(spark, out_dir, version)
     seg_list, group_list = sorted(segs), sorted(groups)
 
+    # a few rows per segment, read as one partition: the global sums
+    # then need no exchange, so collecting the corpus row is one job
     corpus_raw = _open_table(spark, os.path.join(vdir, "corpus")).filter(
-        F.col("seg").isin(seg_list))
+        F.col("seg").isin(seg_list)).coalesce(1)
     corpus = corpus_raw.agg(
         F.sum("n_docs").alias("n_docs"),
         (F.sum("sum_dl") / F.sum("n_docs")).alias("avgdl"),
@@ -1059,9 +1146,11 @@ def read_index(spark: SparkSession, out_dir: str, cache: bool = False,
         "postings": _open_table(spark, os.path.join(vdir, "postings")).filter(
             F.col("group").isin(group_list)),
         "tombstones": tombstones,
-        "analyzer": read_meta(vdir).get("analyzer", "standard"),
-        "positions_stored": bool(read_meta(vdir).get("positions", False)),
-        "impact_layout": bool(read_meta(vdir).get("impact", False)),
+        "analyzer": meta["analyzer"],
+        "positions_stored": meta["positions"],
+        "impact_layout": meta["impact"],
+        "_meta": meta,
+        "_groups": group_list,
         "_n_tombstones": n_tomb,
         "_dir": out_dir,
         "_version": version,

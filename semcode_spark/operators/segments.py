@@ -9,6 +9,15 @@ increment becomes a new *segment* (one more postings group + per-segment
 stats partitions); queries read the union; a compaction pass
 merges segments into a fresh snapshot version.
 
+Both mutations write through the build's segment writer
+(index_build.write_segment), so a segment's tables are laid out exactly
+as a build's. add_segment adds only the replace bookkeeping (collision
+set, tombstones, negative deltas) and its single 'segment' visibility
+row; compaction feeds the writer the live forward rows. The analyzer,
+positions, forward and impact settings are the index's, read once per
+call from meta.json: cfg=None inherits them (meta_cfg), an explicit cfg
+that contradicts them raises (check_meta), and compaction copies them.
+
 Correctness across segments:
 - term_stats / corpus are per-segment partitions aggregated on read
   (index_build.read_index), so idf / avgdl always reflect the full
@@ -55,14 +64,13 @@ from pyspark.sql import functions as F
 from semcode_spark.config import DEFAULT, EngineConfig
 from semcode_spark.operators.index_build import (
     _completed as _completed_for,
-    _manifest_append, _manifest_rows, _verify_done, block_postings,
-    check_layout, check_layout_version, commit_current_version,
-    live_forward, read_current_version,
-    read_index, read_meta, term_doc_tf, term_stats, version_dir,
-    write_forward, write_term_bounds, _write_meta,
+    _manifest_append, _manifest_rows, _next_free_version, _verify_done,
+    block_postings, check_layout, check_meta, commit_current_version,
+    consolidate_small_files, corpus_sums, doc_lengths, index_meta,
+    live_forward, meta_cfg, read_current_version, read_index, read_meta,
+    term_doc_tf, term_stats, version_dir, write_forward, write_segment,
 )
 from semcode_spark.sources import tableio as _tio
-from semcode_spark.sources.tables import local_frame
 
 
 def _next_group(spark: SparkSession, index_dir: str, version: int) -> int:
@@ -76,24 +84,10 @@ def _next_group(spark: SparkSession, index_dir: str, version: int) -> int:
 
 def index_cfg(index_dir: str, base: EngineConfig = DEFAULT) -> EngineConfig:
     """EngineConfig matching an existing index's persisted properties
-    (analyzer / positions / forward from meta.json), with every other
-    knob taken from ``base``. The inherit path for callers that mutate
-    an index they didn't build — e.g. ``cli add`` against a
-    ``build --positions`` index, which used to raise the
-    positions-mismatch guard because it passed DEFAULT."""
-    from dataclasses import replace as _dc_replace
-
+    (meta_cfg over its meta.json), with every other knob taken from
+    ``base``; ``base`` itself when the directory holds no index yet."""
     v = read_current_version(index_dir)
-    if v is None:
-        return base
-    meta = read_meta(version_dir(index_dir, v))
-    return EngineConfig(bm25=base.bm25, index=_dc_replace(
-        base.index,
-        analyzer=meta.get("analyzer", "standard"),
-        store_positions=bool(meta.get("positions", False)),
-        store_forward=bool(meta.get("forward", True)),
-        impact_ordered=bool(meta.get("impact", False)),
-    ))
+    return base if v is None else meta_cfg(read_meta(version_dir(index_dir, v)), base)
 
 
 def add_segment(
@@ -113,12 +107,11 @@ def add_segment(
     of silently losing segments.
 
     ``cfg=None`` (default) inherits the index's persisted analyzer /
-    positions / forward properties (``index_cfg``); pass an explicit
+    positions / forward / impact properties (meta_cfg); pass an explicit
     cfg only when creating a brand-new index with non-default knobs —
-    a cfg that contradicts an existing index's meta still raises."""
+    a cfg that contradicts an existing index's meta still raises
+    (check_meta)."""
     check_layout(spark, index_dir)
-    if cfg is None:
-        cfg = index_cfg(index_dir)
     lease = _tio.acquire_lease(index_dir, "add_segment")
     try:
         return _add_segment_locked(spark, index_dir, new_docs, cfg,
@@ -144,7 +137,7 @@ def _add_segment_locked(
     spark: SparkSession,
     index_dir: str,
     new_docs: DataFrame,
-    cfg: EngineConfig,
+    cfg: EngineConfig | None,
     id_col: str,
     text_col: str,
     replace: bool,
@@ -152,64 +145,25 @@ def _add_segment_locked(
     t0 = time.time()
     version = read_current_version(index_dir)
     if version is None:
+        cfg = cfg or DEFAULT
         version = 0
-        _write_meta(version_dir(index_dir, version), cfg)
+        _tio.write_meta(version_dir(index_dir, version), index_meta(cfg))
         commit_current_version(index_dir, version)
-    vdir = version_dir(index_dir, version)
-    check_layout_version(vdir)
-    if read_meta(vdir).get("analyzer", "standard") != cfg.index.analyzer:
-        raise ValueError(
-            f"analyzer mismatch: index built with "
-            f"{read_meta(vdir).get('analyzer')!r}, segment cfg says "
-            f"{cfg.index.analyzer!r} — build and query must share one "
-            f"analyzer (reference embeddings/providers.py:34-104)")
-    store_pos = bool(read_meta(vdir).get("positions", False))
-    if store_pos != cfg.index.store_positions:
-        raise ValueError(
-            f"positions mismatch: index stores positions={store_pos}, "
-            f"segment cfg says {cfg.index.store_positions} — a mixed "
-            f"index would silently miss phrase hits in new segments")
-    store_fwd = bool(read_meta(vdir).get("forward", True))
-    if store_fwd != cfg.index.store_forward:
-        # mirror of the build_index guard (r4 ADVICE #5): a segment
-        # whose forward setting contradicts the index meta would leave
-        # compaction/replace reading a forward table with holes
-        raise ValueError(
-            f"forward mismatch: index stores forward={store_fwd}, "
-            f"segment cfg says {cfg.index.store_forward} — pass "
-            f"cfg=None to inherit the index's properties")
-    store_imp = bool(read_meta(vdir).get("impact", False))
-    if store_imp != cfg.index.impact_ordered:
-        # queries on a mixed-layout index stay CORRECT (every bound is
-        # predicate-based on stored max_w), but a doc_id-ordered
-        # segment silently loses the max_w-decay property impact
-        # retrieval's prefix pruning relies on — the same
-        # silent-property-drift class as the guards above
-        raise ValueError(
-            f"impact-layout mismatch: index stores impact={store_imp}, "
-            f"segment cfg says {cfg.index.impact_ordered} — pass "
-            f"cfg=None to inherit the index's properties")
-    man_dir = os.path.join(index_dir, "manifest")
+    else:
+        meta = read_meta(version_dir(index_dir, version))
+        if cfg is None:
+            cfg = meta_cfg(meta)
+        else:
+            check_meta(meta, cfg)
     g = _next_group(spark, index_dir, version)
 
     new_docs = new_docs.persist()
     tf = term_doc_tf(new_docs, id_col, text_col, cfg,
-                     with_positions=store_pos).persist()
+                     with_positions=cfg.index.store_positions).persist()
+    ds = doc_lengths(new_docs, tf, id_col).persist()
     collided: DataFrame | None = None
-    ds: DataFrame | None = None
     try:
-        # doc lengths from the tf relation — one tokenize pass per
-        # segment (see build_index); zero-token docs restored via the
-        # id spine with doc_len 0
-        dl = tf.groupBy("doc_id").agg(F.first("doc_len").alias("doc_len"))
-        ds = (new_docs.select(F.col(id_col).alias("doc_id"))
-              .join(dl, "doc_id", "left")
-              .select("doc_id",
-                      F.coalesce("doc_len", F.lit(0)).alias("doc_len"))
-              .persist())
-        cs = ds.agg(F.count(F.lit(1)).alias("n_docs"),
-                    F.countDistinct("doc_id").alias("n_distinct"),
-                    F.sum("doc_len").cast("double").alias("sum_dl")).collect()[0]
+        cs = corpus_sums(ds, F.countDistinct("doc_id").alias("n_distinct"))
         if not cs["n_docs"]:  # empty increment: nothing to commit
             return {"group": -1, "n_docs": 0, "n_replaced": 0,
                     "wall_s": time.time() - t0}
@@ -223,12 +177,11 @@ def _add_segment_locked(
                 f"{int(cs['n_distinct'])} distinct) — dropDuplicates or "
                 f"pick a winner upstream; within-batch replacement order "
                 f"is undefined")
-        avgdl_seg = float(cs["sum_dl"]) / n_new
 
         # ---- replace bookkeeping: exact negative deltas + tombstones ----
         n_coll = 0
         corpus_rows = [(n_new, float(cs["sum_dl"]))]
-        neg_ts: DataFrame | None = None
+        ts = term_stats(tf, cfg)
         if g > 0:
             idx = read_index(spark, index_dir)
             new_ids = new_docs.select(F.col(id_col).alias("doc_id")).distinct()
@@ -248,8 +201,7 @@ def _add_segment_locked(
             if n_coll:
                 # corpus delta as the integer doc_len sum of the removed
                 # rows — cancels the stored positive sums EXACTLY on read
-                old = collided.agg(F.sum("doc_len").cast("double")
-                                   .alias("sum_dl")).collect()[0]
+                old = corpus_sums(collided)
                 corpus_rows.append((-n_coll, -float(old["sum_dl"])))
                 # term deltas from the collided docs' FORWARD rows —
                 # never a scan of the postings store. The forward
@@ -274,72 +226,32 @@ def _add_segment_locked(
                     # would OOM executors — shuffle join; the forward
                     # side is range-clustered so AQE keeps it bounded
                     dead_tf = live.join(collided.select("doc_id"), "doc_id")
-                neg_ts = dead_tf.groupBy("term").agg(
+                ts = ts.unionByName(dead_tf.groupBy("term").agg(
                     (-F.count(F.lit(1))).alias("df"),
                     (-F.sum("tf")).alias("cf"),
-                ).withColumn("is_hot", F.lit(False))
+                ))
+                collided.select("doc_id").withColumn(
+                    "before_group", F.lit(g)
+                ).write.mode("overwrite").parquet(
+                    os.path.join(version_dir(index_dir, version),
+                                 "tombstones", f"seg={g}"))
 
         # ---- idempotent per-segment writes (invisible until manifest) ----
-        ds.write.mode("overwrite").parquet(os.path.join(vdir, "docs", f"seg={g}"))
-        local_frame(
-            spark, corpus_rows, "n_docs long, sum_dl double"
-        ).write.mode("overwrite").parquet(os.path.join(vdir, "corpus", f"seg={g}"))
-
-        thr = max(2.0, cfg.index.hot_term_df_ratio * n_new)
-        ts = term_stats(tf, cfg).withColumn(
-            "is_hot", F.col("df") > thr).persist()
-        ts_out = ts
-        if neg_ts is not None:
-            ts_out = ts_out.unionByName(neg_ts)
-        ts_out.write.mode("overwrite").parquet(
-            os.path.join(vdir, "term_stats", f"seg={g}"))
-        hot = [r["term"] for r in ts.filter("is_hot")
-               .select("term").collect()]
-        ts.unpersist()
-
-        if n_coll and collided is not None:
-            collided.select("doc_id").withColumn(
-                "before_group", F.lit(g)
-            ).write.mode("overwrite").parquet(
-                os.path.join(vdir, "tombstones", f"seg={g}"))
-
-        # forward is an all-or-nothing INDEX property (meta-gated like
-        # positions): a partial forward table — some segments with
-        # rows, some without — would silently under-count replace
-        # deltas, so new segments write it iff the index carries it.
-        # Legacy metas predate the key; the dir's existence decides.
-        # And if meta says forward but the table is GONE (manually
-        # pruned snapshot), writing one segment's rows would make the
-        # next replace's deltas silently partial — stay forward-less.
-        fwd_dir = os.path.join(vdir, "forward")
-        store_fwd = bool(read_meta(vdir).get(
-            "forward", os.path.isdir(fwd_dir)))
-        if store_fwd and g > 0 and not os.path.isdir(fwd_dir):
-            store_fwd = False
-        if store_fwd:
-            write_forward(tf, vdir, g)
-
         # small increments get a small bucket fan-out (bucket ids are
         # group-local): cfg-many near-empty shuffle partitions are pure
         # task overhead for a 10^2-doc re-crawl batch, while a 10^9-doc
         # batch still fans out fully
-        seg_buckets = min(cfg.index.term_buckets, max(8, n_new // 64))
-        enc = block_postings(tf, avgdl_seg, hot, cfg,
-                             with_positions=store_pos,
-                             term_buckets=seg_buckets)
-        enc.write.mode("overwrite").parquet(
-            os.path.join(vdir, "postings", f"group={g}"))
-        write_term_bounds(spark, vdir, g)
-
+        write_segment(spark, index_dir, version, cfg, tf, ds, corpus_rows, ts,
+                      seg=g, term_buckets=min(cfg.index.term_buckets,
+                                              max(8, n_new // 64)))
         # visibility commit: the one manifest row that makes all of the
         # above readable (read_index gates on it)
-        _manifest_append(spark, man_dir, "segment", g, "completed",
-                         n_new, time.time() - t0, version)
+        _manifest_append(spark, os.path.join(index_dir, "manifest"), "segment",
+                         g, "completed", n_new, time.time() - t0, version)
     finally:
         if collided is not None:
             collided.unpersist()
-        if ds is not None:
-            ds.unpersist()
+        ds.unpersist()
         tf.unpersist()
         new_docs.unpersist()
     return {"group": g, "n_docs": n_new, "n_replaced": n_coll,
@@ -403,7 +315,6 @@ def _compact_segments_locked(
     if version is None:
         raise FileNotFoundError(f"no CURRENT pointer under {index_dir}")
     man_dir = os.path.join(index_dir, "manifest")
-    from semcode_spark.operators.index_build import _next_free_version
     nf = _next_free_version(spark, index_dir, version)
     if resume:
         # resume deliberately targets the version the crashed run was
@@ -427,7 +338,7 @@ def _compact_segments_locked(
         # the checkpoint grain is part of the partial state: resuming
         # with a different `groups` would mix pmod(bucket, G) predicates
         # and silently duplicate/drop buckets
-        prior = read_meta(vnew).get("compaction_groups")
+        prior = _tio.read_meta(vnew).get("compaction_groups")
         if prior is None:
             # the partial version was NOT built by a compaction — a
             # crashed build_index REBUILD shares the same manifest stage
@@ -436,8 +347,8 @@ def _compact_segments_locked(
             # would commit a snapshot mixing rebuild groups with
             # compaction groups. Build fresh into the next FREE version
             # instead (a crashed compaction always stamps
-            # compaction_groups in the same step as its first
-            # manifest row, so prior=None ⇔ not-a-compaction).
+            # compaction_groups before its first manifest row, so
+            # prior=None ⇔ not-a-compaction).
             new_version, done = nf, set()
             vnew = version_dir(index_dir, new_version)
         elif prior != groups:
@@ -446,74 +357,33 @@ def _compact_segments_locked(
                 f"run used groups={prior}; pass the same grain")
 
     idx = read_index(spark, index_dir)
+    # the analyzer, positions, forward and impact settings are the
+    # INDEX's properties: compaction never re-tokenizes, so it copies the
+    # old version's meta and takes only the other knobs from cfg
+    cfg = meta_cfg(idx["_meta"], cfg)
     docs_live = idx["docs"].persist()
     try:
-        cs = docs_live.agg(
-            F.count(F.lit(1)).alias("n_docs"),
-            F.sum("doc_len").cast("double").alias("sum_dl")).collect()[0]
-        n_docs, sum_dl = int(cs["n_docs"]), float(cs["sum_dl"])
-        avgdl = sum_dl / n_docs
-        thr = max(2.0, cfg.index.hot_term_df_ratio * n_docs)
-
+        cs = corpus_sums(docs_live)
+        n_docs = int(cs["n_docs"])
         if "stats" not in done:
-            # the analyzer is the INDEX's property — propagate the old
-            # version's meta; compaction never re-tokenizes, so stamping
-            # cfg's analyzer here would silently re-label the index
-            meta = dict(read_meta(version_dir(index_dir, version)))
-            meta["compaction_groups"] = groups
-            _tio.write_meta(vnew, meta)
-            docs_live.write.mode("overwrite").parquet(
-                os.path.join(vnew, "docs", "seg=0"))
-            local_frame(
-                spark, [(n_docs, sum_dl)], "n_docs long, sum_dl double"
-            ).write.mode("overwrite").parquet(os.path.join(vnew, "corpus", "seg=0"))
-            idx["term_stats"].withColumn(
-                "is_hot", F.col("df") > thr
-            ).write.mode("overwrite").parquet(
-                os.path.join(vnew, "term_stats", "seg=0"))
-            _manifest_append(spark, man_dir, "stats", -1, "completed",
-                             n_docs, time.time() - t0, new_version)
-        hot = [r["term"] for r in idx["term_stats"].filter(F.col("df") > thr)
-               .select("term").collect()]
-
+            _tio.write_meta(vnew, {**idx["_meta"], "compaction_groups": groups})
         # the live tf relation comes from the stored forward table (the
         # postings rows when the index has none) — compaction re-blocks,
-        # it never re-tokenizes. positions, like
-        # the analyzer, are the INDEX's property: taken from the old
-        # version's meta, never from cfg
-        old_meta = read_meta(version_dir(index_dir, version))
-        store_pos = bool(old_meta.get("positions", False))
-        store_fwd = bool(old_meta.get("forward", os.path.isdir(
-            os.path.join(version_dir(index_dir, version), "forward"))))
-        fwd_live = live_forward(idx, with_positions=store_pos)
-        if store_fwd and "forward" not in done:
+        # it never re-tokenizes. The consolidated forward table is its
+        # own resumable stage
+        fwd_live = live_forward(idx, with_positions=cfg.index.store_positions)
+        if cfg.index.store_forward and "forward" not in done:
             write_forward(fwd_live, vnew, 0)
             _manifest_append(spark, man_dir, "forward", -1, "completed",
                              n_docs, time.time() - t0, new_version)
         tf_cols = ["term", "doc_id", "doc_len", "tf"] + (
-            ["positions"] if store_pos else [])
+            ["positions"] if cfg.index.store_positions else [])
         tf = fwd_live.join(docs_live, "doc_id").select(*tf_cols)
-        for g in range(groups):
-            if f"group={g}" in done:
-                continue
-            tg = time.time()
-            # bucket restriction pushed BEFORE the shuffle (see
-            # block_postings): each posting is re-blocked once across
-            # the whole grouped compaction
-            # layout (impact ordering), like analyzer/positions, is the
-            # INDEX's property: carried from the old version's meta
-            part = block_postings(
-                tf, avgdl, hot, cfg, with_positions=store_pos,
-                bucket_filter=(groups, g) if groups > 1 else None,
-                impact=bool(old_meta.get("impact", False)))
-            part.write.mode("overwrite").parquet(
-                os.path.join(vnew, "postings", f"group={g}"))
-            rows = write_term_bounds(spark, vnew, g)
-            _manifest_append(spark, man_dir, "postings", g, "completed",
-                             rows, time.time() - tg, new_version)
-            if fail_after_group is not None and g >= fail_after_group:
-                raise RuntimeError(f"injected failure after compaction group {g}")
-
+        write_segment(spark, index_dir, new_version, cfg, tf, docs_live,
+                      [(n_docs, float(cs["sum_dl"]))], idx["term_stats"],
+                      groups=groups, done=done | {"forward"},
+                      fail_after_group=fail_after_group, op="compaction",
+                      block=block_postings)
         _manifest_append(spark, man_dir, "compaction", new_version, "completed",
                          n_docs, time.time() - t0, new_version)
 
@@ -531,7 +401,6 @@ def _compact_segments_locked(
         shutil.rmtree(version_dir(index_dir, version), ignore_errors=True)
     # consolidate the per-commit manifest/metrics files (small-file
     # pressure at 10^5 groups) — post-commit, under the writer lease
-    from semcode_spark.operators.index_build import consolidate_small_files
     consolidate_small_files(spark, man_dir)
     consolidate_small_files(spark, os.path.join(index_dir, "metrics"))
     return {"n_docs": n_docs, "version": new_version, "groups": groups,
@@ -543,14 +412,16 @@ def compaction_due(idx: dict, tombstone_ratio: float = 0.2,
     """Operational policy hook: compact when tombstones exceed
     ``tombstone_ratio`` of live docs (query-side anti-join pressure) or
     the segment count exceeds ``max_groups`` (per-query group fan-out).
-    Pure metadata — one tiny count against the already-open handle."""
-    n_tomb = idx.get("_n_tombstones", 0)
-    n_groups = idx["postings"].select("group").distinct().count()
-    if n_groups > max_groups:
+    Pure metadata: the visible groups and the tombstone count come with
+    the handle, so this runs no Spark job, or one tiny corpus read when
+    tombstones exist on a cold handle."""
+    if len(idx["_groups"]) > max_groups:
         return True
+    n_tomb = idx.get("_n_tombstones", 0)
     if not n_tomb:
         return False
-    n_docs = int(idx["corpus"].collect()[0]["n_docs"])
+    row = idx["_corpus_row"] if "_corpus_row" in idx else idx["corpus"].collect()[0]
+    n_docs = int(row["n_docs"])
     return n_docs > 0 and n_tomb / n_docs >= tombstone_ratio
 
 

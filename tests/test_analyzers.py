@@ -54,7 +54,7 @@ def test_stop_stem_index_roundtrip(spark, documents, tmp_path):
     cfg = EngineConfig(bm25=BM25Config(), index=IndexConfig(
         term_buckets=8, block_size=16, analyzer="stop_stem"))
     out = str(tmp_path / "idx_stop_stem")
-    build_index(spark, documents, out, cfg=cfg, groups=1, count_rows=False)
+    build_index(spark, documents, out, cfg=cfg, groups=1)
     idx = read_index(spark, out)
     assert idx["analyzer"] == "stop_stem"
 
@@ -84,7 +84,7 @@ def test_analyzer_mismatch_rejected(spark, documents, tmp_path):
         term_buckets=8, block_size=16, analyzer="stop"))
     out = str(tmp_path / "idx_stop")
     build_index(spark, documents.filter("doc_id < 100"), out,
-                cfg=cfg, groups=1, count_rows=False)
+                cfg=cfg, groups=1)
     other = EngineConfig(bm25=BM25Config(), index=IndexConfig(
         term_buckets=8, block_size=16, analyzer="standard"))
     with pytest.raises(ValueError, match="analyzer mismatch"):

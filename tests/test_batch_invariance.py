@@ -1,32 +1,39 @@
-"""Block layout must be independent of Arrow batch boundaries: block
+"""Posting rows must be independent of the write's partitioning: block
 ids and bounds come from JVM windows over whole (term, salt) runs, so a
-build under pathologically small Arrow batches writes the same rows as
-the default (the determinism contract behind resume/rebuild identity).
+grouped build under few shuffle partitions writes the same rows as a
+single-group build at the default setting, and a compaction into
+another group count reproduces them (the determinism contract behind
+resume, rebuild and compaction identity of the one segment writer).
 """
-
-import pytest
 
 from semcode_spark.config import BM25Config, EngineConfig, IndexConfig
 from semcode_spark.operators.index_build import build_index, read_index
+from semcode_spark.operators.segments import compact_segments
 
 CFG = EngineConfig(bm25=BM25Config(), index=IndexConfig(term_buckets=4, block_size=8))
-KEY = "spark.sql.execution.arrow.maxRecordsPerBatch"
+KEY = "spark.sql.shuffle.partitions"
+COLS = ("term", "salt", "block_id", "max_w", "avgdl_enc", "doc_id", "tf")
 
 
-def _blocks(spark, documents, tmp_path, tag):
-    out = str(tmp_path / tag)
-    build_index(spark, documents.limit(120), out, cfg=CFG, groups=1, count_rows=False)
-    return read_index(spark, out)["postings"].orderBy(
-        "term", "salt", "block_id", "doc_id").collect()
+def _rows(spark, out):
+    return sorted(tuple(r) for r in
+                  read_index(spark, out)["postings"].select(*COLS).collect())
 
 
-def test_blocks_invariant_to_arrow_batch_size(spark, documents, tmp_path):
+def test_rows_invariant_to_groups_and_shuffle_partitions(spark, documents, tmp_path):
+    docs = documents.filter("doc_id < 120")
+    grouped, single = str(tmp_path / "groups3"), str(tmp_path / "groups1")
     default = spark.conf.get(KEY)
     try:
-        spark.conf.set(KEY, "7")  # force many tiny batches through the carry path
-        tiny = _blocks(spark, documents, tmp_path, "tiny_batches")
+        spark.conf.set(KEY, "3")
+        build_index(spark, docs, grouped, cfg=CFG, groups=3)
     finally:
         spark.conf.set(KEY, default)
-    normal = _blocks(spark, documents, tmp_path, "normal_batches")
-    assert tiny == normal  # identical rows, blocks, bounds, and layout
-    assert len(tiny) > 20
+    build_index(spark, docs, single, cfg=CFG, groups=1)
+    want = _rows(spark, single)
+    assert _rows(spark, grouped) == want  # identical rows, blocks and bounds
+    assert len(want) > 20 and any(r[1] for r in want)  # salted runs included
+
+    compact_segments(spark, grouped, cfg=CFG, groups=2)
+    assert read_index(spark, grouped)["_groups"] == [0, 1]
+    assert _rows(spark, grouped) == want

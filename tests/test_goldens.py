@@ -31,7 +31,7 @@ def load_golden():
 def test_engine_matches_committed_goldens(spark, documents, tmp_path):
     golden = load_golden()
     out = str(tmp_path / "golden_idx")
-    build_index(spark, documents, out, groups=1, count_rows=False)
+    build_index(spark, documents, out, groups=1)
     got = bm25_topk_batch(spark, read_index(spark, out), REFERENCE_QUERIES).collect()
     by_q = {}
     for r in sorted(got, key=lambda r: (r["query_id"], r["rank"])):

@@ -33,15 +33,14 @@ QUERIES = ["the", "window merge", "spark query data",
 @pytest.fixture(scope="module")
 def impact_index(spark, documents, tmp_path_factory):
     out = str(tmp_path_factory.mktemp("index_impact"))
-    build_index(spark, documents, out, cfg=CFG_IMPACT, groups=2,
-                count_rows=False)
+    build_index(spark, documents, out, cfg=CFG_IMPACT, groups=2)
     return read_index(spark, out)
 
 
 @pytest.fixture(scope="module")
 def docid_index(spark, documents, tmp_path_factory):
     out = str(tmp_path_factory.mktemp("index_docid"))
-    build_index(spark, documents, out, cfg=CFG, groups=2, count_rows=False)
+    build_index(spark, documents, out, cfg=CFG, groups=2)
     return read_index(spark, out)
 
 
@@ -119,8 +118,7 @@ def test_impact_requires_forward(spark, documents, tmp_path):
         term_buckets=8, block_size=16, store_forward=False,
         impact_ordered=True))
     d = str(tmp_path / "nofwd")
-    build_index(spark, documents.limit(100), d, cfg=cfg, groups=1,
-                count_rows=False)
+    build_index(spark, documents.limit(100), d, cfg=cfg, groups=1)
     idx = read_index(spark, d)
     with pytest.raises(ValueError, match="forward"):
         wand_topk_impact(spark, idx, "the data", k=10, cfg=cfg)
@@ -133,7 +131,7 @@ def test_impact_theta_tie_boundary(spark, tmp_path):
     rows += [(100 + i, "cherry date elderberry fig") for i in range(5)]
     docs = spark.createDataFrame(rows, "doc_id long, text string")
     out = str(tmp_path / "tie_impact")
-    build_index(spark, docs, out, cfg=CFG_IMPACT, groups=1, count_rows=False)
+    build_index(spark, docs, out, cfg=CFG_IMPACT, groups=1)
     idx = read_index(spark, out)
     for q in ("apple", "apple banana"):
         want = bm25_topk(docs, q, k=10, cfg=CFG_IMPACT).collect()
@@ -150,8 +148,7 @@ def test_impact_with_replacement(spark, documents, tmp_path):
     from semcode_spark.operators.segments import add_segment
 
     d = str(tmp_path / "impact_replace")
-    build_index(spark, documents, d, cfg=CFG_IMPACT, groups=2,
-                count_rows=False)
+    build_index(spark, documents, d, cfg=CFG_IMPACT, groups=2)
     re_docs = documents.filter("doc_id < 40").withColumn(
         "text", F.concat(F.lit("fresh spark query data "), F.col("text")))
     add_segment(spark, d, re_docs)
@@ -178,8 +175,8 @@ def test_impact_positions_phrase_identical(spark, documents, tmp_path):
         impact_ordered=True))
     d1, d2 = str(tmp_path / "pos_docid"), str(tmp_path / "pos_impact")
     sub = documents.limit(300)
-    build_index(spark, sub, d1, cfg=cfg_pos, groups=1, count_rows=False)
-    build_index(spark, sub, d2, cfg=cfg_pos_imp, groups=1, count_rows=False)
+    build_index(spark, sub, d1, cfg=cfg_pos, groups=1)
+    build_index(spark, sub, d2, cfg=cfg_pos_imp, groups=1)
     i1, i2 = read_index(spark, d1), read_index(spark, d2)
     a = sorted(map(tuple, posting_positions(i1)
                    .select("term", "doc_id", "pos").collect()))
@@ -197,8 +194,7 @@ def test_impact_compaction_preserves_layout(spark, documents, tmp_path):
     from semcode_spark.operators.segments import compact_segments
 
     d = str(tmp_path / "impact_compact")
-    build_index(spark, documents, d, cfg=CFG_IMPACT, groups=2,
-                count_rows=False)
+    build_index(spark, documents, d, cfg=CFG_IMPACT, groups=2)
     before = [(r["doc_id"], round(r["score"], 9)) for r in
               wand_topk_impact(spark, read_index(spark, d),
                                "spark query data", k=10,
@@ -220,8 +216,7 @@ def test_batch_impact_matches_flat(spark, documents, tmp_path):
     from semcode_spark.operators.segments import add_segment
 
     d = str(tmp_path / "batchimp")
-    build_index(spark, documents, d, cfg=CFG_IMPACT, groups=2,
-                count_rows=False)
+    build_index(spark, documents, d, cfg=CFG_IMPACT, groups=2)
     add_segment(spark, d, documents.filter("doc_id < 30").withColumn(
         "text", F.concat(F.lit("fresh spark query data "), F.col("text"))))
     idx = read_index(spark, d)
@@ -244,8 +239,7 @@ def test_batch_impact_requires_forward(spark, documents, tmp_path):
     cfg = EngineConfig(bm25=BM25Config(), index=IndexConfig(
         term_buckets=8, block_size=16, store_forward=False))
     d = str(tmp_path / "batchimp_nofwd")
-    build_index(spark, documents.limit(100), d, cfg=cfg, groups=1,
-                count_rows=False)
+    build_index(spark, documents.limit(100), d, cfg=cfg, groups=1)
     idx = read_index(spark, d)
     with pytest.raises(ValueError, match="forward"):
         bm25_topk_batch(spark, idx, [(0, "the data", 5)], cfg=cfg,

@@ -125,7 +125,7 @@ def test_store_forward_false_build_and_replace(spark, documents, tmp_path):
     nf_cfg = EngineConfig(bm25=BM25Config(), index=IndexConfig(
         term_buckets=8, block_size=16, store_forward=False))
     d = str(tmp_path / "nofwd")
-    build_index(spark, documents, d, cfg=nf_cfg, groups=2, count_rows=False)
+    build_index(spark, documents, d, cfg=nf_cfg, groups=2)
     assert not os.path.isdir(os.path.join(d, "v0", "forward"))
     idx = read_index(spark, d)
     assert idx["forward"] is None
@@ -140,7 +140,7 @@ def test_store_forward_false_build_and_replace(spark, documents, tmp_path):
              .select("doc_id", "text")
              .union(re_docs.select("doc_id", "text")))
     full_dir = str(tmp_path / "full")
-    build_index(spark, fresh, full_dir, cfg=nf_cfg, groups=1, count_rows=False)
+    build_index(spark, fresh, full_dir, cfg=nf_cfg, groups=1)
     inc, full = read_index(spark, d), read_index(spark, full_dir)
     a, b = inc["corpus"].collect()[0], full["corpus"].collect()[0]
     assert a["n_docs"] == b["n_docs"]
@@ -161,8 +161,7 @@ def test_store_forward_false_positional_compaction(spark, documents, tmp_path):
         term_buckets=8, block_size=16, store_positions=True,
         store_forward=False))
     d = str(tmp_path / "posnofwd")
-    build_index(spark, documents.limit(300), d, cfg=cfg, groups=1,
-                count_rows=False)
+    build_index(spark, documents.limit(300), d, cfg=cfg, groups=1)
     idx = read_index(spark, d)
     before = {r["doc_id"] for r in
               phrase_match(spark, idx, "table scan").collect()}
@@ -186,7 +185,7 @@ def test_add_segment_forward_mismatch_raises(spark, documents, tmp_path):
         term_buckets=8, block_size=16, store_forward=False))
     d = str(tmp_path / "fwd_guard")
     build_index(spark, documents.filter("doc_id < 200"), d, cfg=nf_cfg,
-                groups=1, count_rows=False)
+                groups=1)
     with pytest.raises(ValueError, match="forward mismatch"):
         add_segment(spark, d,
                     documents.filter("doc_id >= 200 and doc_id < 220"),
@@ -208,7 +207,7 @@ def test_full_rebuild_never_merges_stale_segments(spark, documents, tmp_path):
 
     d = str(tmp_path / "rebuild")
     base = documents.filter("doc_id < 300")
-    build_index(spark, base, d, cfg=CFG, groups=1, count_rows=False)
+    build_index(spark, base, d, cfg=CFG, groups=1)
     add_segment(spark, d, documents.filter("doc_id >= 300 and doc_id < 350")
                 .select("doc_id", "text"), cfg=CFG)
     assert read_current_version(d) == 0
@@ -216,7 +215,7 @@ def test_full_rebuild_never_merges_stale_segments(spark, documents, tmp_path):
     # full rebuild over a DIFFERENT corpus slice — nothing of the old
     # segments may leak into the result
     rebuilt = documents.filter("doc_id >= 400")
-    build_index(spark, rebuilt, d, cfg=CFG, groups=1, count_rows=False)
+    build_index(spark, rebuilt, d, cfg=CFG, groups=1)
     assert read_current_version(d) == 1
     assert os.path.isdir(os.path.join(d, "v1"))
     idx = read_index(spark, d)
@@ -227,7 +226,7 @@ def test_full_rebuild_never_merges_stale_segments(spark, documents, tmp_path):
     assert ids == {r["doc_id"] for r in rebuilt.collect()}
 
     full_dir = str(tmp_path / "clean")
-    build_index(spark, rebuilt, full_dir, cfg=CFG, groups=1, count_rows=False)
+    build_index(spark, rebuilt, full_dir, cfg=CFG, groups=1)
     clean = read_index(spark, full_dir)
     ts_a = {r["term"]: (r["df"], r["cf"]) for r in idx["term_stats"].collect()}
     ts_b = {r["term"]: (r["df"], r["cf"]) for r in clean["term_stats"].collect()}
@@ -248,16 +247,16 @@ def test_rebuild_after_crashed_rebuild_skips_tainted_version(
 
     d = str(tmp_path / "crashed_rebuild")
     base = documents.filter("doc_id < 300")
-    build_index(spark, base, d, cfg=CFG, groups=1, count_rows=False)
+    build_index(spark, base, d, cfg=CFG, groups=1)
     assert read_current_version(d) == 0
 
     rebuilt = documents.filter("doc_id >= 300")
     with _pytest.raises(RuntimeError, match="injected failure"):
-        build_index(spark, rebuilt, d, cfg=CFG, groups=4, count_rows=False,
+        build_index(spark, rebuilt, d, cfg=CFG, groups=4,
                     fail_after_group=1)  # v1 now holds completed groups 0,1
     assert read_current_version(d) == 0  # old snapshot still live
 
-    out = build_index(spark, rebuilt, d, cfg=CFG, groups=2, count_rows=False)
+    out = build_index(spark, rebuilt, d, cfg=CFG, groups=2)
     assert out["version"] == 2 and read_current_version(d) == 2
     idx = read_index(spark, d)
     n_want = rebuilt.count()
@@ -265,9 +264,26 @@ def test_rebuild_after_crashed_rebuild_skips_tainted_version(
     # postings carry NOTHING from the crashed run: term stats match a
     # clean single-shot build bit-exactly
     clean_dir = str(tmp_path / "clean2")
-    build_index(spark, rebuilt, clean_dir, cfg=CFG, groups=2, count_rows=False)
+    build_index(spark, rebuilt, clean_dir, cfg=CFG, groups=2)
     clean = read_index(spark, clean_dir)
     ts_a = {r["term"]: (r["df"], r["cf"]) for r in idx["term_stats"].collect()}
     ts_b = {r["term"]: (r["df"], r["cf"]) for r in clean["term_stats"].collect()}
     assert ts_a == ts_b
     assert idx["postings"].count() == clean["postings"].count()
+
+
+def test_missing_meta_json_raises(spark, documents, tmp_path):
+    """A committed version without meta.json has no known analyzer or
+    layout: reading or extending it raises, naming the file, instead of
+    opening it as a standard-analyzer index."""
+    import os
+
+    from semcode_spark.operators.segments import add_segment
+
+    d = str(tmp_path / "nometa")
+    build_index(spark, documents.limit(50), d, cfg=CFG, groups=1)
+    os.remove(os.path.join(d, "v0", "meta.json"))
+    with pytest.raises(ValueError, match="meta.json"):
+        read_index(spark, d)
+    with pytest.raises(ValueError, match="meta.json"):
+        add_segment(spark, d, documents.filter("doc_id < 5"))

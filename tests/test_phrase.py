@@ -39,7 +39,7 @@ def _py_phrase(rows, phrase):
 @pytest.fixture(scope="module")
 def pos_index(spark, documents, tmp_path_factory):
     d = str(tmp_path_factory.mktemp("posidx") / "idx")
-    build_index(spark, documents, d, cfg=CFG, groups=2, count_rows=False)
+    build_index(spark, documents, d, cfg=CFG, groups=2)
     return d
 
 
@@ -62,7 +62,7 @@ def test_phrase_three_terms_and_adversarial_adjacency(spark, tmp_path):
          (5, "go go stop go go go")],
         "doc_id long, text string")
     d = str(tmp_path / "adv")
-    build_index(spark, docs, d, cfg=CFG, groups=1, count_rows=False)
+    build_index(spark, docs, d, cfg=CFG, groups=1)
     idx = read_index(spark, d)
     assert {r["doc_id"] for r in phrase_match(spark, idx, "a b c").collect()} \
         == {1, 3}
@@ -83,7 +83,7 @@ def test_phrase_survives_replace_and_compaction(spark, documents, tmp_path):
     docs drop out) and compaction (re-encoded, never re-tokenized)."""
     d = str(tmp_path / "lifecycle")
     base = documents.filter("doc_id < 400")
-    build_index(spark, base, d, cfg=CFG, groups=1, count_rows=False)
+    build_index(spark, base, d, cfg=CFG, groups=1)
     # replace docs 0-49 with text that INTRODUCES the phrase
     re_docs = (documents.filter("doc_id < 50")
                .select("doc_id", F.concat(F.lit("fresh table scan intro "),
@@ -122,8 +122,7 @@ def test_non_positional_index_refuses_phrase(spark, documents, tmp_path):
     flat_cfg = EngineConfig(bm25=BM25Config(), index=IndexConfig(
         term_buckets=8, block_size=16))
     d = str(tmp_path / "flat")
-    build_index(spark, documents.limit(50), d, cfg=flat_cfg, groups=1,
-                count_rows=False)
+    build_index(spark, documents.limit(50), d, cfg=flat_cfg, groups=1)
     idx = read_index(spark, d)
     with pytest.raises(ValueError, match="no positions"):
         phrase_match(spark, idx, "table scan")
@@ -168,7 +167,7 @@ def rare_pos_index(spark, documents, tmp_path_factory):
         F.when(F.col("doc_id") < 30,
                F.concat(F.col("text"), F.lit(" rareword scan tail")))
         .otherwise(F.col("text")).alias("text"))
-    build_index(spark, docs, d, cfg=CFG, groups=1, count_rows=False)
+    build_index(spark, docs, d, cfg=CFG, groups=1)
     return d
 
 
@@ -195,11 +194,9 @@ def test_positional_build_crash_resume(spark, documents, tmp_path):
     d1, d2 = str(tmp_path / "crash"), str(tmp_path / "clean")
     docs = documents.limit(300)
     with pytest.raises(RuntimeError, match="injected failure"):
-        build_index(spark, docs, d1, cfg=CFG, groups=3, fail_after_group=0,
-                    count_rows=False)
-    build_index(spark, docs, d1, cfg=CFG, groups=3, resume=True,
-                count_rows=False)
-    build_index(spark, docs, d2, cfg=CFG, groups=1, count_rows=False)
+        build_index(spark, docs, d1, cfg=CFG, groups=3, fail_after_group=0)
+    build_index(spark, docs, d1, cfg=CFG, groups=3, resume=True)
+    build_index(spark, docs, d2, cfg=CFG, groups=1)
     i1, i2 = read_index(spark, d1), read_index(spark, d2)
     assert i1["positions_stored"] and i2["positions_stored"]
     for phrase in ("table scan", "the data"):

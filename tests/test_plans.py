@@ -112,7 +112,7 @@ def test_wand_query_path_no_wide_join(spark, documents, tmp_path):
 
     cfg = EngineConfig(bm25=BM25Config(), index=IndexConfig(term_buckets=8, block_size=16))
     out = str(tmp_path / "planidx")
-    build_index(spark, documents.limit(200), out, cfg=cfg, groups=1, count_rows=False)
+    build_index(spark, documents.limit(200), out, cfg=cfg, groups=1)
     idx = read_index(spark, out)
     q = wand_topk(spark, idx, "spark query data", k=10, cfg=cfg, prune=False)
     s = plan(q)
@@ -135,7 +135,7 @@ def test_wand_term_filter_pushed_to_postings_scan(spark, documents, tmp_path):
 
     cfg = EngineConfig(bm25=BM25Config(), index=IndexConfig(term_buckets=8, block_size=16))
     out = str(tmp_path / "pushidx")
-    build_index(spark, documents.limit(200), out, cfg=cfg, groups=1, count_rows=False)
+    build_index(spark, documents.limit(200), out, cfg=cfg, groups=1)
     idx = read_index(spark, out)
     q = wand_topk(spark, idx, "spark query data", k=10, cfg=cfg, prune=False)
     s = formatted(q)

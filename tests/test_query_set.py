@@ -23,7 +23,7 @@ def oracle(documents):
 @pytest.fixture(scope="module")
 def index(spark, documents, tmp_path_factory):
     out = str(tmp_path_factory.mktemp("qset_idx"))
-    build_index(spark, documents, out, cfg=CFG, groups=1, count_rows=False)
+    build_index(spark, documents, out, cfg=CFG, groups=1)
     return read_index(spark, out)
 
 
@@ -56,7 +56,7 @@ def test_highlight_topk_position_windows(spark, documents, oracle, tmp_path_fact
     pos_cfg = EngineConfig(bm25=BM25Config(), index=IndexConfig(
         term_buckets=16, block_size=32, store_positions=True))
     d = str(tmp_path_factory.mktemp("hl_idx"))
-    build_index(spark, documents, d, cfg=pos_cfg, groups=1, count_rows=False)
+    build_index(spark, documents, d, cfg=pos_cfg, groups=1)
     idx = read_index(spark, d)
 
     query, k, w = "spark query data", 10, 3
@@ -88,7 +88,7 @@ def test_suggest_and_vocab_surfaces(spark, documents, tmp_path_factory):
     from semcode_spark.operators.query import suggest_terms, vocab_top_terms
 
     d = str(tmp_path_factory.mktemp("sugg_idx"))
-    build_index(spark, documents, d, cfg=CFG, groups=1, count_rows=False)
+    build_index(spark, documents, d, cfg=CFG, groups=1)
     idx = read_index(spark, d)
 
     df_py: Counter = Counter()
@@ -126,7 +126,7 @@ def test_facet_counts_or_semantics(spark, documents, tmp_path_factory):
     from semcode_spark.operators.query import facet_counts
 
     d = str(tmp_path_factory.mktemp("facet_idx"))
-    build_index(spark, documents, d, cfg=CFG, groups=1, count_rows=False)
+    build_index(spark, documents, d, cfg=CFG, groups=1)
     idx = read_index(spark, d)
     got = {(r["facet"], r["n"]) for r in
            facet_counts(spark, idx, documents, "spark query data",

@@ -42,12 +42,12 @@ def test_replace_equals_fresh_build(spark, recrawl, tmp_path):
     corpus (reference force contract, ingestion/manager.py:108-115)."""
     base, re_docs, fresh = recrawl
     inc_dir = str(tmp_path / "inc")
-    build_index(spark, base, inc_dir, cfg=CFG, groups=2, count_rows=False)
+    build_index(spark, base, inc_dir, cfg=CFG, groups=2)
     out = add_segment(spark, inc_dir, re_docs, cfg=CFG)
     assert out["n_replaced"] == 50
 
     full_dir = str(tmp_path / "full")
-    build_index(spark, fresh, full_dir, cfg=CFG, groups=1, count_rows=False)
+    build_index(spark, fresh, full_dir, cfg=CFG, groups=1)
 
     inc, full = read_index(spark, inc_dir), read_index(spark, full_dir)
     a, b = inc["corpus"].collect()[0], full["corpus"].collect()[0]
@@ -74,7 +74,7 @@ def test_replace_then_compact(spark, recrawl, tmp_path):
     stats survive, tombstones are gone."""
     base, re_docs, fresh = recrawl
     d = str(tmp_path / "inc2")
-    build_index(spark, base, d, cfg=CFG, groups=1, count_rows=False)
+    build_index(spark, base, d, cfg=CFG, groups=1)
     add_segment(spark, d, re_docs, cfg=CFG)
     before = _run(spark, read_index(spark, d))
     compact_segments(spark, d, cfg=CFG)
@@ -91,7 +91,7 @@ def test_crash_before_snapshot_commit_preserves_old_index(spark, recrawl, tmp_pa
     then succeeds and is invisible-failure-free."""
     base, re_docs, _ = recrawl
     d = str(tmp_path / "crash")
-    build_index(spark, base, d, cfg=CFG, groups=2, count_rows=False)
+    build_index(spark, base, d, cfg=CFG, groups=2)
     add_segment(spark, d, re_docs, cfg=CFG)
     before = _run(spark, read_index(spark, d))
     with pytest.raises(RuntimeError, match="injected failure"):
@@ -114,7 +114,7 @@ def test_partial_segment_is_invisible(spark, documents, tmp_path, monkeypatch):
     base = documents.filter("doc_id < 350")
     extra = documents.filter("doc_id >= 350")
     d = str(tmp_path / "partial")
-    build_index(spark, base, d, cfg=CFG, groups=1, count_rows=False)
+    build_index(spark, base, d, cfg=CFG, groups=1)
     before = _run(spark, read_index(spark, d))
 
     real_append = SEG._manifest_append
@@ -137,7 +137,7 @@ def test_partial_segment_is_invisible(spark, documents, tmp_path, monkeypatch):
     assert idx2["corpus"].collect()[0]["n_docs"] == 500
 
     full_dir = str(tmp_path / "full")
-    build_index(spark, documents, full_dir, cfg=CFG, groups=1, count_rows=False)
+    build_index(spark, documents, full_dir, cfg=CFG, groups=1)
     assert _run(spark, idx2) == _run(spark, read_index(spark, full_dir))
 
 
@@ -149,7 +149,7 @@ def test_compaction_resume_skips_completed_groups(spark, recrawl, tmp_path):
 
     base, re_docs, _ = recrawl
     d = str(tmp_path / "cresume")
-    build_index(spark, base, d, cfg=CFG, groups=1, count_rows=False)
+    build_index(spark, base, d, cfg=CFG, groups=1)
     add_segment(spark, d, re_docs, cfg=CFG)
     before = _run(spark, read_index(spark, d))
 
@@ -176,7 +176,7 @@ def test_add_and_replace_after_compaction(spark, documents, recrawl, tmp_path):
     corpus (group numbering and tombstones survive the version flip)."""
     base, re_docs, fresh = recrawl
     d = str(tmp_path / "lifecycle")
-    build_index(spark, base, d, cfg=CFG, groups=2, count_rows=False)
+    build_index(spark, base, d, cfg=CFG, groups=2)
     add_segment(spark, d, re_docs, cfg=CFG)
     compact_segments(spark, d, cfg=CFG, groups=2)
 
@@ -189,7 +189,7 @@ def test_add_and_replace_after_compaction(spark, documents, recrawl, tmp_path):
     final = (fresh.filter("doc_id < 200 or doc_id >= 220")
              .union(re2.select("doc_id", "text")))
     full_dir = str(tmp_path / "full2")
-    build_index(spark, final, full_dir, cfg=CFG, groups=1, count_rows=False)
+    build_index(spark, final, full_dir, cfg=CFG, groups=1)
     assert _run(spark, read_index(spark, d)) == \
         _run(spark, read_index(spark, full_dir))
 
@@ -197,7 +197,7 @@ def test_add_and_replace_after_compaction(spark, documents, recrawl, tmp_path):
 def test_compaction_resume_rejects_grain_change(spark, recrawl, tmp_path):
     base, re_docs, _ = recrawl
     d = str(tmp_path / "grain")
-    build_index(spark, base, d, cfg=CFG, groups=1, count_rows=False)
+    build_index(spark, base, d, cfg=CFG, groups=1)
     add_segment(spark, d, re_docs, cfg=CFG)
     with pytest.raises(RuntimeError, match="injected failure after compaction group 0"):
         compact_segments(spark, d, cfg=CFG, groups=3, fail_after_group=0)
@@ -215,7 +215,7 @@ def test_compaction_preserves_analyzer(spark, documents, tmp_path):
     cfg = EngineConfig(bm25=BM25Config(), index=IC(
         term_buckets=8, block_size=16, analyzer="stop_stem"))
     d = str(tmp_path / "an")
-    build_index(spark, documents.limit(100), d, cfg=cfg, groups=1, count_rows=False)
+    build_index(spark, documents.limit(100), d, cfg=cfg, groups=1)
     compact_segments(spark, d)  # default cfg: analyzer='standard'
     assert read_index(spark, d)["analyzer"] == "stop_stem"
 
@@ -225,7 +225,7 @@ def test_gc_versions_removes_only_orphans(spark, documents, tmp_path):
     import os
 
     d = str(tmp_path / "gc")
-    build_index(spark, documents.limit(100), d, cfg=CFG, groups=1, count_rows=False)
+    build_index(spark, documents.limit(100), d, cfg=CFG, groups=1)
     before = _run(spark, read_index(spark, d))
     # aborted compaction leaves a partial v1; a stale v7 orphan too
     with pytest.raises(RuntimeError):
@@ -247,7 +247,7 @@ def test_resume_after_gc_rebuilds_missing_stages(spark, recrawl, tmp_path):
 
     base, re_docs, _ = recrawl
     d = str(tmp_path / "gcresume")
-    build_index(spark, base, d, cfg=CFG, groups=1, count_rows=False)
+    build_index(spark, base, d, cfg=CFG, groups=1)
     add_segment(spark, d, re_docs, cfg=CFG)
     before = _run(spark, read_index(spark, d))
 
@@ -271,15 +271,15 @@ def test_build_resume_rejects_analyzer_change(spark, documents, tmp_path):
     from semcode_spark.config import IndexConfig as IC
 
     d = str(tmp_path / "an_guard")
-    build_index(spark, documents.limit(50), d, cfg=CFG, groups=1, count_rows=False)
+    build_index(spark, documents.limit(50), d, cfg=CFG, groups=1)
     stop_cfg = EngineConfig(bm25=BM25Config(), index=IC(
         term_buckets=8, block_size=16, analyzer="stop"))
     with pytest.raises(ValueError, match="property mismatch"):
         build_index(spark, documents.limit(50), d, cfg=stop_cfg,
-                    groups=1, resume=True, count_rows=False)
+                    groups=1, resume=True)
     # a full non-resume rebuild re-labels the index and re-tokenizes
     build_index(spark, documents.limit(50), d, cfg=stop_cfg,
-                groups=1, count_rows=False)
+                groups=1)
     assert read_index(spark, d)["analyzer"] == "stop"
 
 
@@ -287,7 +287,7 @@ def test_add_segment_rejects_intra_batch_duplicates(spark, documents, tmp_path):
     """A batch containing the same doc_id twice has no defined
     replacement order — add_segment refuses instead of double-counting."""
     d = str(tmp_path / "dup_batch")
-    build_index(spark, documents.limit(50), d, cfg=CFG, groups=1, count_rows=False)
+    build_index(spark, documents.limit(50), d, cfg=CFG, groups=1)
     dup = documents.filter("doc_id >= 50 and doc_id < 60").select("doc_id", "text")
     with pytest.raises(ValueError, match="duplicate doc_ids"):
         add_segment(spark, d, dup.union(dup), cfg=CFG)
@@ -323,7 +323,7 @@ def test_replace_deltas_read_forward_not_postings(spark, recrawl, tmp_path):
 
     base, re_docs, _ = recrawl
     d = str(tmp_path / "fwd_plan")
-    build_index(spark, base, d, cfg=CFG, groups=2, count_rows=False)
+    build_index(spark, base, d, cfg=CFG, groups=2)
     idx = read_index(spark, d)
     assert idx["forward"] is not None
 
@@ -348,7 +348,7 @@ def test_replace_falls_back_to_decode_for_legacy_index(spark, recrawl, tmp_path)
 
     base, re_docs, fresh = recrawl
     d = str(tmp_path / "legacy_fwd")
-    build_index(spark, base, d, cfg=CFG, groups=1, count_rows=False)
+    build_index(spark, base, d, cfg=CFG, groups=1)
     _sh.rmtree(os.path.join(version_dir(d, 0), "forward"))
     idx = read_index(spark, d)
     assert idx["forward"] is None
@@ -359,7 +359,7 @@ def test_replace_falls_back_to_decode_for_legacy_index(spark, recrawl, tmp_path)
     assert not os.path.isdir(os.path.join(version_dir(d, 0), "forward"))
 
     full_dir = str(tmp_path / "legacy_full")
-    build_index(spark, fresh, full_dir, cfg=CFG, groups=1, count_rows=False)
+    build_index(spark, fresh, full_dir, cfg=CFG, groups=1)
     inc, full = read_index(spark, d), read_index(spark, full_dir)
     ts_a = {r["term"]: (r["df"], r["cf"]) for r in inc["term_stats"].collect()}
     ts_b = {r["term"]: (r["df"], r["cf"]) for r in full["term_stats"].collect()}
@@ -410,14 +410,12 @@ def test_mega_batch_broadcast_gating(spark, recrawl, tmp_path):
         index=IndexConfig(term_buckets=8, block_size=16,
                           broadcast_ids_max=0))
     inc_dir = str(tmp_path / "inc_shuffle")
-    build_index(spark, base, inc_dir, cfg=shuffle_cfg, groups=2,
-                count_rows=False)
+    build_index(spark, base, inc_dir, cfg=shuffle_cfg, groups=2)
     out = add_segment(spark, inc_dir, re_docs, cfg=shuffle_cfg)
     assert out["n_replaced"] == 50
 
     full_dir = str(tmp_path / "full_shuffle")
-    build_index(spark, fresh, full_dir, cfg=shuffle_cfg, groups=1,
-                count_rows=False)
+    build_index(spark, fresh, full_dir, cfg=shuffle_cfg, groups=1)
     inc, full = read_index(spark, inc_dir), read_index(spark, full_dir)
     a, b = inc["corpus"].collect()[0], full["corpus"].collect()[0]
     assert a["n_docs"] == b["n_docs"] == 500
@@ -437,13 +435,13 @@ def test_compaction_resume_never_adopts_crashed_rebuild_stages(
     (pmod(bucket,2)), silently dropping/duplicating buckets."""
     d = str(tmp_path / "rebuild_then_compact")
     base = documents.filter("doc_id < 300")
-    build_index(spark, base, d, cfg=CFG, groups=1, count_rows=False)
+    build_index(spark, base, d, cfg=CFG, groups=1)
     before = _run(spark, read_index(spark, d))
     with pytest.raises(RuntimeError, match="injected failure"):
         # crashed rebuild over DIFFERENT docs, 4-group grain, lands
         # partial stages in v1
         build_index(spark, documents.filter("doc_id >= 300"), d, cfg=CFG,
-                    groups=4, count_rows=False, fail_after_group=1)
+                    groups=4, fail_after_group=1)
     assert read_current_version(d) == 0
     out = compact_segments(spark, d, cfg=CFG, groups=2, resume=True)
     # landed on a FRESH version, not the rebuild's v1

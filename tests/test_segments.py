@@ -31,13 +31,13 @@ def _run(spark, index, cfg=CFG):
 def test_segment_add_equals_full_rebuild(spark, documents, split_corpus, tmp_path):
     base, extra = split_corpus
     inc_dir = str(tmp_path / "inc")
-    build_index(spark, base, inc_dir, cfg=CFG, groups=2, count_rows=False)
+    build_index(spark, base, inc_dir, cfg=CFG, groups=2)
     seg = add_segment(spark, inc_dir, extra, cfg=CFG)
     assert seg["n_docs"] == extra.count()
     assert seg["group"] >= 2  # appended after the base groups
 
     full_dir = str(tmp_path / "full")
-    build_index(spark, documents, full_dir, cfg=CFG, groups=1, count_rows=False)
+    build_index(spark, documents, full_dir, cfg=CFG, groups=1)
 
     inc, full = read_index(spark, inc_dir), read_index(spark, full_dir)
     assert _run(spark, inc) == _run(spark, full)
@@ -51,7 +51,7 @@ def test_segment_add_equals_full_rebuild(spark, documents, split_corpus, tmp_pat
 def test_wand_lossless_after_segment(spark, documents, split_corpus, tmp_path):
     base, extra = split_corpus
     d = str(tmp_path / "inc2")
-    build_index(spark, base, d, cfg=CFG, groups=1, count_rows=False)
+    build_index(spark, base, d, cfg=CFG, groups=1)
     add_segment(spark, d, extra, cfg=CFG)
     idx = read_index(spark, d)
     for _, q, k in QUERIES:
@@ -65,7 +65,7 @@ def test_wand_lossless_after_segment(spark, documents, split_corpus, tmp_path):
 def test_compaction_preserves_answers(spark, split_corpus, tmp_path):
     base, extra = split_corpus
     d = str(tmp_path / "inc3")
-    build_index(spark, base, d, cfg=CFG, groups=2, count_rows=False)
+    build_index(spark, base, d, cfg=CFG, groups=2)
     add_segment(spark, d, extra, cfg=CFG)
     before = _run(spark, read_index(spark, d))
     compact_segments(spark, d, cfg=CFG)
@@ -89,8 +89,7 @@ def test_concurrent_writer_lease(spark, documents, tmp_path):
         ConcurrentWriterError, acquire_lease, release_lease)
 
     d = str(tmp_path / "lease")
-    build_index(spark, documents.limit(100), d, cfg=CFG, groups=1,
-                count_rows=False)
+    build_index(spark, documents.limit(100), d, cfg=CFG, groups=1)
     lease = acquire_lease(d, "holder-test")
     with pytest.raises(ConcurrentWriterError, match="locked by another writer"):
         add_segment(spark, d, documents.filter("doc_id >= 100 and doc_id < 110"),
@@ -155,8 +154,7 @@ def test_manifest_consolidation_bounds_files(spark, documents, tmp_path):
     import os
 
     d = str(tmp_path / "consol")
-    build_index(spark, documents.limit(200), d, cfg=CFG, groups=3,
-                count_rows=False)
+    build_index(spark, documents.limit(200), d, cfg=CFG, groups=3)
     for lo in (200, 250, 300):
         add_segment(spark, d, documents.filter(
             f"doc_id >= {lo} and doc_id < {lo + 50}"), cfg=CFG)
@@ -182,8 +180,7 @@ def test_append_only_refuses_collisions(spark, documents, tmp_path):
     """replace=False is append-only: a colliding doc_id raises instead
     of silently double-counting; disjoint ids append fine."""
     d = str(tmp_path / "appendonly")
-    build_index(spark, documents.limit(100), d, cfg=CFG, groups=1,
-                count_rows=False)
+    build_index(spark, documents.limit(100), d, cfg=CFG, groups=1)
     with pytest.raises(ValueError, match="already exist"):
         add_segment(spark, d, documents.filter("doc_id < 10"),
                     cfg=CFG, replace=False)
@@ -203,8 +200,7 @@ def test_compaction_crash_after_forward_stage_resumes(spark, documents,
     from semcode_spark.operators.index_build import read_current_version
 
     d = str(tmp_path / "fwdcrash")
-    build_index(spark, documents.limit(300), d, cfg=CFG, groups=1,
-                count_rows=False)
+    build_index(spark, documents.limit(300), d, cfg=CFG, groups=1)
     add_segment(spark, d, documents.filter("doc_id >= 300 and doc_id < 350"),
                 cfg=CFG)
     before = _run(spark, read_index(spark, d))
@@ -234,8 +230,7 @@ def test_compaction_due_policy(spark, documents, tmp_path):
     from pyspark.sql import functions as SF
 
     d = str(tmp_path / "due")
-    build_index(spark, documents.limit(400), d, cfg=CFG, groups=1,
-                count_rows=False)
+    build_index(spark, documents.limit(400), d, cfg=CFG, groups=1)
     idx = read_index(spark, d)
     assert not compaction_due(idx)
     # replace 25% of docs → tombstone pressure crosses the default 20%
@@ -247,3 +242,37 @@ def test_compaction_due_policy(spark, documents, tmp_path):
     assert compaction_due(idx)
     compact_segments(spark, d, cfg=CFG)
     assert not compaction_due(read_index(spark, d))
+
+
+def _job_count(spark, fn):
+    """(Spark jobs that ``fn()`` runs, its result), counted by job group."""
+    import uuid
+
+    sc = spark.sparkContext
+    group = f"jobcount-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, group)
+    try:
+        out = fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    sc._jsc.sc().listenerBus().waitUntilEmpty(30_000)
+    return len(sc.statusTracker().getJobIdsForGroup(group)), out
+
+
+def test_compaction_due_is_metadata_only(spark, documents, tmp_path):
+    """compaction_due reads the visible group list and the tombstone
+    count off the handle: no Spark job on a cold handle without
+    tombstones, at most one (the corpus row) with them."""
+    from semcode_spark.operators.segments import compaction_due
+
+    d = str(tmp_path / "due_jobs")
+    build_index(spark, documents.limit(200), d, cfg=CFG, groups=2)
+    idx = read_index(spark, d)
+    assert _job_count(spark, lambda: compaction_due(idx)) == (0, False)
+    assert _job_count(spark, lambda: compaction_due(idx, max_groups=1)) == (0, True)
+
+    add_segment(spark, d, documents.filter("doc_id < 60"), cfg=CFG)
+    idx = read_index(spark, d)
+    n, due = _job_count(spark, lambda: compaction_due(idx))
+    assert n <= 1 and due

@@ -41,7 +41,7 @@ def test_incremental_index_exactly_once_and_rank_identical(spark, tmp_path, docu
     assert spark.read.parquet(os.path.join(out, "manifest")).count() == man.count()
 
     full = str(tmp_path / "full_index")
-    build_index(spark, documents, full, groups=1, count_rows=False)
+    build_index(spark, documents, full, groups=1)
     queries = [(0, "spark query data", 10), (1, "dup", 10)]
     a = sorted(map(tuple, bm25_topk_batch(spark, read_index(spark, out), queries).collect()))
     b = sorted(map(tuple, bm25_topk_batch(spark, read_index(spark, full), queries).collect()))

@@ -45,7 +45,7 @@ def _ans(spark, idx):
 def test_reader_pinned_version_survives_flip_then_fails_loud_after_gc(
         spark, documents, tmp_path):
     d = str(tmp_path / "flip")
-    build_index(spark, documents, d, cfg=CFG, groups=1, count_rows=False)
+    build_index(spark, documents, d, cfg=CFG, groups=1)
     old_handle = read_index(spark, d)
     before = _ans(spark, old_handle)
 
@@ -67,8 +67,7 @@ def test_reader_pinned_version_survives_flip_then_fails_loud_after_gc(
 def test_gc_is_lease_serialized_and_never_touches_current(
         spark, documents, tmp_path):
     d = str(tmp_path / "gcrace")
-    build_index(spark, documents.limit(150), d, cfg=CFG, groups=1,
-                count_rows=False)
+    build_index(spark, documents.limit(150), d, cfg=CFG, groups=1)
     # a live writer (e.g. a compaction building v1) blocks gc: racing it
     # would delete the version being built
     lease = acquire_lease(d, "compaction-in-flight")

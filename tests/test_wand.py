@@ -58,7 +58,7 @@ def test_wand_theta_tie_boundary(spark, tmp_path):
     rows += [(100 + i, "cherry date elderberry fig") for i in range(5)]  # non-matching
     docs = spark.createDataFrame(rows, "doc_id long, text string")
     out = str(tmp_path / "tie_index")
-    build_index(spark, docs, out, cfg=CFG, groups=1, count_rows=False)
+    build_index(spark, docs, out, cfg=CFG, groups=1)
     idx = read_index(spark, out)
     want = bm25_topk(docs, "apple", k=10, cfg=CFG).collect()
     got = wand_topk(spark, idx, "apple", k=10, cfg=CFG, prune="impact").collect()
@@ -74,7 +74,7 @@ def test_wand_theta_tie_multiterm(spark, tmp_path):
     rows += [(200 + i, "banana") for i in range(10)]
     docs = spark.createDataFrame(rows, "doc_id long, text string")
     out = str(tmp_path / "tie_index2")
-    build_index(spark, docs, out, cfg=CFG, groups=1, count_rows=False)
+    build_index(spark, docs, out, cfg=CFG, groups=1)
     idx = read_index(spark, out)
     want = bm25_topk(docs, "apple banana", k=12, cfg=CFG).collect()
     got = wand_topk(spark, idx, "apple banana", k=12, cfg=CFG,
@@ -135,7 +135,7 @@ def served(spark, documents, tmp_path_factory):
     from semcode_spark.operators.segments import add_segment
 
     out = str(tmp_path_factory.mktemp("serving_idx"))
-    build_index(spark, documents, out, cfg=CFG, groups=2, count_rows=False)
+    build_index(spark, documents, out, cfg=CFG, groups=2)
     add_segment(spark, out, documents.filter("doc_id < 30").withColumn(
         "text", F.concat(F.lit("fresh spark query data "), F.col("text"))),
         cfg=CFG)
@@ -247,7 +247,7 @@ def test_batch_pruning_lossless(spark, documents, tmp_path):
     from semcode_spark.operators.segments import add_segment
 
     d = str(tmp_path / "batchidx")
-    build_index(spark, documents, d, cfg=CFG, groups=2, count_rows=False)
+    build_index(spark, documents, d, cfg=CFG, groups=2)
     add_segment(spark, d, documents.filter("doc_id < 30").withColumn(
         "text", F.concat(F.lit("fresh spark query data "), F.col("text"))),
         cfg=CFG)
@@ -521,7 +521,7 @@ def test_cold_paths_run_no_python(spark, documents, tmp_path):
 
     steps = [
         ("build_index", lambda: build_index(
-            spark, documents.limit(300), d, cfg=cfg, groups=2, count_rows=False)),
+            spark, documents.limit(300), d, cfg=cfg, groups=2)),
         ("add_segment", lambda: add_segment(
             spark, d, documents.filter("doc_id < 20").withColumn(
                 "text", F.concat(F.lit("fresh spark query data "), F.col("text"))))),
@@ -579,7 +579,7 @@ def test_cli_query_prints_the_plan(spark, documents, tmp_path, monkeypatch, caps
     from semcode_spark.operators import query as Q
 
     d = str(tmp_path / "cli_idx")
-    build_index(spark, documents.limit(200), d, groups=1, count_rows=False,
+    build_index(spark, documents.limit(200), d, groups=1,
                 cfg=EngineConfig(bm25=BM25Config(), index=IndexConfig(
                     term_buckets=4, block_size=16, impact_ordered=True)))
     monkeypatch.setattr(session, "get_spark", lambda *a, **kw: spark)
@@ -610,7 +610,7 @@ def test_layout_2_index_rejected(spark, documents, tmp_path):
     from semcode_spark.operators.segments import add_segment, compact_segments
 
     d = str(tmp_path / "old_layout")
-    build_index(spark, documents.limit(100), d, cfg=CFG, groups=1, count_rows=False)
+    build_index(spark, documents.limit(100), d, cfg=CFG, groups=1)
     meta_path = os.path.join(d, "v0", "meta.json")
     with open(meta_path) as f:
         meta = json.load(f)
@@ -627,8 +627,7 @@ def test_layout_2_index_rejected(spark, documents, tmp_path):
     with pytest.raises(ValueError, match=msg):
         build_index(spark, documents.limit(100), d, cfg=CFG, groups=1, resume=True)
     # a full rebuild is the way forward: it lands in a fresh version
-    out = build_index(spark, documents.limit(100), d, cfg=CFG, groups=1,
-                      count_rows=False)
+    out = build_index(spark, documents.limit(100), d, cfg=CFG, groups=1)
     assert out["version"] == 1
     assert read_index(spark, d)["postings"].count() > 0
 
