@@ -1,7 +1,7 @@
 """Headline benchmark — one JSON line on stdout.
 
 Runs at $SPARK_GRAFT_SF_DIR (default /root/testdata/sf0.1) on
-local[$SPARK_GRAFT_CPUS] (default 32):
+local[$SPARK_GRAFT_CPUS] (default: the cores this process may run on):
 
 - index build throughput over the documents table AND over a larger
   synthetic webtext corpus (the north-rule metric: docs/sec indexed).
@@ -40,12 +40,12 @@ from semcode_spark.session import get_spark
 
 def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
     n_webtext = int(os.environ.get("SPARK_GRAFT_BENCH_DOCS", "50000"))
     sf = sf_dir.rstrip("/").rsplit("sf", 1)[-1]
 
-    spark = get_spark("semcode-bench", master=f"local[{cpus}]",
-                      shuffle_partitions=max(cpus, 16))
+    spark = get_spark("semcode-bench")
+    spark.conf.set("spark.sql.shuffle.partitions",
+                   str(max(spark.sparkContext.defaultParallelism, 16)))
 
     import __spark_entry__ as entry
     from semcode_spark.operators.index_build import build_index, read_index

@@ -38,9 +38,9 @@ def main() -> None:
         "SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1"))
     args = ap.parse_args()
 
-    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
-    spark = get_spark("semcode-bench-extra", master=f"local[{cpus}]",
-                      shuffle_partitions=max(cpus, 16))
+    spark = get_spark("semcode-bench-extra")
+    spark.conf.set("spark.sql.shuffle.partitions",
+                   str(max(spark.sparkContext.defaultParallelism, 16)))
     import __spark_entry__ as entry
     import pyspark.sql.functions as F
     from semcode_spark.operators import textstats as TS

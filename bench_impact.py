@@ -26,9 +26,9 @@ from semcode_spark.session import get_spark
 
 def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
-    spark = get_spark("semcode-bench-impact", master=f"local[{cpus}]",
-                      shuffle_partitions=max(cpus, 16))
+    spark = get_spark("semcode-bench-impact")
+    spark.conf.set("spark.sql.shuffle.partitions",
+                   str(max(spark.sparkContext.defaultParallelism, 16)))
     import pyspark.sql.functions as F
     from semcode_spark.config import BM25Config, EngineConfig, IndexConfig
     from semcode_spark.fixtures.queries import REFERENCE_QUERIES

@@ -27,10 +27,12 @@ class BM25Config:
     k1: float = 1.2
     b: float = 0.75
     default_k: int = 10  # reference default top_k (storage/milvus_store.py:135)
-    # below this many candidate blocks a pre-aggregate shrink pass
-    # (phrase_match's and phrase_topk's rarest-term AND prefilter) costs
-    # more than the aggregate it would shrink. Phrase queries only: the
-    # retrieval planner's prune="auto" switches on impact_auto_min_blocks.
+    # below this many candidate blocks a pre-aggregate shrink pass (the
+    # phrase planner's rarest-term AND prefilter) costs more than the
+    # aggregate it would shrink. A phrase batch takes the prefilter only
+    # when every phrase passes this and the other gates. Phrase queries
+    # only: the retrieval planner's prune="auto" switches on
+    # impact_auto_min_blocks.
     prune_min_blocks: int = 20000
     # ranking compares scores rounded to this many decimals (then doc_id):
     # float sums over query terms are order-dependent at the ulp level

@@ -187,14 +187,16 @@ def read_meta(vdir: str) -> dict:
 
 # ---------------------------------------------------------------- stats ----
 
-def bm25_weight(avgdl: float, cfg: EngineConfig = DEFAULT) -> Column:
+def bm25_weight(avgdl: float | Column, cfg: EngineConfig = DEFAULT,
+                tf: str = "tf") -> Column:
     """BM25's per-posting weight, the idf factor aside, over the ``tf``
-    and ``doc_len`` columns: the one expression the build's block
-    bounds and every query-side score share (operators/blocks.bm25_w is
-    its numpy twin)."""
+    (or the named) and ``doc_len`` columns: the one expression the
+    build's block bounds, every query-side score and the exhaustive
+    bm25_scores share (operators/blocks.bm25_w is its numpy twin).
+    ``avgdl`` is a driver-side float or an in-plan column."""
     k1, b = cfg.bm25.k1, cfg.bm25.b
-    return (F.col("tf") * (k1 + 1.0)) / (
-        F.col("tf") + k1 * (1.0 - b + b * F.col("doc_len") / avgdl))
+    return (F.col(tf) * (k1 + 1.0)) / (
+        F.col(tf) + k1 * (1.0 - b + b * F.col("doc_len") / avgdl))
 
 
 def doc_stats(docs: DataFrame, id_col: str = "doc_id", text_col: str = "text",

@@ -1,6 +1,6 @@
 """BM25 top-k ranked retrieval.
 
-Two paths, both DataFrame-planned:
+Three paths, all DataFrame-planned:
 
 1. ``bm25_topk`` — exhaustive scoring straight off the corpus (or a flat
    tf relation). This is the oracle-comparable path: broadcast the query
@@ -26,12 +26,21 @@ Two paths, both DataFrame-planned:
    candidate blocks and impact above it. A batch shares every decode
    across its queries.
 
-Physical shape: one query scores per doc_id (hash agg) and takes its
-top-k with TakeOrderedAndProject — a local top-k per partition, merged
-on the driver (SURVEY §3.2; the shape of "Distributed Similarity Joins
-over Top-K Rankings", EDBT 2020). On a serving handle (postings cached
-hash-partitioned by doc_id) a flat query is one job with no exchange. A
-batch scores per (query_id, doc_id) and ranks with a per-query window.
+3. ``phrase_match``, ``phrase_topk`` and ``phrase_topk_batch`` — the
+   positional index, thin entry points over ONE phrase planner
+   (``_phrase``): slot alignment over the phrase terms' positions gives
+   each query's containing docs (optionally prefiltered to the docs of
+   each query's rarest term), and the ranked surfaces score the phrase
+   terms' posting rows of those docs with the retrieval planner's
+   ``_scores`` and ``_topk``.
+
+Physical shape (both planners): one query scores per doc_id (hash agg)
+and takes its top-k with TakeOrderedAndProject — a local top-k per
+partition, merged on the driver (SURVEY §3.2; the shape of "Distributed
+Similarity Joins over Top-K Rankings", EDBT 2020). On a serving handle
+(postings cached hash-partitioned by doc_id) a flat query is one job
+with no exchange. A batch scores per (query_id, doc_id) and ranks with
+a per-query window.
 
 Rank identity: total order (round(score, d) desc, doc_id asc) — SURVEY
 §7.3(b); d = cfg.bm25.rank_decimals.
@@ -63,8 +72,10 @@ BATCH_SCHEMA = "query_id long, rank int, doc_id long, score double"
 Plan = Literal[False, "auto", "impact"]
 
 
-def idf_col(df_col, n_docs: float):
-    """Lucene-style non-negative idf: ln((N - df + 0.5)/(df + 0.5) + 1)."""
+def idf_col(df_col: Column, n_docs: float | Column) -> Column:
+    """Lucene-style non-negative idf: ln((N - df + 0.5)/(df + 0.5) + 1);
+    ``n_docs`` is a driver-side float or an in-plan column (idf_py is
+    its driver-side twin)."""
     return F.log((F.lit(n_docs) - df_col + 0.5) / (df_col + 0.5) + 1.0)
 
 
@@ -184,7 +195,6 @@ def bm25_scores(
     from functools import reduce as _reduce
 
     toks = analyzer(cfg.index.analyzer)
-    k1, b = cfg.bm25.k1, cfg.bm25.b
     terms = sorted(set(query_terms))
     if not terms:  # no term can match a doc
         return docs.select(F.col(id_col).alias("doc_id"),
@@ -202,12 +212,12 @@ def bm25_scores(
         F.col(id_col).alias("doc_id"), toks(F.col(text_col)).alias("_toks"))
     arr = F.col("_toks")
     proj = base.select(
-        "doc_id", F.size(arr).alias("dl"),
+        "doc_id", F.size(arr).alias("doc_len"),
         *[F.size(F.filter(arr, _eq(t))).alias(f"_tf{i}")
           for i, t in enumerate(terms)])
     stats = proj.agg(
         F.count(F.lit(1)).cast("double").alias("_n_docs"),
-        F.avg("dl").alias("_avgdl"),
+        F.avg("doc_len").alias("_avgdl"),
         *[F.sum((F.col(f"_tf{i}") > 0).cast("long")).alias(f"_df{i}")
           for i in range(len(terms))])
     cand = proj.filter(_reduce(
@@ -215,12 +225,9 @@ def bm25_scores(
     matched = cand.join(F.broadcast(stats))  # 1-row corpus stats, no collect
 
     def contrib(i: int):
-        tf = F.col(f"_tf{i}")
-        idf = F.log((F.col("_n_docs") - F.col(f"_df{i}") + 0.5)
-                    / (F.col(f"_df{i}") + 0.5) + 1.0)
-        w = (tf * (k1 + 1.0)) / (
-            tf + k1 * (1.0 - b + b * F.col("dl") / F.col("_avgdl")))
-        return F.when(tf > 0, idf * w).otherwise(F.lit(0.0))
+        idf = idf_col(F.col(f"_df{i}"), F.col("_n_docs"))
+        w = bm25_weight(F.col("_avgdl"), cfg, tf=f"_tf{i}")
+        return F.when(F.col(f"_tf{i}") > 0, idf * w).otherwise(F.lit(0.0))
 
     score = _reduce(lambda a, c: a + c,
                     [contrib(i) for i in range(len(terms))])
@@ -523,53 +530,15 @@ def bm25_topk_conj(
     )
 
 
-def _rare_term_candidates(
-    spark: SparkSession,
-    index: dict[str, DataFrame],
-    uniq: list[str],
-    cfg: EngineConfig,
-):
-    """AND-prefilter for multi-term phrase surfaces: (candidates, can
-    broadcast) — doc_ids of the RAREST phrase term, or (None, False)
-    when the prefilter cannot pay for itself.
-
-    Shrinks the slot-alignment (and, in phrase_topk, the scoring)
-    shuffles to docs containing the rarest term. Candidates come from a
-    doc_ids-only read of that ONE term's rows — a strict subset of
-    the positional read's rows, never a second full pass over all
-    of them (r3 decoded every phrase term's blocks twice here). Slot
-    alignment itself enforces containment of the remaining terms, so a
-    superset candidate set is correct — which also means the candidate
-    side needs NO dead-postings filter (the positional rows it joins
-    against are already tombstone-filtered; a superset that still lists
-    dead ids keeps zero extra rows).
-
-    Gates: fire only past the flat-vs-prune block threshold AND when
-    the rarest term is selective enough to shrink anything (df < N/2 —
-    an all-stopword phrase gains nothing). Broadcast the candidate side
-    while its exact upper bound (the rarest term's df, known from
-    metadata) fits cfg.index.broadcast_ids_max; shuffle-join above."""
-    if len(uniq) < 2:
-        return None, False
-    meta = _term_meta(spark, index, uniq)  # corpus row rides along (r6)
-    n_docs_idx = float(index["_corpus_row"]["n_docs"])
-    if meta.n_blocks <= cfg.bm25.prune_min_blocks:
-        return None, False
-    # live dfs ride along in the term metadata (memoized / serving-mode
-    # dict) — no separate term_stats collect job here
-    dfr = meta.dfs
-    if len(dfr) != len(uniq):
-        return None, False
-    rare = min(dfr, key=lambda t: (dfr[t], t))
-    if dfr[rare] >= n_docs_idx / 2:
-        return None, False
-    cand = posting_ids(index, F.col("term") == rare).select("doc_id").distinct()
-    # the candidate read skips tombstone filtering (a superset is
-    # correct — see above), so the broadcast bound must be the RAW id
-    # count: live df (net of replace deltas) plus every tombstone, the
-    # exact worst case after heavy replacement (r4 ADVICE #2)
-    raw_ids_ub = dfr[rare] + index.get("_n_tombstones", 0)
-    return cand, raw_ids_ub <= cfg.index.broadcast_ids_max
+def _check_positions(index: dict) -> None:
+    """Phrase queries and highlights read positional postings. An index
+    built without them raises: a silent fallback to a corpus scan would
+    hide a 100×-scale regression."""
+    if not index.get("positions_stored"):
+        raise ValueError(
+            "index stores no positions — build with "
+            "IndexConfig(store_positions=True) to serve phrase queries "
+            "and highlights")
 
 
 def phrase_match(
@@ -579,53 +548,14 @@ def phrase_match(
     cfg: EngineConfig = DEFAULT,
 ) -> DataFrame:
     """Docs containing the exact token phrase, answered FROM THE INDEX
-    (positional postings) — never a corpus re-scan.
+    (positional postings) — never a corpus re-scan: the containment set
+    of the phrase planner (_phrase) for a batch of one, as (doc_id).
+    Cost scales with the phrase terms' postings, not the corpus.
 
-    Relational adjacency check: each phrase slot i contributes rows
-    (doc_id, base = pos - i); a doc matches iff some base collects all
-    L distinct slots. The per-slot offset is a literal map lookup
-    (term → slot array; duplicate words in the phrase get multiple
-    slots), so the plan is: prune postings to the phrase's terms
-    (partition/predicate pushdown on the postings scan) → positional
-    explode of just those rows → one hash aggregate. Cost scales with
-    the phrase terms' postings, not the corpus.
-
-    Requires an index built with store_positions=True (meta-gated);
-    raises ValueError otherwise — a silent fallback to a corpus scan
-    would hide a 100×-scale regression.
-
-    Multi-term phrases first compute the AND candidate set (docs
-    containing every phrase term) from the cheaper doc_ids-only read
-    and hash-filter the positional rows against it before the
-    slot-alignment aggregate — for a phrase with one selective term the
-    aggregate shrinks from Σ cf(term) token rows to the candidate docs'
-    rows (broadcast when the candidate set is small, shuffle join
-    otherwise; doc_ids are uniform hashes, so block-range skipping
-    cannot help and is deliberately not attempted).
-    """
-    terms = analyze_query(index.get("analyzer", "standard"), phrase)
-    if not terms:
-        raise ValueError("empty phrase")
-    if not index.get("positions_stored"):
-        raise ValueError(
-            "index stores no positions — build with "
-            "IndexConfig(store_positions=True) to serve phrase queries")
-    uniq = sorted(set(terms))
-    slots: dict[str, list[int]] = {}
-    for i, t in enumerate(terms):
-        slots.setdefault(t, []).append(i)
-    rows = posting_positions(index, _terms_in(uniq))
-    cand, bc = _rare_term_candidates(spark, index, uniq, cfg)
-    if cand is not None:
-        rows = rows.join(F.broadcast(cand) if bc else cand, "doc_id")
-    slot_map = _lit_map(slots, "array<int>")
-    aligned = rows.withColumn("slot", F.explode(slot_map[F.col("term")]))
-    hits = (
-        aligned.groupBy("doc_id", (F.col("pos") - F.col("slot")).alias("base"))
-        .agg(F.count_distinct(F.col("slot")).alias("n_slots"))
-        .filter(F.col("n_slots") == len(terms))
-    )
-    return hits.select("doc_id").distinct()
+    Requires an index built with store_positions=True and raises
+    ValueError otherwise; an empty phrase raises too."""
+    return _phrase(spark, index, [(0, phrase, None)], cfg, batch=False,
+                   ranked=False)
 
 
 def phrase_topk(
@@ -635,68 +565,12 @@ def phrase_topk(
     k: int | None = None,
     cfg: EngineConfig = DEFAULT,
 ) -> DataFrame:
-    """BM25-ranked exact-phrase search: top-k docs CONTAINING the phrase
-    scored by BM25 over the phrase's terms — the classic quoted-query
-    surface, entirely index-only with ONE positional read: tf is the
-    per-(term, doc) position count, so containment (slot alignment) and
-    scoring both derive from the same exploded rows (persisted for the
-    duration of the query, released before returning). Rank order is
-    the engine-wide (round(score, d) desc, doc_id asc) total order."""
-    k = _resolve_k(k, cfg)
-    ordered = analyze_query(index.get("analyzer", "standard"), phrase)
-    terms = list(dict.fromkeys(ordered))
-    if not terms:
-        raise ValueError("empty phrase")
-    if not index.get("positions_stored"):
-        raise ValueError(
-            "index stores no positions — build with "
-            "IndexConfig(store_positions=True) to serve phrase queries")
-    idfs = _term_meta(spark, index, terms).idfs  # corpus row rides (r6)
-    avgdl = float(index["_corpus_row"]["avgdl"])
-    if not idfs:  # no phrase term exists in the vocabulary: no hits
-        return local_frame(spark, [], TOPK_SCHEMA)
-
-    rows = posting_positions(index, _terms_in(terms))
-    # same rarest-term AND-prefilter as phrase_match (r4): docs lacking
-    # the rarest term can neither contain the phrase nor reach the
-    # left_semi against hits, so pre-joining bounds BOTH the
-    # slot-alignment and the scoring shuffles (and the persisted cache)
-    # by min_df instead of Σ cf of the phrase terms
-    cand, bc = _rare_term_candidates(spark, index, sorted(set(terms)), cfg)
-    if cand is not None:
-        rows = rows.join(F.broadcast(cand) if bc else cand, "doc_id")
-    rows = rows.persist()
-    try:
-        slots: dict[str, list[int]] = {}
-        for i, t in enumerate(ordered):
-            slots.setdefault(t, []).append(i)
-        slot_map = _lit_map(slots, "array<int>")
-        hits = (
-            rows.withColumn("slot", F.explode(slot_map[F.col("term")]))
-            .groupBy("doc_id", (F.col("pos") - F.col("slot")).alias("base"))
-            .agg(F.count_distinct(F.col("slot")).alias("n_slots"))
-            .filter(F.col("n_slots") == len(ordered))
-            .select("doc_id").distinct()
-        )
-        tf_rel = rows.groupBy("term", "doc_id").agg(
-            F.count(F.lit(1)).alias("tf"))
-        scored = (
-            tf_rel.withColumn("idf", _lit_map(idfs)[F.col("term")])
-            .join(index["docs"], "doc_id")
-            .groupBy("doc_id").agg(
-                F.sum(F.col("idf") * bm25_weight(avgdl, cfg)).alias("score"))
-        )
-        out = (
-            scored.join(hits, "doc_id", "left_semi")
-            .orderBy(F.round("score", cfg.bm25.rank_decimals).desc(),
-                     F.col("doc_id").asc())
-            .limit(k)
-            .select("doc_id", "score")
-            .collect()
-        )
-    finally:
-        rows.unpersist()
-    return local_frame(spark, out, TOPK_SCHEMA)
+    """BM25-ranked exact-phrase search: top-k (doc_id, score) of the
+    docs CONTAINING the phrase, scored by BM25 over the phrase's terms —
+    the classic quoted-query surface, index-only. The phrase planner
+    (_phrase) for a batch of one; rank order is the engine-wide
+    (round(score, d) desc, doc_id asc) total order."""
+    return _phrase(spark, index, [(0, phrase, k)], cfg, batch=False)
 
 
 def phrase_topk_batch(
@@ -706,91 +580,121 @@ def phrase_topk_batch(
     cfg: EngineConfig = DEFAULT,
 ) -> DataFrame:
     """Batched quoted-query retrieval: (query_id, rank, doc_id, score)
-    for every (query_id, phrase, k) — phrase_topk's throughput twin,
-    mirroring what bm25_topk_batch does for term queries (r4 verdict
-    item 5: the single-phrase path pays the ~0.5 s Spark job floor per
-    phrase; a 24-phrase workload deserves one job, not 24).
-
-    Plan: ONE positional read over the union of every phrase's terms
-    (tombstone-filtered) → per-occurrence rows join the tiny broadcast
-    (query_id, term, slot) relation → slot alignment per (query, doc,
-    base) establishes containment → tf from the same exploded rows +
-    literal idf map scores each (query, doc) over the query's terms →
-    left-semi against that query's hits → per-query window top-k with
-    per-query k. Like the single-phrase path, containment and scoring
-    both come from the single read pass; cost scales with the union
-    of the phrases' postings, never the corpus or the phrase count.
-
-    Per-phrase results are identical to phrase_topk (tests/test_phrase).
-    """
-    # duplicate query_ids would merge both phrases' slot rows under one
-    # id and silently corrupt the ns == n_slots containment join (r6,
-    # advice) — reject up front, with any id that is not an int
+    for every (query_id, phrase, k) — phrase_topk's throughput twin, as
+    bm25_topk_batch is wand_topk's: one positional read and one scoring
+    pass for the whole set instead of Spark's per-job floor per phrase.
+    Query ids are distinct ints; an empty phrase raises. Per phrase the
+    answer equals phrase_topk's (tests/test_phrase.py)."""
     _check_query_ids(queries)
-    if not index.get("positions_stored"):
-        raise ValueError(
-            "index stores no positions — build with "
-            "IndexConfig(store_positions=True) to serve phrase queries")
+    return _phrase(spark, index, queries, cfg, batch=True)
 
-    slot_rows: list[tuple[int, str, int]] = []
-    meta_rows: list[tuple[int, int, int]] = []  # (qid, n_slots, k)
-    all_terms: set[str] = set()
-    for qid, phrase, k in queries:
-        ordered = analyze_query(index.get("analyzer", "standard"), phrase)
-        if not ordered:
-            raise ValueError(f"empty phrase for query_id={qid}")
-        meta_rows.append((qid, len(ordered), _resolve_k(k, cfg)))
-        for i, t in enumerate(ordered):
-            slot_rows.append((qid, t, i))
-            all_terms.add(t)
-    if not slot_rows:
-        return local_frame(spark, [], BATCH_SCHEMA)
-    slots_df = local_frame(spark, slot_rows, "query_id long, term string, slot int")
-    qmeta = local_frame(spark, meta_rows, "query_id long, n_slots int, k int")
-    terms = sorted(all_terms)
-    idfs = _term_meta(spark, index, terms).idfs  # corpus row rides (r6)
-    avgdl = float(index["_corpus_row"]["avgdl"])
-    if not idfs:  # no phrase term exists in the vocabulary: no hits
-        return local_frame(spark, [], BATCH_SCHEMA)
 
-    rows = posting_positions(index, _terms_in(terms)).persist()
-    try:
-        # containment: every slot of the phrase collects at one base
-        aligned = rows.join(F.broadcast(slots_df), "term")
-        hits = (
-            aligned.groupBy("query_id", "doc_id",
-                            (F.col("pos") - F.col("slot")).alias("base"))
-            .agg(F.count_distinct(F.col("slot")).alias("ns"))
-            .join(F.broadcast(qmeta.select("query_id", "n_slots")), "query_id")
-            .filter(F.col("ns") == F.col("n_slots"))
-            .select("query_id", "doc_id").distinct()
-        )
-        # scoring: tf = per-(term, doc) occurrence count from the SAME
-        # exploded rows; per-query sum over that query's distinct terms
-        tf_rel = rows.groupBy("term", "doc_id").agg(
-            F.count(F.lit(1)).alias("tf"))
-        qterms = slots_df.select("query_id", "term").distinct()
-        scored = (
-            tf_rel.join(F.broadcast(qterms), "term")
-            .withColumn("idf", _lit_map(idfs)[F.col("term")])
-            .join(index["docs"], "doc_id")
-            .groupBy("query_id", "doc_id")
-            .agg(F.sum(F.col("idf") * bm25_weight(avgdl, cfg)).alias("score"))
-        )
-        win = Window.partitionBy("query_id").orderBy(
-            F.round("score", cfg.bm25.rank_decimals).desc(),
-            F.col("doc_id").asc())
-        out = (
-            scored.join(hits, ["query_id", "doc_id"], "left_semi")
-            .withColumn("rank", F.row_number().over(win))
-            .join(F.broadcast(qmeta.select("query_id", "k")), "query_id")
-            .filter(F.col("rank") <= F.col("k"))
-            .select("query_id", "rank", "doc_id", "score")
-            .collect()
-        )
-    finally:
-        rows.unpersist()
-    return local_frame(spark, out, BATCH_SCHEMA)
+def _phrase(
+    spark: SparkSession,
+    index: dict[str, DataFrame],
+    queries: list[tuple[int, str, int | None]],
+    cfg: EngineConfig,
+    batch: bool,
+    ranked: bool = True,
+) -> DataFrame:
+    """The phrase planner behind phrase_match, phrase_topk and
+    phrase_topk_batch. A single phrase is a batch of one.
+
+    Containment: each phrase slot i of query q contributes the rows
+    (q, doc_id, base = pos - i) of its term's positions; a doc contains
+    q's phrase iff some base collects all of q's slots. The slots ride a
+    literal map term → [(query_id, slot)] (duplicate words get several
+    slots), so the plan is one positional read of the phrases' terms →
+    one explode → one hash aggregate. When every query passes the
+    rarest-term gate (_phrase_candidates) the positional rows are first
+    restricted to the docs holding some query's rarest term.
+
+    Ranking (``ranked``): the phrase terms' posting rows of the
+    containing docs, scored and cut by the retrieval planner's _scores
+    and _topk — the stored tf is the position count, so nothing is
+    recounted. ``batch`` False answers (doc_id[, score]), True answers
+    (query_id, rank, doc_id, score)."""
+    _check_positions(index)
+    toks: dict[int, list[str]] = {}
+    for qid, phrase, _ in queries:
+        toks[qid] = analyze_query(index.get("analyzer", "standard"), phrase)
+        if not toks[qid]:
+            raise ValueError(f"empty phrase for query_id={qid}" if batch
+                             else "empty phrase")
+    k_of = {qid: _resolve_k(k, cfg) for qid, _, k in queries}
+    q_terms = {qid: list(dict.fromkeys(ts)) for qid, ts in toks.items()}
+    all_terms = sorted({t for ts in q_terms.values() for t in ts})
+    if ranked:
+        meta = _term_meta(spark, index, all_terms)  # corpus row rides (r6)
+        if not meta.idfs:  # no phrase term is in the vocabulary: no hits
+            return local_frame(spark, [], BATCH_SCHEMA if batch else TOPK_SCHEMA)
+
+    slots: dict[str, list[dict]] = {}
+    for qid, ts in toks.items():
+        for i, t in enumerate(ts):
+            slots.setdefault(t, []).append({"query_id": qid, "slot": i})
+    rows = posting_positions(index, _terms_in(all_terms))
+    cand, bc = _phrase_candidates(spark, index, q_terms, cfg)
+    if cand is not None:
+        rows = rows.join(F.broadcast(cand) if bc else cand, "doc_id")
+    slot_map = _lit_map(slots, "array<struct<query_id:bigint,slot:int>>")
+    n_slots = _lit_map({qid: len(ts) for qid, ts in toks.items()}, "int")
+    hits = (
+        rows.select("doc_id", "pos", F.inline(slot_map[F.col("term")]))
+        .groupBy("query_id", "doc_id", F.expr("pos - slot AS base"))
+        .agg(F.expr("count(DISTINCT slot) AS n"))
+        .filter(F.col("n") == n_slots[F.col("query_id").cast("string")])
+    )
+    if not ranked:
+        return hits.select("doc_id").distinct()
+    live = posting_rows(index, _terms_in(sorted(meta.idfs)))
+    scores = _scores(index, live.join(hits, "doc_id", "left_semi"),
+                     meta.idfs, q_terms, cfg, batch)
+    if batch:  # a doc holding another query's phrase only
+        scores = scores.join(hits, ["query_id", "doc_id"], "left_semi")
+    return _topk(scores, k_of, cfg)
+
+
+def _phrase_candidates(
+    spark: SparkSession,
+    index: dict[str, DataFrame],
+    q_terms: dict[int, list[str]],
+    cfg: EngineConfig,
+):
+    """The phrase planner's AND-prefilter: (candidates, can broadcast)
+    — the union over the queries of the doc_ids of each query's RAREST
+    term, or (None, False) when the prefilter cannot pay for itself.
+
+    A doc lacking q's rarest term cannot contain q's phrase, and slot
+    alignment enforces the remaining terms, so a superset candidate set
+    is correct — which is also why the candidate side reads doc_ids only
+    (one term per query, a strict subset of the positional read's rows)
+    and needs NO dead-postings filter (the positional rows it joins are
+    already tombstone-filtered).
+
+    Gates, per query and off for the whole set when ANY query fails
+    one: at least 2 distinct terms, every term in the vocabulary, more
+    than ``prune_min_blocks`` candidate blocks, and a rarest term
+    selective enough to shrink anything (df < N/2 — an all-stopword
+    phrase gains nothing). Broadcast the candidates while their exact
+    upper bound (the rarest terms' dfs plus every tombstone: the ids are
+    not tombstone-filtered) fits cfg.index.broadcast_ids_max."""
+    if any(len(ts) < 2 for ts in q_terms.values()):
+        return None, False
+    meta = _term_meta(spark, index, sorted({t for ts in q_terms.values() for t in ts}))
+    n_docs = float(index["_corpus_row"]["n_docs"])
+    rares = set()
+    for ts in q_terms.values():
+        if any(t not in meta.dfs for t in ts) or \
+                sum(meta.blocks[t] for t in ts) <= cfg.bm25.prune_min_blocks:
+            return None, False
+        rare = min(ts, key=lambda t: (meta.dfs[t], t))
+        if meta.dfs[rare] >= n_docs / 2:
+            return None, False
+        rares.add(rare)
+    cand = posting_ids(index, _terms_in(sorted(rares))).select("doc_id").distinct()
+    raw_ids_ub = sum(meta.dfs[t] for t in rares) + index.get("_n_tombstones", 0)
+    return cand, raw_ids_ub <= cfg.index.broadcast_ids_max
 
 
 def highlight_topk(
@@ -827,10 +731,7 @@ def highlight_topk(
     terms = _query_terms(index, query)
     if not terms:
         raise ValueError("empty query")
-    if not index.get("positions_stored"):
-        raise ValueError(
-            "index stores no positions — build with "
-            "IndexConfig(store_positions=True) to serve highlights")
+    _check_positions(index)
     top = wand_topk(spark, index, query, k, cfg, prune=False).collect()
     out_schema = ("doc_id long, score double, first_pos long, "
                   "snippet string")

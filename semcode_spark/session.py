@@ -20,7 +20,9 @@ def get_spark(
     shuffle_partitions: int | None = None,
     extra_conf: dict[str, str] | None = None,
 ) -> SparkSession:
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
+    # one worker thread per core this process may run on, unless
+    # SPARK_GRAFT_CPUS says otherwise
+    cpus = os.environ.get("SPARK_GRAFT_CPUS") or str(len(os.sched_getaffinity(0)))
     master = master or f"local[{cpus}]"
     builder = (
         SparkSession.builder.appName(app_name)

@@ -174,7 +174,14 @@ def rare_pos_index(spark, documents, tmp_path_factory):
 def test_phrase_and_prefilter_path_equal(spark, documents, rare_pos_index):
     """The AND-candidate prefilter (forced via prune_min_blocks=0; the
     'rareword' phrases genuinely pass the df < n/2 selectivity gate)
-    and the direct path return identical phrase sets."""
+    and the direct path return identical phrase sets. A batch takes the
+    prefilter for the whole set only when every phrase passes its gate:
+    one phrase that fails (stopword-frequent terms, or a single term)
+    turns it off. Either way each phrase's batch answer equals its
+    unfiltered single answer."""
+    from semcode_spark.operators.query import (
+        _phrase_candidates, _query_terms, phrase_topk, phrase_topk_batch)
+
     idx = read_index(spark, rare_pos_index)
     forced = EngineConfig(bm25=BM25Config(prune_min_blocks=0),
                           index=CFG.index)
@@ -186,6 +193,24 @@ def test_phrase_and_prefilter_path_equal(spark, documents, rare_pos_index):
     assert {r["doc_id"] for r in
             phrase_match(spark, idx, "rareword scan", forced).collect()} \
         == set(range(30))
+
+    passing = [(0, "rareword scan", 10), (1, "scan rareword", 5),
+               (2, "rareword scan tail", 10)]
+    for queries, fires in ((passing, True),
+                           (passing + [(3, "table scan", 10)], False),
+                           (passing + [(3, "rareword", 10)], False)):
+        q_terms = {q: _query_terms(idx, p) for q, p, _ in queries}
+        assert (_phrase_candidates(spark, idx, q_terms, forced)[0]
+                is not None) == fires, queries
+        got: dict = {}
+        for r in phrase_topk_batch(spark, idx, queries, cfg=forced).collect():
+            got.setdefault(r["query_id"], []).append(
+                (r["rank"], r["doc_id"], round(r["score"], 9)))
+        for qid, phrase, k in queries:
+            want = [(i + 1, r["doc_id"], round(r["score"], 9)) for i, r in
+                    enumerate(phrase_topk(spark, idx, phrase, k, CFG).collect())]
+            assert sorted(got.get(qid, [])) == want, (qid, phrase)
+        assert len(got[0]) == 10 and got[1]
 
 
 def test_positional_build_crash_resume(spark, documents, tmp_path):
@@ -270,20 +295,24 @@ def test_phrase_topk_batch_matches_singles(spark, documents, pos_index):
     from semcode_spark.operators.index_build import read_index as _ri
     from semcode_spark.operators.query import phrase_topk, phrase_topk_batch
 
-    idx = _ri(spark, pos_index)
     phrases = [(0, "table scan", 10), (1, "query plan", 5),
                (2, "the data", 7), (3, "zzz_nohit phrase", 10),
                (4, "the the", 10)]
-    batch = phrase_topk_batch(spark, idx, phrases, cfg=CFG).collect()
-    got = {}
-    for r in batch:
-        got.setdefault(r["query_id"], []).append(
-            (r["rank"], r["doc_id"], round(r["score"], 9)))
-    for qid, phrase, k in phrases:
-        want = [(i + 1, r["doc_id"], round(r["score"], 9))
-                for i, r in enumerate(
-                    phrase_topk(spark, idx, phrase, k=k, cfg=CFG).collect())]
-        assert sorted(got.get(qid, [])) == want, (qid, phrase)
+    serving = _ri(spark, pos_index, cache=True)
+    try:
+        for idx in (_ri(spark, pos_index), serving):
+            batch = phrase_topk_batch(spark, idx, phrases, cfg=CFG).collect()
+            got = {}
+            for r in batch:
+                got.setdefault(r["query_id"], []).append(
+                    (r["rank"], r["doc_id"], round(r["score"], 9)))
+            for qid, phrase, k in phrases:
+                want = [(i + 1, r["doc_id"], round(r["score"], 9))
+                        for i, r in enumerate(phrase_topk(
+                            spark, idx, phrase, k=k, cfg=CFG).collect())]
+                assert sorted(got.get(qid, [])) == want, (qid, phrase)
+    finally:
+        _release(serving)
 
 
 def test_phrase_topk_batch_validates(spark, pos_index):
@@ -294,3 +323,50 @@ def test_phrase_topk_batch_validates(spark, pos_index):
     with pytest.raises(ValueError, match="empty phrase"):
         phrase_topk_batch(spark, idx, [(0, "???", 10)], cfg=CFG)
     assert phrase_topk_batch(spark, idx, [], cfg=CFG).count() == 0
+
+
+def _release(idx):
+    for name in ("docs", "term_stats", "term_bounds", "postings"):
+        idx[name].unpersist()
+
+
+def test_phrase_serving_equals_cold_after_replace(spark, documents, tmp_path):
+    """A serving handle (read_index(cache=True)) over a positional index
+    with one add_segment replace gives a cold handle's answers for every
+    phrase surface and highlight_topk: the cache holds the
+    tombstone-filtered rows with their positions."""
+    from semcode_spark.operators.query import (
+        highlight_topk, phrase_topk, phrase_topk_batch)
+
+    d = str(tmp_path / "served")
+    build_index(spark, documents, d, cfg=CFG, groups=2)
+    re_docs = (documents.filter("doc_id < 40")
+               .select("doc_id", F.concat(F.lit("fresh table scan intro "),
+                                          F.col("text")).alias("text")))
+    add_segment(spark, d, re_docs, cfg=CFG)
+    phrases = [(0, "table scan", 10), (1, "query plan", 5), (2, "the data", 7),
+               (3, "fresh table", 10), (4, "zzz_nohit phrase", 3)]
+
+    def rounded(rows):  # scores summed in another order may differ by an ulp
+        return [tuple(round(v, 9) if isinstance(v, float) else v for v in r)
+                for r in rows]
+
+    cold, serving = read_index(spark, d), read_index(spark, d, cache=True)
+    try:
+        answers = []
+        for idx in (cold, serving):
+            answers.append((
+                sorted(r["doc_id"] for r in
+                       phrase_match(spark, idx, "table scan", CFG).collect()),
+                rounded(phrase_topk(spark, idx, "table scan", 10, CFG).collect()),
+                sorted(rounded(phrase_topk_batch(spark, idx, phrases, CFG).collect())),
+                rounded(highlight_topk(spark, idx, documents, "fresh table scan",
+                                       k=5, cfg=CFG).collect()),
+            ))
+    finally:
+        _release(serving)
+    assert answers[0] == answers[1]
+    matched, top, batch, highlights = answers[0]
+    assert set(range(40)) <= set(matched)  # the replaced docs now match
+    assert [r[2:] for r in batch if r[0] == 0] == top
+    assert len(highlights) == 5
